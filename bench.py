@@ -548,14 +548,18 @@ def main() -> None:
         except (OSError, ValueError):
             pass
         cpus_ = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 0)
-        for rp in (reg_path, reg_path.replace(".json", f"_c{cpus_}.json")):
-            with open(rp, "w") as fh:
-                json.dump(
-                    {**out, "run_spread": spreads, "cpus": cpus_,
-                     "nonheadline_movers_vs_prev": movers},
-                    fh,
-                )
-                fh.write("\n")
+        stem, ext = os.path.splitext(reg_path)
+        for rp in (reg_path, f"{stem}_c{cpus_}{ext}"):
+            try:
+                with open(rp, "w") as fh:
+                    json.dump(
+                        {**out, "run_spread": spreads, "cpus": cpus_,
+                         "nonheadline_movers_vs_prev": movers},
+                        fh,
+                    )
+                    fh.write("\n")
+            except OSError as e:  # pragma: no cover - read-only checkout
+                print(f"bench: could not write {rp}: {e}", file=sys.stderr)
         print(json.dumps(
             {k: v for k, v in out.items() if k != "queries"}
             | {"nonheadline_movers_vs_prev": movers}

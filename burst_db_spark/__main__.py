@@ -362,11 +362,14 @@ def main(argv: list[str] | None = None) -> int:
         else:
             bursts = spark.read.parquet(args.db_path)
         # burst_id_map JPL ids are t{track}_{burstnum}_iw{n}; the bridge
-        # carries the triplet number -> match on the middle field
+        # carries the triplet number -> match on the middle field. A semi
+        # join: neighbouring frames share bursts, and a shared burst's
+        # rows must come out once, not once per requested frame.
         bnum = F.split(F.col("burst_id_jpl"), "_")[1].cast("int")
         hits = bursts.withColumn("__bnum", bnum).join(
             F.broadcast(wanted),
             F.col("__bnum") == F.col("burst_num").cast("int"),
+            "left_semi",
         )
         if args.min_datetime:
             hits = hits.where(F.col("sensing_time") >= args.min_datetime)

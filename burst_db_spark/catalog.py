@@ -106,10 +106,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _normalize_ntz(spark.read.parquet(path))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so ``spark.sql`` works on them."""
     for t in TABLES:

@@ -165,19 +165,6 @@ def antimeridian_epsg_udf(wkts: pd.Series) -> pd.Series:
     )
 
 
-def buffer_udf(dist: float):
-    """Positive miter buffer (predicates.buffer_convex) as a vectorized
-    column transform — the land-mask dilation step."""
-
-    @F.pandas_udf(StringType())
-    def _buffer(wkts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if w is None else P.buffer_convex(w, dist) for w in wkts]
-        )
-
-    return _buffer
-
-
 def simplify_udf(tolerance: float):
     @F.pandas_udf(StringType())
     def _simplify(wkts: pd.Series) -> pd.Series:
@@ -186,16 +173,6 @@ def simplify_udf(tolerance: float):
         )
 
     return _simplify
-
-
-def translate_udf(xoff: float, yoff: float = 0.0):
-    @F.pandas_udf(StringType())
-    def _translate(wkts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if w is None else P.translate(w, xoff, yoff) for w in wkts]
-        )
-
-    return _translate
 
 
 def union_collect_agg(

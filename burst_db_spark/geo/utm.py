@@ -144,20 +144,6 @@ def polar_stereographic(lat, lon, lat_ts, lon0, south):
     return x, y
 
 
-def epsg_for(lat, lon):
-    """EPSG classification for a centroid (get_epsg_codes semantics):
-    polar thresholds, else UTM zone with the Norway/Svalbard rules."""
-    lat = np.asarray(lat, dtype=np.float64)
-    lon = np.asarray(lon, dtype=np.float64)
-    zone = utm_zone(lat, lon)
-    utm = np.where(lat >= 0.0, 32600 + zone, 32700 + zone)
-    return np.where(
-        lat > NORTH_THRESHOLD,
-        NORTH_EPSG,
-        np.where(lat < SOUTH_THRESHOLD, SOUTH_EPSG, utm),
-    ).astype(np.int64)
-
-
 def project(lat, lon, epsg):
     """Forward transform lat/lon arrays into ONE target CRS given by
     ``epsg`` (scalar int): UTM 326xx/327xx or polar 3413/3031."""

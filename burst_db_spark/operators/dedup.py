@@ -828,7 +828,12 @@ def release_dedup(result: DataFrame) -> None:
     materialized — a later action would recompute from scratch,
     correctly but uncached. Long-lived sessions (bench loops, notebook
     services) otherwise accumulate one cached frame per call; short
-    sessions can keep relying on ``spark.catalog.clearCache()``."""
+    sessions can keep relying on ``spark.catalog.clearCache()``.
+
+    Call it on the EXACT frame the operator returned: the handles are a
+    Python attribute on that object, so any derived frame
+    (``result.select(...)``, ``.where(...)``) carries none and this is
+    then a silent no-op that leaves the caches in place."""
     for df in getattr(result, "_dedup_cached", ()):
         df.unpersist()
 

@@ -78,23 +78,6 @@ def anti_join_intervals(
     return facts.join(F.broadcast(intervals), cond, "left_anti")
 
 
-def semi_join_intervals(
-    facts: DataFrame,
-    intervals: DataFrame,
-    key: str,
-    ts_col: str,
-    start_col: str = "start_ts",
-    end_col: str = "end_ts",
-) -> DataFrame:
-    """P7 inverse: keep only fact rows inside an interval of their key."""
-    cond = (
-        (facts[key] == intervals[key])
-        & (facts[ts_col] >= intervals[start_col])
-        & (facts[ts_col] <= intervals[end_col])
-    )
-    return facts.join(F.broadcast(intervals), cond, "left_semi")
-
-
 def dedup_exact_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """P10: deterministic dedup — distinct over the key projection.
 

@@ -177,63 +177,6 @@ def pagerank(
     return ranks.select(F.col("__v").alias(id_col), F.col("__p").alias("rank"))
 
 
-def pagerank_oracle_sql(
-    edges_sql: str,
-    nodes_sql: str,
-    iterations: int = 3,
-    damping: float = 0.85,
-    n_buckets: int = PR_FOLD_BUCKETS,
-) -> str:
-    """DuckDB twin: the power iteration unrolled into ``iterations``
-    CTE layers, contributions folded with the SAME two-level order
-    (md5-bucket-major, src-minor) so the doubles match Spark's
-    bit-for-bit."""
-    # CAST the damping literal to DOUBLE: DuckDB parses bare `0.85` as
-    # DECIMAL(3,2), making `1.0 - 0.85` EXACTLY 0.15 — while Spark/Python
-    # compute the IEEE double 0.15000000000000002. The cast reproduces
-    # the double-arithmetic bit pattern.
-    d_lit = f"CAST({damping} AS DOUBLE)"
-    it_ctes = []
-    prev = "p0"
-    for k in range(1, iterations + 1):
-        it_ctes.append(f"""
-    s{k} AS (
-        SELECT v,
-               list_reduce(list_prepend(0.0, list(bs ORDER BY b)),
-                   (a, c) -> a + c) AS inflow
-        FROM (
-            SELECT e.dst AS v,
-                   CAST(('0x' || substr(md5(CAST(e.src AS VARCHAR)), 1, 4))
-                        AS BIGINT) % {n_buckets} AS b,
-                   list_reduce(list_prepend(0.0,
-                       list(p.p / d.deg ORDER BY CAST(e.src AS VARCHAR))),
-                       (a, c) -> a + c) AS bs
-            FROM edges e
-            JOIN {prev} p ON p.v = e.src
-            JOIN deg d ON d.src = e.src
-            GROUP BY e.dst, b
-        )
-        GROUP BY v
-    ),
-    p{k} AS (
-        SELECT n.v,
-               (CAST(1.0 AS DOUBLE) - {d_lit}) / nn.n
-                   + {d_lit} * coalesce(s{k}.inflow, 0.0) AS p
-        FROM nodes_v n CROSS JOIN nn LEFT JOIN s{k} ON s{k}.v = n.v
-    )""")
-        prev = f"p{k}"
-    return f"""
-    WITH edges AS ({edges_sql}),
-    nodes_v AS (SELECT v FROM ({nodes_sql})),
-    nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes_v),
-    deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
-            FROM edges GROUP BY src),
-    p0 AS (SELECT v, 1.0 / nn.n AS p FROM nodes_v CROSS JOIN nn),
-    {",".join(it_ctes)}
-    SELECT v AS id, p AS rank FROM {prev}
-    """
-
-
 def triangle_stats(
     edges: DataFrame,
     a: str = "a",

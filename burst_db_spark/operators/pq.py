@@ -115,14 +115,3 @@ def pq_adc_topk(
         .limit(k)
         .select(id_col, *[f"code_{j}" for j in range(m)], "adc_dist")
     )
-
-
-def pq_sql_literals(codebooks: list[list[list[float]]]) -> list[str]:
-    """DuckDB list-of-list literals, one per codebook."""
-    out = []
-    for book in codebooks:
-        entries = ", ".join(
-            "[" + ", ".join(repr(x) for x in e) + "]" for e in book
-        )
-        out.append("[" + entries + "]")
-    return out

@@ -118,20 +118,6 @@ def lsh_planes(n_planes: int = 32, dim: int = 64) -> list[list[float]]:
     return out
 
 
-def lsh_sign_bits(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit LSH signature as ONE array<int> column.
-
-    bit_p = (vec · plane_p >= 0), computed with a single ``transform``
-    over the 2-D literal plane matrix — the dot-product code is
-    generated once (vs one inlined copy per plane, which made JIT the
-    dominant cold cost). The dot is the same left-fold as ``_dot`` so
-    each sign is bit-identical to the oracle's ``list_reduce`` fold."""
-    planes_col = F.array(
-        *[F.array(*[F.lit(x) for x in p]) for p in planes]
-    )
-    return F.transform(planes_col, lambda p: (_dot(vec, p) >= 0).cast("int"))
-
-
 def lsh_band_keys(bits: Column, n_planes: int, bits_per_band: int = 4) -> Column:
     """Band keys from a MATERIALIZED sign-bit column: key b =
     Σ_j bits[b·r+j] << j. ``bits`` must be a projected column (not the

@@ -62,10 +62,6 @@ def _count_in(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda x: x.isin(*words))).cast("int")
 
 
-def stopword_count(text: Column, words: tuple[str, ...] = EN_STOP) -> Column:
-    return _count_in(tokens(text), words)
-
-
 def lang_guess(text: Column) -> Column:
     """N-gram/stopword language heuristic: argmax of per-language stopword
     hits, 'und' when nothing matches."""

@@ -15,7 +15,6 @@ exactly, so both carry real oracles.)
 from __future__ import annotations
 
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,6 +23,7 @@ from burst_db_spark.catalog import load
 from burst_db_spark.operators import multimodal as mm
 from burst_db_spark.plans.reference_dates import reference_dates
 from burst_db_spark.registry import register
+from burst_db_spark.streaming import drain
 
 
 # W5 promoted from rows-only to a DERIVED ORACLE (VERDICT r9 item #2):
@@ -175,21 +175,7 @@ def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    # r15 (guide §2.2/§5): data-derived state partitions for the drain.
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, data_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, tmp)
 
 
 @register(
@@ -240,7 +226,6 @@ def stream_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and must equal the BATCH dd_exact manifest bit-for-bit. This is the
     ingest shape of a continuously-fed training corpus: the dedup
     manifest stays current as shards land, with state keyed by digest."""
-    import uuid as _uuid
 
     from burst_db_spark.streaming import incremental as st
 
@@ -256,21 +241,7 @@ def stream_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("digest")
         .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_dups"))
     )
-    name = f"corpus_{_uuid.uuid4().hex[:8]}"
-    # r15 (guide §2.2/§5): data-derived state partitions for the drain.
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, data_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, tmp)
 
 
 @register(
@@ -403,18 +374,4 @@ def stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    name = f"daily_{uuid.uuid4().hex[:8]}"
-    # r15 (guide §2.2/§5): data-derived state partitions for the drain.
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, data_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, tmp)

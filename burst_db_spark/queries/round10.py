@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from burst_db_spark.catalog import load
 from burst_db_spark.operators.packing import epoch_shuffle
 from burst_db_spark.registry import register
+from burst_db_spark.streaming import drain
 
 # ---------------------------------------------------------------------------
 # T: deterministic corpus shuffle + epoch sharding (VERDICT r9 item #7)
@@ -197,7 +198,6 @@ def stream_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     only stateful operator (complete mode, availableNow drain). Must
     equal the batch dd_minhash_incremental manifest bit-for-bit."""
     import tempfile as _tempfile
-    import uuid as _uuid
 
     from burst_db_spark.operators import dedup as dd
     from burst_db_spark.operators import text as tx
@@ -261,30 +261,8 @@ def stream_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.collect_set("old_id").alias("dups"),
         F.max("est").alias("max_est_sim"),
     )
-    name = f"inc_dedup_{_uuid.uuid4().hex[:8]}"
-    # r15 (guide §2.2/§5): data-derived state/shuffle partitions for the
-    # drain (per-batch band joins + the complete-mode groupBy).
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, data_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # the memory sink holds the full result after the drain — the input
-    # fixture and checkpoint are dead weight; reclaim them so repeated
-    # bench/verify invocations don't accumulate /tmp dirs (the memory
-    # TABLE itself must stay registered: the returned frame reads it)
-    import shutil as _shutil
-
-    _shutil.rmtree(tmp, ignore_errors=True)
     return (
-        spark.table(name)
+        drain(agg, tmp)
         .select(
             "new_id",
             F.array_min("dups").cast("bigint").alias("dup_of_min"),

@@ -28,6 +28,7 @@ from burst_db_spark.operators import text as tx
 from burst_db_spark.queries.similarity import _cos_sql
 from burst_db_spark.queries.textops import _SHINGLES_CTE, _TOKS
 from burst_db_spark.registry import register
+from burst_db_spark.streaming import drain
 
 # -- DSIR importance resampling ---------------------------------------------
 
@@ -974,7 +975,6 @@ def stream_mean_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streamed daily counts are integers, so stream task order cannot
     perturb anything."""
     import tempfile
-    import uuid
 
     from burst_db_spark.streaming import incremental as st
 
@@ -992,21 +992,7 @@ def stream_mean_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    name = f"shift_{uuid.uuid4().hex[:8]}"
-    # r15 (guide §2.2/§5): data-derived state partitions for the drain.
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, data_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    daily = spark.table(name)
+    daily = drain(agg, tmp)
 
     # baseline via an unbounded window over the SAME frame (a second
     # scan of the memory table + join trips Spark's conflicting-

@@ -49,6 +49,7 @@ from burst_db_spark.operators import text as tx
 from burst_db_spark.queries.similarity import _cos_sql
 from burst_db_spark.queries.textops import _TOKS
 from burst_db_spark.registry import register
+from burst_db_spark.streaming import drain
 
 # -- D4: SemDeDup + prototype pruning over TRAINED cells ------------------------
 
@@ -1320,7 +1321,6 @@ def stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     w21_cusum_drift's oracle exactly — streamed counts are integers,
     stream task order cannot perturb anything."""
     import tempfile
-    import uuid
 
     from burst_db_spark.streaming import incremental as st
 
@@ -1338,21 +1338,7 @@ def stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    name = f"cusum_{uuid.uuid4().hex[:8]}"
-    # r15 (guide §2.2/§5): data-derived state partitions for the drain.
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, data_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    daily = spark.table(name)
+    daily = drain(agg, tmp)
 
     wd = Window.partitionBy("event_type").orderBy("day")
     wcum = wd.rowsBetween(Window.unboundedPreceding, 0)

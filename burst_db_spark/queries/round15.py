@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from burst_db_spark.catalog import load
 from burst_db_spark.operators import similarity as sim
 from burst_db_spark.registry import register
+from burst_db_spark.streaming import drain
 
 # -- Hierarchical (funnel) codebook assignment, oracle-checked -----------------
 
@@ -1565,7 +1566,6 @@ def stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_streaming.py pins that for this exact maintenance
     shape)."""
     import tempfile
-    import uuid
 
     from burst_db_spark.streaming import incremental as st
 
@@ -1583,21 +1583,7 @@ def stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    name = f"ph_{uuid.uuid4().hex[:8]}"
-    # r15 (guide §2.2/§5): data-derived state partitions for the drain.
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, data_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    daily = spark.table(name)
+    daily = drain(agg, tmp)
 
     wd = Window.partitionBy("event_type").orderBy("day")
     wcum = wd.rowsBetween(Window.unboundedPreceding, 0)

@@ -25,6 +25,7 @@ from burst_db_spark.plans.bpe_oracle import (
 )
 from burst_db_spark.queries.textops import _SHINGLES_CTE, _TOKS
 from burst_db_spark.registry import register
+from burst_db_spark.streaming import drain
 
 # revenue expression, decimal-exact on both engines ------------------------
 
@@ -781,7 +782,6 @@ def stream_interval_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the maintenance-window / blackout-tagging shape run as a
     continuous pipeline at scale."""
     import tempfile
-    import uuid
 
     from burst_db_spark.streaming import incremental as st
 
@@ -807,21 +807,7 @@ def stream_interval_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy("interval_id").agg(
         F.count("*").cast("bigint").alias("n_events")
     )
-    name = f"ivc_{uuid.uuid4().hex[:8]}"
-    # r15 (guide §2.2/§5): data-derived state partitions for the drain.
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, data_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, tmp)
 
 
 @register(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from burst_db_spark.catalog import load, register_views
 from burst_db_spark.registry import register
+from burst_db_spark.streaming import drain, run_drain
 
 # ---------------------------------------------------------------------------
 # TPC-H Q4 flavor: EXISTS → left-semi join
@@ -229,7 +230,6 @@ def stream_watermark_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     State is bounded by the watermark horizon — the 100 TB always-on
     shape."""
     import tempfile
-    import uuid
 
     src = load(spark, sf_dir, "events").select("event_id", "ts", "value")
     tmp = tempfile.mkdtemp(prefix="bds_stream_wm_")
@@ -263,21 +263,7 @@ def stream_watermark_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("n"))
         .select(F.col("window.start").alias("day_start"), "n")
     )
-    name = f"wma_{uuid.uuid4().hex[:8]}"
-    # r15 (guide §2.2/§5): data-derived state partitions for the drain.
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, f"{tmp}/in"):
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain(stream, tmp, mode="append")
 
 
 # ---------------------------------------------------------------------------
@@ -776,27 +762,26 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally pinned by
     tests/test_streaming.py::test_stream_stream_join_matches_batch."""
     import tempfile
-    import uuid
 
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "user_id",
                                               "event_type")
     tmp = tempfile.mkdtemp(prefix="bds_ss_join_")
     views = ev.where(F.col("event_type") == "view")
     buys = ev.where(F.col("event_type") == "purchase")
-    views.coalesce(2).write.parquet(f"{tmp}/views")
-    buys.coalesce(2).write.parquet(f"{tmp}/buys")
+    views.coalesce(2).write.parquet(f"{tmp}/in/views")
+    buys.coalesce(2).write.parquet(f"{tmp}/in/buys")
     schema = "event_id long, ts timestamp, user_id long, event_type string"
 
     vs = (
         spark.readStream.format("parquet").schema(schema)
-        .load(f"{tmp}/views")
+        .load(f"{tmp}/in/views")
         .withWatermark("ts", "2 hours")
         .select(F.col("event_id").alias("view_id"),
                 F.col("ts").alias("view_ts"), "user_id")
     )
     bs = (
         spark.readStream.format("parquet").schema(schema)
-        .load(f"{tmp}/buys")
+        .load(f"{tmp}/in/buys")
         .withWatermark("ts", "2 hours")
         .select(F.col("event_id").alias("buy_id"),
                 F.col("ts").alias("buy_ts"),
@@ -809,23 +794,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("buy_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 HOUR")),
     ).select("user_id", "view_id", "buy_id")
 
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    # r15 (guide §2.2/§5): state partitions derived from the staged
-    # input volume, not the session core count — see
-    # burst_db_spark.streaming.drain_shuffle.
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, f"{tmp}/views", f"{tmp}/buys"):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain(joined, tmp, mode="append")
 
 
 # ---------------------------------------------------------------------------
@@ -1055,16 +1024,11 @@ def stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(f"{tmp}/in/*")
     )
     snap = f"{tmp}/snapshot"
-    # r15 (guide §2.2/§5): data-derived shuffle partitions for the drain
-    # (the per-batch upsert MERGE shuffles by key inside foreachBatch).
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, f"{tmp}/in"):
-        q = upsert_stream_to_parquet(
-            stream, snap, key="user_id", version_col="version",
-            checkpoint=f"{tmp}/ckpt",
-        )
-        q.awaitTermination()
+    run_drain(
+        spark,
+        upsert_stream_to_parquet(stream, snap, key="user_id", version_col="version"),
+        tmp,
+    )
     return spark.read.parquet(snap).select(
         "user_id",
         F.col("version").cast("bigint").alias("version"),

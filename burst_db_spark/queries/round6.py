@@ -656,11 +656,15 @@ def knn_ivf_learned_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f_recursive_cte_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4's RECURSIVE CTE surface (WITH RECURSIVE ... UNION ALL —
     resolved by Catalyst's ResolveWithCTE into an iterative union
-    execution): a calendar day spine grown one row per recursion step
-    from min(ts) to max(ts), left-joined to daily counts so silent
-    gap days surface as zero rows. The DuckDB oracle runs the SAME
-    recursive SQL (both dialects support linear UNION ALL recursion),
-    making this a surface-parity row, not just a result check. The
+    execution): a calendar day spine over [min(ts), max(ts)],
+    left-joined to daily counts so silent gap days surface as zero rows.
+    The bounds are computed once and inlined as literals; the spine's
+    day offsets come from a HEAP-INDEX recursion (each step emits
+    children 2i+1 and 2i+2 of the working set), so the N+1 days take
+    ceil(log2(N+1)) iterations, not N. On empty input the spine is one
+    NULL day and no recursion runs (the non-recursive branch below).
+    The DuckDB oracle grows the same day set one row per step, so the
+    result matches while the Spark side keeps the recursion short. The
     production gap-fill shape remains sequence()+explode
     (w12_linear_interpolation) — one generate, no iterative plan; this
     row exists to pin the recursion feature itself, the SQL analog of

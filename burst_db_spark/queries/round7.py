@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 
 from burst_db_spark.catalog import load
 from burst_db_spark.registry import register
+from burst_db_spark.streaming import drain, run_drain
 
 # ---------------------------------------------------------------------------
 # A32: KMV / bottom-k distinct sketch — the mergeable-cardinality property.
@@ -897,7 +898,6 @@ def stream_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-reading raw data. Same integer-exact estimator as
     a32_kmv_distinct."""
     import tempfile
-    import uuid as _uuid
 
     tmp = tempfile.mkdtemp(prefix="bds_skmv_")
     src = load(spark, sf_dir, "events").select("event_type", "user_id")
@@ -925,18 +925,7 @@ def stream_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(partials)
         )
 
-    # r15 (guide §2.2/§5): data-derived shuffle partitions for the
-    # per-batch window/distinct shuffles inside foreachBatch.
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, f"{tmp}/in"):
-        q = (
-            stream.writeStream.foreachBatch(_partial)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_drain(spark, stream.writeStream.foreachBatch(_partial), tmp)
 
     merged = spark.read.parquet(partials).distinct()
     w_m = Window.partitionBy("event_type").orderBy("h")
@@ -1565,7 +1554,6 @@ def stream_ohlc_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming state that stays O(groups) forever; anything
     order-sensitive would need the full history."""
     import tempfile
-    import uuid as _uuid
 
     src = load(spark, sf_dir, "events").select("event_type", "ts", "value", "event_id")
     tmp = tempfile.mkdtemp(prefix="bds_sohlc_")
@@ -1593,21 +1581,7 @@ def stream_ohlc_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max_by("value", "ord").alias("close"),
         F.count("*").cast("bigint").alias("n"),
     )
-    name = f"sohlc_{_uuid.uuid4().hex[:8]}"
-    # r15 (guide §2.2/§5): data-derived state partitions for the drain.
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, f"{tmp}/in"):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("event_type", "bar_start")
+    return drain(agg, tmp).orderBy("event_type", "bar_start")
 
 
 # ---------------------------------------------------------------------------

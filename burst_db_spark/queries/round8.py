@@ -35,6 +35,7 @@ from burst_db_spark.catalog import load
 from burst_db_spark.operators import multipattern as mp
 from burst_db_spark.queries.slayer import _tmpdir
 from burst_db_spark.registry import register
+from burst_db_spark.streaming import run_drain
 
 # ---------------------------------------------------------------------------
 # A35: mergeable quantile sketch — t-digest-style centroid histogram.
@@ -1242,18 +1243,7 @@ def stream_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(partials)
         )
 
-    # r15 (guide §2.2/§5): data-derived shuffle partitions for the
-    # per-batch centroid groupBy inside foreachBatch.
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, f"{tmp}/in"):
-        q = (
-            stream.writeStream.foreachBatch(_partial)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_drain(spark, stream.writeStream.foreachBatch(_partial), tmp)
 
     merged = (
         spark.read.parquet(partials)

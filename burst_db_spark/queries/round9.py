@@ -44,6 +44,7 @@ from burst_db_spark.queries.round4 import _minhash_pair_ctes
 from burst_db_spark.queries.slayer import _tmpdir
 from burst_db_spark.queries.textops import _SHINGLES_CTE, _TOKS
 from burst_db_spark.registry import register
+from burst_db_spark.streaming import drain
 
 # ---------------------------------------------------------------------------
 # DD: the full curation cascade. Every large-scale pretraining corpus
@@ -876,7 +877,6 @@ def stream_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     computation bit-for-bit — row-local decisions make the result
     batching-independent."""
     import tempfile as _tempfile
-    import uuid as _uuid
 
     from burst_db_spark.operators.bloom import (
         bloom_contained_count,
@@ -924,21 +924,7 @@ def stream_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_flagged"),
     )
-    name = f"decontam_{_uuid.uuid4().hex[:8]}"
-    # r15 (guide §2.2/§5): data-derived state partitions for the drain.
-    from burst_db_spark.streaming import drain_shuffle
-
-    with drain_shuffle(spark, data_dir):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("source")
+    return drain(agg, tmp).orderBy("source")
 
 
 # ---------------------------------------------------------------------------

@@ -295,24 +295,6 @@ def read_sqlite(
     return bdf.mapInPandas(_read, schema)
 
 
-def write_jdbc(df: DataFrame, url: str, table: str, **options) -> None:
-    """K1 JDBC parity (sqlite/GPKG writes). Requires a JDBC driver jar on
-    the classpath — not shipped in this image."""
-    try:
-        (
-            df.write.format("jdbc")
-            .option("url", url)
-            .option("dbtable", table)
-            .options(**options)
-            .save()
-        )
-    except Exception as e:  # pragma: no cover - driver-dependent
-        raise NotImplementedError(
-            "JDBC sink needs a driver jar on the Spark classpath "
-            f"(url={url!r}); parquet is the native sink here"
-        ) from e
-
-
 def write_curve_sorted(
     df: DataFrame,
     path: str,

@@ -83,19 +83,3 @@ def daily_counts(
         )
     )
 
-
-def run_available_now(
-    agg: DataFrame, query_name: str, checkpoint: str
-) -> None:
-    """Drive a streaming aggregation over all currently-available input
-    (the incremental batch convention) into an in-memory table named
-    ``query_name``; blocks until done. Exactly-once via the checkpoint."""
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

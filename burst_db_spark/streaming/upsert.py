@@ -26,9 +26,10 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+from pyspark.sql.streaming import DataStreamWriter
 
 
 def merge_batch(
@@ -62,14 +63,14 @@ def upsert_stream_to_parquet(
     snapshot_dir: str,
     key: str,
     version_col: str,
-    checkpoint: str,
-    query_name: str = "upsert",
-):
-    """Drive ``stream`` into a parquet snapshot with per-batch keyed
-    MERGE semantics. Returns the started query (caller awaits)."""
-    spark = stream.sparkSession
+) -> DataStreamWriter:
+    """Writer that drives ``stream`` into a parquet snapshot with
+    per-batch keyed MERGE semantics; start it with
+    :func:`burst_db_spark.streaming.run_drain`."""
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
+        # the batch's own session carries the conf the stream started with
+        spark = batch_df.sparkSession
         snap = None
         if os.path.isdir(snapshot_dir):
             snap = spark.read.parquet(snapshot_dir)
@@ -80,10 +81,4 @@ def upsert_stream_to_parquet(
             shutil.rmtree(snapshot_dir)
         os.replace(tmp, snapshot_dir)
 
-    return (
-        stream.writeStream.foreachBatch(_merge)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return stream.writeStream.foreachBatch(_merge)

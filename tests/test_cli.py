@@ -135,3 +135,31 @@ def test_cli_historical_fetch(spark, tmp_path, capsys):
                  "--min-datetime", "2021-02-01"]) == 0
     out = capsys.readouterr().out.strip().splitlines()
     assert out and all(not l.endswith(".SAFE") for l in out)
+
+
+def test_cli_historical_fetch_shared_burst(spark, tmp_path, capsys):
+    """Two neighbouring frames share a burst: fetch-bursts must print
+    that burst's rows once, not once per requested frame."""
+    db = str(tmp_path / "db")
+    assert main(["create", "--out", db, "--n-triplets", "120", "--n-tracks", "2"]) == 0
+    capsys.readouterr()
+    frames_of = {}
+    for r in spark.read.parquet(f"{db}/frames_bursts").collect():
+        frames_of.setdefault(r.burst_id, set()).add(r.frame_fid)
+    shared = next(b for b, fids in frames_of.items() if len(fids) > 1)
+    f1, f2 = sorted(frames_of[shared])[:2]
+    bids = sorted(b for b, fids in frames_of.items() if fids & {f1, f2})
+
+    hist = str(tmp_path / "hist.parquet")
+    spark.createDataFrame(
+        [(f"t001_{b:06d}_iw1", "2021-01-01 06:00:00", f"S1A_{b}.SAFE")
+         for b in bids],
+        "burst_id_jpl string, sensing_time string, granule string",
+    ).write.parquet(hist)
+
+    assert main(["historical", "fetch-bursts", str(f1), str(f2),
+                 "--db-path", hist,
+                 "--frame-to-burst-json", f"{db}/frame_to_burst.json.gz"]) == 0
+    out = capsys.readouterr().out.strip().splitlines()
+    assert f"t001_{shared:06d}_iw1,2021-01-01 06:00:00" in out
+    assert len(out) == len(set(out)) == len(bids)

@@ -1,5 +1,6 @@
-"""r15: data-derived shuffle/state partition counts for one-shot
-micro-batch drains (burst_db_spark.streaming.drain_shuffle).
+"""Data-derived shuffle/state partition counts for one-shot micro-batch
+drains (burst_db_spark.streaming.drain_partitions), and the drain helpers
+that apply them (run_drain/drain) without leaving the session changed.
 
 The derivation must be a pure function of the staged INPUT DATA — never
 of the core count — so the driver's 8-core and 32-core bench runs
@@ -8,13 +9,24 @@ term grows the parallelism back."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+from concurrent.futures import ThreadPoolExecutor
+from types import SimpleNamespace
 
+import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import StreamingQueryException
+from pyspark.sql import functions as F
+
+from burst_db_spark import streaming
 from burst_db_spark.streaming import (
     _DRAIN_MAX_PARTITIONS,
     _DRAIN_TARGET_BYTES,
+    drain,
     drain_partitions,
-    drain_shuffle,
+    run_drain,
 )
 
 
@@ -59,21 +71,77 @@ def test_core_count_independent(tmp_path, monkeypatch):
     assert drain_partitions(p) == 2
 
 
+def _stage_ids(spark, tmp: str, n_files: int):
+    """Stage ``n_files`` real parquet files under ``{tmp}/in``; return the
+    streaming per-residue count over them."""
+    spark.range(0, 60, 1, numPartitions=n_files).write.parquet(f"{tmp}/in")
+    return (
+        spark.readStream.schema("id long").parquet(f"{tmp}/in")
+        .groupBy((F.col("id") % 3).alias("r"))
+        .agg(F.count("*").alias("n"))
+    )
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _offset_partitions(ckpt: str) -> str:
+    with open(f"{ckpt}/offsets/0") as f:
+        meta = json.loads(f.read().splitlines()[1])
+    return meta["conf"]["spark.sql.shuffle.partitions"]
+
+
 def test_conf_scoping_restores(spark, tmp_path):
-    p = _stage(tmp_path, "y", 3, 1024)
+    tmp = str(tmp_path / "d")
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    with drain_shuffle(spark, p) as n:
-        assert n == 3
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    views = _temp_views(spark)
+    got = drain(_stage_ids(spark, tmp, 3), tmp)
+    assert sorted((r.r, r.n) for r in got.collect()) == [(0, 20), (1, 20), (2, 20)]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert _temp_views(spark) == views
+    assert not os.path.exists(tmp)
 
 
 def test_conf_restored_on_error(spark, tmp_path):
-    p = _stage(tmp_path, "z", 1, 1024)
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        with drain_shuffle(spark, p):
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
+    views = _temp_views(spark)
+    # start() fails: the conf is restored and the lock released
+    tmp = str(tmp_path / "a")
+    agg = _stage_ids(spark, tmp, 2)
+    with pytest.raises(Py4JJavaError):
+        run_drain(spark, agg.writeStream.format("no.such.sink"), tmp)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    # the drain itself fails: no view or staging dir is left behind
+    tmp = str(tmp_path / "b")
+    bad = _stage_ids(spark, tmp, 1).select(
+        "r", F.assert_true(F.col("n") < 0).alias("never")
+    )
+    with pytest.raises(StreamingQueryException):
+        drain(bad, tmp)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert _temp_views(spark) == views
+    assert not os.path.exists(tmp)
+
+
+def test_overlapping_drains_keep_their_own_partitions(spark, tmp_path, monkeypatch):
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    views = _temp_views(spark)
+    tmps = {n: str(tmp_path / f"t{n}") for n in (2, 5)}
+    aggs = {n: _stage_ids(spark, tmp, n) for n, tmp in tmps.items()}
+    recorded = {}
+
+    def rmtree(path, ignore_errors=False):
+        recorded[path] = _offset_partitions(f"{path}/ckpt")
+        shutil.rmtree(path, ignore_errors=ignore_errors)
+
+    monkeypatch.setattr(streaming, "shutil", SimpleNamespace(rmtree=rmtree))
+    with ThreadPoolExecutor(2) as pool:
+        futs = {n: pool.submit(drain, aggs[n], tmps[n]) for n in tmps}
+        got = {n: sorted(tuple(r) for r in f.result(timeout=120).collect())
+               for n, f in futs.items()}
+    assert got[2] == got[5] == [(0, 20), (1, 20), (2, 20)]
+    assert recorded == {tmps[n]: str(n) for n in tmps}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert _temp_views(spark) == views
+    assert not any(os.path.exists(t) for t in tmps.values())

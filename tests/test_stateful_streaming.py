@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from burst_db_spark.plans import fixtures
 from burst_db_spark.plans.frame_db import build_frames
 from burst_db_spark.plans.reference_dates import reference_dates
-from burst_db_spark.streaming import stateful
+from burst_db_spark.streaming import drain, stateful
 from burst_db_spark.streaming.incremental import file_stream
 
 
@@ -34,17 +34,8 @@ def test_stateful_matches_batch(spark, tmp_path):
 
     stream = file_stream(spark, in_dir, "frame_fid int, sensing_time timestamp")
     out = stateful.attach(stream, interval_days=365, min_acqs=15)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("refs_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     got = {
         (r.frame_fid, r.ref_idx): r.ref_date
-        for r in spark.sql("SELECT * FROM refs_out").collect()
+        for r in drain(out, str(tmp_path), mode="append").collect()
     }
     assert got == batch

@@ -3,11 +3,12 @@ session windows and dedup behave as the batch operators."""
 
 from __future__ import annotations
 
-import shutil
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from burst_db_spark.streaming import drain, run_drain
 from burst_db_spark.streaming import incremental as st
 from tests.conftest import SF_DIR
 
@@ -19,24 +20,18 @@ EVENTS_SCHEMA = (
 
 @pytest.fixture()
 def events_dir(spark, tmp_path):
-    """events rows re-written as micro-batches (two files) with µs ts."""
+    """events rows re-written as micro-batches (two files) with µs ts,
+    staged as ``{tmp}/in`` for :func:`drain`."""
     from burst_db_spark.catalog import load
 
     src = load(spark, SF_DIR, "events")
-    out = str(tmp_path / "stream_in")
+    out = str(tmp_path / "stream" / "in")
     src.where(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(out)
     src.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(out)
     return out
 
 
-def test_daily_counts_stream_matches_batch(spark, events_dir, tmp_path):
-    stream = st.file_stream(spark, events_dir, EVENTS_SCHEMA)
-    agg = st.daily_counts(stream, "event_type", "ts")
-    st.run_available_now(agg, "daily_out", str(tmp_path / "ckpt"))
-    got = {
-        (r.event_type, str(r.day_start)): (r.n, round(r.total_value, 6))
-        for r in spark.sql("SELECT * FROM daily_out").collect()
-    }
+def test_daily_counts_stream_matches_batch(spark, events_dir):
     # append mode emits only windows finalized by the last watermark
     # (max_ts - 1 day); trailing windows stay in state — that IS the
     # streaming contract, so the batch expectation applies the same cut.
@@ -52,18 +47,23 @@ def test_daily_counts_stream_matches_batch(spark, events_dir, tmp_path):
         for r in batch
         if (max_ts - r.w.end).total_seconds() >= 86400
     }
+    stream = st.file_stream(spark, events_dir, EVENTS_SCHEMA)
+    agg = st.daily_counts(stream, "event_type", "ts")
+    got = {
+        (r.event_type, str(r.day_start)): (r.n, round(r.total_value, 6))
+        for r in drain(agg, os.path.dirname(events_dir), mode="append").collect()
+    }
     assert got == expected and len(got) > 0
 
 
-def test_session_counts_stream(spark, events_dir, tmp_path):
+def test_session_counts_stream(spark, events_dir):
+    n_input = spark.read.parquet(events_dir).count()
     stream = st.file_stream(spark, events_dir, EVENTS_SCHEMA)
     agg = st.session_counts(stream, "user_id", "ts", gap="12 hours")
-    st.run_available_now(agg, "sess_out", str(tmp_path / "ckpt2"))
-    out = spark.sql("SELECT * FROM sess_out")
+    out = drain(agg, os.path.dirname(events_dir), mode="append")
     # append mode holds back sessions still open at the final watermark;
     # emitted sessions must cover most rows and never exceed the input
     total = out.agg(F.sum("n_events")).collect()[0][0]
-    n_input = spark.read.parquet(events_dir).count()
     assert 0 < total <= n_input
     # sessions never overlap per user
     rows = out.orderBy("user_id", "session_start").collect()
@@ -80,12 +80,11 @@ def test_dedup_stream(spark, tmp_path):
          (2, "2024-01-01 01:00:00", 20.0)],
         "k long, ts string, v double",
     ).withColumn("ts", F.to_timestamp("ts"))
-    d = str(tmp_path / "in")
-    src.coalesce(1).write.parquet(d)
-    stream = st.file_stream(spark, d, "k long, ts timestamp, v double")
+    tmp = str(tmp_path / "dd")
+    src.coalesce(1).write.parquet(f"{tmp}/in")
+    stream = st.file_stream(spark, f"{tmp}/in", "k long, ts timestamp, v double")
     dd = st.dedup_stream(stream, ["k"], "ts")
-    st.run_available_now(dd, "dedup_out", str(tmp_path / "ckpt3"))
-    out = spark.sql("SELECT * FROM dedup_out").collect()
+    out = drain(dd, tmp, mode="append").collect()
     assert sorted(r.k for r in out) == [1, 2]  # one row per key survives
 
 
@@ -98,7 +97,6 @@ def test_watermark_append_drops_late_rows(spark, tmp_path):
     batches after its window closed. Append-mode tumbling 1h counts,
     1h watermark, three mtime-ordered batches."""
     import datetime
-    import os
 
     batches = [
         [(1, "2024-03-01 07:10:00"), (2, "2024-03-01 07:40:00"),
@@ -108,7 +106,7 @@ def test_watermark_append_drops_late_rows(spark, tmp_path):
          (7, "2024-03-01 14:00:00")],
     ]
     schema = "event_id long, ts timestamp"
-    in_dir = tmp_path / "wm_in"
+    in_dir = tmp_path / "wm" / "in"
     for i, rows in enumerate(batches):
         d = str(in_dir / f"b{i}")
         spark.createDataFrame(
@@ -126,14 +124,8 @@ def test_watermark_append_drops_late_rows(spark, tmp_path):
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").cast("string").alias("h"), "n")
     )
-    q = (
-        agg.writeStream.outputMode("append").format("memory")
-        .queryName("wm_append_test")
-        .option("checkpointLocation", str(tmp_path / "wm_ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = {r.h: r.n for r in spark.sql("SELECT * FROM wm_append_test").collect()}
+    out = drain(agg, str(tmp_path / "wm"), mode="append")
+    got = {r.h: r.n for r in out.collect()}
 
     # batch equivalent over the ON-TIME subset: the 07:00 window holds
     # only batch-0's two rows — row 6 arrived after the watermark
@@ -186,8 +178,6 @@ def test_foreachbatch_upsert_scd1(spark, tmp_path):
     into a parquet snapshot; latest version per key wins, redelivery of
     the same version overwrites, unseen keys insert. Final snapshot
     must equal the batch per-key winner over all deliveries."""
-    import os
-
     from burst_db_spark.streaming.upsert import upsert_stream_to_parquet
 
     batches = [
@@ -195,7 +185,7 @@ def test_foreachbatch_upsert_scd1(spark, tmp_path):
         [(2, 2, "b2"), (4, 1, "d1")],          # update k2, insert k4
         [(1, 1, "a1-redelivered"), (3, 3, "c3")],  # same-version redelivery
     ]
-    in_dir = tmp_path / "up_in"
+    in_dir = tmp_path / "in"
     for i, rows in enumerate(batches):
         d = str(in_dir / f"b{i}")
         spark.createDataFrame(rows, "k long, version long, payload string") \
@@ -210,11 +200,11 @@ def test_foreachbatch_upsert_scd1(spark, tmp_path):
         .load(str(in_dir / "*"))
     )
     snap_dir = str(tmp_path / "snapshot")
-    q = upsert_stream_to_parquet(
-        stream, snap_dir, key="k", version_col="version",
-        checkpoint=str(tmp_path / "up_ckpt"),
+    run_drain(
+        spark,
+        upsert_stream_to_parquet(stream, snap_dir, key="k", version_col="version"),
+        str(tmp_path),
     )
-    q.awaitTermination()
 
     got = {
         r.k: (r.version, r.payload)
@@ -317,12 +307,13 @@ def test_cusum_state_survives_restart_without_rereading(spark, tmp_path):
     cut = src.selectExpr("unix_micros(ts) AS u").approxQuantile(
         "u", [0.6], 0.0
     )[0]
-    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    in_dir = str(tmp_path / "in")
     b1 = src.where(F.expr(f"unix_micros(ts) <= {int(cut)}"))
     b2 = src.where(F.expr(f"unix_micros(ts) > {int(cut)}"))
     b1.coalesce(1).write.parquet(in_dir)
 
-    def drain() -> str:
+    def maintain() -> str:
+        # run_drain, not drain: the checkpoint must survive the restart
         stream = st.file_stream(
             spark, in_dir, "event_type string, ts timestamp"
         )
@@ -338,28 +329,22 @@ def test_cusum_state_survives_restart_without_rereading(spark, tmp_path):
             )
         )
         name = f"cusum_restart_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_drain(
+            spark,
+            agg.writeStream.outputMode("complete").format("memory").queryName(name),
+            str(tmp_path),
         )
-        q.awaitTermination()
         return name
 
-    drain()
+    maintain()
 
     # kill: delete every drained batch-1 data file, then add batch 2
-    import os
-
     for fn in os.listdir(in_dir):
         if fn.endswith(".parquet"):
             os.unlink(os.path.join(in_dir, fn))
     b2.coalesce(1).write.mode("append").parquet(in_dir)
 
-    name2 = drain()  # restart from the same checkpoint
+    name2 = maintain()  # restart from the same checkpoint
     daily = spark.table(name2)
 
     # state restored + only new files read = full-history daily counts
