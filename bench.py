@@ -290,6 +290,11 @@ HEADLINE = [
 # and graduate into the pinned set as they accumulate history. The
 # BENCH_DELTA suspect gate computes over the pinned set only —
 # unpinned deltas stay in the record as informational.
+#
+# Headline swaps (each one breaks a row's cross-round comparability):
+# - commit 59a824b: `t_tokenizer_fertility` left HEADLINE, replaced by
+#   `t_bpe_fertility_by_lang` (VERDICT r14 item 6); the old row is
+#   still registry-timed in BENCH_REGISTRY.json.
 PINNED_HISTORY = (
     "dd_docs_cascade_pipeline",
     "dd_embedding_nn",

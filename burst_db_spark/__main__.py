@@ -190,7 +190,7 @@ def main(argv: list[str] | None = None) -> int:
             "frame_fid", F.col("burst_id_jpl").alias("burst_id")
         )
         doc = catalog_document(catalog, jpl_bridge)
-        write_envelope(
+        n_frames = write_envelope(
             doc,
             args.out,
             "frame_fid",
@@ -201,7 +201,7 @@ def main(argv: list[str] | None = None) -> int:
                 "db_path": args.db,
             },
         )
-        print(json.dumps({"out": args.out, "n_frames": doc.count()}))
+        print(json.dumps({"out": args.out, "n_frames": n_frames}))
         return 0
 
     if args.cmd == "make-reference-dates":

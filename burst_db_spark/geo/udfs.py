@@ -189,6 +189,7 @@ def union_collect_agg(
     out_schema = StructType([key_field, StructField(out_col, StringType())])
 
     def _union(pdf: pd.DataFrame) -> pd.DataFrame:
+        # Known defect: WKT text follows member order, i.e. plan shape (ROADMAP)
         merged = P.collect_union_wkt([w for w in pdf[wkt_col] if w is not None])
         return pd.DataFrame({key: [pdf[key].iloc[0]], out_col: [merged]})
 

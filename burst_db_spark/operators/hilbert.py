@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from burst_db_spark.operators.zorder import equal_depth_exchange
+
 
 def with_hilbert_code(
     df: DataFrame,
@@ -130,7 +132,7 @@ def hilbert_write(
     write time (the OPTIMIZE ZORDER BY analog with better locality)."""
     coded = with_hilbert_code(df, x, y, bits, out="__h")
     (
-        coded.repartitionByRange(n_files, "__h")
+        equal_depth_exchange(coded, "__h", 2 * bits, n_files)
         .sortWithinPartitions("__h")
         .drop("__h")
         .write.options(**(writer_options or {}))

@@ -6,8 +6,8 @@ Why it matters at 100 TB: parquet prunes row groups by min/max stats.
 A bbox predicate over randomly-ordered data touches every file; after a
 Z-order sort, the same predicate's x and y ranges map to a contiguous
 Morton range, so file/row-group min/max stats eliminate most of the scan.
-``zorder_write`` is repartitionByRange + sortWithinPartitions on the
-code — a single range exchange, the same cost as any global sort, paid
+``zorder_write`` is a range exchange + sortWithinPartitions on the
+code — a single exchange, the same cost as any global sort, paid
 once at write time.
 
 The code itself is pure integer bit arithmetic (shift/and/or unrolled per
@@ -63,6 +63,42 @@ def quantize_sql(v: str, lo: float, hi: float, bits: int = 16) -> str:
     )
 
 
+def equal_depth_exchange(
+    df: DataFrame, code_col: str, code_bits: int, n: int
+) -> DataFrame:
+    """Split ``df`` into ``n`` partitions of consecutive ``code_col``
+    ranges with about equal row counts, cut where the data alone says.
+
+    ``repartitionByRange`` samples with a seed taken from the RDD id, so
+    its cut points, and the files and row groups written from them,
+    changed with how many RDDs the session had made before. Here the cuts
+    come from an exact count per top-12-bit code bucket (one small
+    aggregation), and each range goes to its partition through a hash key
+    that lands there."""
+    bucket = F.shiftright(F.col(code_col), max(0, code_bits - 12))
+    # null codes rank 0, as nulls sort first in a range exchange
+    hist = sorted(
+        (b, c) for b, c in df.groupBy(bucket).count().collect() if b is not None
+    )
+    total = sum(c for _, c in hist)
+    cuts: list[int] = []
+    seen = 0
+    for b, c in hist:
+        seen += c
+        while len(cuts) < n - 1 and seen * n >= (len(cuts) + 1) * total:
+            cuts.append(b + 1)
+    rank = sum((F.when(bucket >= cut, 1).otherwise(0) for cut in cuts), F.lit(0))
+    # the smallest bigint that hash partitioning sends to each partition
+    first = dict(
+        df.sparkSession.range(64 * n)
+        .groupBy(F.pmod(F.hash("id"), F.lit(n)))
+        .agg(F.min("id"))
+        .collect()
+    )
+    keys = F.array(*[F.lit(first[i]).cast("bigint") for i in range(n)])
+    return df.repartition(n, F.element_at(keys, rank + 1))
+
+
 def zorder_write(
     df: DataFrame,
     path: str,
@@ -75,17 +111,16 @@ def zorder_write(
     writer_options: dict | None = None,
 ) -> None:
     """Write ``df`` parquet clustered by Morton code: one range exchange
-    (repartitionByRange on the code → equal-depth files) + an in-partition
-    sort, so every file owns a compact Morton interval and its x/y min/max
-    stats are tight."""
+    (``equal_depth_exchange`` on the code → equal-depth files) + an
+    in-partition sort, so every file owns a compact Morton interval and
+    its x/y min/max stats are tight."""
     code = morton_code(
         quantize(F.col(x_col), lo, hi, bits),
         quantize(F.col(y_col), lo, hi, bits),
         bits,
     )
     (
-        df.withColumn("__z", code)
-        .repartitionByRange(n_files, "__z")
+        equal_depth_exchange(df.withColumn("__z", code), "__z", 2 * bits, n_files)
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.options(**(writer_options or {}))

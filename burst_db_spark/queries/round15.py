@@ -876,7 +876,7 @@ def o8_curve_sorted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     never alter, so the tile fingerprints (count + key sum) hash-match
     iff the sink is content-preserving. Row-group pruning quality for
     this layout is pinned separately in tests/test_layout_skipping.py
-    (hilbert 4/16 candidate row groups vs morton 8/16, shuffled
+    (hilbert 4/16 candidate row groups vs morton 7/16, shuffled
     16/16)."""
     from burst_db_spark.queries.slayer import _tmpdir
     from burst_db_spark.sinks import write_curve_sorted

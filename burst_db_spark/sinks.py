@@ -104,10 +104,11 @@ def write_metadata_table(
     spark: SparkSession, params: dict, path: str
 ) -> None:
     """K6: one-row params table embedded next to each output
-    (build_frame_db.py:548-573)."""
-    row = [tuple(str(v) for v in params.values())]
-    cols = list(params.keys())
-    spark.createDataFrame(row, cols).write.mode("overwrite").parquet(path)
+    (build_frame_db.py:548-573). The row is built on the JVM from
+    literals: one task and one file, no Python RDD."""
+    spark.range(1, numPartitions=1).select(
+        *[F.lit(str(v)).alias(k) for k, v in params.items()]
+    ).write.mode("overwrite").parquet(path)
 
 
 _SQLITE_TYPES = {

@@ -37,6 +37,24 @@ def nested_doc_df(df: DataFrame, key: str, list_cols: Sequence[str]) -> DataFram
     return df.groupBy(key).agg(*aggs)
 
 
+def _envelope(
+    df: DataFrame,
+    key: str,
+    list_cols: Sequence[str],
+    metadata: dict | None = None,
+) -> dict:
+    nested = nested_doc_df(df, key, list_cols)
+    data = {
+        str(row[key]): {c: list(row[c]) for c in list_cols}
+        for row in nested.toLocalIterator()
+    }
+    meta = {
+        "generation_time": datetime.now(timezone.utc).isoformat(),
+        **(metadata or {}),
+    }
+    return {"metadata": meta, "data": data}
+
+
 def envelope_json(
     df: DataFrame,
     key: str,
@@ -48,16 +66,7 @@ def envelope_json(
     The per-key aggregation is distributed; only the final bounded
     document is assembled driver-side (it is by definition a single
     artifact — same as the reference writing one JSON file)."""
-    nested = nested_doc_df(df, key, list_cols)
-    data = {
-        str(row[key]): {c: list(row[c]) for c in list_cols}
-        for row in nested.toLocalIterator()
-    }
-    meta = {
-        "generation_time": datetime.now(timezone.utc).isoformat(),
-        **(metadata or {}),
-    }
-    return json.dumps({"metadata": meta, "data": data}, sort_keys=True)
+    return json.dumps(_envelope(df, key, list_cols, metadata), sort_keys=True)
 
 
 def write_envelope(
@@ -66,10 +75,12 @@ def write_envelope(
     key: str,
     list_cols: Sequence[str],
     metadata: dict | None = None,
-) -> None:
+) -> int:
     """K3: write the envelope; ``.gz`` / ``.zip`` suffix → compressed
-    (utils.py:18-24 zips with level 6)."""
-    text = envelope_json(df, key, list_cols, metadata)
+    (utils.py:18-24 zips with level 6). Returns the number of keys
+    written, so a caller needs no second pass over ``df`` to count them."""
+    doc = _envelope(df, key, list_cols, metadata)
+    text = json.dumps(doc, sort_keys=True)
     if path.endswith(".gz"):
         with gzip.open(path, "wt") as f:
             f.write(text)
@@ -80,6 +91,7 @@ def write_envelope(
     else:
         with open(path, "w") as f:
             f.write(text)
+    return len(doc["data"])
 
 
 def read_envelope(

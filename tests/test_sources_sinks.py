@@ -214,6 +214,28 @@ def test_create_pipeline_emits_sqlite(spark, tmp_path):
 
     assert wkt_from_gpkg_blob(blob).startswith(("POLYGON", "MULTIPOLYGON"))
     gcon.close()
+    # every sink after the first two reads the written tables back, so
+    # the returned frames carry no frame DP and no geo UDF
+    for name in ("frames", "bridge", "bursts"):
+        plan = res[name]._jdf.queryExecution().optimizedPlan().toString()
+        for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, (name, node)
+    # the nine artifacts match those of the create that recomputed the
+    # frame plan once per sink (gpkg fid and envelope metadata left out)
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "artifact_digest",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "scripts",
+            "artifact_digest.py",
+        ),
+    )
+    ad = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(ad)
+    assert ad.artifact_digest(out) == "d4b05307692fff4c"
 
 
 def test_decode_wav_roundtrip_unit():
