@@ -18,11 +18,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from burst_db_spark.registry import all_queries
+from burst_db_spark.runner import noop_write, run
 from burst_db_spark.session import get_spark
 
 HEADLINE = [
@@ -492,15 +492,10 @@ def main() -> None:
         # AnalysisException at query 7)
         try:
             q_sf_dir = PINNED_SF.get(name, sf_dir)
-            samples: list[float] = []
-            for _ in range(runs):
-                # isolate queries: drop persisted intermediates so timings
-                # don't absorb eviction/GC pressure from earlier queries
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                df = specs[name].build(spark, q_sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                samples.append(time.perf_counter() - t0)
+            samples = [
+                run(specs[name], spark, q_sf_dir, noop_write)[2]
+                for _ in range(runs)
+            ]
             best = min(samples)
             timings[name] = round(best, 3)
             spreads[name] = [round(s, 3) for s in samples]

@@ -95,17 +95,6 @@ def envelope_udf(wkts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["xmin", "ymin", "xmax", "ymax"])
 
 
-_PT_SCHEMA = StructType(
-    [StructField("x", DoubleType()), StructField("y", DoubleType())]
-)
-
-
-@F.pandas_udf(_PT_SCHEMA)
-def centroid_udf(wkts: pd.Series) -> pd.DataFrame:
-    rows = [P.centroid(w) if w is not None else (None, None) for w in wkts]
-    return pd.DataFrame(rows, columns=["x", "y"])
-
-
 @F.pandas_udf(_ENV_SCHEMA)
 def utm_envelope_udf(wkts: pd.Series, epsgs: pd.Series) -> pd.DataFrame:
     """Envelope of each geometry AFTER forward-projecting its vertices

@@ -46,20 +46,6 @@ def string_agg_sorted(df: DataFrame, keys: Sequence[str], value: str, alias: str
     )
 
 
-def collect_sorted_list(df: DataFrame, keys: Sequence[str], value: str, alias: str) -> DataFrame:
-    """A6: list-collect agg, order-stabilized (build_frame_db.py:526-545)."""
-    return df.groupBy(*keys).agg(F.sort_array(F.collect_list(value)).alias(alias))
-
-
-def min_per_group(df: DataFrame, keys: Sequence[str], ts_col: str, alias: str, floor_seconds: bool = False) -> DataFrame:
-    """A7: earliest-per-group, optional floor-to-second
-    (create_cslc_burst_catalog.py:223-236)."""
-    expr = F.min(ts_col)
-    if floor_seconds:
-        expr = F.date_trunc("second", expr)
-    return df.groupBy(*keys).agg(expr.alias(alias))
-
-
 def first_seen(
     df: DataFrame,
     keys: Sequence[str],

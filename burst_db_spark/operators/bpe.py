@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from burst_db_spark.operators.text import tokens
+from burst_db_spark.runner import persist
 
 
 def word_types(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -134,9 +135,9 @@ def train_bpe(
     bind.
     """
     words = word_types(df, text_col)
-    state = words.select(
+    state = persist(words.select(
         F.split(F.col("word"), "").alias("sym"), F.col("n")
-    ).persist()
+    ))
     state.count()  # materialize once; iterations rewrite from here
 
     merges: list[tuple[int, str, str, int]] = []

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from burst_db_spark.operators.text import shingles, tokens
+from burst_db_spark.runner import persist
 
 NUM_HASHES = 16
 BAND_ROWS = 4  # 16 hashes → 4 bands of 4
@@ -130,7 +131,7 @@ def ngram_jaccard_pairs(
             .where(F.col("__df") <= max_df)
             .drop("__df")
         )
-    sh = sh.persist()
+    sh = persist(sh)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     common = (
@@ -156,7 +157,6 @@ def ngram_jaccard_pairs(
         .where(F.col("jaccard") >= threshold)
     )
     out = out.select("id_a", "id_b", "common", "jaccard")
-    out._dedup_cached = (sh,)  # release_dedup(out) unpersists
     return out
 
 
@@ -227,10 +227,8 @@ def jaccard_prefix_pairs(
     # + two verify sides) and in a cold session ReusedExchange does NOT
     # reliably dedupe them across the AQE stage boundaries (measured:
     # 2.9 s with persist vs 5.1 s without in bench context at sf0.1).
-    # Doc-count-sized metadata rows; same cache policy as
-    # ngram_jaccard_pairs' shingle frame (bench/tests clearCache
-    # between queries)
-    docs = docs.persist()
+    # Doc-count-sized metadata rows.
+    docs = persist(docs)
     a = docs.select(
         F.col(id_col).alias("id_a"),
         F.col("n_sh").alias("__na"),
@@ -265,7 +263,7 @@ def jaccard_prefix_pairs(
         F.col("toks").alias("toks_b"),
     )
     common = F.size(F.array_intersect("toks_a", "toks_b")).cast("bigint")
-    out = (
+    return (
         cand.join(fa, "id_a")
         .join(fb, "id_b")
         .withColumn("common", common)
@@ -276,8 +274,6 @@ def jaccard_prefix_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "common", "n_a", "n_b", "jaccard")
     )
-    out._dedup_cached = (docs,)  # release_dedup(out) unpersists
-    return out
 
 
 def jaccard_ppjoin_pairs(
@@ -338,7 +334,7 @@ def jaccard_ppjoin_pairs(
             ),
         )
     )
-    docs = docs.persist()  # same cache policy as jaccard_prefix_pairs
+    docs = persist(docs)  # same cache policy as jaccard_prefix_pairs
     a = docs.select(
         F.col(id_col).alias("id_a"),
         F.col("n_sh").alias("__na"),
@@ -395,7 +391,7 @@ def jaccard_ppjoin_pairs(
         F.col("toks").alias("toks_b"),
     )
     common = F.size(F.array_intersect("toks_a", "toks_b")).cast("bigint")
-    out = (
+    return (
         cand.join(fa, "id_a")
         .join(fb, "id_b")
         .withColumn("common", common)
@@ -406,8 +402,6 @@ def jaccard_ppjoin_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "common", "n_a", "n_b", "jaccard")
     )
-    out._dedup_cached = (docs,)  # release_dedup(out) unpersists
-    return out
 
 
 def minhash_signatures(
@@ -528,9 +522,9 @@ def minhash_lsh_dedup(
     :func:`minhash_signatures`) — shares the tokenize+shingle pass with
     other consumers of the same corpus; identical values either way.
     """
-    sigs = minhash_signatures(
+    sigs = persist(minhash_signatures(
         df, id_col, text_col, num_hashes, shingles=shingles
-    ).persist()
+    ))
     cands = lsh_candidate_pairs(sigs, id_col, num_hashes, band_rows)
     # verify on the signature packed as ONE array column per side: the
     # joined row stays narrow and the agreement count is a single
@@ -545,15 +539,13 @@ def minhash_lsh_dedup(
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    out = (
+    return (
         cands.join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn("est_sim", agree / F.lit(float(num_hashes)))
         .where(F.col("est_sim") >= threshold)
         .select("id_a", "id_b", "est_sim")
     )
-    out._dedup_cached = (sigs,)  # release_dedup(out) unpersists
-    return out
 
 
 def shingle_digests(
@@ -678,7 +670,7 @@ def minhash_incremental_manifest(
     in). Returns (new_id, dup_of_min, n_old_dups, max_est_sim) — one row
     per duplicated new doc. Extracted from queries/round9.py so the
     constant-density scale probe exercises the identical plan."""
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes).persist()
+    sigs = persist(minhash_signatures(df, id_col, text_col, num_hashes))
     bands = lsh_band_frame(sigs, id_col, num_hashes, band_rows)
     is_new = new_pred
     new_b = bands.where(is_new).select(
@@ -702,7 +694,7 @@ def minhash_incremental_manifest(
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    out = (
+    return (
         cand.join(sa, "new_id")
         .join(sb, "old_id")
         .withColumn("est", agree / F.lit(float(num_hashes)))
@@ -715,45 +707,24 @@ def minhash_incremental_manifest(
         )
         .orderBy("new_id")
     )
-    out._dedup_cached = (sigs,)  # release_dedup(out) unpersists
-    return out
 
 
-def containment_prefix_pairs(
+def containment_doc_sets(
     df: DataFrame,
     id_col: str,
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.6,
 ) -> DataFrame:
-    """EXACT containment join via prefix filtering: emit ordered pairs
-    (a, b) with C(A,B) = |A∩B| / |A| ≥ τ over n-gram shingle sets —
-    near-SUPERSET detection (quote-with-additions, boilerplate+payload),
-    the asymmetric cousin of ``jaccard_prefix_pairs``.
-
-    Prefix theorem for containment (Chaudhuri et al. ICDE'06 §SSJoin /
-    Bayardo et al. WWW'07): C(A,B) ≥ τ needs |A∩B| ≥ ceil(τ·|A|), so A
-    and B must share a shingle inside A's first |A| - ceil(τ·|A|) + 1
-    shingles in the global rarity order. Only A's PREFIX explodes; the
-    probe side indexes ALL its shingles (containment gives no prefix
-    bound on the superset side) — still an equi-join on shingle, never
-    an all-pairs. Size filter: |B| ≥ τ·|A| prunes inside the candidate
-    join. LOSSLESS: the verify is an exact ``array_intersect`` over the
-    distinct candidate pairs.
-
-    Returns (id_a, id_b, inter_size, a_size) for surviving pairs.
-    Scale shape mirrors jaccard_prefix_pairs: one shingle shuffle for
-    document frequency, one doc shuffle for the ordered arrays, the
-    candidate equi-join, two id-joins for the verify. The doc frame is
-    persisted (three subtrees hang off it) and released by
-    ``release_dedup`` or the session's clearCache.
-    """
+    """The persisted doc frame :func:`containment_prefix_pairs` joins on:
+    ``(id_col, n_sh, toks, prefix)`` with each doc's distinct shingles in
+    global rarity order and its containment prefix at ``threshold``."""
     from pyspark.sql import Window
 
     sh = doc_shingles(df, id_col, text_col, n)
     w = Window.partitionBy("shingle")
     ranked = sh.withColumn("__df", F.count("*").over(w))
-    docs = (
+    return persist(
         ranked.groupBy(id_col)
         .agg(
             F.array_sort(
@@ -778,8 +749,43 @@ def containment_prefix_pairs(
                 ),
             ),
         )
-        .persist()
     )
+
+
+def containment_prefix_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.6,
+    doc_sets: DataFrame | None = None,
+) -> DataFrame:
+    """EXACT containment join via prefix filtering: emit ordered pairs
+    (a, b) with C(A,B) = |A∩B| / |A| ≥ τ over n-gram shingle sets —
+    near-SUPERSET detection (quote-with-additions, boilerplate+payload),
+    the asymmetric cousin of ``jaccard_prefix_pairs``.
+
+    Prefix theorem for containment (Chaudhuri et al. ICDE'06 §SSJoin /
+    Bayardo et al. WWW'07): C(A,B) ≥ τ needs |A∩B| ≥ ceil(τ·|A|), so A
+    and B must share a shingle inside A's first |A| - ceil(τ·|A|) + 1
+    shingles in the global rarity order. Only A's PREFIX explodes; the
+    probe side indexes ALL its shingles (containment gives no prefix
+    bound on the superset side) — still an equi-join on shingle, never
+    an all-pairs. Size filter: |B| ≥ τ·|A| prunes inside the candidate
+    join. LOSSLESS: the verify is an exact ``array_intersect`` over the
+    distinct candidate pairs.
+
+    Returns (id_a, id_b, inter_size, a_size) for surviving pairs.
+    Scale shape mirrors jaccard_prefix_pairs: one shingle shuffle for
+    document frequency, one doc shuffle for the ordered arrays, the
+    candidate equi-join, two id-joins for the verify. The doc frame is
+    persisted (three subtrees hang off it); pass ``doc_sets`` (a
+    :func:`containment_doc_sets` frame at the same ``threshold``) to
+    share it with other consumers.
+    """
+    docs = doc_sets
+    if docs is None:
+        docs = containment_doc_sets(df, id_col, text_col, n, threshold)
     a = docs.select(
         F.col(id_col).alias("id_a"),
         F.col("n_sh").alias("__na"),
@@ -806,7 +812,7 @@ def containment_prefix_pairs(
         F.col("n_sh").alias("a_size"),
     )
     vb = docs.select(F.col(id_col).alias("id_b"), F.col("toks").alias("__tb"))
-    out = (
+    return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .withColumn(
@@ -815,27 +821,6 @@ def containment_prefix_pairs(
         .where(F.col("inter_size") * 10 >= t10 * F.col("a_size"))
         .select("id_a", "id_b", "inter_size", F.col("a_size").cast("bigint"))
     )
-    out._dedup_cached = (docs,)  # release_dedup(out) unpersists
-    return out
-
-
-def release_dedup(result: DataFrame) -> None:
-    """Unpersist the intermediate frames cached behind a
-    ``ngram_jaccard_pairs`` / ``jaccard_prefix_pairs`` /
-    ``minhash_lsh_dedup`` result (the shingle frame, the prefix-token
-    doc frame, and the minhash signature frame respectively). Mirrors
-    ``release_grid_nn`` / ``release_pagerank``: call AFTER the result is
-    materialized — a later action would recompute from scratch,
-    correctly but uncached. Long-lived sessions (bench loops, notebook
-    services) otherwise accumulate one cached frame per call; short
-    sessions can keep relying on ``spark.catalog.clearCache()``.
-
-    Call it on the EXACT frame the operator returned: the handles are a
-    Python attribute on that object, so any derived frame
-    (``result.select(...)``, ``.where(...)``) carries none and this is
-    then a silent no-op that leaves the caches in place."""
-    for df in getattr(result, "_dedup_cached", ()):
-        df.unpersist()
 
 
 # Edge-count gate for the local union-find fast path. The near-dup PAIR
@@ -884,7 +869,7 @@ def connected_components(
     lvl = p.storageLevel
     owns_cache = not (lvl.useMemory or lvl.useDisk)
     if owns_cache:
-        p = p.persist()
+        p = persist(p)
     n_pairs = p.count()
     if n_pairs <= local_edge_gate:
         # one parallel-fetch collect of the RAW pair list — union-find

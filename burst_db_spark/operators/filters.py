@@ -1,4 +1,4 @@
-"""Projection / filter operators (SURVEY.md §2.2, P1-P11).
+"""Projection / filter operators (SURVEY.md §2.2, P1-P10).
 
 Reference semantics these mirror (cited file:line are in /root/reference):
 - P1 minimal projection + int casts   build_frame_db.py:453-480
@@ -7,7 +7,6 @@ Reference semantics these mirror (cited file:line are in /root/reference):
 - P4 boolean + IN + NOT IN combo      create_cslc_burst_catalog.py:124-139
 - P7 interval (blackout) anti-join    create_cslc_burst_catalog.py:172-183
 - P10 dedup                           export_denormalized_db.py:233-248
-- P11 null guard                      create_blackout_dates_s1.py:131-133
 
 All are plain Column predicates → Catalyst pushes them into the parquet
 scan (check `.explain()` for PushedFilters). The interval anti-join
@@ -38,11 +37,6 @@ def project_minimal(df: DataFrame, columns: Sequence[str], int_casts: Sequence[s
 def filter_isin(df: DataFrame, column: str, values: Sequence) -> DataFrame:
     """P2: parameterized IN-list. For huge lists prefer a broadcast semi-join."""
     return df.where(F.col(column).isin(list(values)))
-
-
-def filter_isin_semijoin(df: DataFrame, keys: DataFrame, column: str) -> DataFrame:
-    """P2 at scale: IN-list as a broadcast left-semi join (no shuffle of df)."""
-    return df.join(F.broadcast(keys), on=column, how="left_semi")
 
 
 def filter_range(df: DataFrame, column: str, lo, hi) -> DataFrame:
@@ -86,8 +80,3 @@ def dedup_exact_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     with an explicit arg-min — see aggregates.first_seen.)
     """
     return df.select(*keys).distinct()
-
-
-def filter_not_null(df: DataFrame, column: str) -> DataFrame:
-    """P11: null/NaT guard."""
-    return df.where(F.col(column).isNotNull())

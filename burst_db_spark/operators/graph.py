@@ -30,14 +30,16 @@ formulation as pure DataFrame ops:
 At 100 TB scale the rank table is node-sized and the edge table
 edge-sized; k iterations = k bounded shuffle pairs. No driver state
 beyond the iteration counter. The returned frame is persisted (it IS the
-final materialized iteration) — call ``release_pagerank(df)`` when done,
-or rely on session ``clearCache``.
+final materialized iteration), released with the caller's
+:func:`burst_db_spark.runner.scope`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from burst_db_spark.runner import persist
 
 # Sub-bucket fan-out for the deterministic contribution fold. 32 bounds
 # the level-2 row width and splits any skewed destination's reduce work
@@ -67,12 +69,6 @@ def _ordered_fold(pairs: Column) -> Column:
     )
 
 
-def release_pagerank(ranks: DataFrame) -> None:
-    """Drop the persisted final-iteration cache backing ``pagerank``'s
-    returned frame (safe to call after the caller has materialized it)."""
-    ranks.unpersist()
-
-
 def pagerank(
     edges: DataFrame,
     nodes: DataFrame,
@@ -92,7 +88,7 @@ def pagerank(
     # g1 lineitem⋈orders + distinct) re-executes iterations+2 times.
     # Registered before nodes.count() so the node derivation (built from
     # the same edges plan) already hits the cache.
-    edges = edges.persist()
+    edges = persist(edges)
     n_nodes = nodes.count()  # driver scalar: one number, sizes the teleport
     if n_nodes == 0:
         edges.unpersist()
@@ -101,7 +97,7 @@ def pagerank(
         )  # empty graph: empty (id, rank) frame, same schema
     teleport = (1.0 - damping) / n_nodes
 
-    deg = edges.groupBy(src).agg(F.count("*").cast("long").alias("__deg")).persist()
+    deg = persist(edges.groupBy(src).agg(F.count("*").cast("long").alias("__deg")))
     ranks = nodes.select(
         F.col(id_col).alias("__v"),
         F.lit(1.0 / n_nodes).alias("__p"),
@@ -161,7 +157,7 @@ def pagerank(
                 )
             # materialize each step: without this, step k's lazy plan
             # recomputes steps 1..k-1 (O(k²) shuffles total instead of O(k))
-            new_ranks = new_ranks.persist()
+            new_ranks = persist(new_ranks)
             new_ranks.count()
             if prev is not None:
                 prev.unpersist()
@@ -357,7 +353,7 @@ def pagerank_int(
     # 100 TB fallback). `edges` stays a persist, NOT a checkpoint: the
     # caller's node spine is usually derived from the same edge plan and
     # only cache-fragment substitution lets nodes.count() reuse it.
-    edges = edges.persist()
+    edges = persist(edges)
     n_nodes = nodes.count()
     if n_nodes == 0:
         edges.unpersist()
@@ -365,7 +361,7 @@ def pagerank_int(
     p0 = PR_INT_MASS // n_nodes
     tp = (15 * PR_INT_MASS) // (100 * n_nodes)
     bcast = n_nodes <= 500_000
-    deg = edges.groupBy(src).agg(F.count("*").cast("long").alias("__deg")).persist()
+    deg = persist(edges.groupBy(src).agg(F.count("*").cast("long").alias("__deg")))
     ranks = nodes.select(
         F.col(id_col).alias("__v"), F.lit(p0).cast("bigint").alias("__p")
     )

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from burst_db_spark.operators.text import tokens
+from burst_db_spark.runner import persist
 
 DSIR_BUCKETS = 64
 DSIR_ALPHA = 0.5
@@ -93,10 +94,8 @@ def dsir_scored_frame(
     n_buckets: int = DSIR_BUCKETS,
     alpha: float = DSIR_ALPHA,
     doc_bucket: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(scored, cached) — every raw-pool doc with ``n_feats`` and
-    ``dsir_score``, plus the persisted (doc, bucket) frame the caller
-    must hand to ``release_dedup`` via ``_dedup_cached``. Shared by the
+) -> DataFrame:
+    """Every raw-pool doc with ``n_feats`` and ``dsir_score``. Shared by the
     top-k selector and the Gumbel resampler.
 
     Plan: one explode of hashed features → one (doc, bucket) count
@@ -131,11 +130,10 @@ def dsir_scored_frame(
         # counts first and persist THAT (docs x n_buckets rows, narrow —
         # model-state, not corpus-sized). Three consumers (model counts,
         # totals, per-doc scores) read the cached frame, so the corpus is
-        # tokenized once, not once per consumer. release_dedup(out)
-        # unpersists.
-        doc_bucket = feats.groupBy(id_col, "__t", "b").agg(
+        # tokenized once, not once per consumer.
+        doc_bucket = persist(feats.groupBy(id_col, "__t", "b").agg(
             F.count("*").cast("bigint").alias("cnt")
-        ).persist()
+        ))
     counts = doc_bucket.groupBy("b").agg(
         F.sum(F.when(F.col("__t"), F.col("cnt")).otherwise(0))
         .cast("bigint")
@@ -183,7 +181,7 @@ def dsir_scored_frame(
             ),
         )
     )
-    return scored, doc_bucket
+    return scored
 
 
 def dsir_scores(
@@ -202,21 +200,19 @@ def dsir_scores(
     global row_number sort: ranking the whole raw pool in one window
     partition is exactly the plan that dies at 100 TB. ``sel_rank`` is
     then a window over the N-row survivor frame only."""
-    scored, doc_bucket = dsir_scored_frame(
+    scored = dsir_scored_frame(
         docs, target, id_col, text_col, n_buckets, alpha, doc_bucket
     )
     topn = scored.orderBy(F.col("dsir_score").desc(), F.col(id_col)).limit(
         top_n
     )
     w = Window.orderBy(F.col("dsir_score").desc(), F.col(id_col))
-    out = topn.select(
+    return topn.select(
         id_col,
         "n_feats",
         "dsir_score",
         F.row_number().over(w).cast("int").alias("sel_rank"),
     )
-    out._dedup_cached = (doc_bucket,)  # release_dedup(out) unpersists
-    return out
 
 
 def hashed_gumbel(key: Column, salt: str = "g") -> Column:
@@ -252,7 +248,7 @@ def dsir_gumbel_sample(
     hashed, not random (:func:`hashed_gumbel`), so the sample is
     reproducible and the plan stays a pure TakeOrdered — per-partition
     heaps, no RNG state, no global sort."""
-    scored, doc_bucket = dsir_scored_frame(
+    scored = dsir_scored_frame(
         docs, target, id_col, text_col, n_buckets, alpha
     )
     keyed = scored.select(
@@ -265,7 +261,7 @@ def dsir_gumbel_sample(
         top_n
     )
     w = Window.orderBy(F.col("sample_key").desc(), F.col(id_col))
-    out = topn.select(
+    return topn.select(
         id_col,
         "n_feats",
         "dsir_score",
@@ -273,23 +269,16 @@ def dsir_gumbel_sample(
         "sample_key",
         F.row_number().over(w).cast("int").alias("sample_rank"),
     )
-    out._dedup_cached = (doc_bucket,)  # release_dedup(out) unpersists
-    return out
 
 
-def dsir_scores_exact(
+def dsir_exact_doc_features(
     docs: DataFrame,
     target: Column,
     id_col: str = "doc_id",
     text_col: str = "text",
-    alpha: float = DSIR_ALPHA,
-    top_n: int = 50,
 ) -> DataFrame:
-    """DSIR with EXACT n-gram features (no hashing) — the audit twin of
-    :func:`dsir_scores`. The model has one row per distinct feature
-    (vocabulary-sized — fine at audit scale, the hashed variant is the
-    100 TB path) with add-alpha smoothing over the OBSERVED vocabulary
-    size V; per-doc scores fold in feature-string order."""
+    """The persisted ``(id_col, __t, feat, cnt)`` frame of exact n-gram
+    feature counts per doc that :func:`dsir_scores_exact` models."""
     n_parts = docs.sparkSession.sparkContext.defaultParallelism
     tokd = docs.repartition(n_parts).select(
         F.col(id_col), target.alias("__t"), tokens(F.col(text_col)).alias("__toks")
@@ -299,9 +288,30 @@ def dsir_scores_exact(
         F.col("__t"),
         F.explode(_features(F.col("__toks"))).alias("feat"),
     )
-    doc_feat = feats.groupBy(id_col, "__t", "feat").agg(
+    return persist(feats.groupBy(id_col, "__t", "feat").agg(
         F.count("*").cast("bigint").alias("cnt")
-    ).persist()
+    ))
+
+
+def dsir_scores_exact(
+    docs: DataFrame,
+    target: Column,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    alpha: float = DSIR_ALPHA,
+    top_n: int = 50,
+    doc_feat: DataFrame | None = None,
+) -> DataFrame:
+    """DSIR with EXACT n-gram features (no hashing) — the audit twin of
+    :func:`dsir_scores`. The model has one row per distinct feature
+    (vocabulary-sized — fine at audit scale, the hashed variant is the
+    100 TB path) with add-alpha smoothing over the OBSERVED vocabulary
+    size V; per-doc scores fold in feature-string order.
+
+    ``doc_feat``: optionally the :func:`dsir_exact_doc_features` frame
+    of the same corpus and target, for a caller that reads it too."""
+    if doc_feat is None:
+        doc_feat = dsir_exact_doc_features(docs, target, id_col, text_col)
     counts = doc_feat.groupBy("feat").agg(
         F.sum(F.when(F.col("__t"), F.col("cnt")).otherwise(0))
         .cast("bigint")
@@ -354,14 +364,12 @@ def dsir_scores_exact(
         top_n
     )
     w = Window.orderBy(F.col("dsir_score").desc(), F.col(id_col))
-    out = topn.select(
+    return topn.select(
         id_col,
         "n_feats",
         "dsir_score",
         F.row_number().over(w).cast("int").alias("sel_rank"),
     )
-    out._dedup_cached = (doc_feat,)  # release_dedup(out) unpersists
-    return out
 
 
 def split_bucket(key: Column, salt: str = "split", n: int = 10) -> Column:

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from burst_db_spark.runner import persist
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -182,7 +184,7 @@ def lsh_near_dup_pairs(
     # both verify sides (the minhash pattern, operators/dedup.py). The
     # bits land in a real column first so the plane kernel runs once
     # per row; keys are cheap slices of that column.
-    sig = (
+    sig = persist(
         emb.select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).alias("vec"),
@@ -195,7 +197,6 @@ def lsh_near_dup_pairs(
             "nrm",
             lsh_band_keys(F.col("bits"), n_planes, bits_per_band).alias("keys"),
         )
-        .persist()
     )
     # Verify WITHIN each LSH bucket via applyInPandas: every vector
     # crosses into Python once per bucket membership (|bands| rows ≈
@@ -435,12 +436,12 @@ def lsh_near_dup_pairs_multiprobe(
     _keys_udf = _band_keys_kernel(plane_mat, n_bands, r)
 
     if not directed:
-        sig = emb.select(
+        sig = persist(emb.select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).alias("vec"),
             _norm(F.col(vec_col)).alias("nrm"),
             _keys_udf(F.col(vec_col)).alias("keys"),
-        ).persist()
+        ))
         stored = sig.select(
             "vid", F.posexplode("keys").alias("band_idx", "key")
         )
@@ -488,12 +489,12 @@ def lsh_near_dup_pairs_multiprobe(
             out = np.concatenate([keys[:, :, None], masks_arr], axis=2)
             return pd.Series(out.tolist())
 
-        sig = emb.select(
+        sig = persist(emb.select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).alias("vec"),
             _norm(F.col(vec_col)).alias("nrm"),
             _keys_masks_udf(F.col(vec_col)).alias("km"),
-        ).persist()
+        ))
         exploded = sig.select(
             "vid", F.posexplode("km").alias("band_idx", "arr")
         )
@@ -560,12 +561,7 @@ def lsh_near_dup_pairs_multiprobe(
             _cos_pairs(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")),
         )
     )
-    out = scored.where(F.col("cos") >= threshold).select("id_a", "id_b", "cos")
-    # release_dedup(out) unpersists the signature frame (both branches
-    # persist it); without this every call leaked one cached frame until
-    # catalog.clearCache (r9 ADVICE).
-    out._dedup_cached = (sig,)
-    return out
+    return scored.where(F.col("cos") >= threshold).select("id_a", "id_b", "cos")
 
 
 def lsh_multiprobe_oracle_sql(
@@ -924,9 +920,8 @@ def kmeans_unrolled_stats(
         # Lloyd re-scans the SAME input every round (2 assigns + the
         # final stats) — cache it, the standard iterative-training move.
         # Scoped to the opt-in funnel path so every oracle-checked k=16
-        # row keeps its pure uncached plan; released by the
-        # session-level clearCache the registry contract documents.
-        emb = emb.persist()
+        # row keeps its pure uncached plan.
+        emb = persist(emb)
     for _ in range(rounds):
         assigned = _assign(cur)
         cur = _update(assigned)
@@ -946,7 +941,7 @@ def kmeans_unrolled_stats(
         # the SemDeDup pipeline) reference the final assignment several
         # times — un-cached, each reference re-runs the whole funnel
         # assignment pass (measured ~9 s/reference at the 100x rung)
-        assigned = assigned.persist()
+        assigned = persist(assigned)
     counts = assigned.groupBy("cell").agg(
         F.count("*").cast("bigint").alias("n_members")
     )
@@ -1374,13 +1369,13 @@ def lsh_near_dup_incremental(
     n_bands = n_planes // r
     _keys_udf = _band_keys_kernel(plane_mat, n_bands, r)
 
-    sig = emb.select(
+    sig = persist(emb.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("vec"),
         _norm(F.col(vec_col)).alias("nrm"),
         _keys_udf(F.col(vec_col)).alias("keys"),
         new_pred.alias("is_new"),
-    ).persist()
+    ))
     bands = sig.select(
         "vid", "is_new", F.posexplode("keys").alias("band_idx", "band_key")
     )
@@ -1410,7 +1405,7 @@ def lsh_near_dup_incremental(
         F.col("vec").alias("vb"),
         F.col("nrm").alias("nb"),
     )
-    out = (
+    return (
         cand.join(a, "new_id")
         .join(b, "old_id")
         .withColumn(
@@ -1426,8 +1421,6 @@ def lsh_near_dup_incremental(
         )
         .orderBy("new_id")
     )
-    out._dedup_cached = (sig,)  # release_dedup(out) unpersists
-    return out
 
 
 def lsh_incremental_oracle_sql(
@@ -1665,9 +1658,8 @@ def hier_group_state(
     member argmin), and when ``cents`` is an ITERATIVE round's output
     (the unrolled Lloyd trainer) each un-cached re-read would re-execute
     the previous round's full N-row assignment — the classic
-    multi-reference lineage blowup. Cache released by the session-level
-    clearCache the registry contract documents."""
-    cents = cents.persist()
+    multi-reference lineage blowup."""
+    cents = persist(cents)
     h = F.conv(
         F.substring(F.md5(F.col("cell").cast("string")), 1, 8), 16, 10
     ).cast("bigint")

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from burst_db_spark.runner import persist
+
 
 def _cell(col: Column, size: float) -> Column:
     return F.floor(col / F.lit(size)).cast("long")
@@ -182,9 +184,7 @@ def grid_nn_join(
     Caching note: the per-ring frames are persisted and must stay cached
     until the returned (lazy) DataFrame is materialized — probe-sized
     rows, bounded by the input, never candidate-pair-sized. They are
-    tracked on the result as ``result._grid_nn_cached``; call
-    ``release_grid_nn(result)`` AFTER the action (or clearCache) so a
-    long-lived session doesn't accumulate dead cached blocks.
+    released with the caller's :func:`burst_db_spark.runner.scope`.
     """
     from pyspark.sql import Window
 
@@ -200,13 +200,7 @@ def grid_nn_join(
     # the fallback recomputes everything (measured 1.9x wall-clock on the
     # constant-density probe at 10x). Cached frames are probe-sized rows,
     # never candidate-pair-sized.
-    cached: list[DataFrame] = []
-
-    def _persist(df: DataFrame) -> DataFrame:
-        cached.append(df.persist())
-        return df
-
-    pts = _persist(
+    pts = persist(
         points.withColumn("__pcx", _cell(F.col(qx), cell_size)).withColumn(
             "__pcy", _cell(F.col(qy), cell_size)
         )
@@ -236,13 +230,13 @@ def grid_nn_join(
             .where(F.col("__rn") == 1)
             .drop("__rn", "__ncx", "__ncy", "__pcx", "__pcy")
         )
-        confirmed = _persist(
+        confirmed = persist(
             best.where(
                 F.col("__dist_sq") <= F.lit(float(k * cell_size) ** 2)
             ).select(*out_cols)
         )
         resolved = confirmed if resolved is None else resolved.unionByName(confirmed)
-        remaining = _persist(
+        remaining = persist(
             remaining.join(confirmed.select(probe_key), probe_key, "left_anti")
         )
 
@@ -259,14 +253,4 @@ def grid_nn_join(
         .where(F.col("__rn") == 1)
         .drop("__rn", "__one")
     )
-    result = resolved.unionByName(fb.select(*out_cols))
-    result._grid_nn_cached = cached  # released via release_grid_nn
-    return result
-
-
-def release_grid_nn(result: DataFrame) -> None:
-    """Unpersist the ring-state frames backing a ``grid_nn_join`` result.
-    Call after the result has been materialized (a second action would
-    recompute from scratch, correctly but uncached)."""
-    for df in getattr(result, "_grid_nn_cached", ()):
-        df.unpersist()
+    return resolved.unionByName(fb.select(*out_cols))

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from burst_db_spark.runner import persist
+
 WORD_SPLIT = r"\s+"
 # BPE-ish pre-tokenizer: letter runs | single digits | single punctuation
 BPE_ISH = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
@@ -318,10 +320,9 @@ def curriculum_buckets_scalable(
     order = [score_col] + ([order_key] if order_key is not None else [])
     spark = df.sparkSession
     n_parts = n_parts or spark.sparkContext.defaultParallelism
-    ranged = (
+    ranged = persist(
         df.repartitionByRange(n_parts, *order)
         .withColumn("__pid", F.spark_partition_id())
-        .persist()
     )
     counts = {
         r["__pid"]: r["cnt"]
@@ -388,10 +389,9 @@ def grouped_ntile_scalable(
 
     spark = df.sparkSession
     n_parts = n_parts or spark.sparkContext.defaultParallelism
-    ranged = (
+    ranged = persist(
         df.repartitionByRange(n_parts, F.col(group_col), *order)
         .withColumn("__pid", F.spark_partition_id())
-        .persist()
     )
     counts = (
         ranged.groupBy("__pid", group_col)

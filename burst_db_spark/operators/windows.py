@@ -1,4 +1,4 @@
-"""Window / sequence operators (SURVEY.md §2.5, W1, W4, W6, W7).
+"""Window / sequence operators (SURVEY.md §2.5, W1, W4, W6).
 
 All window specs partition by a key — no global (unpartitioned) windows in
 hot paths, so at 100 TB each partition's state stays bounded and Spark
@@ -70,22 +70,3 @@ def water_year(ts: Column, pivot_month: int) -> Column:
     (snow_month_filter.py:329-336): months >= pivot belong to the year of
     the NEXT calendar year boundary."""
     return (F.year(ts) + (F.month(ts) >= pivot_month).cast("int")).alias("water_year")
-
-
-def first_significant_block(
-    block_sums: DataFrame,
-    key: str,
-    season_col: str,
-    min_len: int,
-    flag_col: str = "flag",
-) -> DataFrame:
-    """W7: per (key, season): start of the first run of flagged rows with
-    length >= min_len, and the last flagged timestamp
-    (snow_month_filter.py:336-366)."""
-    flagged = block_sums.where(F.col(flag_col) == 1)
-    sig = flagged.where(F.col("run_len") >= min_len)
-    first_sig = sig.groupBy(key, season_col).agg(
-        F.min("start_ts").alias("season_start")
-    )
-    last_bad = flagged.groupBy(key, season_col).agg(F.max("end_ts").alias("season_end"))
-    return first_sig.join(last_bad, [key, season_col], "inner")

@@ -14,7 +14,6 @@ exactly, so both carry real oracles.)
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,6 +22,7 @@ from burst_db_spark.catalog import load
 from burst_db_spark.operators import multimodal as mm
 from burst_db_spark.plans.reference_dates import reference_dates
 from burst_db_spark.registry import register
+from burst_db_spark.runner import tmpdir
 from burst_db_spark.streaming import drain
 
 
@@ -158,7 +158,7 @@ def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from burst_db_spark.streaming import incremental as st
 
     src = load(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="bds_stream_")
+    tmp = tmpdir("bds_stream_")
     data_dir = f"{tmp}/in"
     src.write.parquet(data_dir)
     schema = src.schema
@@ -230,7 +230,7 @@ def stream_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from burst_db_spark.streaming import incremental as st
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="bds_corpus_stream_")
+    tmp = tmpdir("bds_corpus_stream_")
     data_dir = f"{tmp}/in"
     docs.write.parquet(data_dir)
     stream = st.file_stream(spark, data_dir, docs.schema)
@@ -354,7 +354,7 @@ def stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from burst_db_spark.streaming import incremental as st
 
     src = load(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="bds_stream_daily_")
+    tmp = tmpdir("bds_stream_daily_")
     data_dir = f"{tmp}/in"
     src.write.parquet(data_dir)
     stream = st.file_stream(spark, data_dir, src.schema)

@@ -13,6 +13,7 @@ from burst_db_spark.operators.setops import topk_per_group
 from burst_db_spark.operators import similarity as sim_ops
 from burst_db_spark.operators.similarity import cosine
 from burst_db_spark.registry import register
+from burst_db_spark.runner import persist
 
 
 @register(
@@ -199,10 +200,9 @@ def dd_embedding_nn_exact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs in ONE task — spreading the probe side parallelizes the
     # nested-loop join across the cluster
     n_parts = spark.sparkContext.defaultParallelism
-    with_norm = (
+    with_norm = persist(
         emb.repartition(n_parts)
         .select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
-        .persist()
     )
     a = with_norm.select(
         F.col("vec_id").alias("id_a"),

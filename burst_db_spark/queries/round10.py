@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from burst_db_spark.catalog import load
 from burst_db_spark.operators.packing import epoch_shuffle
 from burst_db_spark.registry import register
+from burst_db_spark.runner import persist, tmpdir
 from burst_db_spark.streaming import drain
 
 # ---------------------------------------------------------------------------
@@ -197,8 +198,6 @@ def stream_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-locally on the stream, the per-new-doc manifest rollup is the
     only stateful operator (complete mode, availableNow drain). Must
     equal the batch dd_minhash_incremental manifest bit-for-bit."""
-    import tempfile as _tempfile
-
     from burst_db_spark.operators import dedup as dd
     from burst_db_spark.operators import text as tx
     from burst_db_spark.streaming import incremental as st
@@ -217,7 +216,7 @@ def stream_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     new_corpus = docs.where(is_new).select("doc_id", "text")
-    tmp = _tempfile.mkdtemp(prefix="bds_inc_stream_")
+    tmp = tmpdir("bds_inc_stream_")
     data_dir = f"{tmp}/in"
     new_corpus.coalesce(4).write.parquet(data_dir)
     stream = st.file_stream(spark, data_dir, new_corpus.schema)
@@ -833,7 +832,7 @@ def dd_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the oracle's old_pairs CTE derives it the same way). Persisted
     # once; split by predicate.
     all_pairs = dd.minhash_lsh_dedup(docs, "doc_id", threshold=0.5)
-    all_p = all_pairs.select("id_a", "id_b").persist()
+    all_p = persist(all_pairs.select("id_a", "id_b"))
     old_pairs = all_p.where(
         (F.col("id_a") % 3 != 0) & (F.col("id_b") % 3 != 0)
     )
@@ -843,7 +842,7 @@ def dd_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: referenced three times below (two endpoint rewrites +
     # sizes); under CC's union-find path its plan is already leaf-sized
     # (vertices ⋈ broadcast local labels), so no checkpoint is needed
-    stored = dd.connected_components(old_pairs, old_docs, "doc_id").persist()
+    stored = persist(dd.connected_components(old_pairs, old_docs, "doc_id"))
     # pairs touching the snapshot (new-old + new-new); at 100 TB these
     # come from the incremental probe against the stored band frames
     # (dd_minhash_incremental machinery)
@@ -892,7 +891,7 @@ def dd_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = stored.groupBy("cluster_id").agg(
         F.count("*").cast("bigint").alias("sz")
     )
-    out = (
+    return (
         cc.join(
             sizes.withColumnRenamed("cluster_id", "doc_id"), "doc_id", "left"
         )
@@ -906,10 +905,3 @@ def dd_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("n_new") > 0)
         .orderBy("cluster_id")
     )
-    out._dedup_cached = (
-        all_p,
-        stored,
-        *getattr(all_pairs, "_dedup_cached", ()),
-    )  # release_dedup(out) unpersists; mapped's checkpoint blocks are
-    # freed by the ContextCleaner when the frame is GC'd (g3/g5 precedent)
-    return out

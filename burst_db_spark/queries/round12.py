@@ -28,6 +28,7 @@ from burst_db_spark.operators import text as tx
 from burst_db_spark.queries.similarity import _cos_sql
 from burst_db_spark.queries.textops import _SHINGLES_CTE, _TOKS
 from burst_db_spark.registry import register
+from burst_db_spark.runner import persist, tmpdir
 from burst_db_spark.streaming import drain
 
 # -- DSIR importance resampling ---------------------------------------------
@@ -186,14 +187,9 @@ def t_cluster_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sees a caller-owned cache and leaves it in place. Pair set is
     # deterministic, so cached vs recomputed values are identical.
     pairs = dd.ngram_jaccard_pairs(docs, "doc_id", threshold=0.2)
-    pair_edges = pairs.select("id_a", "id_b").persist()
+    pair_edges = persist(pairs.select("id_a", "id_b"))
     labels = dd.connected_components(pair_edges, docs, "doc_id")
-    out = sel.leakage_safe_splits(docs, pair_edges, labels)
-    out._dedup_cached = (
-        pair_edges,
-        *getattr(pairs, "_dedup_cached", ()),
-    )  # release_dedup(out) unpersists
-    return out
+    return sel.leakage_safe_splits(docs, pair_edges, labels)
 
 
 # -- Hybrid retrieval: BM25 + dense cosine, RRF fusion -----------------------
@@ -614,9 +610,9 @@ def t_dsir_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hashed_bucket(feat), and vocab_size is its distinct-feat count —
     # so the corpus is featurized once instead of three times. Counts
     # are identical integers; both oracles untouched.
-    e_out = sel.dsir_scores_exact(docs, target, top_n=_TOP_N)
-    doc_feat = e_out._dedup_cached[0]
-    doc_bucket = (
+    doc_feat = sel.dsir_exact_doc_features(docs, target)
+    e_out = sel.dsir_scores_exact(docs, target, top_n=_TOP_N, doc_feat=doc_feat)
+    doc_bucket = persist(
         doc_feat.select(
             "doc_id",
             "__t",
@@ -625,7 +621,6 @@ def t_dsir_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "__t", "b")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-        .persist()
     )
     h = sel.dsir_scores(
         docs, target, top_n=_TOP_N, doc_bucket=doc_bucket
@@ -974,12 +969,10 @@ def stream_mean_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream). Must equal w20_mean_shift_changepoint's oracle exactly:
     the streamed daily counts are integers, so stream task order cannot
     perturb anything."""
-    import tempfile
-
     from burst_db_spark.streaming import incremental as st
 
     src = load(spark, sf_dir, "events").select("event_type", "ts")
-    tmp = tempfile.mkdtemp(prefix="bds_stream_shift_")
+    tmp = tmpdir("bds_stream_shift_")
     data_dir = f"{tmp}/in"
     src.write.parquet(data_dir)
     stream = st.file_stream(spark, data_dir, src.schema)

@@ -49,6 +49,7 @@ from burst_db_spark.operators import text as tx
 from burst_db_spark.queries.similarity import _cos_sql
 from burst_db_spark.queries.textops import _TOKS
 from burst_db_spark.registry import register
+from burst_db_spark.runner import persist, scope, tmpdir
 from burst_db_spark.streaming import drain
 
 # -- D4: SemDeDup + prototype pruning over TRAINED cells ------------------------
@@ -208,11 +209,9 @@ def dd_d4_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the operator — so each reference re-ran the full 2-round Lloyd
     # pipeline (the before-plan replicates the training subtree 4x: 124
     # exchanges). Training arithmetic is exact (DECIMAL centroid sums,
-    # min-struct argmin), so cached vs recomputed values are identical;
-    # released by the session-level clearCache the registry contract
-    # documents.
-    asg = asg.persist()
-    cents = cents.persist()
+    # min-struct argmin), so cached vs recomputed values are identical.
+    asg = persist(asg)
+    cents = persist(cents)
     # norms hoisted out of the pair predicate (once per vector, not per
     # pair — bit-equal arithmetic, see similarity.semdedup_flags), and
     # the pair join chunk-fans-out exactly like semdedup_flags: k=16
@@ -884,32 +883,34 @@ def dd_cluster_bcubed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic and independent of scheduling, so the labels — and
     # the query result — are identical to the sequential form.
     from concurrent.futures import ThreadPoolExecutor
+    from contextvars import copy_context
 
-    sh = dd.doc_shingles(docs, "doc_id").persist()
+    sh = persist(dd.doc_shingles(docs, "doc_id"))
     sh.count()
 
+    # connected_components is eager and its labels depend on no persist,
+    # so each pipeline's pair caches are released as soon as it returns
     def _pred() -> DataFrame:
-        lsh_pairs = dd.minhash_lsh_dedup(
-            docs, "doc_id", threshold=_B3_TAU, shingles=sh
-        )
-        out = dd.connected_components(
-            lsh_pairs.select("id_a", "id_b"), docs, "doc_id"
-        ).select("doc_id", F.col("cluster_id").alias("pred_id"))
-        dd.release_dedup(lsh_pairs)
-        return out
+        with scope():
+            lsh_pairs = dd.minhash_lsh_dedup(
+                docs, "doc_id", threshold=_B3_TAU, shingles=sh
+            )
+            return dd.connected_components(
+                lsh_pairs.select("id_a", "id_b"), docs, "doc_id"
+            ).select("doc_id", F.col("cluster_id").alias("pred_id"))
 
     def _gold() -> DataFrame:
-        gold_pairs = dd.ngram_jaccard_pairs(
-            docs, "doc_id", threshold=_B3_TAU, max_df=_B3_MAX_DF, shingles=sh
-        )
-        out = dd.connected_components(
-            gold_pairs.select("id_a", "id_b"), docs, "doc_id"
-        ).select("doc_id", F.col("cluster_id").alias("gold_id"))
-        dd.release_dedup(gold_pairs)
-        return out
+        with scope():
+            gold_pairs = dd.ngram_jaccard_pairs(
+                docs, "doc_id", threshold=_B3_TAU, max_df=_B3_MAX_DF, shingles=sh
+            )
+            return dd.connected_components(
+                gold_pairs.select("id_a", "id_b"), docs, "doc_id"
+            ).select("doc_id", F.col("cluster_id").alias("gold_id"))
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fp, fg = pool.submit(_pred), pool.submit(_gold)
+        fp = pool.submit(copy_context().run, _pred)
+        fg = pool.submit(copy_context().run, _gold)
         pred, gold = fp.result(), fg.result()
     sh.unpersist()
     j = pred.join(gold, "doc_id")
@@ -1241,10 +1242,10 @@ def o7_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     coded = with_hilbert_code(
         grid, F.col("gx"), F.col("gy"), _SFC_BITS, out="hcode"
     ).withColumn("mcode", morton_code(F.col("gx"), F.col("gy"), _SFC_BITS))
-    sel = coded.where(
+    sel = persist(coded.where(
         F.col("gx").between(_SFC_GX0, _SFC_GX1)
         & F.col("gy").between(_SFC_GY0, _SFC_GY1)
-    ).persist()
+    ))
 
     def stats(code: str, label: str) -> DataFrame:
         pred = sel.select((F.col(code) + 1).alias(code))
@@ -1320,12 +1321,10 @@ def stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitors are complements on the same maintained state. Must equal
     w21_cusum_drift's oracle exactly — streamed counts are integers,
     stream task order cannot perturb anything."""
-    import tempfile
-
     from burst_db_spark.streaming import incremental as st
 
     src = load(spark, sf_dir, "events").select("event_type", "ts")
-    tmp = tempfile.mkdtemp(prefix="bds_stream_cusum_")
+    tmp = tmpdir("bds_stream_cusum_")
     data_dir = f"{tmp}/in"
     src.write.parquet(data_dir)
     stream = st.file_stream(spark, data_dir, src.schema)

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from burst_db_spark.catalog import load
 from burst_db_spark.operators import similarity as sim
 from burst_db_spark.registry import register
+from burst_db_spark.runner import persist, tmpdir
 from burst_db_spark.streaming import drain
 
 # -- Hierarchical (funnel) codebook assignment, oracle-checked -----------------
@@ -878,7 +879,6 @@ def o8_curve_sorted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     this layout is pinned separately in tests/test_layout_skipping.py
     (hilbert 4/16 candidate row groups vs morton 7/16, shuffled
     16/16)."""
-    from burst_db_spark.queries.slayer import _tmpdir
     from burst_db_spark.sinks import write_curve_sorted
 
     part = load(spark, sf_dir, "part").select("p_partkey")
@@ -895,7 +895,7 @@ def o8_curve_sorted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         (hx % 4).alias("tx"),
         (hy % 4).alias("ty"),
     )
-    out = _tmpdir("o8_hilbert")
+    out = tmpdir("bds_o8_hilbert_")
     write_curve_sorted(
         pts, out, "x", "y", 0.0, float(1 << 20), curve="hilbert", n_files=4
     )
@@ -1016,10 +1016,10 @@ def t_nb_domain_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # functionally determined by doc_id), so the corpus is tokenized
     # ONCE instead of twice. Exact bigint sums — results unchanged; the
     # oracle still spells both groupBys from the token stream.
-    db = tb.groupBy("doc_id", "b").agg(
+    db = persist(tb.groupBy("doc_id", "b").agg(
         F.any_value("source").alias("true_source"),
         F.count("*").cast("bigint").alias("n_db"),
-    ).persist()
+    ))
     model = db.groupBy(F.col("true_source").alias("source"), "b").agg(
         F.sum("n_db").cast("bigint").alias("c_sb")
     )
@@ -1323,7 +1323,7 @@ def g5_hits_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     are node-sized, top-k is TakeOrdered."""
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
-    edges = (
+    edges = persist(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
             F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
@@ -1334,7 +1334,6 @@ def g5_hits_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .distinct()
-        .persist()
     )
     # Optimization r14 (guide §2.3 + §3): h2 feeds hmax + hubs + a2, and
     # a2 feeds amax + auths — uncached, every reference re-ran the whole
@@ -1565,12 +1564,10 @@ def stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     State survives restarts without re-reading drained input
     (tests/test_streaming.py pins that for this exact maintenance
     shape)."""
-    import tempfile
-
     from burst_db_spark.streaming import incremental as st
 
     src = load(spark, sf_dir, "events").select("event_type", "ts")
-    tmp = tempfile.mkdtemp(prefix="bds_stream_ph_")
+    tmp = tmpdir("bds_stream_ph_")
     data_dir = f"{tmp}/in"
     src.write.parquet(data_dir)
     stream = st.file_stream(spark, data_dir, src.schema)
@@ -1770,7 +1767,7 @@ def t_gopher_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     nf = sum(
         F.when(~F.col(f"ok{i}"), 1).otherwise(0) for i in range(1, 6)
     )
-    scored = flags.withColumn("n_fail", nf).persist()
+    scored = persist(flags.withColumn("n_fail", nf))
 
     def row(order: int, rule: str, cum_cols: list[str], ok: str):
         cum = F.lit(True)

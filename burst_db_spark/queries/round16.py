@@ -23,6 +23,7 @@ from burst_db_spark.catalog import load
 from burst_db_spark.operators import text as tx
 from burst_db_spark.plans.bpe_oracle import bpe_fertility_oracle_sql
 from burst_db_spark.registry import register
+from burst_db_spark.runner import persist, tmpdir
 
 _TOKS = r"string_split_regex(lower(trim(text)), '\s+')"
 
@@ -1168,9 +1169,9 @@ def dd_cluster_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from burst_db_spark.operators import dedup as dd
 
     docs = load(spark, sf_dir, "documents")
-    pairs = dd.ngram_jaccard_pairs(docs, "doc_id", threshold=0.2).select(
+    pairs = persist(dd.ngram_jaccard_pairs(docs, "doc_id", threshold=0.2).select(
         "id_a", "id_b"
-    ).persist()
+    ))
     labels = dd.connected_components(pairs, docs, "doc_id")
     m = pairs.groupBy().agg(F.count("*").cast("bigint").alias("m"))
     deg = (
@@ -1347,10 +1348,10 @@ def t_nb_margin_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (source, b) counts re-aggregate db's exact per-doc bigint counts
     # (source is functionally determined by doc_id), mirroring
     # t_nb_domain_confusion. Results unchanged; oracle untouched.
-    db = tb.groupBy("doc_id", "b").agg(
+    db = persist(tb.groupBy("doc_id", "b").agg(
         F.any_value("source").alias("true_source"),
         F.count("*").cast("bigint").alias("n_db"),
-    ).persist()
+    ))
     model = db.groupBy(F.col("true_source").alias("source"), "b").agg(
         F.sum("n_db").cast("bigint").alias("c_sb")
     )
@@ -1653,7 +1654,6 @@ def o9_zorder_range_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     roundtrip contract). All-integer surface: hashed grid coordinates,
     bigint key rollups."""
     from burst_db_spark.operators.zorder import morton_code, morton_ranges
-    from burst_db_spark.queries.slayer import _tmpdir
 
     part = load(spark, sf_dir, "part").select("p_partkey")
     hx = F.conv(
@@ -1670,7 +1670,7 @@ def o9_zorder_range_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "z", morton_code(F.col("qx"), F.col("qy"), _O9_BITS)
     )
-    out = _tmpdir("o9_zorder")
+    out = tmpdir("bds_o9_zorder_")
     (
         pts.repartitionByRange(8, "z")
         .sortWithinPartitions("z")

@@ -25,6 +25,7 @@ from burst_db_spark.plans.bpe_oracle import (
 )
 from burst_db_spark.queries.textops import _SHINGLES_CTE, _TOKS
 from burst_db_spark.registry import register
+from burst_db_spark.runner import persist, scope, tmpdir
 from burst_db_spark.streaming import drain
 
 # revenue expression, decimal-exact on both engines ------------------------
@@ -781,12 +782,10 @@ def stream_interval_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin of j13_range_interval_join with a real oracle row.
     This is the maintenance-window / blackout-tagging shape run as a
     continuous pipeline at scale."""
-    import tempfile
-
     from burst_db_spark.streaming import incremental as st
 
     src = load(spark, sf_dir, "events").select("event_id", "ts")
-    tmp = tempfile.mkdtemp(prefix="bds_stream_iv_")
+    tmp = tmpdir("bds_stream_iv_")
     data_dir = f"{tmp}/in"
     src.write.parquet(data_dir)
     stream = st.file_stream(spark, data_dir, src.schema)
@@ -984,40 +983,41 @@ def dd_lsh_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # post-cache join work re-ran 3× per side. Persist the pair-count-
     # sized frames and materialize them eagerly, the two independent
     # pipelines overlapped in driver threads (the bcubed/cascade device).
-    # Pair sets are deterministic → the audit row is identical.
+    # Pair sets are deterministic → the audit row is identical. The row
+    # is collected inside a scope, so every cache behind it is released
+    # before the builder returns it as a one-row local frame.
     from concurrent.futures import ThreadPoolExecutor
+    from contextvars import copy_context
 
-    lsh_raw = dd.minhash_lsh_dedup(docs, "doc_id", threshold=0.5)
-    exact_raw = dd.ngram_jaccard_pairs(docs, "doc_id", threshold=0.5, max_df=50)
-    lsh = lsh_raw.select("id_a", "id_b").persist()
-    exact = exact_raw.select("id_a", "id_b").persist()
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fa, fb = pool.submit(lsh.count), pool.submit(exact.count)
-        fa.result(), fb.result()
-    # the operator-level caches (signature/shingle frames) did their job
-    # during the eager counts above; release them NOW — only the two
-    # pair-level persists stay live for the final aggregate
-    dd.release_dedup(lsh_raw)
-    dd.release_dedup(exact_raw)
-    hits = exact.intersect(lsh)
-    n = (
-        lsh.agg(F.count("*").alias("n_lsh"))
-        .crossJoin(exact.agg(F.count("*").alias("n_exact")))
-        .crossJoin(hits.agg(F.count("*").alias("n_common")))
-    )
-    out = n.select(
-        F.col("n_lsh").cast("bigint").alias("n_lsh"),
-        F.col("n_exact").cast("bigint").alias("n_exact"),
-        F.col("n_common").cast("bigint").alias("n_common"),
-        (
-            F.col("n_common").cast("double") / F.col("n_exact").cast("double")
-        ).alias("recall"),
-    )
-    # r15 (VERDICT r14 item 6): library callers get a release handle for
-    # the two query-level pair persists — release_dedup(result) frees
-    # them; bench/driver sessions still get clearCache as the backstop.
-    out._dedup_cached = (lsh, exact)
-    return out
+    with scope():
+        lsh = persist(
+            dd.minhash_lsh_dedup(docs, "doc_id", threshold=0.5).select("id_a", "id_b")
+        )
+        exact = persist(
+            dd.ngram_jaccard_pairs(
+                docs, "doc_id", threshold=0.5, max_df=50
+            ).select("id_a", "id_b")
+        )
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            fa = pool.submit(copy_context().run, lsh.count)
+            fb = pool.submit(copy_context().run, exact.count)
+            fa.result(), fb.result()
+        hits = exact.intersect(lsh)
+        n = (
+            lsh.agg(F.count("*").alias("n_lsh"))
+            .crossJoin(exact.agg(F.count("*").alias("n_exact")))
+            .crossJoin(hits.agg(F.count("*").alias("n_common")))
+        )
+        out = n.select(
+            F.col("n_lsh").cast("bigint").alias("n_lsh"),
+            F.col("n_exact").cast("bigint").alias("n_exact"),
+            F.col("n_common").cast("bigint").alias("n_common"),
+            (
+                F.col("n_common").cast("double") / F.col("n_exact").cast("double")
+            ).alias("recall"),
+        )
+        rows = out.collect()
+    return spark.createDataFrame(rows, out.schema)
 
 
 @register(
@@ -1076,13 +1076,12 @@ def t_docs_minhash_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Optimization r14 (guide §2.3): d1 (quality gate + exact dedup)
     # feeds the eager LSH+CC build AND the final plan's vertex side —
     # uncached, both stages re-ran per reference. Persist once
-    # (deterministic survivor set, identical rows); released by the
-    # session-level clearCache the registry contract documents.
-    d1 = docs.join(kept1, "doc_id", "left_semi").persist()
+    # (deterministic survivor set, identical rows).
+    d1 = persist(docs.join(kept1, "doc_id", "left_semi"))
     pairs = dd.minhash_lsh_dedup(d1, "doc_id", threshold=0.5)
     cc = dd.connected_components(pairs, d1, "doc_id")
     kept2 = cc.where(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
-    out = (
+    return (
         docs.join(kept2, "doc_id", "left_semi")
         .select("lang", "source", tx.token_count(F.col("text")).alias("__nt"))
         .groupBy("lang", "source")
@@ -1091,8 +1090,3 @@ def t_docs_minhash_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("__nt").cast("bigint").alias("n_tokens"),
         )
     )
-    # r15 (VERDICT r14 item 6): release handle for d1 plus the LSH
-    # operator's signature/shingle caches — release_dedup(result) frees
-    # them for library callers; clearCache remains the session backstop.
-    out._dedup_cached = (d1, *getattr(pairs, "_dedup_cached", ()))
-    return out

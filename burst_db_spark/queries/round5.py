@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from burst_db_spark.catalog import load, register_views
 from burst_db_spark.registry import register
+from burst_db_spark.runner import tmpdir
 from burst_db_spark.streaming import drain, run_drain
 
 # ---------------------------------------------------------------------------
@@ -229,10 +230,8 @@ def stream_watermark_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py::test_watermark_append_drops_late_rows.
     State is bounded by the watermark horizon — the 100 TB always-on
     shape."""
-    import tempfile
-
     src = load(spark, sf_dir, "events").select("event_id", "ts", "value")
-    tmp = tempfile.mkdtemp(prefix="bds_stream_wm_")
+    tmp = tmpdir("bds_stream_wm_")
     cutoff = "2024-01-28 00:00:00"
     late_cut = "2024-01-10 00:00:00"
     main = src.where(F.col("ts") < F.lit(cutoff).cast("timestamp"))
@@ -293,8 +292,6 @@ def k6_metadata_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     output, read back, and unpivoted to (param, value) rows the oracle
     recomputes straight from the sources. Dates round-trip as ISO
     strings (DATE → VARCHAR on both engines)."""
-    import tempfile
-
     from burst_db_spark.sinks import write_metadata_table
 
     li = load(spark, sf_dir, "lineitem")
@@ -318,7 +315,7 @@ def k6_metadata_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_lineitem": row["n_lineitem"],
         "n_orders": row["n_orders"],
     }
-    out = os.path.join(tempfile.mkdtemp(prefix="bds_k6_"), "meta.parquet")
+    out = os.path.join(tmpdir("bds_k6_"), "meta.parquet")
     write_metadata_table(spark, params, out)
     got = spark.read.parquet(out)
     stack_expr = ", ".join(f"'{c}', `{c}`" for c in got.columns)
@@ -351,9 +348,8 @@ def k4_geojson_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     collinear vertex survived, i.e. simplify never ran."""
     from burst_db_spark.geo.udfs import envelope_udf
     from burst_db_spark.sources.geojson import read_geojson, write_geojson
-    import tempfile
 
-    out = os.path.join(tempfile.mkdtemp(prefix="bds_k4_"), "nations.geojson")
+    out = os.path.join(tmpdir("bds_k4_"), "nations.geojson")
     nation = load(spark, sf_dir, "nation")
     x0 = (F.col("n_nationkey") * 7) % 40
     rects = nation.select(
@@ -761,11 +757,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch interval join, which is the oracle; the equivalence is
     additionally pinned by
     tests/test_streaming.py::test_stream_stream_join_matches_batch."""
-    import tempfile
-
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "user_id",
                                               "event_type")
-    tmp = tempfile.mkdtemp(prefix="bds_ss_join_")
+    tmp = tmpdir("bds_ss_join_")
     views = ev.where(F.col("event_type") == "view")
     buys = ev.where(F.col("event_type") == "purchase")
     views.coalesce(2).write.parquet(f"{tmp}/in/views")
@@ -999,8 +993,6 @@ def stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     final snapshot must equal the batch per-key arg-max over ALL
     deliveries, which IS the DuckDB oracle — so the streaming merge
     path gets a real hash-checked row, not just a pytest."""
-    import tempfile
-
     from burst_db_spark.streaming.upsert import upsert_stream_to_parquet
 
     ev = load(spark, sf_dir, "events").select(
@@ -1008,7 +1000,7 @@ def stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("version"),
         F.col("event_type").alias("payload"),
     )
-    tmp = tempfile.mkdtemp(prefix="bds_upsert_")
+    tmp = tmpdir("bds_upsert_")
     ev.where(F.col("version") % 2 == 0).coalesce(2).write.parquet(f"{tmp}/in/b0")
     ev.where(F.col("version") % 2 == 1).coalesce(2).write.parquet(f"{tmp}/in/b1")
     now = 1_700_000_000

@@ -32,6 +32,7 @@ from burst_db_spark.operators import dedup as dd
 from burst_db_spark.operators.text import token_count
 from burst_db_spark.queries.textops import _TOKS
 from burst_db_spark.registry import register
+from burst_db_spark.runner import tmpdir
 
 # ---------------------------------------------------------------------------
 # A24: moment statistics (variance / stddev / correlation) via power sums
@@ -561,13 +562,11 @@ def s12_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization. ORC predicate pushdown works like parquet's
     (min/max stripes); the slice filter is applied pre-write so the
     on-disk file is the pruned data."""
-    import tempfile
-
     li = load(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= "1997-01-01")
         & (F.col("l_shipdate") < "1997-07-01")
     ).select("l_returnflag", "l_extendedprice", "l_shipdate")
-    out = tempfile.mkdtemp(prefix="bds_orc_") + "/slice.orc"
+    out = tmpdir("bds_orc_") + "/slice.orc"
     li.write.format("orc").mode("overwrite").save(out)
     back = spark.read.orc(out)
     return (

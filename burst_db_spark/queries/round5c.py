@@ -29,6 +29,7 @@ from burst_db_spark.catalog import load
 from burst_db_spark.operators import dedup as dd
 from burst_db_spark.queries.textops import _SHINGLES_CTE
 from burst_db_spark.registry import register
+from burst_db_spark.runner import tmpdir
 
 # ---------------------------------------------------------------------------
 # DD: exact Jaccard join via prefix filtering (lossless — oracle is the
@@ -446,11 +447,10 @@ def s13_zarr_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     source path end-to-end against the relational oracle."""
     import os
 
-    from burst_db_spark.queries.slayer import _tmpdir
     from burst_db_spark.sources.pyds import register_zarr_py
     from burst_db_spark.sources.zarr import write_zarr_cube
 
-    store = os.path.join(_tmpdir("s13"), "cube")
+    store = os.path.join(tmpdir("bds_s13_"), "cube")
     li = load(spark, sf_dir, "lineitem")
     cells = (
         li.select(

@@ -17,9 +17,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from burst_db_spark.catalog import load
-from burst_db_spark.queries.slayer import _tmpdir
 from burst_db_spark.queries.textops import _SHINGLES_CTE
 from burst_db_spark.registry import register
+from burst_db_spark.runner import persist, tmpdir
+from burst_db_spark.streaming import run_drain
 
 # ---------------------------------------------------------------------------
 # S14: Python DataSource WRITER (df.write.format("zarr_py")) round-trip
@@ -61,7 +62,7 @@ def s14_zarr_py_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from burst_db_spark.sources.pyds import register_zarr_py
     from burst_db_spark.sources.zarr import chunk_repartitioned
 
-    store = os.path.join(_tmpdir("s14"), "cube")
+    store = os.path.join(tmpdir("bds_s14_"), "cube")
     li = load(spark, sf_dir, "lineitem")
     cells = (
         li.select(
@@ -143,7 +144,7 @@ def stream_zarr_append_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from burst_db_spark.sources.zarr import chunk_repartitioned
 
     register_zarr_py(spark)
-    tmp = _tmpdir("szs")
+    tmp = tmpdir("bds_szs_")
     store = os.path.join(tmp, "cube")
     cells = (
         load(spark, sf_dir, "events")
@@ -172,7 +173,8 @@ def stream_zarr_append_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .load(f"{tmp}/in/*")
     )
-    q = (
+    run_drain(
+        spark,
         chunk_repartitioned(stream, ["t"], [8], n_partitions=4)
         .writeStream.format("zarr_py")
         .option("store", store)
@@ -180,12 +182,9 @@ def stream_zarr_append_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("value_col", "n")
         .option("shape", "8")  # grows per committed batch: 8->16->24->32
         .option("chunks", "8")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        tmp,
     )
-    q.awaitTermination()
     back = (
         spark.read.format("zarr_py")
         .option("store", store)
@@ -612,20 +611,15 @@ def knn_ivf_learned_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the query subset and the candidate side of the cell join —
     # uncached, the per-row k-distance argmin assignment evaluated
     # twice. Persist + eager count (the wave-4 device; assignment is
-    # row-wise deterministic, values identical); released by the
-    # session-level clearCache the registry contract documents.
-    cells = assign_cells(emb, codebook).persist()
+    # row-wise deterministic, values identical).
+    cells = persist(assign_cells(emb, codebook))
     cells.count()
     queries = (
         cells.where((F.col("vec_id") >= 20) & (F.col("vec_id") < 35))
         .select("vec_id", "embedding")
         .withColumn("cell", F.explode(F.sequence(F.lit(1), F.lit(8))))
     )
-    out = cosine_topk_partitioned(cells, queries, cell_col="cell", k=5)
-    # r15 (VERDICT r14 item 6): release handle for the cells persist —
-    # burst_db_spark.operators.dedup.release_dedup(result) frees it.
-    out._dedup_cached = (cells,)
-    return out
+    return cosine_topk_partitioned(cells, queries, cell_col="cell", k=5)
 
 
 # ---------------------------------------------------------------------------
@@ -748,12 +742,10 @@ def s15_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     must read back with NULL props, every new-shard row with its value,
     and the decimal-exact value sum proves no row was dropped or
     duplicated across the generations."""
-    import tempfile
-
     ev = load(spark, sf_dir, "events").select(
         "event_id", "ts", "value", "props"
     )
-    tmp = tempfile.mkdtemp(prefix="bds_s15_")
+    tmp = tmpdir("bds_s15_")
     old = ev.where(F.col("event_id") % 2 == 0).drop("props")
     new = ev.where(F.col("event_id") % 2 == 1)
     old.write.parquet(f"{tmp}/data/gen=0")

@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 
 from burst_db_spark.catalog import load
 from burst_db_spark.registry import register
+from burst_db_spark.runner import persist, tmpdir
 from burst_db_spark.streaming import drain, run_drain
 
 # ---------------------------------------------------------------------------
@@ -397,13 +398,12 @@ def knn_int8_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 import os as _os
 
-from burst_db_spark.queries.slayer import _tmpdir
 
 
 def _dpp_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write events date-partitioned + a date dim (with ISO day-of-week
     attribute) as parquet; deterministic content, throwaway location."""
-    base = _tmpdir("p12")
+    base = tmpdir("bds_p12_")
     fact_path = _os.path.join(base, "fact")
     dim_path = _os.path.join(base, "dim")
     ev = load(spark, sf_dir, "events").withColumn(
@@ -518,9 +518,8 @@ def o6_range_partitioned_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persist pins ONE range partitioning: the offset-count action and the
     # final ranked action must see identical partition boundaries (range
     # sampling and AQE re-planning may otherwise differ between actions —
-    # observed as an off-by-one rank at sf0.01). bench/tests clearCache()
-    # between queries, releasing the blocks.
-    with_pid = parts.withColumn("pid", F.spark_partition_id()).persist()
+    # observed as an off-by-one rank at sf0.01).
+    with_pid = persist(parts.withColumn("pid", F.spark_partition_id()))
     # bounded driver-side reduction: one count per range partition
     counts = sorted(
         (r["pid"], r["cnt"])
@@ -654,7 +653,7 @@ def _video_fixture(spark: SparkSession, sf_dir: str) -> str:
     counts), written as parquet binary + metadata, read back opaque."""
     import pandas as pd
 
-    out = _os.path.join(_tmpdir("mm_vid"), "videos")
+    out = _os.path.join(tmpdir("bds_mm_vid_"), "videos")
     ev = load(spark, sf_dir, "events")
     meta = (
         ev.groupBy(F.col("user_id").alias("video_id"))
@@ -800,18 +799,21 @@ def t_containment_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary + the md5 of the ordered survivor id list (so the driver
     checks MEMBERSHIP, not just counts). One candidate equi-join + one
     anti-join over the corpus — the shape that survives 100 TB."""
-    from burst_db_spark.operators.dedup import containment_prefix_pairs
+    from burst_db_spark.operators.dedup import (
+        containment_doc_sets,
+        containment_prefix_pairs,
+    )
 
     docs = load(spark, sf_dir, "documents")
-    pairs = containment_prefix_pairs(docs, "doc_id", threshold=_CONT_T10 / 10)
     # Optimization r14 wave 12c (guide §2.3): the b-side sizes were
     # recomputed with a FULL tokenize+shingle+groupBy pass; the operator's
-    # persisted doc frame (the t_dsir_bucket_audit `_dedup_cached` device)
-    # already carries n_sh = count of each doc's distinct shingles — the
-    # identical integer the extra pass produced.
-    sizes = pairs._dedup_cached[0].select(
-        "doc_id", F.col("n_sh").alias("b_size")
+    # persisted doc frame already carries n_sh = count of each doc's
+    # distinct shingles — the identical integer the extra pass produced.
+    sets = containment_doc_sets(docs, "doc_id", threshold=_CONT_T10 / 10)
+    pairs = containment_prefix_pairs(
+        docs, "doc_id", threshold=_CONT_T10 / 10, doc_sets=sets
     )
+    sizes = sets.select("doc_id", F.col("n_sh").alias("b_size"))
     removed = (
         pairs.join(
             sizes.select(F.col("doc_id").alias("id_b"), "b_size"), "id_b"
@@ -897,9 +899,7 @@ def stream_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     days of streaming checkpoints) maintain cardinalities without ever
     re-reading raw data. Same integer-exact estimator as
     a32_kmv_distinct."""
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="bds_skmv_")
+    tmp = tmpdir("bds_skmv_")
     src = load(spark, sf_dir, "events").select("event_type", "user_id")
     src.repartition(4).write.parquet(f"{tmp}/in")
     partials = f"{tmp}/partials"
@@ -1553,10 +1553,8 @@ def stream_ohlc_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. The 100 TB reading: algebraic aggs are the ONLY
     streaming state that stays O(groups) forever; anything
     order-sensitive would need the full history."""
-    import tempfile
-
     src = load(spark, sf_dir, "events").select("event_type", "ts", "value", "event_id")
-    tmp = tempfile.mkdtemp(prefix="bds_sohlc_")
+    tmp = tmpdir("bds_sohlc_")
     src.repartition(4).write.parquet(f"{tmp}/in")
     stream = (
         spark.readStream.format("parquet")

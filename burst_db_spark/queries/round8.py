@@ -33,8 +33,8 @@ from pyspark.sql.window import Window
 
 from burst_db_spark.catalog import load
 from burst_db_spark.operators import multipattern as mp
-from burst_db_spark.queries.slayer import _tmpdir
 from burst_db_spark.registry import register
+from burst_db_spark.runner import tmpdir
 from burst_db_spark.streaming import run_drain
 
 # ---------------------------------------------------------------------------
@@ -1216,7 +1216,7 @@ def stream_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     never row-count-sized. The post-drain additive merge + cumulative
     walk reads off p50/p90/p99 exactly as the batch a35 sketch would,
     no matter how the stream was split."""
-    tmp = _tmpdir("stdg")
+    tmp = tmpdir("bds_stdg_")
     src = load(spark, sf_dir, "events").select(
         "event_type",
         F.floor(F.col("value") * F.lit(100)).cast("bigint").alias("cents"),

@@ -41,9 +41,9 @@ from burst_db_spark.catalog import load
 from burst_db_spark.operators import dedup as dd
 from burst_db_spark.operators import text as tx
 from burst_db_spark.queries.round4 import _minhash_pair_ctes
-from burst_db_spark.queries.slayer import _tmpdir
 from burst_db_spark.queries.textops import _SHINGLES_CTE, _TOKS
 from burst_db_spark.registry import register
+from burst_db_spark.runner import persist, tmpdir
 from burst_db_spark.streaming import drain
 
 # ---------------------------------------------------------------------------
@@ -164,17 +164,17 @@ def dd_docs_cascade_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each kept{i} id-frame feeds BOTH the next stage and its funnel
     # manifest row — persisted (doc_id lists, node-sized) so the heavy
     # stage above it (quality featurization, LSH+CC) computes once per
-    # job instead of once per consumer. Session clearCache releases
-    # them (bench and driver both do).
+    # job instead of once per consumer.
     q = tx.quality_features(corpus.select("doc_id", "text"))
-    kept0 = q.where(F.col("quality_score") >= 0.5).select("doc_id").persist()
+    kept0 = persist(q.where(F.col("quality_score") >= 0.5).select("doc_id"))
     d0 = corpus.join(kept0, "doc_id", "left_semi")
-    kept1 = dd.exact_duplicates(d0, "doc_id").select(
+    kept1 = persist(dd.exact_duplicates(d0, "doc_id").select(
         F.col("keep_id").alias("doc_id")
-    ).persist()
+    ))
     d1 = corpus.join(kept1, "doc_id", "left_semi")
 
     from concurrent.futures import ThreadPoolExecutor
+    from contextvars import copy_context
 
     from burst_db_spark.operators.bloom import bloom_contains, build_bloom
 
@@ -202,16 +202,17 @@ def dd_docs_cascade_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _kept2() -> DataFrame:
         pairs = dd.minhash_lsh_dedup(d1, "doc_id", threshold=0.5)
         cc = dd.connected_components(pairs, d1, "doc_id")
-        out = cc.where(
+        return persist(cc.where(
             F.col("doc_id") == F.col("cluster_id")
-        ).select("doc_id").persist()
-        # carry the LSH operator's cache handles up to the query result
-        out._dedup_cached = getattr(pairs, "_dedup_cached", ())
-        return out
+        ).select("doc_id"))
 
+    # each pool thread runs in a copy of this context, so its persists
+    # land in the caller's scope
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fk = pool.submit(_kept2)
-        fb = pool.submit(build_bloom, bench_sh, "shingle", _CB_M, _CB_K)
+        fk = pool.submit(copy_context().run, _kept2)
+        fb = pool.submit(
+            copy_context().run, build_bloom, bench_sh, "shingle", _CB_M, _CB_K
+        )
         kept2, bits = fk.result(), fb.result()
     kept2_sh = dd.doc_shingles(
         docs.join(kept2, "doc_id", "left_semi"), "doc_id"
@@ -232,9 +233,9 @@ def dd_docs_cascade_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus. Tokenize ONCE into a persisted (doc_id, __ntok) frame
     # (doc-count rows, two ints wide); each stage row is then a semi
     # join + sum over it. Identical integer sums; oracle untouched.
-    ntok = docs.select(
+    ntok = persist(docs.select(
         "doc_id", tx.token_count(F.col("text")).alias("__ntok")
-    ).persist()
+    ))
 
     def stage_row(ids: DataFrame, name: str) -> DataFrame:
         return (
@@ -246,7 +247,7 @@ def dd_docs_cascade_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit(name).alias("stage"), "n_docs", "n_tokens")
         )
 
-    out = (
+    return (
         stage_row(corpus_ids, "stage0_raw")
         .unionAll(stage_row(kept0, "stage1_quality"))
         .unionAll(stage_row(kept1, "stage2_exact"))
@@ -254,12 +255,6 @@ def dd_docs_cascade_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(stage_row(kept3, "stage4_decontam"))
         .orderBy("stage")
     )
-    # r15 (VERDICT r14 item 6): release handles for the four query-level
-    # persists — release_dedup(result) frees them for library callers.
-    out._dedup_cached = (
-        kept0, kept1, kept2, ntok, *getattr(kept2, "_dedup_cached", ())
-    )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -280,7 +275,7 @@ def _j18_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     'blackout' windows and one 'maintenance' window per event_type,
     anchored at the type's first event date); deterministic content,
     throwaway location."""
-    base = _tmpdir("j18")
+    base = tmpdir("bds_j18_")
     fact_path = _os.path.join(base, "fact")
     iv_path = _os.path.join(base, "intervals")
     ev = load(spark, sf_dir, "events").withColumn(
@@ -876,8 +871,6 @@ def stream_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     (complete mode, availableNow drain). Must equal the batch
     computation bit-for-bit — row-local decisions make the result
     batching-independent."""
-    import tempfile as _tempfile
-
     from burst_db_spark.operators.bloom import (
         bloom_contained_count,
         build_bloom,
@@ -901,7 +894,7 @@ def stream_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.where(~F.col("source").isin(*_CASCADE_BENCH)).select(
         "doc_id", "source", "text"
     )
-    tmp = _tempfile.mkdtemp(prefix="bds_decontam_stream_")
+    tmp = tmpdir("bds_decontam_stream_")
     data_dir = f"{tmp}/in"
     # a few multi-row files, not one-per-core: the drain is one
     # availableNow batch either way, and fewer files means fewer
@@ -1244,12 +1237,12 @@ def t_lsh_band_config_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the signature build re-execute per config (exchange reuse only
     # covers the shuffles, not the post-exchange verify work)
     inner = dd.jaccard_prefix_pairs(docs, "doc_id", threshold=0.05)
-    exact = inner.select(
+    exact = persist(inner.select(
         F.floor(F.col("jaccard") * 20).cast("bigint").alias("bin"),
         "id_a",
         "id_b",
-    ).persist()
-    sigs = dd.minhash_signatures(docs, "doc_id").persist()
+    ))
+    sigs = persist(dd.minhash_signatures(docs, "doc_id"))
     curves = []
     for r, b in _SWEEP_CONFIGS:
         tag = f"{r}x{b}"
@@ -1290,14 +1283,7 @@ def t_lsh_band_config_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = curves[0]
     for c in curves[1:]:
         out = out.unionByName(c)
-    out = out.orderBy("config", "bin")
-    # release_dedup(out) unpersists these plus the prefix-join internals
-    out._dedup_cached = (
-        exact,
-        sigs,
-        *getattr(inner, "_dedup_cached", ()),
-    )
-    return out
+    return out.orderBy("config", "bin")
 
 
 # ---------------------------------------------------------------------------

@@ -12,17 +12,13 @@ coverage.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from burst_db_spark.catalog import load
 from burst_db_spark.registry import register
-
-
-def _tmpdir(tag: str) -> str:
-    return tempfile.mkdtemp(prefix=f"burst_db_spark_{tag}_")
+from burst_db_spark.runner import tmpdir
 
 
 @register(
@@ -41,7 +37,7 @@ def s2_csv_infer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical values."""
     from burst_db_spark.sources.csv import read_csv_inferred
 
-    out = _tmpdir("s2")
+    out = tmpdir("bds_s2_")
     nation = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -69,7 +65,7 @@ def s3_csv_schema_semicolon(spark: SparkSession, sf_dir: str) -> DataFrame:
     representations."""
     from burst_db_spark.sources.csv import read_csv_schema
 
-    out = _tmpdir("s3")
+    out = tmpdir("bds_s3_")
     supp = load(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_acctbal"
     )
@@ -97,7 +93,7 @@ def s4_csv_glob_multifile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the globbed read equals the aggregate over the source table."""
     from burst_db_spark.sources.csv import read_csv_schema
 
-    out = _tmpdir("s4")
+    out = tmpdir("bds_s4_")
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     cust.repartition(4).write.mode("overwrite").option("header", False).csv(out)
     got = read_csv_schema(
@@ -126,7 +122,7 @@ def s6_geojson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from burst_db_spark.geo.udfs import envelope_udf
     from burst_db_spark.sources.geojson import read_geojson, write_geojson
 
-    out = os.path.join(_tmpdir("s6"), "regions.geojson")
+    out = os.path.join(tmpdir("bds_s6_"), "regions.geojson")
     region = load(spark, sf_dir, "region")
     rects = region.select(
         F.col("r_regionkey").cast("bigint").alias("r_regionkey"),
@@ -163,7 +159,7 @@ def s7_envelope_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     name lists → gzip envelope → read → explode back to rows."""
     from burst_db_spark.sources.json_docs import read_envelope, write_envelope
 
-    out = os.path.join(_tmpdir("s7"), "nations.json.gz")
+    out = os.path.join(tmpdir("bds_s7_"), "nations.json.gz")
     nation = load(spark, sf_dir, "nation")
     write_envelope(
         nation.select(
@@ -197,7 +193,7 @@ def s9_xml_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distributed mapInPandas XML parser."""
     from burst_db_spark.sources.xml import read_annotation_bursts
 
-    out_dir = _tmpdir("s9")
+    out_dir = tmpdir("bds_s9_")
     rows = (
         load(spark, sf_dir, "orders")
         .where(F.col("o_orderkey") < 500)
@@ -240,7 +236,7 @@ def k5_partitioned_append_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     nothing."""
     from burst_db_spark.sinks import append_partitioned
 
-    out = _tmpdir("k5")
+    out = tmpdir("bds_k5_")
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", F.to_date("ts").alias("day")
     )
@@ -267,7 +263,7 @@ def s1_sqlite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     values."""
     from burst_db_spark.sinks import read_sqlite, write_sqlite
 
-    db = os.path.join(_tmpdir("s1"), "t.sqlite")
+    db = os.path.join(tmpdir("bds_s1_"), "t.sqlite")
     supp = load(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_acctbal"
     )
@@ -302,7 +298,7 @@ def k1_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from burst_db_spark.geo.udfs import envelope_udf
     from burst_db_spark.sources.gpkg import read_gpkg, write_gpkg
 
-    out = os.path.join(_tmpdir("k1"), "regions.gpkg")
+    out = os.path.join(tmpdir("bds_k1_"), "regions.gpkg")
     region = load(spark, sf_dir, "region")
     rects = region.select(
         F.col("r_regionkey").cast("bigint").alias("r_regionkey"),
@@ -386,7 +382,7 @@ def k8_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction and the no-Exchange plan."""
     from burst_db_spark.sinks import compact_parquet
 
-    base = _tmpdir("k8")
+    base = tmpdir("bds_k8_")
     src, dst = os.path.join(base, "small"), os.path.join(base, "compact")
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     ev.repartition(64).write.mode("overwrite").parquet(src)
@@ -426,7 +422,7 @@ def s11_zarr_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes straight from lineitem."""
     from burst_db_spark.sources.zarr import read_zarr_array, write_zarr_cube
 
-    store = os.path.join(_tmpdir("s11"), "cube")
+    store = os.path.join(tmpdir("bds_s11_"), "cube")
     li = load(spark, sf_dir, "lineitem")
     cells = (
         li.select(
@@ -497,7 +493,7 @@ def s11_zarr_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_zarr_group,
     )
 
-    store = os.path.join(_tmpdir("s11c"), "group")
+    store = os.path.join(tmpdir("bds_s11c_"), "group")
     yyyymm = np.array(
         [(1995 + m // 12) * 100 + m % 12 + 1 for m in range(84)], dtype="<i8"
     )
@@ -562,7 +558,7 @@ def s8_rangezip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     rows = sorted((r.n_nationkey, r.n_name) for r in nation.collect())
     half = len(rows) // 2
-    path = os.path.join(_tmpdir("s8"), "archive.zip")
+    path = os.path.join(tmpdir("bds_s8_"), "archive.zip")
     with _zf.ZipFile(path, "w") as z:
         for i, chunk in enumerate((rows[:half], rows[half:])):
             body = "\n".join(f"{k},{n}" for k, n in chunk)
@@ -615,7 +611,7 @@ def s10_stac_paged(spark: SparkSession, sf_dir: str) -> DataFrame:
     titles = [
         f"S1A_{beams[k % 4]}_SLC__1{pols[k % 3]}_2021{k:08d}-SLC" for k in keys
     ]
-    page_dir = _tmpdir("s10")
+    page_dir = tmpdir("bds_s10_")
     page_size = 40
     chunks = [titles[i : i + page_size] for i in range(0, len(titles), page_size)]
     for i, chunk in enumerate(chunks):

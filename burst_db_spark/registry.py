@@ -9,17 +9,14 @@ Contract notes (from the driver):
   the row *set* must be deterministic — no LIMIT without a total order, no
   arbitrary-row dedup, no nondeterministic first()/collect order.
 
-Caching contract (r13 ADVICE): query builders MAY ``persist()``
-intermediates that the returned plan references more than once
-(iterative fixpoints, reused edge/score frames — e.g. round9's kept*
-chain, g5_hits_unrolled's edges, t_gopher_ablation's scored). Those
-frames CANNOT be unpersisted inside the builder — the caller's action
-has not run yet — so the contract is: run queries through bench.py /
-the driver / tests, which call ``spark.catalog.clearCache()`` between
-queries. A direct library caller that builds many queries on one
-session without clearing the cache will accumulate cached frames and
-should call ``clearCache()`` (or ``unpersist()`` the returned plan's
-sources) itself after each action.
+Scope rule: a builder persists frames and stages files only through
+``burst_db_spark.runner.persist`` / ``runner.tmpdir``, which register
+them in the caller's ``runner.scope()``. The builder cannot release them
+itself (the caller's action has not run yet); the scope does, when it
+exits. ``runner.run`` opens one scope per query, so each run leaves the
+session's cache and the temp dir as it found them, even while other
+queries run in other driver threads. A builder that must free an
+intermediate before it returns opens an inner ``scope()``.
 """
 
 from __future__ import annotations

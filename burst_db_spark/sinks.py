@@ -1,6 +1,6 @@
 """Sink layer (SURVEY.md §2.1 K1-K6).
 
-- K1/K2: parquet / csv writers (partitioned for pruning at scale)
+- K1: parquet writer (partitioned for pruning at scale)
 - K3: nested JSON envelope — burst_db_spark.sources.json_docs
 - K5: append-mode partitioned write replaces the 100k-row chunk loop
 - K6: 1-row metadata/params table
@@ -20,18 +20,13 @@ def write_parquet(
     partition_by: list[str] | None = None,
     mode: str = "overwrite",
 ) -> None:
-    """K1/K2: parquet sink; partition columns → directory pruning
+    """K1: parquet sink; partition columns → directory pruning
     (the reference's per-date CSV layout, parse_bursts.py:971-982,
     becomes partitionBy('sensing_date'))."""
     w = df.write.mode(mode)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, sep: str = ",", mode: str = "overwrite") -> None:
-    """K2: COPY TO CSV analog."""
-    df.write.mode(mode).option("header", True).option("sep", sep).csv(path)
 
 
 def append_partitioned(df: DataFrame, path: str, partition_by: list[str]) -> None:

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from burst_db_spark.catalog import TABLES, load
 from burst_db_spark.registry import all_queries
+from burst_db_spark.runner import noop_write, run, scope
 from burst_db_spark.session import get_spark
 
 PROBE_QUERIES = [
@@ -172,16 +173,12 @@ def replicate(spark, src_dir: str, out_dir: str, factor: int) -> None:
 
 
 def time_queries(spark, specs, sf_dir: str) -> dict[str, float]:
-    out = {}
-    for name in PROBE_QUERIES:
-        spark.catalog.clearCache()
-        # bracket build()+write (same convention as bench.py since r5):
-        # in-build driver actions are part of the cost being probed
-        t0 = time.perf_counter()
-        df = specs[name].build(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        out[name] = round(time.perf_counter() - t0, 2)
-    return out
+    # build()+write in one bracket (as in bench.py): in-build driver
+    # actions are part of the cost being probed
+    return {
+        name: round(run(specs[name], spark, sf_dir, noop_write)[2], 2)
+        for name in PROBE_QUERIES
+    }
 
 
 def _synth_boxes(spark, n: int, side: int, seed_mult: int, wmax: int, hmax: int,
@@ -228,11 +225,7 @@ def spatial_cd_probe(spark, n_small: int, factor: int) -> dict[str, float]:
     spot, inflating OUTPUT quadratically — that measures the data
     generator, not the plan. Here linear-ish ratios are plan evidence:
     candidate generation is bucket-local, not O(N·M)."""
-    from burst_db_spark.operators.spatial_join import (
-        grid_bbox_join,
-        grid_nn_join,
-        release_grid_nn,
-    )
+    from burst_db_spark.operators.spatial_join import grid_bbox_join, grid_nn_join
 
     out: dict[str, float] = {}
     for label, n in (("", n_small), ("_big", n_small * factor)):
@@ -253,15 +246,14 @@ def spatial_cd_probe(spark, n_small: int, factor: int) -> dict[str, float]:
         points = right.select(
             "rid", F.col("rxmin").alias("sx"), F.col("rymin").alias("sy")
         )
-        t0 = time.perf_counter()
-        res = grid_nn_join(
-            probes, points, probe_key="lid", probe_xy=("px", "py"),
-            point_xy=("sx", "sy"), cell_size=24.0, point_cols=("rid",),
-            tie_break="rid",
-        )
-        res.write.format("noop").mode("overwrite").save()
-        out[f"knn_grid_cd{label}"] = round(time.perf_counter() - t0, 2)
-        release_grid_nn(res)
+        with scope():
+            t0 = time.perf_counter()
+            noop_write(grid_nn_join(
+                probes, points, probe_key="lid", probe_xy=("px", "py"),
+                point_xy=("sx", "sy"), cell_size=24.0, point_cols=("rid",),
+                tie_break="rid",
+            ))
+            out[f"knn_grid_cd{label}"] = round(time.perf_counter() - t0, 2)
     return out
 
 
@@ -420,10 +412,7 @@ def containment_cd_probe(spark, factor: int) -> dict[str, float]:
     near-superset structure preserved, cross-replica pairs impossible, so
     true output grows ~factor — linear-ish wall is the evidence that the
     A-prefix x full-inverted-index candidate join does not quadratify)."""
-    from burst_db_spark.operators.dedup import (
-        containment_prefix_pairs,
-        release_dedup,
-    )
+    from burst_db_spark.operators.dedup import containment_prefix_pairs
 
     out: dict[str, float] = {}
     for label, f in (("", 1), ("_big", factor)):
@@ -432,7 +421,6 @@ def containment_cd_probe(spark, factor: int) -> dict[str, float]:
         res = containment_prefix_pairs(corpus, "doc_id", threshold=0.6)
         res.write.format("noop").mode("overwrite").save()
         out[f"t_containment_cd{label}"] = round(time.perf_counter() - t0, 2)
-        release_dedup(res)
         spark.catalog.clearCache()
     return out
 
@@ -1043,7 +1031,6 @@ def dsir_cd_probe(spark, factor: int) -> dict[str, float]:
     corpus tokens ~linearly and the model frame stays 64 rows at any
     factor (the property that makes the fit a pure reduce at 100 TB)."""
     from burst_db_spark.operators.selection import dsir_scores
-    from burst_db_spark.operators.dedup import release_dedup
 
     docs0 = load(spark, "/root/testdata/sf0.1", "documents").select(
         "doc_id", "text", "lang"
@@ -1066,7 +1053,6 @@ def dsir_cd_probe(spark, factor: int) -> dict[str, float]:
         res = dsir_scores(corpus, F.col("lang") == "en", top_n=50)
         res.write.format("noop").mode("overwrite").save()
         out[f"t_dsir_cd{label}"] = round(time.perf_counter() - t0, 2)
-        release_dedup(res)
         spark.catalog.clearCache()
     return out
 
@@ -1103,7 +1089,6 @@ def splits_cd_probe(spark, factor: int) -> dict[str, float]:
     reflect the probe corpus, like the registered query's input."""
     from burst_db_spark.operators import dedup as dd
     from burst_db_spark.operators import selection as sel
-    from burst_db_spark.operators.dedup import release_dedup
 
     out: dict[str, float] = {}
     for label, f in (("", 1), ("_big", factor)):
@@ -1119,7 +1104,6 @@ def splits_cd_probe(spark, factor: int) -> dict[str, float]:
         res.write.format("noop").mode("overwrite").save()
         out[f"t_splits_cd{label}"] = round(time.perf_counter() - t0, 2)
         out[f"t_splits_edges{label}"] = pairs.count()
-        release_dedup(pairs)
         spark.catalog.clearCache()
     return out
 

@@ -6,9 +6,11 @@ Usage:
     python scripts/measure.py [--runs N] [--sf DIR] [--plans] name [name ...]
     python scripts/measure.py --top K        # K slowest from BENCH_FULL.json
 
-Timing methodology matches bench.py (clearCache between runs, noop sink,
-timer brackets build+write) but additionally reports the build-only time so
-driver-side plan-construction cost is visible separately.
+Each run goes through ``burst_db_spark.runner.run`` with the noop sink, as
+in bench.py, and the build-only time is reported too so driver-side
+plan-construction cost is visible separately. The script imports the tree
+it lives in, so an A/B (or ABA) comparison of two trees is
+``python <tree>/scripts/measure.py names...`` once per tree.
 """
 
 from __future__ import annotations
@@ -16,12 +18,17 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from burst_db_spark.registry import all_queries
+from burst_db_spark.runner import noop_write, run
 from burst_db_spark.session import get_spark
+
+
+def _formatted_plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
 
 
 def main() -> None:
@@ -73,15 +80,9 @@ def main() -> None:
         try:
             builds, totals = [], []
             for _ in range(runs):
-                spark.catalog.clearCache()
-                spark.sparkContext.setJobDescription(f"measure:{name}")
-                t0 = time.perf_counter()
-                df = specs[name].build(spark, sf_dir)
-                t1 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                t2 = time.perf_counter()
-                builds.append(t1 - t0)
-                totals.append(t2 - t0)
+                _, build_s, total_s = run(specs[name], spark, sf_dir, noop_write)
+                builds.append(build_s)
+                totals.append(total_s)
             rec = {
                 "total_best": round(min(totals), 3),
                 "build_best": round(min(builds), 3),
@@ -89,10 +90,7 @@ def main() -> None:
                 "builds": [round(x, 3) for x in builds],
             }
             if plans:
-                spark.catalog.clearCache()
-                df = specs[name].build(spark, sf_dir)
-                txt = df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted")
+                txt = run(specs[name], spark, sf_dir, _formatted_plan)[0]
                 with open(os.path.join(plan_dir, f"{name}_current.txt"),
                           "w") as fh:
                     fh.write(txt)

@@ -15,7 +15,6 @@ import math
 import os
 import re
 import sys
-import time
 
 import duckdb
 import pyarrow as pa
@@ -23,6 +22,7 @@ import pyarrow as pa
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from burst_db_spark.registry import all_queries
+from burst_db_spark.runner import run
 from burst_db_spark.session import get_spark
 
 SF_DIR = os.environ.get("VERIFY_SF_DIR", "/root/testdata/sf0.01")
@@ -263,19 +263,17 @@ def main() -> int:
     n_warn = 0
     for name in names:
         spec = specs[name]
-        t0 = time.time()
         try:
-            sdf = spec.build(spark, SF_DIR)
             # toArrow keeps Spark's types exact (toPandas would widen
             # nullable ints to float64 and fake a type-family mismatch)
-            sp_tbl = sdf.toArrow()
+            sp_tbl, _, secs = run(spec, spark, SF_DIR, lambda df: df.toArrow())
         except Exception as e:
             print(f"FAIL {name}: spark error {e!r}")
             n_fail += 1
             continue
         if spec.oracle is None:
             print(f"ok   {name}: rows-only ({sp_tbl.num_rows} rows, "
-                  f"{time.time()-t0:.1f}s)")
+                  f"{secs:.1f}s)")
             continue
         try:
             du_tbl = con.execute(spec.oracle).arrow()
@@ -325,7 +323,7 @@ def main() -> int:
                 print(f"FAIL {name}: values differ, e.g. {diffs}")
             n_fail += 1
             continue
-        print(f"ok   {name}: {sp_tbl.num_rows} rows, {time.time()-t0:.1f}s")
+        print(f"ok   {name}: {sp_tbl.num_rows} rows, {secs:.1f}s")
 
     n_lint = run_arith_lint({n: specs[n] for n in names}, con)
     print(f"\n{len(names)} checked, {n_fail} fail, {n_warn} type-warn, "

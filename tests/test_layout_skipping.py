@@ -149,12 +149,13 @@ def test_curve_sorted_write_prunes_row_groups_both_curves(spark, tmp_path):
     }
     s_inter, s_total = res["shuffled"]
     assert s_total >= 4 and s_inter == s_total  # nothing skippable
-    # measured: hilbert 4/16, morton 8/16, shuffled 16/16 — both curves
-    # prune, Morton loses to its seams (the o7_hilbert_layout run-count
-    # ratio, showing up as real parquet row-group skips). Morton's bound
-    # is 60% rather than 50%: row-group boundaries shift with writer
-    # flush timing (observed 9/17 on a contended session vs 8/16
-    # quiet), and Morton sits exactly at the half mark.
+    # measured: hilbert 4/16, morton 7/16, shuffled 16/16 on every run —
+    # the curve writes cut their ranges from exact bucket counts, so the
+    # figures no longer depend on sampling. Both curves prune, Morton
+    # loses to its seams (the o7_hilbert_layout run-count ratio, showing
+    # up as real parquet row-group skips). Morton's bound is 60% rather
+    # than 50% to leave room for row-group boundaries that shift with
+    # writer flush timing.
     bound_num = {"hilbert": 1, "morton": 3}
     bound_den = {"hilbert": 2, "morton": 5}
     for curve in ("hilbert", "morton"):

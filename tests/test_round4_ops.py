@@ -407,11 +407,8 @@ def test_pagerank_star_graph_bounded_fold(spark):
     (dst, bucket) is what bounds any single reducer's collect size)."""
     import math
 
-    from burst_db_spark.operators.graph import (
-        PR_FOLD_BUCKETS,
-        pagerank,
-        release_pagerank,
-    )
+    from burst_db_spark.operators.graph import PR_FOLD_BUCKETS, pagerank
+    from burst_db_spark.runner import scope
 
     n = 500  # every spoke points at the hub -> hub in-degree 499
     edges = spark.createDataFrame(
@@ -420,9 +417,9 @@ def test_pagerank_star_graph_bounded_fold(spark):
     nodes = spark.createDataFrame(
         [("hub",)] + [(f"s{i}",) for i in range(n - 1)], "id string"
     )
-    pr = pagerank(edges, nodes, iterations=3, damping=0.85)
-    ranks = {r.id: r.rank for r in pr.collect()}
-    release_pagerank(pr)
+    with scope():
+        pr = pagerank(edges, nodes, iterations=3, damping=0.85)
+        ranks = {r.id: r.rank for r in pr.collect()}
 
     # reference: exact sequential power iteration (leak semantics)
     d, p = 0.85, {v: 1.0 / n for v in ranks}

@@ -110,7 +110,8 @@ def test_auto_cell_size_uniform_and_skewed(spark):
 def test_grid_nn_join_auto_cell_matches_fixed(spark):
     """cell_size=None must give the identical exact-NN answer (the grid
     only changes the search schedule, never the result)."""
-    from burst_db_spark.operators.spatial_join import grid_nn_join, release_grid_nn
+    from burst_db_spark.operators.spatial_join import grid_nn_join
+    from burst_db_spark.runner import scope
 
     probes = spark.range(200).select(
         F.col("id").alias("pid"),
@@ -124,12 +125,11 @@ def test_grid_nn_join_auto_cell_matches_fixed(spark):
     )
     kw = dict(probe_key="pid", probe_xy=("px", "py"), point_xy=("sx", "sy"),
               point_cols=("sid",), tie_break="sid")
-    fixed = grid_nn_join(probes, points, cell_size=40.0, **kw)
-    auto = grid_nn_join(probes, points, cell_size=None, **kw)
-    rf = sorted((r["pid"], r["sid"], round(r["__dist_sq"], 9))
-                for r in fixed.collect())
-    ra = sorted((r["pid"], r["sid"], round(r["__dist_sq"], 9))
-                for r in auto.collect())
-    release_grid_nn(fixed)
-    release_grid_nn(auto)
+    with scope():
+        fixed = grid_nn_join(probes, points, cell_size=40.0, **kw)
+        auto = grid_nn_join(probes, points, cell_size=None, **kw)
+        rf = sorted((r["pid"], r["sid"], round(r["__dist_sq"], 9))
+                    for r in fixed.collect())
+        ra = sorted((r["pid"], r["sid"], round(r["__dist_sq"], 9))
+                    for r in auto.collect())
     assert rf == ra
