@@ -294,24 +294,17 @@ def dsir_exact_doc_features(
 
 
 def dsir_scores_exact(
-    docs: DataFrame,
-    target: Column,
+    doc_feat: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
     alpha: float = DSIR_ALPHA,
     top_n: int = 50,
-    doc_feat: DataFrame | None = None,
 ) -> DataFrame:
     """DSIR with EXACT n-gram features (no hashing) — the audit twin of
-    :func:`dsir_scores`. The model has one row per distinct feature
+    :func:`dsir_scores`, over the :func:`dsir_exact_doc_features` frame
+    ``doc_feat``. The model has one row per distinct feature
     (vocabulary-sized — fine at audit scale, the hashed variant is the
     100 TB path) with add-alpha smoothing over the OBSERVED vocabulary
-    size V; per-doc scores fold in feature-string order.
-
-    ``doc_feat``: optionally the :func:`dsir_exact_doc_features` frame
-    of the same corpus and target, for a caller that reads it too."""
-    if doc_feat is None:
-        doc_feat = dsir_exact_doc_features(docs, target, id_col, text_col)
+    size V; per-doc scores fold in feature-string order."""
     counts = doc_feat.groupBy("feat").agg(
         F.sum(F.when(F.col("__t"), F.col("cnt")).otherwise(0))
         .cast("bigint")

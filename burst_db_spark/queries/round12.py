@@ -611,7 +611,7 @@ def t_dsir_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the corpus is featurized once instead of three times. Counts
     # are identical integers; both oracles untouched.
     doc_feat = sel.dsir_exact_doc_features(docs, target)
-    e_out = sel.dsir_scores_exact(docs, target, top_n=_TOP_N, doc_feat=doc_feat)
+    e_out = sel.dsir_scores_exact(doc_feat, top_n=_TOP_N)
     doc_bucket = persist(
         doc_feat.select(
             "doc_id",

@@ -25,7 +25,7 @@ from burst_db_spark.plans.bpe_oracle import (
 )
 from burst_db_spark.queries.textops import _SHINGLES_CTE, _TOKS
 from burst_db_spark.registry import register
-from burst_db_spark.runner import persist, scope, tmpdir
+from burst_db_spark.runner import persist, tmpdir
 from burst_db_spark.streaming import drain
 
 # revenue expression, decimal-exact on both engines ------------------------
@@ -983,41 +983,36 @@ def dd_lsh_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # post-cache join work re-ran 3× per side. Persist the pair-count-
     # sized frames and materialize them eagerly, the two independent
     # pipelines overlapped in driver threads (the bcubed/cascade device).
-    # Pair sets are deterministic → the audit row is identical. The row
-    # is collected inside a scope, so every cache behind it is released
-    # before the builder returns it as a one-row local frame.
+    # Pair sets are deterministic → the audit row is identical. The
+    # operator caches behind both pair frames stay live until the query's
+    # scope exits.
     from concurrent.futures import ThreadPoolExecutor
-    from contextvars import copy_context
 
-    with scope():
-        lsh = persist(
-            dd.minhash_lsh_dedup(docs, "doc_id", threshold=0.5).select("id_a", "id_b")
+    lsh = persist(
+        dd.minhash_lsh_dedup(docs, "doc_id", threshold=0.5).select("id_a", "id_b")
+    )
+    exact = persist(
+        dd.ngram_jaccard_pairs(docs, "doc_id", threshold=0.5, max_df=50).select(
+            "id_a", "id_b"
         )
-        exact = persist(
-            dd.ngram_jaccard_pairs(
-                docs, "doc_id", threshold=0.5, max_df=50
-            ).select("id_a", "id_b")
-        )
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa = pool.submit(copy_context().run, lsh.count)
-            fb = pool.submit(copy_context().run, exact.count)
-            fa.result(), fb.result()
-        hits = exact.intersect(lsh)
-        n = (
-            lsh.agg(F.count("*").alias("n_lsh"))
-            .crossJoin(exact.agg(F.count("*").alias("n_exact")))
-            .crossJoin(hits.agg(F.count("*").alias("n_common")))
-        )
-        out = n.select(
-            F.col("n_lsh").cast("bigint").alias("n_lsh"),
-            F.col("n_exact").cast("bigint").alias("n_exact"),
-            F.col("n_common").cast("bigint").alias("n_common"),
-            (
-                F.col("n_common").cast("double") / F.col("n_exact").cast("double")
-            ).alias("recall"),
-        )
-        rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    )
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        fa, fb = pool.submit(lsh.count), pool.submit(exact.count)
+        fa.result(), fb.result()
+    hits = exact.intersect(lsh)
+    n = (
+        lsh.agg(F.count("*").alias("n_lsh"))
+        .crossJoin(exact.agg(F.count("*").alias("n_exact")))
+        .crossJoin(hits.agg(F.count("*").alias("n_common")))
+    )
+    return n.select(
+        F.col("n_lsh").cast("bigint").alias("n_lsh"),
+        F.col("n_exact").cast("bigint").alias("n_exact"),
+        F.col("n_common").cast("bigint").alias("n_common"),
+        (
+            F.col("n_common").cast("double") / F.col("n_exact").cast("double")
+        ).alias("recall"),
+    )
 
 
 @register(

@@ -83,9 +83,16 @@ def test_run_leaves_session_as_found(spark):
     run(specs[STREAM_ROWS[0]], spark, SF_DIR, lambda df: df.collect())
     for name in (*STREAM_ROWS, *PERSISTING_ROWS, *STAGING_ROWS):
         before = _state(spark)
-        rows, build_s, total_s = run(specs[name], spark, SF_DIR, lambda df: df.collect())
+        (rows, held), build_s, total_s = run(
+            specs[name],
+            spark,
+            SF_DIR,
+            lambda df: (df.collect(), _cached_ids(spark) - before["rdds"]),
+        )
         assert 0.0 <= build_s <= total_s, name
         assert rows is not None, name
+        if name in PERSISTING_ROWS:
+            assert held, name  # the build's persists were live at action time
         _assert_left_as_found(spark, before, name)
 
     before = _state(spark)
