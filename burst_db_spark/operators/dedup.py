@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from burst_db_spark.operators.text import shingles, tokens
 from burst_db_spark.runner import persist
+from burst_db_spark.session import fan_out
 
 NUM_HASHES = 16
 BAND_ROWS = 4  # 16 hashes → 4 bands of 4
@@ -84,10 +85,7 @@ def doc_shingles(df: DataFrame, id_col: str, text_col: str = "text", n: int = 3)
     arr = F.when(sz >= n, F.array_distinct(grams)).otherwise(
         F.array().cast("array<string>")
     )
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n_parts).select(
-        F.col(id_col), F.explode(arr).alias("shingle")
-    )
+    return fan_out(df).select(F.col(id_col), F.explode(arr).alias("shingle"))
 
 
 def ngram_jaccard_pairs(
@@ -990,15 +988,8 @@ def simhash_fingerprints(
     feats = F.array_distinct(
         features if features is not None else tokens(F.col(text_col))
     )
-    # Optimization r14 (guide §2.2 — the doc_shingles fan-out device):
-    # tokenize + per-feature md5 + 32 conditional sums are per-row CPU
-    # that otherwise runs inside the one-partition single-file scan
-    # task; fan the compact doc rows across cores first. Votes are
-    # order-free integer sums → fingerprints identical.
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    toks = df.repartition(n_parts).select(
-        F.col(id_col), F.explode(feats).alias("tok")
-    )
+    # votes are order-free integer sums → fingerprints identical
+    toks = fan_out(df).select(F.col(id_col), F.explode(feats).alias("tok"))
     h = _md5_hash32(F.col("tok"), 0)
     toks = toks.select(F.col(id_col), h.alias("th"))
     vote_aggs = [
@@ -1125,14 +1116,10 @@ def span_scrub(
     # totals, kept counts, and the reassembly together (collect_list
     # skips the NULLed removed spans; a doc whose spans are all removed
     # yields an empty list → '' exactly as the old left-join coalesce
-    # did). One span pass; the compact doc rows fan out before the
-    # explode (single-file scan).
+    # did). One span pass.
     from pyspark.sql.window import Window as _W
 
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    spans = doc_token_spans(
-        df.repartition(n_parts), id_col, text_col, span_len
-    )
+    spans = doc_token_spans(fan_out(df), id_col, text_col, span_len)
     first_in_doc = (
         F.row_number().over(
             _W.partitionBy("span", id_col).orderBy("span_idx")

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from burst_db_spark.session import fan_out
+
 MEDIA_SCHEMA = (
     "doc_id long, media_type string, payload binary, n_bytes int, sha1 string"
 )
@@ -264,11 +266,8 @@ def _wav_encode_per_key(
             {key: np.asarray(out_k, dtype=np.int64), "payload": out_p}
         )
 
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.select(key, value_col, order_col)
-        .repartition(n_parts, key)
-        .mapInPandas(_enc_part, enc_schema)
+    return fan_out(df.select(key, value_col, order_col), key).mapInPandas(
+        _enc_part, enc_schema
     )
 
 

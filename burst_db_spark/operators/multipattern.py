@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from burst_db_spark.session import fan_out
+
 #: patterns per automaton pass; bounds BOTH driver memory (one chunk of
 #: sub-gram-width strings) and closure size. 64k patterns of < 12 chars
 #: is ~1 MB — broadcast-small.
@@ -125,7 +127,6 @@ def contained_short_pairs(
     trivially contained in every text — the old instr path's
     instr(x, '') = 1 counted it; callers mirror this with a len > 0
     filter and the oracles pin length(a.text) > 0)."""
-    spark = base.sparkSession
     pattern_chunks = list(
         _chunks(
             shorts.select(short_id_col, short_text_col).toLocalIterator(),
@@ -136,14 +137,9 @@ def contained_short_pairs(
         return None
 
     out_schema = f"{short_id_col} long, {short_text_col} string, b_id long"
-    # Optimization r14 (guide §2.2 — the doc_shingles fan-out device):
-    # the automaton pass is per-row CPU (O(len(text)) per doc) that
-    # otherwise runs inside the one-partition single-file scan task;
-    # fan the (id, text) rows across cores first. Row-independent
-    # matching → identical (pattern, doc) hits.
-    scan_src = base.select(
+    scan_src = fan_out(base.select(
         F.col(id_col).alias("b_id"), F.col(text_col).alias("b_text")
-    ).repartition(spark.sparkContext.defaultParallelism)
+    ))
     parts = []
     for chunk in pattern_chunks:
         # defensive mirror of the contract: empty/null patterns never

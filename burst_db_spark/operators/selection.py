@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from burst_db_spark.operators.text import tokens
 from burst_db_spark.runner import persist
+from burst_db_spark.session import fan_out
 
 DSIR_BUCKETS = 64
 DSIR_ALPHA = 0.5
@@ -113,10 +114,7 @@ def dsir_scored_frame(
     (optimization r14, guide §2.3). The caller owns its caching.
     """
     if doc_bucket is None:
-        # fan the tokenize+bigram+md5 explode across all cores even when
-        # the scan is one small file (doc_shingles device; r14, guide §2)
-        n_parts = docs.sparkSession.sparkContext.defaultParallelism
-        tokd = docs.repartition(n_parts).select(
+        tokd = fan_out(docs).select(
             F.col(id_col), target.alias("__t"),
             tokens(F.col(text_col)).alias("__toks"),
         )
@@ -279,8 +277,7 @@ def dsir_exact_doc_features(
 ) -> DataFrame:
     """The persisted ``(id_col, __t, feat, cnt)`` frame of exact n-gram
     feature counts per doc that :func:`dsir_scores_exact` models."""
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
-    tokd = docs.repartition(n_parts).select(
+    tokd = fan_out(docs).select(
         F.col(id_col), target.alias("__t"), tokens(F.col(text_col)).alias("__toks")
     )
     feats = tokd.select(

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from burst_db_spark.runner import persist
+from burst_db_spark.session import fan_out, parallelism
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -820,8 +821,6 @@ def kmeans_unrolled_stats(
     regime where the flat k·N join is the superlinear term). The
     funnel never engages implicitly (r13 ADVICE).
     """
-    spark = emb.sparkSession
-
     h = F.conv(
         F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
     ).cast("bigint")
@@ -905,14 +904,11 @@ def kmeans_unrolled_stats(
             )
         )
 
-    # Optimization r14 (guide §2.2 — fan the compute-dense stage off the
-    # single-file scan): each round's assign folds k distances per row —
-    # pure CPU that otherwise runs inside the one-partition parquet scan
-    # task. Assignment is row-wise deterministic and the update's
-    # DECIMAL sums are order-free, so the trained model is identical on
-    # any partitioning. (Seeds were derived above from the raw frame;
-    # their global orderBy is partitioning-independent anyway.)
-    emb = emb.repartition(spark.sparkContext.defaultParallelism)
+    # each round's assign folds k distances per row; the update's DECIMAL
+    # sums are order-free, so the trained model is identical on any
+    # partitioning. (Seeds were derived above from the raw frame; their
+    # global orderBy is partitioning-independent anyway.)
+    emb = fan_out(emb)
     cur = cents
     assigned = None
     funnel = hier_threshold is not None and k >= hier_threshold
@@ -1160,30 +1156,49 @@ def semdedup_flags(
     cells = assign_cells(emb, centroids, id_col, vec_col).select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "cell"
     )
-    # Hoist per-vector norms OUT of the pair predicate: cosine(va, vb)
-    # inline recomputes both norms per PAIR, i.e. |cell|² times per
-    # vector under skewed occupancy — the exact regime this
-    # given-codebook row exists to pin. Materialized per side they cost
-    # once per vector; dot/(na*nb) is the identical expression tree
-    # (same left-fold, same multiply order), so results stay bit-equal
-    # and the oracle is untouched.
-    # Optimization r14 (guide §2.5 — salt the hot keys): a plain cell
-    # equi-join has at most n_cells distinct keys; with a small given
-    # codebook (k=16 here) AQE's byte-based coalescing funnels the whole
-    # Σ|cell|² pair predicate through ONE task (the inputs are tiny in
-    # bytes but the join OUTPUT is compute-dense — measured 8.0 s
-    # single-task at sf0.1). Deterministically chunk the probe side
-    # (pmod(xxhash64(id), C)) and replicate the build side C ways, so
-    # the pair work spreads over n_cells·C partitions; C is derived
-    # from defaultParallelism / n_cells and DEGENERATES TO 1 (no
-    # replication, the plain equi-join) once the codebook has at least
-    # 2·cores cells — the trained k ∝ N regime. Every unordered pair is
-    # still generated exactly once (the b-side copy in a's chunk), the
-    # predicate expression is untouched, so the surviving id set is
-    # bit-identical and the oracle is unaffected.
-    n_cells = max(1, len(centroids))
-    n_parts = emb.sparkSession.sparkContext.defaultParallelism
-    chunks = max(1, -(-2 * n_parts // n_cells))
+    sim_pairs = cell_sim_pairs(cells, max(1, len(centroids)), tau)
+    return (
+        cells.join(
+            sim_pairs.withColumnRenamed("id_b", "id").withColumn(
+                "__drop", F.lit(True)
+            ),
+            "id",
+            "left",
+        )
+        .select(
+            F.col("id").alias(id_col),
+            F.col("cell"),
+            F.coalesce(F.col("__drop"), F.lit(False)).alias("dropped"),
+        )
+    )
+
+
+def cell_sim_pairs(cells: DataFrame, n_cells: int, tau: float) -> DataFrame:
+    """The distinct ``id_b`` of every within-cell pair ``id_a < id_b``
+    of ``cells`` (``id``, ``v``, ``cell``) whose cosine is >= ``tau`` —
+    the SemDeDup drop set.
+
+    Norms are hoisted OUT of the pair predicate: cosine(va, vb) inline
+    recomputes both norms per PAIR, i.e. |cell|² times per vector under
+    skewed occupancy. Materialized per side they cost once per vector;
+    dot/(na*nb) is the identical expression tree (same left-fold, same
+    multiply order), so results stay bit-equal to the oracle's cosine.
+
+    Optimization r14 (guide §2.5 — salt the hot keys): a plain cell
+    equi-join has at most ``n_cells`` distinct keys; with a small
+    codebook (k=16) AQE's byte-based coalescing funnels the whole
+    Σ|cell|² pair predicate through ONE task (the inputs are tiny in
+    bytes but the join OUTPUT is compute-dense — measured 8.0 s
+    single-task at sf0.1). Deterministically chunk the probe side
+    (pmod(xxhash64(id), C)) and replicate the build side C ways, so the
+    pair work spreads over n_cells·C partitions; C = ceil(2p / n_cells)
+    for p = ``session.parallelism`` DEGENERATES TO 1 (no replication,
+    the plain equi-join) once the codebook has at least 2p cells — the
+    trained k ∝ N regime. Every unordered pair is still generated
+    exactly once (the b-side copy in a's chunk) and the predicate is
+    untouched, so the surviving id set is bit-identical.
+    """
+    chunks = max(1, -(-2 * parallelism(cells.sparkSession) // n_cells))
     a = cells.select(
         F.col("id").alias("id_a"),
         F.col("v").alias("va"),
@@ -1202,9 +1217,9 @@ def semdedup_flags(
     )
     join_keys = ["cell", "__chunk"] if chunks > 1 else ["cell"]
     if chunks > 1:
-        a = a.repartition(n_parts, "cell", "__chunk")
-        b = b.repartition(n_parts, "cell", "__chunk")
-    sim_pairs = (
+        a = fan_out(a, "cell", "__chunk")
+        b = fan_out(b, "cell", "__chunk")
+    return (
         a.join(b, join_keys)
         .where(F.col("id_a") < F.col("id_b"))
         .where(
@@ -1213,20 +1228,6 @@ def semdedup_flags(
         )
         .select("id_b")
         .distinct()
-    )
-    return (
-        cells.join(
-            sim_pairs.withColumnRenamed("id_b", "id").withColumn(
-                "__drop", F.lit(True)
-            ),
-            "id",
-            "left",
-        )
-        .select(
-            F.col("id").alias(id_col),
-            F.col("cell"),
-            F.coalesce(F.col("__drop"), F.lit(False)).alias("dropped"),
-        )
     )
 
 
@@ -1270,18 +1271,24 @@ def int8_quantized_topk(
     story): global per-dim min/max -> int8 codes -> exact BIGINT L2
     sweep -> double-cosine rerank of the top-C survivors. Deterministic
     end-to-end; returns (query_id, neighbor_id, rank, cos)."""
-    from pyspark.sql.window import Window
-
-    _SQ_QUERIES, _SQ_TOPC, _SQ_TOPK, _SQ_DIM = n_queries, topc, topk, dim
     codes = int8_codes(emb, dim).select("vec_id", "embedding", "code")
-    q = codes.where(F.col("vec_id") < _SQ_QUERIES).select(
+    q = codes.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
         F.col("code").alias("qcode"),
     )
+    return int8_rerank_topk(codes.crossJoin(F.broadcast(q)), topc, topk)
+
+
+def int8_rerank_topk(probes: DataFrame, topc: int, topk: int) -> DataFrame:
+    """The int8 ANN tail: per query, the ``topc`` nearest candidates by
+    exact BIGINT L2 over the int8 codes, reranked by exact double cosine
+    to the top ``topk``. ``probes`` pairs each code row (``vec_id``,
+    ``embedding``, ``code``) with a query it is scored against
+    (``query_id``, ``qv``, ``qcode``); a query never matches itself.
+    Returns (query_id, neighbor_id, rank, cos) ordered by query, rank."""
     cand = (
-        codes.crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("query_id"))
+        probes.where(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -1295,8 +1302,8 @@ def int8_quantized_topk(
         )
     )
     w_c = Window.partitionBy("query_id").orderBy("dist2", "neighbor_id")
-    topc = cand.withColumn("crank", F.row_number().over(w_c)).where(
-        F.col("crank") <= _SQ_TOPC
+    top_c = cand.withColumn("crank", F.row_number().over(w_c)).where(
+        F.col("crank") <= topc
     )
     dot = F.aggregate(
         F.zip_with(
@@ -1317,11 +1324,11 @@ def int8_quantized_topk(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    scored = topc.withColumn("cos", dot / (F.sqrt(nq) * F.sqrt(nc)))
+    scored = top_c.withColumn("cos", dot / (F.sqrt(nq) * F.sqrt(nc)))
     w_k = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w_k).cast("int"))
-        .where(F.col("rank") <= _SQ_TOPK)
+        .where(F.col("rank") <= topk)
         .select("query_id", "neighbor_id", "rank", "cos")
         .orderBy("query_id", "rank")
     )
@@ -1538,12 +1545,9 @@ def mine_triplets(
     # get NULL cos_pos, so their negatives vanish in the strict `<`
     # filter exactly as the old inner join dropped them), and the
     # ranking window reuses the same anchor partitioning — ONE cosine
-    # pass, one exchange. The compact embedding rows additionally fan
-    # out across cores before the compute-dense cosine projection
-    # (single-file scan).
-    n_parts = emb.sparkSession.sparkContext.defaultParallelism
+    # pass, one exchange.
     scored = (
-        cand.repartition(n_parts)
+        fan_out(cand)
         .join(F.broadcast(anchors), F.col("cand_id") != F.col("anchor_id"))
         .withColumn("cos", cosine(F.col("av"), F.col("cv")))
         .select("anchor_id", "albl", "cand_id", "clbl", "cos")

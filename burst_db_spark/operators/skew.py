@@ -1,5 +1,6 @@
 """Skew & shuffle management helpers — the knobs the brief calls out for
-100 TB: salting for hot keys, bucketed co-located joins.
+100 TB: salting for hot keys (bucketed co-located joins are
+``sinks.write_bucketed``).
 
 AQE's skew-join handles moderate skew automatically
 (spark.sql.adaptive.skewJoin.enabled, on in session.py); explicit salting
@@ -49,24 +50,3 @@ def salted_count(
         .agg(F.count("*").alias("__n"))
     )
     return partial.groupBy(key).agg(F.sum("__n").cast("bigint").alias("n"))
-
-
-def write_bucketed(
-    df: DataFrame, table: str, key: str, n_buckets: int = 16, path: str | None = None
-) -> None:
-    """Persist hash-bucketed by the join key: later equi-joins between
-    tables bucketed the same way run WITHOUT a shuffle (no Exchange in
-    the plan) — the analog of the reference's B-tree join indexes
-    (build_frame_db.py:108-119).
-
-    ``path`` → external table location (warehouse dir is static config).
-    """
-    w = (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .format("parquet")
-    )
-    if path:
-        w = w.option("path", path)
-    w.saveAsTable(table)

@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from burst_db_spark.runner import persist
+from burst_db_spark.session import parallelism
 
 WORD_SPLIT = r"\s+"
 # BPE-ish pre-tokenizer: letter runs | single digits | single punctuation
@@ -319,7 +320,7 @@ def curriculum_buckets_scalable(
 
     order = [score_col] + ([order_key] if order_key is not None else [])
     spark = df.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
+    n_parts = n_parts or parallelism(spark)
     ranged = persist(
         df.repartitionByRange(n_parts, *order)
         .withColumn("__pid", F.spark_partition_id())
@@ -388,7 +389,7 @@ def grouped_ntile_scalable(
     from pyspark.sql.types import LongType, StructField, StructType
 
     spark = df.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
+    n_parts = n_parts or parallelism(spark)
     ranged = persist(
         df.repartitionByRange(n_parts, F.col(group_col), *order)
         .withColumn("__pid", F.spark_partition_id())
@@ -481,7 +482,6 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = 8,
     w: int = 4,
-    spread_small_input: bool = False,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD 2003 §3): hash every character ``k``-gram of the normalized
@@ -517,19 +517,10 @@ def winnow_fingerprints(
     ``fp`` (15-hex-char gram hash), ``fp_pos`` (1-based gram start in
     the normalized text), ``fp60`` (BIGINT form of ``fp`` for compact
     downstream joins).
-    """
-    # the gram-key map is CPU-heavy; a single-file scan (one partition)
-    # would run it on one core. Spreading is an EXPLICIT OPT-IN for
-    # small local fixtures only: on a real cluster a moderately-
-    # partitioned 100 TB table has fewer partitions than total cores
-    # too, and an unconditional repartition here would shuffle the
-    # entire text column (plus df.rdd forces an RDD conversion just to
-    # read the partition count). Default: trust the scan's partitioning.
-    if spread_small_input:
-        dp = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < dp:
-            df = df.repartition(dp, F.col(id_col))
 
+    The map runs on ``df``'s partitioning as given; a caller whose input
+    is one small file spreads it first (``session.fan_out``).
+    """
     t = F.lower(F.trim(F.col(text_col)))
     m = (F.length(t) - F.lit(k - 1)).alias("__m")  # gram count
 
@@ -575,7 +566,6 @@ def winnow_overlap_pairs(
     w: int = 4,
     min_shared: int = 2,
     max_df: int = 50,
-    spread_small_input: bool = False,
 ) -> DataFrame:
     """Document pairs sharing >= ``min_shared`` winnowed fingerprints —
     the MOSS overlap measure. Candidate generation is an EQUI-join on
@@ -591,10 +581,7 @@ def winnow_overlap_pairs(
     fingerprint sets.
     """
     fps = (
-        winnow_fingerprints(
-            df, id_col, text_col, k=k, w=w,
-            spread_small_input=spread_small_input,
-        )
+        winnow_fingerprints(df, id_col, text_col, k=k, w=w)
         .select(id_col, "fp")
         .distinct()
     )

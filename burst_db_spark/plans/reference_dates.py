@@ -23,6 +23,8 @@ from datetime import datetime
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from burst_db_spark.session import fan_out
+
 INTERVAL_DAYS = int(1.0 * 365.25)
 MIN_ACQS = 15
 
@@ -193,14 +195,11 @@ def reference_dates(
         )
 
     schema = f"{key} int, ref_idx int, ref_date timestamp"
-    n_parts = acq.sparkSession.sparkContext.defaultParallelism
     # hash-repartition by key (every key complete within one task), then
     # run the kernel once per PARTITION — same per-key state machine,
     # same rows, ~no per-group Arrow overhead (see _grouped_refs_frames)
-    return (
-        acq.select(key, ts_col)
-        .repartition(n_parts, key)
-        .mapInPandas(_per_partition, schema)
+    return fan_out(acq.select(key, ts_col), key).mapInPandas(
+        _per_partition, schema
     )
 
 
@@ -275,13 +274,9 @@ def reference_dates_cogrouped(
             )
 
         schema = f"{key} int, ref_idx int, ref_date timestamp"
-        n_parts = acq.sparkSession.sparkContext.defaultParallelism
         # whole-partition kernel, not per-group (guide §4.5; see
         # _grouped_refs_frames — same rows, no per-group Arrow cost)
-        return (
-            joined.repartition(n_parts, key)
-            .mapInPandas(_per_partition_bcast, schema)
-        )
+        return fan_out(joined, key).mapInPandas(_per_partition_bcast, schema)
 
     def _per_key(acq_pdf: pd.DataFrame, ev_pdf: pd.DataFrame) -> pd.DataFrame:
         if acq_pdf.empty:

@@ -14,6 +14,7 @@ from burst_db_spark.operators import similarity as sim_ops
 from burst_db_spark.operators.similarity import cosine
 from burst_db_spark.registry import register
 from burst_db_spark.runner import persist
+from burst_db_spark.session import fan_out
 
 
 @register(
@@ -140,9 +141,7 @@ def dd_embedding_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set and cosines are bit-identical. Recall vs the exact
     all-pairs baseline is measured by ``dd_embedding_nn_exact_audit``.
     """
-    emb = load(spark, sf_dir, "embeddings")
-    n_parts = spark.sparkContext.defaultParallelism
-    return sim_ops.lsh_near_dup_pairs(emb.repartition(n_parts))
+    return sim_ops.lsh_near_dup_pairs(fan_out(load(spark, sf_dir, "embeddings")))
 
 
 @register(
@@ -158,9 +157,9 @@ def dd_embedding_nn_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe explode is bounded (b·(r+1) rows/vector) and the join stays a
     hash equi-join on (band_idx, key). Oracle replicates planes, folds,
     keys, and probe masks bit-for-bit."""
-    emb = load(spark, sf_dir, "embeddings")
-    n_parts = spark.sparkContext.defaultParallelism
-    return sim_ops.lsh_near_dup_pairs_multiprobe(emb.repartition(n_parts))
+    return sim_ops.lsh_near_dup_pairs_multiprobe(
+        fan_out(load(spark, sf_dir, "embeddings"))
+    )
 
 
 @register(
@@ -196,12 +195,9 @@ def dd_embedding_nn_exact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     # precompute each vector's norm ONCE (same left-fold expression →
     # bit-identical to computing it per pair, 3x less work on N² pairs);
-    # repartition: a single-file scan would otherwise generate all N²/2
-    # pairs in ONE task — spreading the probe side parallelizes the
-    # nested-loop join across the cluster
-    n_parts = spark.sparkContext.defaultParallelism
+    # the fan-out spreads the nested-loop join's N²/2 pairs over tasks
     with_norm = persist(
-        emb.repartition(n_parts)
+        fan_out(emb)
         .select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
     )
     a = with_norm.select(

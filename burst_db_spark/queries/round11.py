@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from burst_db_spark.catalog import load
 from burst_db_spark.operators import text as tx
 from burst_db_spark.registry import register
+from burst_db_spark.session import fan_out
 
 _K = 8  # gram width (noise threshold)
 _W = 4  # window width; guarantee threshold t = _K + _W - 1 = 11 chars
@@ -79,9 +80,7 @@ def t_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashing, window argmin, tie-break, position recovery) bit-identical
     across engines."""
     docs = load(spark, sf_dir, "documents")
-    return tx.winnow_fingerprints(
-        docs, "doc_id", k=_K, w=_W, spread_small_input=True
-    )
+    return tx.winnow_fingerprints(fan_out(docs, "doc_id"), "doc_id", k=_K, w=_W)
 
 
 @register(
@@ -126,8 +125,7 @@ def dd_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle/LSH dedups."""
     docs = load(spark, sf_dir, "documents")
     return tx.winnow_overlap_pairs(
-        docs, "doc_id", k=_K, w=_W, min_shared=10, max_df=50,
-        spread_small_input=True,
+        fan_out(docs, "doc_id"), "doc_id", k=_K, w=_W, min_shared=10, max_df=50
     )
 
 # ---------------------------------------------------------------------------
@@ -872,8 +870,7 @@ def dd_winnow_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the identical pair graph."""
     docs = load(spark, sf_dir, "documents")
     pairs = tx.winnow_overlap_pairs(
-        docs, "doc_id", k=_K, w=_W, min_shared=10, max_df=50,
-        spread_small_input=True,
+        fan_out(docs, "doc_id"), "doc_id", k=_K, w=_W, min_shared=10, max_df=50
     ).select("id_a", "id_b")
     return dd.connected_components(pairs, docs, "doc_id")
 

@@ -26,6 +26,7 @@ from burst_db_spark.operators import text as tx
 from burst_db_spark.queries.similarity import _cos_sql
 from burst_db_spark.queries.textops import _SHINGLES_CTE, _TOKS
 from burst_db_spark.registry import register
+from burst_db_spark.session import fan_out
 
 # -- UniMax: water-filling language allocation --------------------------------
 
@@ -667,12 +668,9 @@ def bootstrap_ci_frame(events: DataFrame) -> DataFrame:
     the DuckDB oracle is untouched. Measured sf0.1 best-of-3: 6.8 s →
     1.5 s (see OPTIMIZATION_r14.md)."""
     n_digs = _BOOT_B // 4
-    # Fan the compute-dense per-row stage (8 md5 + 32 conv per row)
-    # across all cores even when the scan is a single small file — the
-    # doc_shingles device; the repartition moves 3 narrow columns, far
-    # cheaper than the per-row hashing it parallelizes.
-    n_parts = events.sparkSession.sparkContext.defaultParallelism
-    digs = events.repartition(n_parts).select(
+    # the fan-out moves 3 narrow columns, far cheaper than the 8 md5 +
+    # 32 conv per row it parallelizes
+    digs = fan_out(events).select(
         "event_type",
         "value",
         F.array(

@@ -50,6 +50,7 @@ from burst_db_spark.queries.similarity import _cos_sql
 from burst_db_spark.queries.textops import _TOKS
 from burst_db_spark.registry import register
 from burst_db_spark.runner import persist, scope, tmpdir
+from burst_db_spark.session import fan_out
 from burst_db_spark.streaming import drain
 
 # -- D4: SemDeDup + prototype pruning over TRAINED cells ------------------------
@@ -212,47 +213,7 @@ def dd_d4_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min-struct argmin), so cached vs recomputed values are identical.
     asg = persist(asg)
     cents = persist(cents)
-    # norms hoisted out of the pair predicate (once per vector, not per
-    # pair — bit-equal arithmetic, see similarity.semdedup_flags), and
-    # the pair join chunk-fans-out exactly like semdedup_flags: k=16
-    # cells would otherwise funnel the Sigma|cell|^2 predicate through a
-    # handful of tasks (AQE coalesces the tiny-byte inputs). C derives
-    # from defaultParallelism and degenerates to 1 past 2*cores cells;
-    # every unordered pair is still generated exactly once, predicate
-    # untouched -> identical surviving id set.
-    n_parts = spark.sparkContext.defaultParallelism
-    chunks = max(1, -(-2 * n_parts // _KM_K))
-    a = asg.select(
-        F.col("id").alias("id_a"),
-        F.col("v").alias("va"),
-        sim._norm(F.col("v")).alias("na"),
-        "cell",
-        F.pmod(F.xxhash64(F.col("id")), F.lit(chunks)).alias("__chunk"),
-    )
-    b = asg.select(
-        F.col("id").alias("id_b"),
-        F.col("v").alias("vb"),
-        sim._norm(F.col("v")).alias("nb"),
-        "cell",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(chunks - 1)).cast("array<bigint>")
-        ).alias("__chunk"),
-    )
-    join_keys = ["cell", "__chunk"] if chunks > 1 else ["cell"]
-    if chunks > 1:
-        a = a.repartition(n_parts, "cell", "__chunk")
-        b = b.repartition(n_parts, "cell", "__chunk")
-    sim_pairs = (
-        a.join(b, join_keys)
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(
-            sim._dot(F.col("va"), F.col("vb"))
-            / (F.col("na") * F.col("nb"))
-            >= F.lit(_D4_TAU)
-        )
-        .select("id_b")
-        .distinct()
-    )
+    sim_pairs = sim.cell_sim_pairs(asg, _KM_K, _D4_TAU)
     proto = (
         asg.join(F.broadcast(cents), "cell")
         .join(
@@ -712,10 +673,7 @@ def t_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     same cost as any tokenize), one (doc, char) count with map-side
     combine, one per-doc rollup. No UDF."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    # fan the char explode across all cores (doc_shingles device; r14)
-    chars = docs.repartition(
-        spark.sparkContext.defaultParallelism
-    ).select(
+    chars = fan_out(docs).select(
         "doc_id",
         F.explode(
             F.transform(

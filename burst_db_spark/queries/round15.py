@@ -43,6 +43,7 @@ from burst_db_spark.catalog import load
 from burst_db_spark.operators import similarity as sim
 from burst_db_spark.registry import register
 from burst_db_spark.runner import persist, tmpdir
+from burst_db_spark.session import fan_out
 from burst_db_spark.streaming import drain
 
 # -- Hierarchical (funnel) codebook assignment, oracle-checked -----------------
@@ -61,6 +62,49 @@ def _l2sq(a: str, b: str, dim: int = 64) -> str:
     return (
         f"list_reduce(list_transform(range(1, {dim + 1}), i -> "
         f"({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), (x, y) -> x + y)"
+    )
+
+
+def _hier_seed_cents(emb: DataFrame) -> DataFrame:
+    """The given 96-cell codebook of the hierarchical-assignment rows:
+    the first ``_HA_K`` vectors by (md5 hash of vec_id, vec_id), numbered
+    1.. in that order, as (cell, cv double array)."""
+    h = F.conv(
+        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
+    ).cast("bigint")
+    seeds = (
+        emb.select(
+            F.col("embedding").alias("cv"),
+            F.col("vec_id").alias("sid"),
+            h.alias("h"),
+        )
+        .orderBy("h", "sid")
+        .limit(_HA_K)
+    )
+    return seeds.withColumn(
+        "cell", F.row_number().over(Window.orderBy("h", "sid"))
+    ).select(
+        "cell", F.transform("cv", lambda x: x.cast("double")).alias("cv")
+    )
+
+
+def _cell_summary(asg: DataFrame, cents: DataFrame) -> DataFrame:
+    """Per-cell fingerprint of an assignment: member count, id
+    min/max/sum and the fixed-point distance mass floor(dist·2^20)."""
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    scored = asg.join(F.broadcast(cents), "cell").select(
+        "cell",
+        F.col("vec_id").alias("id"),
+        sim._sqdist(v, F.col("cv")).alias("dist"),
+    )
+    return scored.groupBy("cell").agg(
+        F.count("*").cast("bigint").alias("n_members"),
+        F.min("id").cast("bigint").alias("min_id"),
+        F.max("id").cast("bigint").alias("max_id"),
+        F.sum("id").cast("bigint").alias("sum_id"),
+        F.sum(F.floor(F.col("dist") * F.lit(1048576.0)).cast("bigint"))
+        .cast("bigint")
+        .alias("sum_dist_fx"),
     )
 
 
@@ -161,48 +205,10 @@ def knn_hier_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round assignment from k·N rows to a shuffle-free projection of
     N·(g + nprobe·k/g) distance folds."""
     emb = load(spark, sf_dir, "embeddings")
-    h = F.conv(
-        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-    seeds = (
-        emb.select(
-            F.col("embedding").alias("cv"),
-            F.col("vec_id").alias("sid"),
-            h.alias("h"),
-        )
-        .orderBy("h", "sid")
-        .limit(_HA_K)
-    )
-    cents = seeds.withColumn(
-        "cell", F.row_number().over(Window.orderBy("h", "sid"))
-    ).select(
-        "cell", F.transform("cv", lambda x: x.cast("double")).alias("cv")
-    )
+    cents = _hier_seed_cents(emb)
     groups_one = sim.hier_group_state(cents, _HA_G)
-    # Optimization r14 (guide §2.2 — fan the compute-dense stage off the
-    # single-file scan): the funnel's per-row distance folds are pure
-    # CPU; without a repartition they run inside the one-partition
-    # parquet scan task. Row-wise deterministic -> identical assignment.
-    asg = sim.assign_cells_hier(
-        emb.repartition(spark.sparkContext.defaultParallelism),
-        groups_one,
-        nprobe=_HA_NPROBE,
-    )
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    scored = asg.join(F.broadcast(cents), "cell").select(
-        "cell",
-        F.col("vec_id").alias("id"),
-        sim._sqdist(v, F.col("cv")).alias("dist"),
-    )
-    return scored.groupBy("cell").agg(
-        F.count("*").cast("bigint").alias("n_members"),
-        F.min("id").cast("bigint").alias("min_id"),
-        F.max("id").cast("bigint").alias("max_id"),
-        F.sum("id").cast("bigint").alias("sum_id"),
-        F.sum(F.floor(F.col("dist") * F.lit(1048576.0)).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_dist_fx"),
-    )
+    asg = sim.assign_cells_hier(fan_out(emb), groups_one, nprobe=_HA_NPROBE)
+    return _cell_summary(asg, cents)
 
 
 # -- Two-level funnel assignment, oracle-checked (VERDICT r13 #4) ---------------
@@ -353,47 +359,15 @@ def knn_hier2_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     kmeans_unrolled_stats routes through past HIER2_ASSIGN_THRESHOLD
     when the funnel is opted in — the r13 residual-superlinearity fix."""
     emb = load(spark, sf_dir, "embeddings")
-    h = F.conv(
-        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-    seeds = (
-        emb.select(
-            F.col("embedding").alias("cv"),
-            F.col("vec_id").alias("sid"),
-            h.alias("h"),
-        )
-        .orderBy("h", "sid")
-        .limit(_HA_K)
-    )
-    cents = seeds.withColumn(
-        "cell", F.row_number().over(Window.orderBy("h", "sid"))
-    ).select(
-        "cell", F.transform("cv", lambda x: x.cast("double")).alias("cv")
-    )
+    cents = _hier_seed_cents(emb)
     state2 = sim.hier_group_state2(cents, _H2_G, _H2_G2)
-    # fan-out as in knn_hier_assign (guide §2.2): row-wise deterministic
-    # distance folds, identical assignment on any partitioning
     asg = sim.assign_cells_hier2(
-        emb.repartition(spark.sparkContext.defaultParallelism),
+        fan_out(emb),
         state2,
         nprobe2=_H2_NPROBE2,
         nprobe=_HA_NPROBE,
     )
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    scored = asg.join(F.broadcast(cents), "cell").select(
-        "cell",
-        F.col("vec_id").alias("id"),
-        sim._sqdist(v, F.col("cv")).alias("dist"),
-    )
-    return scored.groupBy("cell").agg(
-        F.count("*").cast("bigint").alias("n_members"),
-        F.min("id").cast("bigint").alias("min_id"),
-        F.max("id").cast("bigint").alias("max_id"),
-        F.sum("id").cast("bigint").alias("sum_id"),
-        F.sum(F.floor(F.col("dist") * F.lit(1048576.0)).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_dist_fx"),
-    )
+    return _cell_summary(asg, cents)
 
 
 # -- Short-doc substring dedup via the Aho-Corasick pass -----------------------
@@ -667,14 +641,10 @@ def t_dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # device): corpus frequency via count() OVER (PARTITION BY g)
     # replaces aggregate + join-back — the tokenize+md5 gram stream is
     # now computed ONCE and crosses ONE exchange instead of two; the
-    # per-row c is the same integer the join attached. The compact doc
-    # rows additionally fan out across cores before the compute-dense
-    # gram projection (single-file scan).
+    # per-row c is the same integer the join attached.
     from pyspark.sql.window import Window as _W
 
-    grams = toks.repartition(
-        spark.sparkContext.defaultParallelism
-    ).select(
+    grams = fan_out(toks).select(
         "doc_id",
         F.explode(
             F.transform(
@@ -915,6 +885,85 @@ _NB_BUCKET = (
 )
 
 
+def _nb_scores(docs: DataFrame) -> DataFrame:
+    """The NB domain tagger's evidence per (document, source): the model
+    trained on ``docs`` and every document scored against every source,
+    as (doc_id, source, true_source, score). See t_nb_domain_confusion
+    for the fixed-point rules that keep it engine-identical."""
+    from burst_db_spark.operators import text as tx
+
+    tb = fan_out(docs).select(
+        "doc_id",
+        "source",
+        F.explode(
+            F.filter(tx.tokens(F.col("text")), lambda w: F.length(w) > 0)
+        ).alias("term"),
+    ).select(
+        "doc_id",
+        "source",
+        (
+            F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("bigint")
+            % _NB_B
+        ).alias("b"),
+    )
+    # Optimization r14 (guide §2.3): `db` is the only consumer of the
+    # tokenize+md5 explode; the model's (source, b) counts are the SAME
+    # integers re-aggregated from db's per-doc counts (source is
+    # functionally determined by doc_id), so the corpus is tokenized
+    # ONCE instead of twice. Exact bigint sums — results unchanged; the
+    # oracle still spells both groupBys from the token stream.
+    db = persist(tb.groupBy("doc_id", "b").agg(
+        F.any_value("source").alias("true_source"),
+        F.count("*").cast("bigint").alias("n_db"),
+    ))
+    model = db.groupBy(F.col("true_source").alias("source"), "b").agg(
+        F.sum("n_db").cast("bigint").alias("c_sb")
+    )
+    totals = model.groupBy("source").agg(
+        F.sum("c_sb").cast("bigint").alias("c_s")
+    )
+    ll = model.join(F.broadcast(totals), "source").select(
+        "source",
+        "b",
+        F.floor(
+            F.log(
+                (F.col("c_sb").cast("double") + 1.0)
+                / (F.col("c_s").cast("double") + float(_NB_B))
+            )
+            * F.lit(1048576.0)
+        )
+        .cast("bigint")
+        .alias("ll_fx"),
+    )
+    n_total = docs.agg(F.count("*").cast("double").alias("nt"))
+    priors = (
+        docs.groupBy("source")
+        .agg(F.count("*").cast("double").alias("nd"))
+        .crossJoin(F.broadcast(n_total))
+        .select(
+            F.col("source").alias("psource"),
+            F.floor(
+                F.log(F.col("nd") / F.col("nt")) * F.lit(1048576.0)
+            )
+            .cast("bigint")
+            .alias("lp_fx"),
+        )
+    )
+    contrib = F.col("n_db") * F.col("ll_fx")
+    return (
+        db.join(F.broadcast(ll), "b")
+        .join(F.broadcast(priors), F.col("source") == F.col("psource"))
+        .groupBy("doc_id", "source")
+        .agg(
+            F.any_value("true_source").alias("true_source"),
+            (
+                F.sum(contrib).cast("bigint")
+                + F.any_value("lp_fx").cast("bigint")
+            ).alias("score"),
+        )
+    )
+
+
 @register(
     "t_nb_domain_confusion",
     oracle=f"""
@@ -990,82 +1039,7 @@ def t_nb_domain_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     source) evidence is an exact integer sum of n_db·ll_fx
     (order-free), argmax ties break on source name — exact bigint
     comparison, so predictions are engine-identical."""
-    from burst_db_spark.operators import text as tx
-
-    docs = load(spark, sf_dir, "documents")
-    # fan the tokenize+md5 explode across all cores (doc_shingles
-    # device; r14, guide §2 — the scan is one small file)
-    n_parts = spark.sparkContext.defaultParallelism
-    tb = docs.repartition(n_parts).select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.filter(tx.tokens(F.col("text")), lambda w: F.length(w) > 0)
-        ).alias("term"),
-    ).select(
-        "doc_id",
-        "source",
-        (
-            F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("bigint")
-            % _NB_B
-        ).alias("b"),
-    )
-    # Optimization r14 (guide §2.3): `db` is the only consumer of the
-    # tokenize+md5 explode; the model's (source, b) counts are the SAME
-    # integers re-aggregated from db's per-doc counts (source is
-    # functionally determined by doc_id), so the corpus is tokenized
-    # ONCE instead of twice. Exact bigint sums — results unchanged; the
-    # oracle still spells both groupBys from the token stream.
-    db = persist(tb.groupBy("doc_id", "b").agg(
-        F.any_value("source").alias("true_source"),
-        F.count("*").cast("bigint").alias("n_db"),
-    ))
-    model = db.groupBy(F.col("true_source").alias("source"), "b").agg(
-        F.sum("n_db").cast("bigint").alias("c_sb")
-    )
-    totals = model.groupBy("source").agg(
-        F.sum("c_sb").cast("bigint").alias("c_s")
-    )
-    ll = model.join(F.broadcast(totals), "source").select(
-        "source",
-        "b",
-        F.floor(
-            F.log(
-                (F.col("c_sb").cast("double") + 1.0)
-                / (F.col("c_s").cast("double") + float(_NB_B))
-            )
-            * F.lit(1048576.0)
-        )
-        .cast("bigint")
-        .alias("ll_fx"),
-    )
-    n_total = docs.agg(F.count("*").cast("double").alias("nt"))
-    priors = (
-        docs.groupBy("source")
-        .agg(F.count("*").cast("double").alias("nd"))
-        .crossJoin(F.broadcast(n_total))
-        .select(
-            F.col("source").alias("psource"),
-            F.floor(
-                F.log(F.col("nd") / F.col("nt")) * F.lit(1048576.0)
-            )
-            .cast("bigint")
-            .alias("lp_fx"),
-        )
-    )
-    contrib = F.col("n_db") * F.col("ll_fx")
-    scores = (
-        db.join(F.broadcast(ll), "b")
-        .join(F.broadcast(priors), F.col("source") == F.col("psource"))
-        .groupBy("doc_id", "source")
-        .agg(
-            F.any_value("true_source").alias("true_source"),
-            (
-                F.sum(contrib).cast("bigint")
-                + F.any_value("lp_fx").cast("bigint")
-            ).alias("score"),
-        )
-    )
+    scores = _nb_scores(load(spark, sf_dir, "documents"))
     w = Window.partitionBy("doc_id").orderBy(
         F.col("score").desc(), F.col("source")
     )

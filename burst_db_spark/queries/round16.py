@@ -1227,6 +1227,7 @@ from burst_db_spark.queries.round15 import (  # noqa: E402
     _NB_B,
     _NB_BUCKET,
     _NG_TOKS,
+    _nb_scores,
 )
 
 
@@ -1325,76 +1326,7 @@ def t_nb_margin_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBys + broadcast joins as the confusion row; the decile cut is
     one global sort of doc-count rows (at 100 TB: range-partitioned
     sort, same as o6)."""
-    from burst_db_spark.operators import text as tx
-
-    docs = load(spark, sf_dir, "documents")
-    # fan the tokenize+md5 explode across all cores (doc_shingles
-    # device; r14, guide §2 — the scan is one small file)
-    tb = docs.repartition(spark.sparkContext.defaultParallelism).select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.filter(tx.tokens(F.col("text")), lambda w: F.length(w) > 0)
-        ).alias("term"),
-    ).select(
-        "doc_id",
-        "source",
-        (
-            F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("bigint")
-            % _NB_B
-        ).alias("b"),
-    )
-    # Optimization r14 (guide §2.3): one tokenize+md5 pass — the model's
-    # (source, b) counts re-aggregate db's exact per-doc bigint counts
-    # (source is functionally determined by doc_id), mirroring
-    # t_nb_domain_confusion. Results unchanged; oracle untouched.
-    db = persist(tb.groupBy("doc_id", "b").agg(
-        F.any_value("source").alias("true_source"),
-        F.count("*").cast("bigint").alias("n_db"),
-    ))
-    model = db.groupBy(F.col("true_source").alias("source"), "b").agg(
-        F.sum("n_db").cast("bigint").alias("c_sb")
-    )
-    totals = model.groupBy("source").agg(
-        F.sum("c_sb").cast("bigint").alias("c_s")
-    )
-    ll = model.join(F.broadcast(totals), "source").select(
-        "source",
-        "b",
-        F.floor(
-            F.log(
-                (F.col("c_sb").cast("double") + 1.0)
-                / (F.col("c_s").cast("double") + float(_NB_B))
-            )
-            * F.lit(1048576.0)
-        )
-        .cast("bigint")
-        .alias("ll_fx"),
-    )
-    n_total = docs.agg(F.count("*").cast("double").alias("nt"))
-    priors = (
-        docs.groupBy("source")
-        .agg(F.count("*").cast("double").alias("nd"))
-        .crossJoin(F.broadcast(n_total))
-        .select(
-            F.col("source").alias("psource"),
-            F.floor(F.log(F.col("nd") / F.col("nt")) * F.lit(1048576.0))
-            .cast("bigint")
-            .alias("lp_fx"),
-        )
-    )
-    scores = (
-        db.join(F.broadcast(ll), "b")
-        .join(F.broadcast(priors), F.col("source") == F.col("psource"))
-        .groupBy("doc_id", "source")
-        .agg(
-            F.any_value("true_source").alias("true_source"),
-            (
-                F.sum(F.col("n_db") * F.col("ll_fx")).cast("bigint")
-                + F.any_value("lp_fx").cast("bigint")
-            ).alias("score"),
-        )
-    )
+    scores = _nb_scores(load(spark, sf_dir, "documents"))
     w = Window.partitionBy("doc_id").orderBy(
         F.col("score").desc(), F.col("source")
     )

@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 from burst_db_spark.catalog import load
 from burst_db_spark.registry import register
 from burst_db_spark.runner import persist, tmpdir
+from burst_db_spark.session import fan_out
 from burst_db_spark.streaming import drain, run_drain
 
 # ---------------------------------------------------------------------------
@@ -1306,16 +1307,11 @@ def f_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     one IEEE multiply + floor per row, bit-identical cross-engine, then
     an exact order-free integer sum."""
     li = load(spark, sf_dir, "lineitem")
-    # Optimization r14 (guide §2.2 — the doc_shingles fan-out device):
-    # the try_* gauntlet is per-row expression CPU (string build +
-    # try_cast per row) that otherwise runs inside the one-partition
-    # single-file scan task. Project the five needed columns, fan the
-    # narrow rows across cores, then evaluate; row-wise deterministic,
-    # so the aggregate is identical.
-    li = li.select(
+    # project the five needed columns before the fan-out
+    li = fan_out(li.select(
         "l_returnflag", "l_extendedprice", "l_linenumber", "l_orderkey",
         "l_quantity",
-    ).repartition(spark.sparkContext.defaultParallelism)
+    ))
     t = li.select(
         F.col("l_returnflag").alias("flag"),
         F.expr(
@@ -1664,20 +1660,15 @@ def knn_ivf_int8_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from burst_db_spark.operators.similarity import (
         assign_cells,
         int8_codes,
+        int8_rerank_topk,
         kmeans_codebook,
     )
 
     emb = load(spark, sf_dir, "embeddings")
     codebook = kmeans_codebook(emb, k=8, iters=2)
-    # Optimization r14 wave 12 (guide §2.2): the candidate side below is
-    # per-row CPU (8-centroid argmin + 64-dim quantization + the
-    # 8-probe int8 distance fold per pair) that otherwise runs inside
-    # the ONE-partition embeddings scan task. Fan the rows out AFTER
-    # training (the trainer's collect-based means stay byte-identical on
-    # the untouched scan) — assignment, codes and distances are row-wise
-    # deterministic, so the result is identical on any partitioning.
-    embf = emb.repartition(spark.sparkContext.defaultParallelism)
-    cells = assign_cells(embf, codebook)
+    # fan out AFTER training so the trainer's collect-based means stay
+    # byte-identical on the untouched scan
+    cells = assign_cells(fan_out(emb), codebook)
     codes = int8_codes(cells, _SQ_DIM).select("vec_id", "embedding", "cell", "code")
     q = (
         codes.where(
@@ -1690,49 +1681,6 @@ def knn_ivf_int8_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("cell", F.explode(F.sequence(F.lit(1), F.lit(8))))
     )
-    cand = (
-        codes.join(F.broadcast(q), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.aggregate(
-                F.zip_with("qcode", "code", lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).alias("dist2"),
-            "qv",
-            F.col("embedding").alias("cv"),
-        )
-    )
-    w_c = Window.partitionBy("query_id").orderBy("dist2", "neighbor_id")
-    topc = cand.withColumn("crank", F.row_number().over(w_c)).where(
-        F.col("crank") <= _FUN_TOPC
-    )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("qv").cast("array<double>"),
-            F.col("cv").cast("array<double>"),
-            lambda a, b: a * b,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nq = F.aggregate(
-        F.transform(F.col("qv").cast("array<double>"), lambda a: a * a),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nc = F.aggregate(
-        F.transform(F.col("cv").cast("array<double>"), lambda a: a * a),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = topc.withColumn("cos", dot / (F.sqrt(nq) * F.sqrt(nc)))
-    w_k = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w_k).cast("int"))
-        .where(F.col("rank") <= _FUN_TOPK)
-        .select("query_id", "neighbor_id", "rank", "cos")
-        .orderBy("query_id", "rank")
+    return int8_rerank_topk(
+        codes.join(F.broadcast(q), "cell"), _FUN_TOPC, _FUN_TOPK
     )

@@ -35,6 +35,7 @@ from burst_db_spark.catalog import load
 from burst_db_spark.operators import multipattern as mp
 from burst_db_spark.registry import register
 from burst_db_spark.runner import tmpdir
+from burst_db_spark.session import fan_out
 from burst_db_spark.streaming import run_drain
 
 # ---------------------------------------------------------------------------
@@ -749,15 +750,10 @@ def j17_bloom_prejoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(bloom_bit("k").alias("bit"))
         .distinct()
     )
-    # Optimization r14 (guide §2.2 — the doc_shingles fan-out device):
-    # 3 md5 probes per order row are per-row CPU inside the
-    # single-partition orders scan; fan the narrow projection out
-    # first. Row-wise deterministic bits → identical survivor set.
     probe = (
-        orders.select(
+        fan_out(orders.select(
             "o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
+        ))
         .withColumn("i", F.explode(seeds))
         .withColumn("bit", bloom_bit("o_custkey"))
     )
@@ -1031,8 +1027,7 @@ def contained_doc_ids(docs: DataFrame) -> DataFrame:
     # window instead of aggregate+join-back (one exchange on g, not two,
     # and it is the exact hashpartitioning(g) the candidate join below
     # reuses via ReusedExchange). Candidate set is unchanged.
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
-    grams = longs.repartition(n_parts).select(
+    grams = fan_out(longs).select(
         "doc_id",
         "len",
         F.explode(

@@ -44,6 +44,7 @@ from burst_db_spark.queries.round4 import _minhash_pair_ctes
 from burst_db_spark.queries.textops import _SHINGLES_CTE, _TOKS
 from burst_db_spark.registry import register
 from burst_db_spark.runner import persist, tmpdir
+from burst_db_spark.session import fan_out
 from burst_db_spark.streaming import drain
 
 # ---------------------------------------------------------------------------
@@ -1320,12 +1321,9 @@ def dd_embedding_nn_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
     100x."""
     from burst_db_spark.operators import similarity as sim_ops
 
-    emb = load(spark, sf_dir, "embeddings")
-    n_parts = spark.sparkContext.defaultParallelism
+    emb = fan_out(load(spark, sf_dir, "embeddings"))
     return (
-        sim_ops.lsh_near_dup_pairs_multiprobe(
-            emb.repartition(n_parts), max_probe_bits=3
-        )
+        sim_ops.lsh_near_dup_pairs_multiprobe(emb, max_probe_bits=3)
         .orderBy("id_a", "id_b")
     )
 

@@ -13,22 +13,11 @@ from pyspark.sql import functions as F
 
 from burst_db_spark.catalog import load
 from burst_db_spark.operators import similarity as sim
+from burst_db_spark.queries.extra5 import _cos_sql
 from burst_db_spark.registry import register
 
 N_QUERIES = 10
 TOP_K = 3
-
-_DOT = (
-    "list_reduce(list_transform(range(1, len({a}) + 1), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
-)
-
-
-def _cos_sql(a: str, b: str) -> str:
-    dot = _DOT.format(a=a, b=b)
-    na = _DOT.format(a=a, b=a)
-    nb = _DOT.format(a=b, b=b)
-    return f"{dot} / (sqrt({na}) * sqrt({nb}))"
 
 
 @register(

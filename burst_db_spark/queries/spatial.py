@@ -21,6 +21,7 @@ from burst_db_spark.geo.udfs import (
     union_collect_agg,
 )
 from burst_db_spark.registry import register
+from burst_db_spark.session import fan_out
 
 # rectangle derivations (identical arithmetic in the oracles)
 _PART_BOX = """
@@ -132,11 +133,8 @@ def j7_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sxmin"), F.col("symin"), F.col("sxmax"), F.col("symax")
         ),
     )
-    # spread the fact side: a single-file scan would run the explode +
-    # python refine in one task
-    pboxes = _part_boxes(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # spread the fact side (the explode + python refine)
+    pboxes = fan_out(_part_boxes(spark, sf_dir))
     # cell ~= the larger (supplier) box: explode factor stays ~4/row
     pairs = grid_bbox_join(
         pboxes,

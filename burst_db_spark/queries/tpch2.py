@@ -35,26 +35,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from burst_db_spark.catalog import load
+from burst_db_spark.queries.round4 import _REV_SQL, _rev_spark
 from burst_db_spark.registry import register
 
 # decimal-exact money fold (suite-wide convention) -------------------------
-
-_REV_SQL = (
-    "CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) "
-    "AS DECIMAL(18, 6))) AS DECIMAL(28, 6)) AS DOUBLE)"
-)
-
-
-def _rev_spark() -> F.Column:
-    return (
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                "decimal(18,6)"
-            )
-        )
-        .cast("decimal(28,6)")
-        .cast("double")
-    )
 
 
 def _dec_sum_sql(expr: str) -> str:

@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -22,8 +24,14 @@ def get_spark(
     """Build (or fetch) the tuned SparkSession.
 
     UTC session timezone is required for oracle parity: parquet timestamps
-    are naive and DuckDB treats them as UTC-naive.
+    are naive and DuckDB treats them as UTC-naive. The package root goes
+    first on ``PYTHONPATH`` before the JVM starts, so Spark's Python
+    workers import the same ``burst_db_spark`` as the driver from any
+    working directory.
     """
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [_ROOT] + [p for p in paths if p and p != _ROOT])
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
@@ -48,3 +56,21 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def parallelism(spark: SparkSession) -> int:
+    """The number of tasks a CPU-dense stage fans out to: the cluster's
+    default parallelism (the core count in local mode)."""
+    return spark.sparkContext.defaultParallelism
+
+
+def fan_out(df: DataFrame, *cols) -> DataFrame:
+    """``df`` hash- (or round-robin-, with no ``cols``) repartitioned
+    into :func:`parallelism` partitions.
+
+    A single-file scan is one partition, so a CPU-dense row-wise stage
+    over it (tokenize, hash, explode, distance folds, Python kernels)
+    would run in one task. Row-wise stages give identical results on any
+    partitioning, so spreading the rows first changes only the wall time.
+    """
+    return df.repartition(parallelism(df.sparkSession), *cols)

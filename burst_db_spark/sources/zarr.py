@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from burst_db_spark.session import parallelism
+
 try:  # optional; not in the base image
     import zstandard as _zstd  # type: ignore
 except Exception:  # pragma: no cover - absence is the normal case
@@ -138,7 +140,7 @@ def read_zarr_array(
     keys = [list(t) for t in itertools.product(*grid)]
     cdf = spark.createDataFrame(
         [(k,) for k in keys], "chunk array<int>"
-    ).repartition(min(len(keys), spark.sparkContext.defaultParallelism * 2))
+    ).repartition(min(len(keys), parallelism(spark) * 2))
 
     def decode(batches):
         np_dtype = dtype.newbyteorder("=")
@@ -380,5 +382,5 @@ def chunk_repartitioned(
             for i, d in enumerate(dims)
         ]
     )
-    n = n_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = n_partitions or parallelism(df.sparkSession)
     return df.repartition(n, key)

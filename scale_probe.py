@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from burst_db_spark.catalog import TABLES, load
 from burst_db_spark.registry import all_queries
 from burst_db_spark.runner import noop_write, run, scope
-from burst_db_spark.session import get_spark
+from burst_db_spark.session import fan_out, get_spark, parallelism
 
 PROBE_QUERIES = [
     "q1_pricing_summary",
@@ -336,8 +336,7 @@ def winnow_cd_probe(spark, factor: int) -> dict[str, float]:
         corpus = _cd_corpus(spark, f)
         t0 = time.perf_counter()
         winnow_overlap_pairs(
-            corpus, "doc_id", min_shared=10, max_df=50,
-            spread_small_input=True,
+            fan_out(corpus, "doc_id"), "doc_id", min_shared=10, max_df=50
         ).write.format("noop").mode("overwrite").save()
         out[f"dd_winnow_overlap_cd{label}"] = round(time.perf_counter() - t0, 2)
         spark.catalog.clearCache()
@@ -367,8 +366,7 @@ def winnow_clusters_cd_probe(spark, factor: int) -> dict[str, float]:
         # the probe corpus has ZERO pairs and the CC stage under test
         # never runs. 2 restores realistic pair density (481 pairs at 1x).
         pairs = winnow_overlap_pairs(
-            corpus, "doc_id", min_shared=2, max_df=50,
-            spread_small_input=True,
+            fan_out(corpus, "doc_id"), "doc_id", min_shared=2, max_df=50
         ).select("id_a", "id_b").persist()
         n_edges = pairs.count()
         connected_components(pairs, corpus, "doc_id").write.format(
@@ -506,9 +504,8 @@ def embedding_cd_rung(
         lsh_params_for,
     )
 
-    n_parts = spark.sparkContext.defaultParallelism
     n_base = load(spark, "/root/testdata/sf0.1", "embeddings").count()
-    c = _cd_embeddings(spark, f).repartition(n_parts * max(1, f // 4))
+    c = _cd_embeddings(spark, f).repartition(parallelism(spark) * max(1, f // 4))
     n_planes, r = lsh_params_for(n_base * f)
     out: dict[str, float] = {}
     if which in ("both", "nn"):
@@ -586,11 +583,10 @@ def embedding_inc_cd_probe(spark, factor: int) -> dict[str, float]:
         lsh_params_for,
     )
 
-    n_parts = spark.sparkContext.defaultParallelism
     n_base = load(spark, "/root/testdata/sf0.1", "embeddings").count()
     out: dict[str, float] = {}
     for label, f in (("", 1), ("_big", factor)):
-        c = _cd_embeddings(spark, f).repartition(n_parts * max(1, f // 4))
+        c = _cd_embeddings(spark, f).repartition(parallelism(spark) * max(1, f // 4))
         n_planes, r = lsh_params_for(n_base * f)
         t0 = time.perf_counter()
         lsh_near_dup_incremental(

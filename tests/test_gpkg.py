@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import os
 import sqlite3
-import tempfile
 
 from burst_db_spark.sources.gpkg import (
     gpkg_blob,
@@ -50,8 +49,8 @@ class TestContainer:
         write_gpkg(df, path, "shapes", properties=["gid"])
         return path
 
-    def test_conformance_pragmas_and_tables(self, spark):
-        path = self._write(spark, tempfile.mkdtemp())
+    def test_conformance_pragmas_and_tables(self, spark, tmp_path):
+        path = self._write(spark, str(tmp_path))
         con = sqlite3.connect(path)
         assert con.execute("PRAGMA application_id").fetchone()[0] == 0x47504B47
         tables = {
@@ -77,7 +76,7 @@ class TestContainer:
         ).fetchone()
         con.close()
 
-    def test_read_back(self, spark):
-        path = self._write(spark, tempfile.mkdtemp())
+    def test_read_back(self, spark, tmp_path):
+        path = self._write(spark, str(tmp_path))
         got = {r["gid"]: r["geom_wkt"] for r in read_gpkg(spark, path, "shapes").collect()}
         assert got == {"1": RECT, "2": MULTI, "3": HOLED}

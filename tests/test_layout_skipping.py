@@ -17,7 +17,6 @@ from __future__ import annotations
 import contextlib
 import io
 import os
-import tempfile
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -42,11 +41,11 @@ def _candidate_row_groups(path: str, col: str, lo: float, hi: float) -> tuple[in
     return inter, total
 
 
-def test_sorted_layout_enables_row_group_skipping(spark):
+def test_sorted_layout_enables_row_group_skipping(spark, tmp_path):
     li = load(spark, SF_DIR, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_quantity"
     )
-    base = tempfile.mkdtemp(prefix="bds_layout_")
+    base = str(tmp_path)
     sorted_path = os.path.join(base, "sorted")
     shuffled_path = os.path.join(base, "shuffled")
     # small row groups so even sf0.001 yields several per file
@@ -168,7 +167,7 @@ def test_curve_sorted_write_prunes_row_groups_both_curves(spark, tmp_path):
     assert res["hilbert"][0] <= max(1, res["morton"][0] // 2 + 1), res
 
 
-def test_zorder_range_decomposition_prunes_and_covers(spark):
+def test_zorder_range_decomposition_prunes_and_covers(spark, tmp_path):
     """o9's query contract end-to-end: (1) morton_ranges is EXACT before
     budget-merging and a superset after (exhaustively, small grid);
     (2) on the z-clustered layout the pushed z-ranges intersect
@@ -214,7 +213,7 @@ def test_zorder_range_decomposition_prunes_and_covers(spark):
     pts = part.select(
         "p_partkey", (hx % grid).alias("qx"), (hy % grid).alias("qy")
     ).withColumn("z", morton_code(F.col("qx"), F.col("qy"), bits))
-    base = tempfile.mkdtemp(prefix="bds_o9_")
+    base = str(tmp_path / "o9")
     (
         pts.repartitionByRange(4, "z")
         .sortWithinPartitions("z")

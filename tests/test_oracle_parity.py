@@ -11,6 +11,7 @@ import math
 import pytest
 
 from burst_db_spark.registry import all_queries
+from burst_db_spark.runner import scope
 from tests.conftest import SF_DIR
 
 SPECS = all_queries()
@@ -48,9 +49,10 @@ def _approx_equal(a, b) -> bool:
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_query_matches_oracle(name, spark, ddb):
     spec = SPECS[name]
-    sdf = spec.build(spark, SF_DIR)
-    spark_cols = [c.lower() for c in sdf.columns]
-    spark_rows = [tuple(r) for r in sdf.collect()]
+    with scope():
+        sdf = spec.build(spark, SF_DIR)
+        spark_cols = [c.lower() for c in sdf.columns]
+        spark_rows = [tuple(r) for r in sdf.collect()]
 
     if spec.oracle is None:
         assert len(spark_rows) >= 0  # rows-only smoke

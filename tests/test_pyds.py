@@ -5,7 +5,6 @@ per chunk, and return exactly what the mapInPandas reader returns."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,8 +16,8 @@ from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
-def cube_store(spark):
-    store = os.path.join(tempfile.mkdtemp(prefix="pyds_"), "cube")
+def cube_store(spark, tmp_path_factory):
+    store = str(tmp_path_factory.mktemp("pyds") / "cube")
     li = load(spark, SF_DIR, "lineitem")
     cells = (
         li.select(

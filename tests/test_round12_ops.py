@@ -265,11 +265,13 @@ def test_scene_cuts_counts_against_generator(spark):
     """n_cuts / distances re-derived from the video fixture's generator
     formula in plain Python must match the decoded Spark result."""
     from burst_db_spark.registry import all_queries
+    from burst_db_spark.runner import scope
 
-    rows = {
-        r["video_id"]: r
-        for r in all_queries()["mm_scene_cuts"].build(spark, SF_DIR).collect()
-    }
+    with scope():
+        rows = {
+            r["video_id"]: r
+            for r in all_queries()["mm_scene_cuts"].build(spark, SF_DIR).collect()
+        }
     assert rows
     events = load(spark, SF_DIR, "events")
     nf_by_vid = {

@@ -16,16 +16,16 @@ from pyspark.sql import functions as F
 from burst_db_spark.catalog import load
 from burst_db_spark.operators import dedup as dd
 from burst_db_spark.registry import all_queries
+from burst_db_spark.runner import scope
 from tests.conftest import SF_DIR
 
 SPECS = all_queries()
 
 
 def _plan(name: str, spark) -> str:
-    df = SPECS[name].build(spark, SF_DIR)
     buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
+    with scope(), contextlib.redirect_stdout(buf):
+        SPECS[name].build(spark, SF_DIR).explain("formatted")
     return buf.getvalue()
 
 

@@ -183,3 +183,25 @@ def test_persists_and_staging_go_through_runner():
         if handle.search(line)
     ]
     assert not bad, bad
+
+
+def test_partition_counts_go_through_session():
+    """The fan-out partition count is read in one place
+    (``session.parallelism``), and no operator takes a per-call opt-in
+    to spread its input."""
+    bad = [
+        f"{p.relative_to(ROOT)}:{i}"
+        for p in _py_files("burst_db_spark", "scale_probe.py")
+        if p.relative_to(ROOT).as_posix() != "burst_db_spark/session.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "defaultParallelism" in line
+    ]
+    opt_in = "spread_" + "small_input"  # spelled apart so this file passes
+    bad += [
+        f"{p.relative_to(ROOT)}:{i}"
+        for p in sorted(ROOT.rglob("*.py"))
+        if ".git" not in p.parts
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if opt_in in line
+    ]
+    assert not bad, bad

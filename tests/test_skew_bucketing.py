@@ -5,12 +5,14 @@ from __future__ import annotations
 
 import io
 import contextlib
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from burst_db_spark.catalog import load
 from burst_db_spark.operators import skew
+from burst_db_spark.sinks import write_bucketed
 from tests.conftest import SF_DIR
 
 
@@ -40,17 +42,16 @@ def test_salted_count_matches_plain(spark):
     assert plain == salted
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
+def test_bucketed_join_has_no_exchange(spark):
+    li_b, ord_b = (f"{t}_{uuid.uuid4().hex[:8]}" for t in ("li_b", "ord_b"))
     li = load(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
     orders = load(spark, SF_DIR, "orders").select("o_orderkey", "o_totalprice")
-    skew.write_bucketed(
-        li, "li_b", "l_orderkey", n_buckets=4, path=str(tmp_path / "li_b")
+    write_bucketed(li, li_b, "l_orderkey", 4, sort_col="l_orderkey")
+    write_bucketed(
+        orders.withColumnRenamed("o_orderkey", "l_orderkey"), ord_b,
+        "l_orderkey", 4, sort_col="l_orderkey",
     )
-    skew.write_bucketed(
-        orders.withColumnRenamed("o_orderkey", "l_orderkey"), "ord_b",
-        "l_orderkey", n_buckets=4, path=str(tmp_path / "ord_b"),
-    )
-    joined = spark.table("li_b").join(spark.table("ord_b"), "l_orderkey")
+    joined = spark.table(li_b).join(spark.table(ord_b), "l_orderkey")
     # disable broadcast so the join strategy decision is about shuffles
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -62,8 +63,8 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         assert joined.count() == load(spark, SF_DIR, "lineitem").count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS li_b")
-        spark.sql("DROP TABLE IF EXISTS ord_b")
+        spark.sql(f"DROP TABLE IF EXISTS {li_b}")
+        spark.sql(f"DROP TABLE IF EXISTS {ord_b}")
 
 
 def test_kmeans_codebook_invariants(spark):

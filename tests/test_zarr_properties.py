@@ -27,12 +27,14 @@ _codec = st.sampled_from([None, {"id": "zlib", "level": 1}, {"id": "gzip"}])
 def test_zarr_roundtrip_any_shape(spark, shape, chunk, comp, data):
     rng = np.random.RandomState(data.randint(0, 2**31))
     arr = rng.randint(-1000, 1000, size=shape).astype("<i8")
-    store = os.path.join(tempfile.mkdtemp(prefix="bds_zarr_prop_"), "a")
-    write_zarr_array(store, arr, chunks=chunk, compressor=comp)
-    got = {
-        (r["i0"], r["i1"], r["i2"]): r["value"]
-        for r in read_zarr_array(spark, store).collect()
-    }
+    # @given rejects function-scoped fixtures such as tmp_path
+    with tempfile.TemporaryDirectory(prefix="bds_zarr_prop_") as tmp:
+        store = os.path.join(tmp, "a")
+        write_zarr_array(store, arr, chunks=chunk, compressor=comp)
+        got = {
+            (r["i0"], r["i1"], r["i2"]): r["value"]
+            for r in read_zarr_array(spark, store).collect()
+        }
     assert len(got) == arr.size
     it = np.nditer(arr, flags=["multi_index"])
     for v in it:
