@@ -158,6 +158,92 @@ def ngram_jaccard_pairs(
     return out
 
 
+def prefix_doc_sets(
+    df: DataFrame,
+    id_col: str,
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """The persisted doc frame the prefix-filtered joins
+    (:func:`jaccard_prefix_pairs`, :func:`jaccard_ppjoin_pairs`,
+    :func:`containment_prefix_pairs`) join on: ``(id_col, n_sh, toks,
+    prefix)`` with each doc's distinct shingles in global rarity order
+    (ascending document frequency, ties broken by the shingle string so
+    every engine and executor agrees on one total order) and its prefix
+    of ``n_sh - ceil(threshold * n_sh) + 1`` shingles.
+
+    Document frequency comes from a count window: one shuffle on
+    shingle, which beats aggregate + join-back (two shuffles). The frame
+    is persisted: three or four plan subtrees hang off it (the prefix
+    explodes and the verify sides), and in a cold session ReusedExchange
+    does NOT reliably dedupe them across the AQE stage boundaries
+    (measured: 2.9 s with persist vs 5.1 s without in bench context at
+    sf0.1). Doc-count-sized metadata rows."""
+    from pyspark.sql import Window
+
+    sh = doc_shingles(df, id_col, text_col, n)
+    w = Window.partitionBy("shingle")
+    ranked = sh.withColumn("__df", F.count("*").over(w))
+    return persist(
+        ranked.groupBy(id_col)
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("__df"), F.col("shingle")))
+            ).alias("__ordered"),
+            F.count("*").alias("n_sh"),
+        )
+        .select(
+            F.col(id_col),
+            F.col("n_sh"),
+            F.transform("__ordered", lambda s: s["shingle"]).alias("toks"),
+        )
+        .withColumn(
+            "prefix",
+            F.slice(
+                "toks",
+                1,
+                (
+                    F.col("n_sh")
+                    - F.ceil(F.lit(threshold) * F.col("n_sh")).cast("int")
+                    + 1
+                ),
+            ),
+        )
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame, docs: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Exact Jaccard of each candidate ``(id_a, id_b)`` from the full
+    sorted sets in ``docs`` (a :func:`prefix_doc_sets` frame): two
+    id-equi-joins and an ``array_intersect``, pairs kept at ``>=
+    threshold``."""
+    fa = docs.select(
+        F.col(id_col).alias("id_a"),
+        F.col("n_sh").alias("n_a"),
+        F.col("toks").alias("toks_a"),
+    )
+    fb = docs.select(
+        F.col(id_col).alias("id_b"),
+        F.col("n_sh").alias("n_b"),
+        F.col("toks").alias("toks_b"),
+    )
+    common = F.size(F.array_intersect("toks_a", "toks_b")).cast("bigint")
+    return (
+        cand.join(fa, "id_a")
+        .join(fb, "id_b")
+        .withColumn("common", common)
+        .withColumn(
+            "jaccard",
+            F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "common", "n_a", "n_b", "jaccard")
+    )
+
+
 def jaccard_prefix_pairs(
     df: DataFrame,
     id_col: str,
@@ -187,46 +273,7 @@ def jaccard_prefix_pairs(
     cross join; candidate volume is bounded by prefix-token bucket
     occupancy, not vocabulary df.
     """
-    from pyspark.sql import Window
-
-    sh = doc_shingles(df, id_col, text_col, n)
-    # document frequency via a count window: one shuffle on shingle,
-    # reused immediately by nothing downstream (arrays group by doc) —
-    # but it beats aggregate+join-back (two shuffles) for the dim pass.
-    w = Window.partitionBy("shingle")
-    ranked = sh.withColumn("__df", F.count("*").over(w))
-    docs = (
-        ranked.groupBy(id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("__df"), F.col("shingle")))
-            ).alias("__ordered"),
-            F.count("*").alias("n_sh"),
-        )
-        .select(
-            F.col(id_col),
-            F.col("n_sh"),
-            F.transform("__ordered", lambda s: s["shingle"]).alias("toks"),
-        )
-        .withColumn(
-            "prefix",
-            F.slice(
-                "toks",
-                1,
-                (
-                    F.col("n_sh")
-                    - F.ceil(F.lit(threshold) * F.col("n_sh")).cast("int")
-                    + 1
-                ),
-            ),
-        )
-    )
-    # persisted: four plan subtrees hang off `docs` (two prefix explodes
-    # + two verify sides) and in a cold session ReusedExchange does NOT
-    # reliably dedupe them across the AQE stage boundaries (measured:
-    # 2.9 s with persist vs 5.1 s without in bench context at sf0.1).
-    # Doc-count-sized metadata rows.
-    docs = persist(docs)
+    docs = prefix_doc_sets(df, id_col, text_col, n, threshold)
     a = docs.select(
         F.col(id_col).alias("id_a"),
         F.col("n_sh").alias("__na"),
@@ -250,28 +297,7 @@ def jaccard_prefix_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    fa = docs.select(
-        F.col(id_col).alias("id_a"),
-        F.col("n_sh").alias("n_a"),
-        F.col("toks").alias("toks_a"),
-    )
-    fb = docs.select(
-        F.col(id_col).alias("id_b"),
-        F.col("n_sh").alias("n_b"),
-        F.col("toks").alias("toks_b"),
-    )
-    common = F.size(F.array_intersect("toks_a", "toks_b")).cast("bigint")
-    return (
-        cand.join(fa, "id_a")
-        .join(fb, "id_b")
-        .withColumn("common", common)
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "common", "n_a", "n_b", "jaccard")
-    )
+    return _jaccard_verify(cand, docs, id_col, threshold)
 
 
 def jaccard_ppjoin_pairs(
@@ -301,38 +327,7 @@ def jaccard_ppjoin_pairs(
     the candidate pair — which REPLACES the prefix join's distinct(), so
     the positional filter costs no extra shuffle.
     """
-    from pyspark.sql import Window
-
-    sh = doc_shingles(df, id_col, text_col, n)
-    w = Window.partitionBy("shingle")
-    ranked = sh.withColumn("__df", F.count("*").over(w))
-    docs = (
-        ranked.groupBy(id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("__df"), F.col("shingle")))
-            ).alias("__ordered"),
-            F.count("*").alias("n_sh"),
-        )
-        .select(
-            F.col(id_col),
-            F.col("n_sh"),
-            F.transform("__ordered", lambda s: s["shingle"]).alias("toks"),
-        )
-        .withColumn(
-            "prefix",
-            F.slice(
-                "toks",
-                1,
-                (
-                    F.col("n_sh")
-                    - F.ceil(F.lit(threshold) * F.col("n_sh")).cast("int")
-                    + 1
-                ),
-            ),
-        )
-    )
-    docs = persist(docs)  # same cache policy as jaccard_prefix_pairs
+    docs = prefix_doc_sets(df, id_col, text_col, n, threshold)
     a = docs.select(
         F.col(id_col).alias("id_a"),
         F.col("n_sh").alias("__na"),
@@ -378,28 +373,7 @@ def jaccard_ppjoin_pairs(
         )
         .select("id_a", "id_b")
     )
-    fa = docs.select(
-        F.col(id_col).alias("id_a"),
-        F.col("n_sh").alias("n_a"),
-        F.col("toks").alias("toks_a"),
-    )
-    fb = docs.select(
-        F.col(id_col).alias("id_b"),
-        F.col("n_sh").alias("n_b"),
-        F.col("toks").alias("toks_b"),
-    )
-    common = F.size(F.array_intersect("toks_a", "toks_b")).cast("bigint")
-    return (
-        cand.join(fa, "id_a")
-        .join(fb, "id_b")
-        .withColumn("common", common)
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "common", "n_a", "n_b", "jaccard")
-    )
+    return _jaccard_verify(cand, docs, id_col, threshold)
 
 
 def minhash_signatures(
@@ -707,49 +681,6 @@ def minhash_incremental_manifest(
     )
 
 
-def containment_doc_sets(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.6,
-) -> DataFrame:
-    """The persisted doc frame :func:`containment_prefix_pairs` joins on:
-    ``(id_col, n_sh, toks, prefix)`` with each doc's distinct shingles in
-    global rarity order and its containment prefix at ``threshold``."""
-    from pyspark.sql import Window
-
-    sh = doc_shingles(df, id_col, text_col, n)
-    w = Window.partitionBy("shingle")
-    ranked = sh.withColumn("__df", F.count("*").over(w))
-    return persist(
-        ranked.groupBy(id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("__df"), F.col("shingle")))
-            ).alias("__ordered"),
-            F.count("*").alias("n_sh"),
-        )
-        .select(
-            F.col(id_col),
-            F.col("n_sh"),
-            F.transform("__ordered", lambda s: s["shingle"]).alias("toks"),
-        )
-        .withColumn(
-            "prefix",
-            F.slice(
-                "toks",
-                1,
-                (
-                    F.col("n_sh")
-                    - F.ceil(F.lit(threshold) * F.col("n_sh")).cast("int")
-                    + 1
-                ),
-            ),
-        )
-    )
-
-
 def containment_prefix_pairs(
     df: DataFrame,
     id_col: str,
@@ -778,12 +709,12 @@ def containment_prefix_pairs(
     document frequency, one doc shuffle for the ordered arrays, the
     candidate equi-join, two id-joins for the verify. The doc frame is
     persisted (three subtrees hang off it); pass ``doc_sets`` (a
-    :func:`containment_doc_sets` frame at the same ``threshold``) to
+    :func:`prefix_doc_sets` frame at the same ``threshold``) to
     share it with other consumers.
     """
     docs = doc_sets
     if docs is None:
-        docs = containment_doc_sets(df, id_col, text_col, n, threshold)
+        docs = prefix_doc_sets(df, id_col, text_col, n, threshold)
     a = docs.select(
         F.col(id_col).alias("id_a"),
         F.col("n_sh").alias("__na"),

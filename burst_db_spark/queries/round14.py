@@ -855,7 +855,7 @@ def dd_cluster_bcubed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             return dd.connected_components(
                 lsh_pairs.select("id_a", "id_b"), docs, "doc_id"
-            ).select("doc_id", F.col("cluster_id").alias("pred_id"))
+            )
 
     def _gold() -> DataFrame:
         with scope():
@@ -864,23 +864,37 @@ def dd_cluster_bcubed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             return dd.connected_components(
                 gold_pairs.select("id_a", "id_b"), docs, "doc_id"
-            ).select("doc_id", F.col("cluster_id").alias("gold_id"))
+            )
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         fp = pool.submit(copy_context().run, _pred)
         fg = pool.submit(copy_context().run, _gold)
-        pred, gold = fp.result(), fg.result()
+        pred_cc, gold_cc = fp.result(), fg.result()
     sh.unpersist()
-    j = pred.join(gold, "doc_id")
-    cells = j.groupBy("pred_id", "gold_id").agg(
+    pred = pred_cc.select("doc_id", F.col("cluster_id").alias("pred_id"))
+    gold = gold_cc.select("doc_id", F.col("cluster_id").alias("gold_id"))
+    cells = pred.join(gold, "doc_id").groupBy("pred_id", "gold_id").agg(
         F.count("*").cast("bigint").alias("cnt")
     )
-    sp = cells.groupBy("pred_id").agg(F.sum("cnt").alias("size_p"))
-    sg = cells.groupBy("gold_id").agg(F.sum("cnt").alias("size_g"))
+    # each label's cluster is counted once, on its cell with the smallest
+    # other label (every doc has both labels, so the sums equal the
+    # distinct label counts). Two countDistincts would share one Expand
+    # whose projection order Spark takes from a hash of their expression
+    # ids, which vary with the AQE replanning inside the pool threads, so
+    # that plan flipped between runs of the same tree.
+    sp = cells.groupBy("pred_id").agg(
+        F.sum("cnt").alias("size_p"), F.min("gold_id").alias("first_gold")
+    )
+    sg = cells.groupBy("gold_id").agg(
+        F.sum("cnt").alias("size_g"), F.min("pred_id").alias("first_pred")
+    )
     terms = (
         cells.join(sp, "pred_id")
         .join(sg, "gold_id")
         .select(
+            "cnt",
+            (F.col("gold_id") == F.col("first_gold")).cast("int").alias("new_p"),
+            (F.col("pred_id") == F.col("first_pred")).cast("int").alias("new_g"),
             F.expr(
                 "(cnt * cnt * CAST(1073741824 AS BIGINT)) div size_p"
             ).alias("p_fx"),
@@ -889,16 +903,13 @@ def dd_cluster_bcubed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("r_fx"),
         )
     )
-    tot = j.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.countDistinct("pred_id").cast("bigint").alias("n_pred_clusters"),
-        F.countDistinct("gold_id").cast("bigint").alias("n_gold_clusters"),
-    )
-    sums = terms.agg(
+    out = terms.agg(
+        F.sum("cnt").cast("bigint").alias("n_docs"),
+        F.sum("new_p").cast("bigint").alias("n_pred_clusters"),
+        F.sum("new_g").cast("bigint").alias("n_gold_clusters"),
         F.sum("p_fx").cast("bigint").alias("ps"),
         F.sum("r_fx").cast("bigint").alias("rs"),
     )
-    out = tot.join(sums)
     return out.select(
         "n_docs",
         "n_pred_clusters",

@@ -801,8 +801,8 @@ def t_containment_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks MEMBERSHIP, not just counts). One candidate equi-join + one
     anti-join over the corpus — the shape that survives 100 TB."""
     from burst_db_spark.operators.dedup import (
-        containment_doc_sets,
         containment_prefix_pairs,
+        prefix_doc_sets,
     )
 
     docs = load(spark, sf_dir, "documents")
@@ -810,7 +810,7 @@ def t_containment_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recomputed with a FULL tokenize+shingle+groupBy pass; the operator's
     # persisted doc frame already carries n_sh = count of each doc's
     # distinct shingles — the identical integer the extra pass produced.
-    sets = containment_doc_sets(docs, "doc_id", threshold=_CONT_T10 / 10)
+    sets = prefix_doc_sets(docs, "doc_id", threshold=_CONT_T10 / 10)
     pairs = containment_prefix_pairs(
         docs, "doc_id", threshold=_CONT_T10 / 10, doc_sets=sets
     )

@@ -5,6 +5,10 @@ headline operators scale vs sf0.1. Linear-ish ratios (≈10x work in ≈10x
 time or less on fixed cores) are the evidence that the plans hold at
 scale; superlinear blowups flag quadratic candidates.
 
+Every rung is timed by ``runner.run``: the operator's build (with its
+eager actions) and the action in one bracket, and whatever the build
+persisted or staged is released after the timer stops.
+
 Usage: python scale_probe.py [replication_factor]
 Writes one JSON line: {"sf0.1_sec": {...}, "sf1_sec": {...}, "ratio": {...}}
 """
@@ -13,19 +17,20 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
-import time
+from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from burst_db_spark.catalog import TABLES, load
-from burst_db_spark.registry import all_queries
-from burst_db_spark.runner import noop_write, run, scope
+from burst_db_spark.registry import QuerySpec, all_queries
+from burst_db_spark.runner import noop_write, persist, run, scope, tmpdir
 from burst_db_spark.session import fan_out, get_spark, parallelism
+
+SF_BASE = "/root/testdata/sf0.1"
 
 PROBE_QUERIES = [
     "q1_pricing_summary",
@@ -152,24 +157,23 @@ KEY_SHIFTS = {
 SHIFT = 10_000_000
 
 
+def _replicas(n: int, rep) -> DataFrame:
+    """``rep(0) ∪ … ∪ rep(n - 1)``, unioned by column name."""
+    return reduce(DataFrame.unionByName, map(rep, range(n)))
+
+
 def replicate(spark, src_dir: str, out_dir: str, factor: int) -> None:
     for t in TABLES:
         df = load(spark, src_dir, t)
         if not KEY_SHIFTS.get(t):
             df.write.mode("overwrite").parquet(f"{out_dir}/{t}.parquet")
             continue
-        reps = []
-        for r in range(factor):
-            cur = df
-            for k in KEY_SHIFTS[t]:
-                cur = cur.withColumn(k, F.col(k) + F.lit(r * SHIFT))
-            reps.append(cur)
-        out = reps[0]
-        for cur in reps[1:]:
-            out = out.unionByName(cur)
-        out.repartition(32).write.mode("overwrite").parquet(
-            f"{out_dir}/{t}.parquet"
-        )
+        _replicas(
+            factor,
+            lambda r: df.withColumns(
+                {k: F.col(k) + F.lit(r * SHIFT) for k in KEY_SHIFTS[t]}
+            ),
+        ).repartition(32).write.mode("overwrite").parquet(f"{out_dir}/{t}.parquet")
 
 
 def time_queries(spark, specs, sf_dir: str) -> dict[str, float]:
@@ -179,6 +183,38 @@ def time_queries(spark, specs, sf_dir: str) -> dict[str, float]:
         name: round(run(specs[name], spark, sf_dir, noop_write)[2], 2)
         for name in PROBE_QUERIES
     }
+
+
+def _timed(spark, key: str, build, act=noop_write):
+    """Time ``build()`` and ``act`` on what it returns through
+    ``runner.run``, as the query ``key`` (its job group). Returns
+    ``(seconds, act's result)``; what the build persisted or staged is
+    released after the timer stops."""
+    spec = QuerySpec(key, lambda spark, sf_dir: build(), None)
+    result, _, total_s = run(spec, spark, None, act)
+    return round(total_s, 2), result
+
+
+def _ladder(factor: int, rung) -> dict:
+    """``rung(1)`` and ``rung(factor)``, each a ``{key: value}`` dict, in
+    one dict: the big rung's keys get the suffix ``_big``."""
+    return {
+        f"{k}{label}": v
+        for label, f in (("", 1), ("_big", factor))
+        for k, v in rung(f).items()
+    }
+
+
+def split_ladder(cd: dict) -> tuple[dict, dict, dict]:
+    """``(small, large, ratio)`` of a ladder: every key without the
+    ``_big`` suffix is small; a small key ``k`` whose ``k_big`` is there
+    gets ``large[k]`` and ``ratio[k]`` (None when the small value is 0)."""
+    small = {k: v for k, v in cd.items() if not k.endswith("_big")}
+    large = {k: cd[f"{k}_big"] for k in small if f"{k}_big" in cd}
+    ratio = {
+        k: round(large[k] / small[k], 1) if small[k] else None for k in large
+    }
+    return small, large, ratio
 
 
 def _synth_boxes(spark, n: int, side: int, seed_mult: int, wmax: int, hmax: int,
@@ -227,55 +263,43 @@ def spatial_cd_probe(spark, n_small: int, factor: int) -> dict[str, float]:
     candidate generation is bucket-local, not O(N·M)."""
     from burst_db_spark.operators.spatial_join import grid_bbox_join, grid_nn_join
 
-    out: dict[str, float] = {}
-    for label, n in (("", n_small), ("_big", n_small * factor)):
+    def rung(f):
+        n = n_small * f
         # ~72 units² per left box keeps r2's sf0.1 density
         side = max(32, int((n * 72) ** 0.5))
         left = _synth_boxes(spark, n, side, 2654435761 % side or 7, 5, 4, "l")
         right = _synth_boxes(spark, max(n // 10, 1), side, 40503, 20, 15, "r")
-        t0 = time.perf_counter()
-        grid_bbox_join(
-            left, right, ("lxmin", "lymin", "lxmax", "lymax"),
-            ("rxmin", "rymin", "rxmax", "rymax"), cell_size=32.0,
-        ).write.format("noop").mode("overwrite").save()
-        out[f"j7_grid_cd{label}"] = round(time.perf_counter() - t0, 2)
-
         probes = left.select(
             "lid", F.col("lxmin").alias("px"), F.col("lymin").alias("py")
         )
         points = right.select(
             "rid", F.col("rxmin").alias("sx"), F.col("rymin").alias("sy")
         )
-        with scope():
-            t0 = time.perf_counter()
-            noop_write(grid_nn_join(
-                probes, points, probe_key="lid", probe_xy=("px", "py"),
-                point_xy=("sx", "sy"), cell_size=24.0, point_cols=("rid",),
-                tie_break="rid",
-            ))
-            out[f"knn_grid_cd{label}"] = round(time.perf_counter() - t0, 2)
-    return out
+        bbox_s, _ = _timed(spark, "j7_grid_cd", lambda: grid_bbox_join(
+            left, right, ("lxmin", "lymin", "lxmax", "lymax"),
+            ("rxmin", "rymin", "rxmax", "rymax"), cell_size=32.0,
+        ))
+        knn_s, _ = _timed(spark, "knn_grid_cd", lambda: grid_nn_join(
+            probes, points, probe_key="lid", probe_xy=("px", "py"),
+            point_xy=("sx", "sy"), cell_size=24.0, point_cols=("rid",),
+            tie_break="rid",
+        ))
+        return {"j7_grid_cd": bbox_s, "knn_grid_cd": knn_s}
+
+    return _ladder(factor, rung)
 
 
-def _cd_corpus(spark, factor: int):
+def _cd_corpus(spark, factor: int, *extra_cols: str):
     """documents replicated ``factor``x with DISJOINT token spaces per
     replica (every token suffixed) — constant near-dup density; see
-    jaccard_cd_probe below for why clone replication is wrong here."""
-    docs = load(spark, "/root/testdata/sf0.1", "documents").select(
-        "doc_id", "text"
-    )
-    reps = []
-    for r in range(factor):
-        reps.append(
-            docs.select(
-                (F.col("doc_id") + F.lit(r * SHIFT)).alias("doc_id"),
-                F.regexp_replace("text", r"(\S+)", f"$1x{r}").alias("text"),
-            )
-        )
-    corpus = reps[0]
-    for c in reps[1:]:
-        corpus = corpus.unionByName(c)
-    return corpus
+    jaccard_cd_probe below for why clone replication is wrong here.
+    ``extra_cols`` ride along unchanged."""
+    docs = load(spark, SF_BASE, "documents").select("doc_id", "text", *extra_cols)
+    return _replicas(factor, lambda r: docs.select(
+        (F.col("doc_id") + F.lit(r * SHIFT)).alias("doc_id"),
+        F.regexp_replace("text", r"(\S+)", f"$1x{r}").alias("text"),
+        *extra_cols,
+    ))
 
 
 def minhash_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -283,16 +307,15 @@ def minhash_cd_probe(spark, factor: int) -> dict[str, float]:
     (same corpus construction as jaccard_cd_probe)."""
     from burst_db_spark.operators.dedup import minhash_lsh_dedup
 
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
+    def rung(f):
         corpus = _cd_corpus(spark, f)
-        t0 = time.perf_counter()
-        minhash_lsh_dedup(corpus, "doc_id", threshold=0.5).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        out[f"dd_minhash_lsh_cd{label}"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
-    return out
+        secs, _ = _timed(
+            spark, "dd_minhash_lsh_cd",
+            lambda: minhash_lsh_dedup(corpus, "doc_id", threshold=0.5),
+        )
+        return {"dd_minhash_lsh_cd": secs}
+
+    return _ladder(factor, rung)
 
 
 def jaccard_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -309,16 +332,15 @@ def jaccard_cd_probe(spark, factor: int) -> dict[str, float]:
     Linear-ish wall ratios here are the plan evidence."""
     from burst_db_spark.operators.dedup import jaccard_prefix_pairs
 
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
+    def rung(f):
         corpus = _cd_corpus(spark, f)
-        t0 = time.perf_counter()
-        jaccard_prefix_pairs(corpus, "doc_id", threshold=0.5).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        out[f"dd_jaccard_prefix_cd{label}"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
-    return out
+        secs, _ = _timed(
+            spark, "dd_jaccard_prefix_cd",
+            lambda: jaccard_prefix_pairs(corpus, "doc_id", threshold=0.5),
+        )
+        return {"dd_jaccard_prefix_cd": secs}
+
+    return _ladder(factor, rung)
 
 
 def winnow_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -331,16 +353,14 @@ def winnow_cd_probe(spark, factor: int) -> dict[str, float]:
     guard, so wall should track corpus size ~linearly."""
     from burst_db_spark.operators.text import winnow_overlap_pairs
 
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
+    def rung(f):
         corpus = _cd_corpus(spark, f)
-        t0 = time.perf_counter()
-        winnow_overlap_pairs(
+        secs, _ = _timed(spark, "dd_winnow_overlap_cd", lambda: winnow_overlap_pairs(
             fan_out(corpus, "doc_id"), "doc_id", min_shared=10, max_df=50
-        ).write.format("noop").mode("overwrite").save()
-        out[f"dd_winnow_overlap_cd{label}"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
-    return out
+        ))
+        return {"dd_winnow_overlap_cd": secs}
+
+    return _ladder(factor, rung)
 
 
 def winnow_clusters_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -356,32 +376,34 @@ def winnow_clusters_cd_probe(spark, factor: int) -> dict[str, float]:
     )
     from burst_db_spark.operators.text import winnow_overlap_pairs
 
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
+    def rung(f):
         corpus = _cd_corpus(spark, f)
-        t0 = time.perf_counter()
-        # min_shared=2 (not the registered query's 10): the per-replica
-        # token suffix makes every "xN "-containing gram hot, so the
-        # max_df guard strips most shared fingerprints — at min_shared=10
-        # the probe corpus has ZERO pairs and the CC stage under test
-        # never runs. 2 restores realistic pair density (481 pairs at 1x).
-        pairs = winnow_overlap_pairs(
-            fan_out(corpus, "doc_id"), "doc_id", min_shared=2, max_df=50
-        ).select("id_a", "id_b").persist()
-        n_edges = pairs.count()
-        connected_components(pairs, corpus, "doc_id").write.format(
-            "noop"
-        ).mode("overwrite").save()
-        out[f"dd_winnow_clusters_cd{label}"] = round(
-            time.perf_counter() - t0, 2
-        )
-        out[f"dd_winnow_clusters_cd{label}_edges"] = n_edges
-        out[f"dd_winnow_clusters_cd{label}_gate"] = int(
-            n_edges <= CC_LOCAL_EDGE_GATE
-        )
-        pairs.unpersist()
-        spark.catalog.clearCache()
-    return out
+
+        def build():
+            # min_shared=2 (not the registered query's 10): the per-replica
+            # token suffix makes every "xN "-containing gram hot, so the
+            # max_df guard strips most shared fingerprints — at min_shared=10
+            # the probe corpus has ZERO pairs and the CC stage under test
+            # never runs. 2 restores realistic pair density (481 pairs at 1x).
+            pairs = persist(winnow_overlap_pairs(
+                fan_out(corpus, "doc_id"), "doc_id", min_shared=2, max_df=50
+            ).select("id_a", "id_b"))
+            n_edges = pairs.count()
+            return connected_components(pairs, corpus, "doc_id"), n_edges
+
+        def act(built):
+            labels, n_edges = built
+            noop_write(labels)
+            return n_edges
+
+        secs, n_edges = _timed(spark, "dd_winnow_clusters_cd", build, act)
+        return {
+            "dd_winnow_clusters_cd": secs,
+            "dd_winnow_clusters_cd_edges": n_edges,
+            "dd_winnow_clusters_cd_gate": int(n_edges <= CC_LOCAL_EDGE_GATE),
+        }
+
+    return _ladder(factor, rung)
 
 
 def int8_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -392,16 +414,14 @@ def int8_cd_probe(spark, factor: int) -> dict[str, float]:
     (no accidental rescan/broadcast blowup)."""
     from burst_db_spark.operators.similarity import int8_quantized_topk
 
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
+    def rung(f):
         emb = _cd_embeddings(spark, f)
-        t0 = time.perf_counter()
-        int8_quantized_topk(emb, n_queries=8, topc=24, topk=5).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        out[f"knn_int8_cd{label}"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
-    return out
+        secs, _ = _timed(spark, "knn_int8_cd", lambda: int8_quantized_topk(
+            emb, n_queries=8, topc=24, topk=5
+        ))
+        return {"knn_int8_cd": secs}
+
+    return _ladder(factor, rung)
 
 
 def containment_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -412,15 +432,15 @@ def containment_cd_probe(spark, factor: int) -> dict[str, float]:
     A-prefix x full-inverted-index candidate join does not quadratify)."""
     from burst_db_spark.operators.dedup import containment_prefix_pairs
 
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
+    def rung(f):
         corpus = _cd_corpus(spark, f)
-        t0 = time.perf_counter()
-        res = containment_prefix_pairs(corpus, "doc_id", threshold=0.6)
-        res.write.format("noop").mode("overwrite").save()
-        out[f"t_containment_cd{label}"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
-    return out
+        secs, _ = _timed(
+            spark, "t_containment_cd",
+            lambda: containment_prefix_pairs(corpus, "doc_id", threshold=0.6),
+        )
+        return {"t_containment_cd": secs}
+
+    return _ladder(factor, rung)
 
 
 def embedding_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -442,49 +462,23 @@ def embedding_cd_probe(spark, factor: int) -> dict[str, float]:
     vs near-linear with the sizing rule. The registry queries keep
     fixed params at driver SF because their oracles replicate the plane
     literals bit-for-bit; the sizing rule is the 100 TB knob."""
-    from burst_db_spark.operators.similarity import (
-        lsh_near_dup_pairs,
-        lsh_near_dup_pairs_multiprobe,
-        lsh_params_for,
-    )
-
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
-        out.update(
-            {
-                f"{k}{label}": v
-                for k, v in embedding_cd_rung(spark, f).items()
-            }
-        )
-    return out
+    return _ladder(factor, lambda f: embedding_cd_rung(spark, f))
 
 
 def _cd_embeddings(spark, factor: int):
     """The constant-density embedding corpus (see embedding_cd_probe)."""
-    emb = load(spark, "/root/testdata/sf0.1", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    reps = []
-    for r in range(factor):
-        reps.append(
-            emb.select(
-                (F.col("vec_id") + F.lit(r * SHIFT)).alias("vec_id"),
-                F.expr(
-                    f"transform(embedding, (v, i) -> v * IF("
-                    f"xxhash64({r * 131}L, CAST(i AS BIGINT)) % 2 = 0,"
-                    f" CAST(1.0 AS FLOAT), CAST(-1.0 AS FLOAT)))"
-                ).alias("embedding"),
-            )
-        )
-    c = reps[0]
-    for x in reps[1:]:
-        c = c.unionByName(x)
-    return c
+    emb = load(spark, SF_BASE, "embeddings").select("vec_id", "embedding")
+    return _replicas(factor, lambda r: emb.select(
+        (F.col("vec_id") + F.lit(r * SHIFT)).alias("vec_id"),
+        F.expr(
+            f"transform(embedding, (v, i) -> v * IF("
+            f"xxhash64({r * 131}L, CAST(i AS BIGINT)) % 2 = 0,"
+            f" CAST(1.0 AS FLOAT), CAST(-1.0 AS FLOAT)))"
+        ).alias("embedding"),
+    ))
 
 
-def embedding_cd_rung(
-    spark, f: int, which: str = "both"
-) -> dict[str, float]:
+def embedding_cd_rung(spark, f: int) -> dict[str, float]:
     """One constant-density rung for the embedding-LSH family, params
     auto-sized for the rung's corpus:
 
@@ -504,45 +498,37 @@ def embedding_cd_rung(
         lsh_params_for,
     )
 
-    n_base = load(spark, "/root/testdata/sf0.1", "embeddings").count()
+    n_base = load(spark, SF_BASE, "embeddings").count()
     c = _cd_embeddings(spark, f).repartition(parallelism(spark) * max(1, f // 4))
     n_planes, r = lsh_params_for(n_base * f)
-    out: dict[str, float] = {}
-    if which in ("both", "nn"):
-        t0 = time.perf_counter()
-        lsh_near_dup_pairs(c, n_planes=n_planes, bits_per_band=r).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        out["dd_embedding_nn_cd"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
-    if which in ("both", "mp"):
-        # QUERY-DIRECTED probing (Lv et al. 2007) above the base rung:
-        # fixed T=3 probe budget per band (flip the 3 smallest-|margin|
-        # bits), so probe rows stay b·4 per vector regardless of r.
-        # The r9 flip-all measurement (probes ∝ r) came in 1.4x above
-        # linear at 100x BECAUSE r grows with log2 N; the fixed budget
-        # removes that term. Bucket width KEEPS the flip-all sizing
-        # r_mp = r + ceil(log2(r+1)) — with a fixed budget the verify
-        # volume probes×occupancy now SHRINKS as r grows instead of
-        # holding constant. (A first attempt re-widened buckets to
-        # r_mp = r+2 "to balance 4 probes"; at 100x that quadrupled
-        # occupancy and the verify join's vector-pair spill filled the
-        # disk — candidate volume, not probe volume, is the binding
-        # term, so buckets stay small.)
-        probe_t = 3
-        r_mp = r + math.ceil(math.log2(r + 1))
-        t0 = time.perf_counter()
-        lsh_near_dup_pairs_multiprobe(
+    nn_s, _ = _timed(spark, "dd_embedding_nn_cd", lambda: lsh_near_dup_pairs(
+        c, n_planes=n_planes, bits_per_band=r
+    ))
+    # QUERY-DIRECTED probing (Lv et al. 2007) above the base rung:
+    # fixed T=3 probe budget per band (flip the 3 smallest-|margin|
+    # bits), so probe rows stay b·4 per vector regardless of r.
+    # The r9 flip-all measurement (probes ∝ r) came in 1.4x above
+    # linear at 100x BECAUSE r grows with log2 N; the fixed budget
+    # removes that term. Bucket width KEEPS the flip-all sizing
+    # r_mp = r + ceil(log2(r+1)) — with a fixed budget the verify
+    # volume probes×occupancy now SHRINKS as r grows instead of
+    # holding constant. (A first attempt re-widened buckets to
+    # r_mp = r+2 "to balance 4 probes"; at 100x that quadrupled
+    # occupancy and the verify join's vector-pair spill filled the
+    # disk — candidate volume, not probe volume, is the binding
+    # term, so buckets stay small.)
+    probe_t = 3
+    r_mp = r + math.ceil(math.log2(r + 1))
+    mp_s, _ = _timed(
+        spark, "dd_embedding_nn_multiprobe_cd",
+        lambda: lsh_near_dup_pairs_multiprobe(
             c,
             n_planes=8 * r_mp,
             bits_per_band=r_mp,
             max_probe_bits=probe_t if r_mp > probe_t else None,
-        ).write.format("noop").mode("overwrite").save()
-        out["dd_embedding_nn_multiprobe_cd"] = round(
-            time.perf_counter() - t0, 2
-        )
-        spark.catalog.clearCache()
-    return out
+        ),
+    )
+    return {"dd_embedding_nn_cd": nn_s, "dd_embedding_nn_multiprobe_cd": mp_s}
 
 
 def minhash_inc_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -556,18 +542,17 @@ def minhash_inc_cd_probe(spark, factor: int) -> dict[str, float]:
     occupancy-bounded; superlinear would mean hot band buckets."""
     from burst_db_spark.operators.dedup import minhash_incremental_manifest
 
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
+    def rung(f):
         corpus = _cd_corpus(spark, f)
-        t0 = time.perf_counter()
-        minhash_incremental_manifest(
-            corpus, "doc_id", F.col("doc_id") % 3 == 0, threshold=0.5
-        ).write.format("noop").mode("overwrite").save()
-        out[f"dd_minhash_incremental_cd{label}"] = round(
-            time.perf_counter() - t0, 2
+        secs, _ = _timed(
+            spark, "dd_minhash_incremental_cd",
+            lambda: minhash_incremental_manifest(
+                corpus, "doc_id", F.col("doc_id") % 3 == 0, threshold=0.5
+            ),
         )
-        spark.catalog.clearCache()
-    return out
+        return {"dd_minhash_incremental_cd": secs}
+
+    return _ladder(factor, rung)
 
 
 def embedding_inc_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -583,23 +568,20 @@ def embedding_inc_cd_probe(spark, factor: int) -> dict[str, float]:
         lsh_params_for,
     )
 
-    n_base = load(spark, "/root/testdata/sf0.1", "embeddings").count()
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
+    n_base = load(spark, SF_BASE, "embeddings").count()
+
+    def rung(f):
         c = _cd_embeddings(spark, f).repartition(parallelism(spark) * max(1, f // 4))
         n_planes, r = lsh_params_for(n_base * f)
-        t0 = time.perf_counter()
-        lsh_near_dup_incremental(
-            c,
-            F.col("vec_id") % 3 == 0,
-            n_planes=n_planes,
-            bits_per_band=r,
-        ).write.format("noop").mode("overwrite").save()
-        out[f"dd_embedding_nn_incremental_cd{label}"] = round(
-            time.perf_counter() - t0, 2
+        secs, _ = _timed(
+            spark, "dd_embedding_nn_incremental_cd",
+            lambda: lsh_near_dup_incremental(
+                c, F.col("vec_id") % 3 == 0, n_planes=n_planes, bits_per_band=r
+            ),
         )
-        spark.catalog.clearCache()
-    return out
+        return {"dd_embedding_nn_incremental_cd": secs}
+
+    return _ladder(factor, rung)
 
 
 def cluster_inc_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -618,14 +600,14 @@ def cluster_inc_cd_probe(spark, factor: int) -> dict[str, float]:
 
     def synth(f: int):
         n_old = 50_000 * f
-        stored = spark.range(n_old).select(
+        stored = persist(spark.range(n_old).select(
             (F.col("id") * 3 + 1).alias("doc_id"),
             ((F.col("id") - F.col("id") % 5) * 3 + 1).alias("cluster_id"),
-        ).persist()
-        new_docs = spark.range(5_000).select(
+        ))
+        new_docs = persist(spark.range(5_000).select(
             (F.col("id") * 3).alias("doc_id")
-        ).persist()
-        new_pairs = (
+        ))
+        new_pairs = persist(
             spark.range(5_000)
             .select(
                 (F.col("id") * 3).alias("id_a"),
@@ -637,42 +619,35 @@ def cluster_inc_cd_probe(spark, factor: int) -> dict[str, float]:
                     (F.col("id") * 6 + 3).alias("id_b"),
                 )
             )
-            .persist()
         )
         stored.count(), new_docs.count(), new_pairs.count()
         return stored, new_docs, new_pairs
 
     is_new = F.col("doc_id") % 3 == 0
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
-        stored, new_docs, new_pairs = synth(f)
 
-        t0 = time.perf_counter()
-        star = stored.where(F.col("doc_id") != F.col("cluster_id")).select(
-            F.col("doc_id").alias("id_a"), F.col("cluster_id").alias("id_b")
-        )
-        cc = connected_components(
-            star.unionByName(new_pairs),
-            stored.select("doc_id").unionByName(new_docs),
-            "doc_id",
-        )
-        (
-            cc.groupBy("cluster_id")
+    def per_cluster(labels, n_docs):
+        return (
+            labels.groupBy("cluster_id")
             .agg(
-                F.count("*").cast("bigint").alias("n_docs"),
+                n_docs.cast("bigint").alias("n_docs"),
                 F.sum(is_new.cast("int")).cast("bigint").alias("n_new"),
             )
             .where(F.col("n_new") > 0)
             .orderBy("cluster_id")
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        out[f"cluster_inc_star_cd{label}"] = round(
-            time.perf_counter() - t0, 2
         )
 
-        t0 = time.perf_counter()
+    def star(stored, new_docs, new_pairs):
+        edges = stored.where(F.col("doc_id") != F.col("cluster_id")).select(
+            F.col("doc_id").alias("id_a"), F.col("cluster_id").alias("id_b")
+        )
+        cc = connected_components(
+            edges.unionByName(new_pairs),
+            stored.select("doc_id").unionByName(new_docs),
+            "doc_id",
+        )
+        return per_cluster(cc, F.count("*"))
+
+    def reduced(stored, new_docs, new_pairs):
         lbl_a = stored.select(
             F.col("doc_id").alias("id_a"), F.col("cluster_id").alias("ca")
         )
@@ -693,34 +668,25 @@ def cluster_inc_cd_probe(spark, factor: int) -> dict[str, float]:
             .unionByName(mapped.select(F.col("id_b").alias("doc_id")))
             .distinct()
         )
-        cc2 = connected_components(mapped, nodes, "doc_id")
+        cc = connected_components(mapped, nodes, "doc_id")
         sizes = stored.groupBy("cluster_id").agg(
             F.count("*").cast("bigint").alias("sz")
         )
-        (
-            cc2.join(
-                sizes.withColumnRenamed("cluster_id", "doc_id"),
-                "doc_id",
-                "left",
-            )
-            .groupBy("cluster_id")
-            .agg(
-                F.sum(F.coalesce(F.col("sz"), F.lit(1).cast("bigint")))
-                .cast("bigint")
-                .alias("n_docs"),
-                F.sum(is_new.cast("int")).cast("bigint").alias("n_new"),
-            )
-            .where(F.col("n_new") > 0)
-            .orderBy("cluster_id")
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
+        return per_cluster(
+            cc.join(sizes.withColumnRenamed("cluster_id", "doc_id"), "doc_id", "left"),
+            F.sum(F.coalesce(F.col("sz"), F.lit(1).cast("bigint"))),
         )
-        out[f"cluster_inc_reduced_cd{label}"] = round(
-            time.perf_counter() - t0, 2
-        )
-        spark.catalog.clearCache()
-    return out
+
+    def rung(f):
+        with scope():
+            inputs = synth(f)
+            star_s, _ = _timed(spark, "cluster_inc_star_cd", lambda: star(*inputs))
+            reduced_s, _ = _timed(
+                spark, "cluster_inc_reduced_cd", lambda: reduced(*inputs)
+            )
+        return {"cluster_inc_star_cd": star_s, "cluster_inc_reduced_cd": reduced_s}
+
+    return _ladder(factor, rung)
 
 
 def dpp_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -743,92 +709,70 @@ def dpp_cd_probe(spark, factor: int) -> dict[str, float]:
       wall ratio ≈ factor confirms the dim growth neither breaks the
       broadcast nor de-prunes the scan (cost tracks covered data, not
       total partitions)."""
-    import shutil as _sh
-
-    ev = load(spark, "/root/testdata/sf0.1", "events").select(
+    ev = load(spark, SF_BASE, "events").select(
         "event_id", "user_id", "event_type", "ts", "value"
     )
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
-        base = tempfile.mkdtemp(prefix=f"bds_dpp_{f}_")
-        reps = []
-        for rr in range(f):
-            reps.append(
-                ev.select(
-                    (F.col("event_id") + F.lit(rr * SHIFT)).alias("event_id"),
-                    "event_type",
-                    (F.col("ts") + F.expr(f"INTERVAL {rr * 45} DAYS")).alias(
-                        "ts"
-                    ),
-                    "value",
-                )
-            )
-        fact_df = reps[0]
-        for x in reps[1:]:
-            fact_df = fact_df.unionByName(x)
-        fact_path = os.path.join(base, "fact")
-        fact_df.withColumn("event_date", F.to_date("ts")).write.mode(
-            "overwrite"
-        ).partitionBy("event_date").parquet(fact_path)
-        d0 = ev.groupBy("event_type").agg(
-            F.min(F.to_date("ts")).alias("d0")
-        )
-        def intervals(n_reps: int):
-            iv_rows = []
-            for rr in range(n_reps):
-                for s, e in ((78, 162), (312, 372)):
-                    iv_rows.append((rr * 45 * 24 + s, rr * 45 * 24 + e))
-            return d0.select(
-                "event_type",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.expr(
-                                    f"CAST(d0 AS TIMESTAMP) + INTERVAL {s} HOUR"
-                                ).alias("start_ts"),
-                                F.expr(
-                                    f"CAST(d0 AS TIMESTAMP) + INTERVAL {e} HOUR"
-                                ).alias("end_ts"),
-                            )
-                            for s, e in iv_rows
-                        ]
-                    )
-                ).alias("w"),
-            ).select("event_type", "w.start_ts", "w.end_ts")
+    d0 = ev.groupBy("event_type").agg(F.min(F.to_date("ts")).alias("d0"))
 
-        try:
+    def interval_dates(n_reps: int):
+        iv_rows = [
+            (rr * 45 * 24 + s, rr * 45 * 24 + e)
+            for rr in range(n_reps)
+            for s, e in ((78, 162), (312, 372))
+        ]
+        return d0.select(
+            "event_type",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.expr(
+                                f"CAST(d0 AS TIMESTAMP) + INTERVAL {s} HOUR"
+                            ).alias("start_ts"),
+                            F.expr(
+                                f"CAST(d0 AS TIMESTAMP) + INTERVAL {e} HOUR"
+                            ).alias("end_ts"),
+                        )
+                        for s, e in iv_rows
+                    ]
+                )
+            ).alias("w"),
+        ).select("event_type", "w.start_ts", "w.end_ts").withColumn(
+            "event_date",
+            F.explode(
+                F.expr("sequence(CAST(start_ts AS DATE), CAST(end_ts AS DATE))")
+            ),
+        )
+
+    def in_intervals(fact, ivd):
+        return (
+            fact.join(F.broadcast(ivd), ["event_type", "event_date"])
+            .where((F.col("ts") >= F.col("start_ts")) & (F.col("ts") < F.col("end_ts")))
+            .groupBy("event_type")
+            .agg(F.count("*").cast("bigint").alias("n_in"))
+        )
+
+    def rung(f):
+        out = {}
+        with scope():
+            fact_path = os.path.join(tmpdir(f"bds_dpp_{f}_"), "fact")
+            _replicas(f, lambda rr: ev.select(
+                (F.col("event_id") + F.lit(rr * SHIFT)).alias("event_id"),
+                "event_type",
+                (F.col("ts") + F.expr(f"INTERVAL {rr * 45} DAYS")).alias("ts"),
+                "value",
+            )).withColumn("event_date", F.to_date("ts")).write.mode(
+                "overwrite"
+            ).partitionBy("event_date").parquet(fact_path)
             fact = spark.read.parquet(fact_path)
             for key, n_reps in (("fixed_iv", 1), ("grown_iv", f)):
-                ivd = intervals(n_reps).withColumn(
-                    "event_date",
-                    F.explode(
-                        F.expr(
-                            "sequence(CAST(start_ts AS DATE),"
-                            " CAST(end_ts AS DATE))"
-                        )
-                    ),
+                ivd = interval_dates(n_reps)
+                out[f"j18_dpp_{key}_cd"], _ = _timed(
+                    spark, f"j18_dpp_{key}_cd", lambda: in_intervals(fact, ivd)
                 )
-                t0 = time.perf_counter()
-                (
-                    fact.join(F.broadcast(ivd), ["event_type", "event_date"])
-                    .where(
-                        (F.col("ts") >= F.col("start_ts"))
-                        & (F.col("ts") < F.col("end_ts"))
-                    )
-                    .groupBy("event_type")
-                    .agg(F.count("*").cast("bigint").alias("n_in"))
-                    .write.format("noop")
-                    .mode("overwrite")
-                    .save()
-                )
-                out[f"j18_dpp_{key}_cd{label}"] = round(
-                    time.perf_counter() - t0, 2
-                )
-                spark.catalog.clearCache()
-        finally:
-            _sh.rmtree(base, ignore_errors=True)
-    return out
+        return out
+
+    return _ladder(factor, rung)
 
 
 def shuffle_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -840,25 +784,19 @@ def shuffle_cd_probe(spark, factor: int) -> dict[str, float]:
     skew creeps in as N grows."""
     from burst_db_spark.operators.packing import epoch_shuffle
 
-    base = load(spark, "/root/testdata/sf0.1", "documents").select("doc_id")
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
-        reps = [
-            base.select((F.col("doc_id") + F.lit(r * SHIFT)).alias("doc_id"))
-            for r in range(f)
-        ]
-        c = reps[0]
-        for x in reps[1:]:
-            c = c.unionByName(x)
-        t0 = time.perf_counter()
-        epoch_shuffle(c, "doc_id", "ep0", 8).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        out[f"t_epoch_shard_shuffle_cd{label}"] = round(
-            time.perf_counter() - t0, 2
+    base = load(spark, SF_BASE, "documents").select("doc_id")
+
+    def rung(f):
+        c = _replicas(f, lambda r: base.select(
+            (F.col("doc_id") + F.lit(r * SHIFT)).alias("doc_id")
+        ))
+        secs, _ = _timed(
+            spark, "t_epoch_shard_shuffle_cd",
+            lambda: epoch_shuffle(c, "doc_id", "ep0", 8),
         )
-        spark.catalog.clearCache()
-    return out
+        return {"t_epoch_shard_shuffle_cd": secs}
+
+    return _ladder(factor, rung)
 
 
 def fuzzy_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -871,36 +809,25 @@ def fuzzy_cd_probe(spark, factor: int) -> dict[str, float]:
     deletion-key equi-join should stay near-linear."""
     from burst_db_spark.operators.joins import fuzzy_string_self_join
 
-    part = load(spark, "/root/testdata/sf0.1", "part").select("p_name")
+    part = load(spark, SF_BASE, "part").select("p_name")
 
-    def corpus(f: int):
-        reps = []
-        for r in range(f):
-            # repeated 2-char code over DISJOINT alphabets per position:
-            # any two distinct codes give LCS <= 3 over the 6 chars, so
-            # cross-replica suffix distance >= 3 (no permutation shifts
-            # can collide, unlike naive "aaa"/"baa" digit codes)
-            code = chr(ord("a") + r % 26) + chr(ord("A") + (r // 26) % 26)
-            reps.append(
-                part.select(
-                    F.concat("p_name", F.lit(f" {code * 3}")).alias("p_name")
-                )
-            )
-        c = reps[0]
-        for x in reps[1:]:
-            c = c.unionByName(x)
-        return c
+    def suffixed(r: int):
+        # repeated 2-char code over DISJOINT alphabets per position:
+        # any two distinct codes give LCS <= 3 over the 6 chars, so
+        # cross-replica suffix distance >= 3 (no permutation shifts
+        # can collide, unlike naive "aaa"/"baa" digit codes)
+        code = chr(ord("a") + r % 26) + chr(ord("A") + (r // 26) % 26)
+        return part.select(F.concat("p_name", F.lit(f" {code * 3}")).alias("p_name"))
 
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
-        c = corpus(f)
-        t0 = time.perf_counter()
-        fuzzy_string_self_join(c, "p_name", max_dist=2).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        out[f"j14_fuzzy_cd{label}"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
-    return out
+    def rung(f):
+        c = _replicas(f, suffixed)
+        secs, _ = _timed(
+            spark, "j14_fuzzy_cd",
+            lambda: fuzzy_string_self_join(c, "p_name", max_dist=2),
+        )
+        return {"j14_fuzzy_cd": secs}
+
+    return _ladder(factor, rung)
 
 
 def graph_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -913,110 +840,69 @@ def graph_cd_probe(spark, factor: int) -> dict[str, float]:
     graph. BFS: 3 relaxation rounds from per-replica seed sets."""
     from burst_db_spark.operators.graph import pagerank
 
-    li = load(spark, "/root/testdata/sf0.1", "lineitem")
-    orders = load(spark, "/root/testdata/sf0.1", "orders")
-    base_edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("ck"),
-            F.col("l_suppkey").alias("sk"),
-        )
-        .distinct()
-        .persist()
-    )
-    base_edges.count()
-
-    def graph(f: int):
-        reps = []
-        for r in range(f):
-            reps.append(
-                base_edges.select(
-                    F.concat(F.lit("c"), F.col("ck"), F.lit(f"_{r}")).alias(
-                        "src"
-                    ),
-                    F.concat(F.lit("s"), F.col("sk"), F.lit(f"_{r}")).alias(
-                        "dst"
-                    ),
-                )
-            )
-        e = reps[0]
-        for x in reps[1:]:
-            e = e.unionByName(x)
-        nodes = (
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        return e, nodes
-
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
-        e, nodes = graph(f)
-        e = e.persist()
-        t0 = time.perf_counter()
-        pagerank(e, nodes, iterations=3).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        out[f"g1_pagerank3_cd{label}"] = round(time.perf_counter() - t0, 2)
+    def bfs(und, nodes):
         # bounded BFS: undirected, 3 relaxation rounds, sparse seeds
-        und = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        t0 = time.perf_counter()
         dist = nodes.select(
             F.col("id").alias("v"),
             F.when(
-                (F.substring("v", 1, 1) == "c")
-                & (F.xxhash64("v") % 100 == 0),
+                (F.substring("v", 1, 1) == "c") & (F.xxhash64("v") % 100 == 0),
                 F.lit(0),
             ).alias("hop"),
         )
-        cached = None
+        prev = None
         for _ in range(3):
-            relaxed = (
-                und.join(
-                    dist.where(F.col("hop").isNotNull()).withColumnRenamed(
-                        "v", "src"
-                    ),
-                    "src",
-                )
-                .select(F.col("dst").alias("v"), (F.col("hop") + 1).alias("hop"))
-            )
+            relaxed = und.join(
+                dist.where(F.col("hop").isNotNull()).withColumnRenamed("v", "src"),
+                "src",
+            ).select(F.col("dst").alias("v"), (F.col("hop") + 1).alias("hop"))
             # persist each round: without this the lineage recomputes all
             # prior rounds inside every later round — measured as a stall
             # at the 100x rung (the same per-round persist discipline as
-            # operators/dedup.connected_components)
-            dist = (
-                dist.unionByName(relaxed)
-                .groupBy("v")
-                .agg(F.min("hop").alias("hop"))
-                .persist()
+            # operators/dedup.connected_components). The previous round is
+            # unpersisted as soon as this one is counted: the 100x rung is
+            # heap-bound, so rounds are not held until the scope exits.
+            dist = persist(
+                dist.unionByName(relaxed).groupBy("v").agg(F.min("hop").alias("hop"))
             )
             dist.count()
-            if cached is not None:
-                cached.unpersist()
-            cached = dist
-        dist.where(F.col("hop").isNotNull()).groupBy("hop").count().write.format(
-            "noop"
-        ).mode("overwrite").save()
-        out[f"g3_bfs_cd{label}"] = round(time.perf_counter() - t0, 2)
-        if cached is not None:
-            cached.unpersist()
-        e.unpersist()
-        spark.catalog.clearCache()
-    base_edges.unpersist()
-    return out
+            if prev is not None:
+                prev.unpersist()
+            prev = dist
+        return dist.where(F.col("hop").isNotNull()).groupBy("hop").count()
 
+    li = load(spark, SF_BASE, "lineitem")
+    orders = load(spark, SF_BASE, "orders")
+    with scope():
+        base_edges = persist(
+            li.join(orders, li.l_orderkey == orders.o_orderkey)
+            .select(F.col("o_custkey").alias("ck"), F.col("l_suppkey").alias("sk"))
+            .distinct()
+        )
+        base_edges.count()
 
-# Single-JVM heap floors for the memory-bound top rungs (measured,
-# SCALING.md): below these the run GC-thrashes or OOMs rather than
-# finishing slow, so the probe refuses with the working command line
-# instead of wasting the wall-clock. The constants are the SINGLE-JVM
-# artifact — on a cluster the same state spreads across executors.
-_HEAP_FLOORS_GB = {
-    ("graph", 100): 32,        # BFS cached frontier + label frame
-    ("containment", 100): 32,  # full probe-side inverted index
-}
+        def rung(f):
+            e = _replicas(f, lambda r: base_edges.select(
+                F.concat(F.lit("c"), F.col("ck"), F.lit(f"_{r}")).alias("src"),
+                F.concat(F.lit("s"), F.col("sk"), F.lit(f"_{r}")).alias("dst"),
+            ))
+            nodes = (
+                e.select(F.col("src").alias("id"))
+                .unionByName(e.select(F.col("dst").alias("id")))
+                .distinct()
+            )
+            with scope():
+                e = persist(e)
+                pagerank_s, _ = _timed(
+                    spark, "g1_pagerank3_cd", lambda: pagerank(e, nodes, iterations=3)
+                )
+                und = e.unionByName(
+                    e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+                )
+                bfs_s, _ = _timed(spark, "g3_bfs_cd", lambda: bfs(und, nodes))
+            return {"g1_pagerank3_cd": pagerank_s, "g3_bfs_cd": bfs_s}
+
+        return _ladder(factor, rung)
+
 
 def dsir_cd_probe(spark, factor: int) -> dict[str, float]:
     """Scaling for DSIR importance selection: replicate documents with
@@ -1028,29 +914,15 @@ def dsir_cd_probe(spark, factor: int) -> dict[str, float]:
     factor (the property that makes the fit a pure reduce at 100 TB)."""
     from burst_db_spark.operators.selection import dsir_scores
 
-    docs0 = load(spark, "/root/testdata/sf0.1", "documents").select(
-        "doc_id", "text", "lang"
-    )
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
-        reps = []
-        for r in range(f):
-            reps.append(
-                docs0.select(
-                    (F.col("doc_id") + F.lit(r * SHIFT)).alias("doc_id"),
-                    F.regexp_replace("text", r"(\S+)", f"$1x{r}").alias("text"),
-                    "lang",
-                )
-            )
-        corpus = reps[0]
-        for c in reps[1:]:
-            corpus = corpus.unionByName(c)
-        t0 = time.perf_counter()
-        res = dsir_scores(corpus, F.col("lang") == "en", top_n=50)
-        res.write.format("noop").mode("overwrite").save()
-        out[f"t_dsir_cd{label}"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
-    return out
+    def rung(f):
+        corpus = _cd_corpus(spark, f, "lang")
+        secs, _ = _timed(
+            spark, "t_dsir_cd",
+            lambda: dsir_scores(corpus, F.col("lang") == "en", top_n=50),
+        )
+        return {"t_dsir_cd": secs}
+
+    return _ladder(factor, rung)
 
 
 def ppjoin_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -1060,16 +932,15 @@ def ppjoin_cd_probe(spark, factor: int) -> dict[str, float]:
     pruning against the prefix-only join at the same rungs."""
     from burst_db_spark.operators.dedup import jaccard_ppjoin_pairs
 
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
+    def rung(f):
         corpus = _cd_corpus(spark, f)
-        t0 = time.perf_counter()
-        jaccard_ppjoin_pairs(corpus, "doc_id", threshold=0.5).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        out[f"dd_ppjoin_cd{label}"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
-    return out
+        secs, _ = _timed(
+            spark, "dd_ppjoin_cd",
+            lambda: jaccard_ppjoin_pairs(corpus, "doc_id", threshold=0.5),
+        )
+        return {"dd_ppjoin_cd": secs}
+
+    return _ladder(factor, rung)
 
 
 def splits_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -1082,26 +953,33 @@ def splits_cd_probe(spark, factor: int) -> dict[str, float]:
     so the true edge count grows ~factor; anything superlinear in the
     wall is the shingle join's candidate stage or CC, not the data).
     ``n_chars`` is recomputed from the suffixed text so the rollup sums
-    reflect the probe corpus, like the registered query's input."""
+    reflect the probe corpus, like the registered query's input. The
+    edge count is taken after the timer stops."""
     from burst_db_spark.operators import dedup as dd
     from burst_db_spark.operators import selection as sel
 
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
+    def rung(f):
         corpus = _cd_corpus(spark, f).withColumn(
             "n_chars", F.length("text").cast("bigint")
         )
-        t0 = time.perf_counter()
-        pairs = dd.ngram_jaccard_pairs(corpus, "doc_id", threshold=0.2)
-        labels = dd.connected_components(pairs, corpus, "doc_id")
-        res = sel.leakage_safe_splits(
-            corpus, pairs.select("id_a", "id_b"), labels
-        )
-        res.write.format("noop").mode("overwrite").save()
-        out[f"t_splits_cd{label}"] = round(time.perf_counter() - t0, 2)
-        out[f"t_splits_edges{label}"] = pairs.count()
-        spark.catalog.clearCache()
-    return out
+
+        def build():
+            pairs = dd.ngram_jaccard_pairs(corpus, "doc_id", threshold=0.2)
+            labels = dd.connected_components(pairs, corpus, "doc_id")
+            splits = sel.leakage_safe_splits(
+                corpus, pairs.select("id_a", "id_b"), labels
+            )
+            return splits, pairs
+
+        def act(built):
+            splits, pairs = built
+            noop_write(splits)
+            return pairs
+
+        secs, pairs = _timed(spark, "t_splits_cd", build, act)
+        return {"t_splits_cd": secs, "t_splits_edges": pairs.count()}
+
+    return _ladder(factor, rung)
 
 
 def bootstrap_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -1114,27 +992,18 @@ def bootstrap_cd_probe(spark, factor: int) -> dict[str, float]:
     superlinear term rather than hunting one (VERDICT r11 #4)."""
     from burst_db_spark.queries.round13 import bootstrap_ci_frame
 
-    ev0 = load(spark, "/root/testdata/sf0.1", "events").select(
-        "event_id", "event_type", "value"
-    )
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
-        reps = [
-            ev0.select(
-                (F.col("event_id") + F.lit(r * SHIFT)).alias("event_id"),
-                "event_type",
-                "value",
-            )
-            for r in range(f)
-        ]
-        ev = reps[0]
-        for x in reps[1:]:
-            ev = ev.unionByName(x)
-        t0 = time.perf_counter()
-        bootstrap_ci_frame(ev).write.format("noop").mode("overwrite").save()
-        out[f"a43_bootstrap_cd{label}"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
-    return out
+    ev0 = load(spark, SF_BASE, "events").select("event_id", "event_type", "value")
+
+    def rung(f):
+        ev = _replicas(f, lambda r: ev0.select(
+            (F.col("event_id") + F.lit(r * SHIFT)).alias("event_id"),
+            "event_type",
+            "value",
+        ))
+        secs, _ = _timed(spark, "a43_bootstrap_cd", lambda: bootstrap_ci_frame(ev))
+        return {"a43_bootstrap_cd": secs}
+
+    return _ladder(factor, rung)
 
 
 def _emb_replicated(spark, factor: int):
@@ -1144,29 +1013,23 @@ def _emb_replicated(spark, factor: int):
     cross-replica cosines collapse to ~N(0, 1/64) noise — so near-dup
     density stays constant instead of every clone matching its source
     at cosine 1.0."""
-    emb = load(spark, "/root/testdata/sf0.1", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    reps = []
-    for r in range(factor):
+    emb = load(spark, SF_BASE, "embeddings").select("vec_id", "embedding")
+
+    def signed(r: int):
         sign = F.transform(
             F.sequence(F.lit(1), F.lit(64)),
             lambda i: F.when(
                 F.xxhash64(i.cast("string"), F.lit(r)) % 2 == 0, F.lit(1.0)
             ).otherwise(F.lit(-1.0)),
         )
-        reps.append(
-            emb.select(
-                (F.col("vec_id") + F.lit(r * SHIFT)).alias("vec_id"),
-                F.zip_with(
-                    "embedding", sign, lambda x, s: x.cast("double") * s
-                ).alias("embedding"),
-            )
+        return emb.select(
+            (F.col("vec_id") + F.lit(r * SHIFT)).alias("vec_id"),
+            F.zip_with("embedding", sign, lambda x, s: x.cast("double") * s).alias(
+                "embedding"
+            ),
         )
-    out = reps[0]
-    for x in reps[1:]:
-        out = out.unionByName(x)
-    return out
+
+    return _replicas(factor, signed)
 
 
 def d4_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -1189,17 +1052,13 @@ def d4_cd_probe(spark, factor: int) -> dict[str, float]:
     from burst_db_spark.operators import similarity as sim
     from burst_db_spark.queries.round14 import _D4_TAU
 
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
-        emb = _emb_replicated(spark, f)
-        t0 = time.perf_counter()
+    def d4(emb, k: int):
         # opt in to the funnel assignment past the threshold — the
         # k ∝ N rung prices exactly that route (the exact flat argmin
         # is the superlinear term this rung exists to avoid); library
         # default is now exact-always (r13 ADVICE)
         asg, cents = sim.kmeans_unrolled_state(
-            emb, k=16 * f, rounds=2,
-            hier_threshold=sim.HIER_ASSIGN_THRESHOLD,
+            emb, k=k, rounds=2, hier_threshold=sim.HIER_ASSIGN_THRESHOLD,
         )
         # norms hoisted out of the pair predicate (once per vector, not
         # per pair) — mirrors the registered query's shape
@@ -1236,13 +1095,16 @@ def d4_cd_probe(spark, factor: int) -> dict[str, float]:
             "id", "cell", F.coalesce("__drop", F.lit(False)).alias("dropped")
         )
         wr = Window.partitionBy("cell").orderBy("id")
-        pruned = flags.where(~F.col("dropped")).withColumn(
+        return flags.where(~F.col("dropped")).withColumn(
             "rn", F.row_number().over(wr)
         )
-        pruned.write.format("noop").mode("overwrite").save()
-        out[f"dd_d4_cd{label}"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
-    return out
+
+    def rung(f):
+        emb = _emb_replicated(spark, f)
+        secs, _ = _timed(spark, "dd_d4_cd", lambda: d4(emb, 16 * f))
+        return {"dd_d4_cd": secs}
+
+    return _ladder(factor, rung)
 
 
 def kmeans_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -1254,16 +1116,14 @@ def kmeans_cd_probe(spark, factor: int) -> dict[str, float]:
     window)."""
     from burst_db_spark.operators.similarity import kmeans_unrolled_stats
 
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
+    def rung(f):
         emb = _emb_replicated(spark, f)
-        t0 = time.perf_counter()
-        kmeans_unrolled_stats(emb, k=16, rounds=2).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        out[f"knn_kmeans_cd{label}"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
-    return out
+        secs, _ = _timed(
+            spark, "knn_kmeans_cd", lambda: kmeans_unrolled_stats(emb, k=16, rounds=2)
+        )
+        return {"knn_kmeans_cd": secs}
+
+    return _ladder(factor, rung)
 
 
 def ntile_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -1279,12 +1139,11 @@ def ntile_cd_probe(spark, factor: int) -> dict[str, float]:
 
     from burst_db_spark.operators.text import grouped_ntile_scalable
 
-    out: dict[str, float] = {}
-    for label, f in (("", 1), ("_big", factor)):
-        n = 100_000 * f
-        df = (
-            spark.range(n)
-            .select(
+    w = Window.partitionBy("lang").orderBy("score", "id")
+
+    def rung(f):
+        with scope():
+            df = persist(spark.range(100_000 * f).select(
                 F.col("id"),
                 F.when(F.col("id") % 10 < 8, F.lit("major"))
                 .otherwise(
@@ -1292,24 +1151,21 @@ def ntile_cd_probe(spark, factor: int) -> dict[str, float]:
                 )
                 .alias("lang"),
                 (F.xxhash64("id") % 1_000_000).alias("score"),
+            ))
+            df.count()
+            grouped_s, _ = _timed(
+                spark, "ntile_grouped_cd",
+                lambda: grouped_ntile_scalable(
+                    df, "lang", [F.col("score"), F.col("id")], n_buckets=3
+                ),
             )
-            .persist()
-        )
-        df.count()
-        t0 = time.perf_counter()
-        grouped_ntile_scalable(
-            df, "lang", [F.col("score"), F.col("id")], n_buckets=3
-        ).write.format("noop").mode("overwrite").save()
-        out[f"ntile_grouped_cd{label}"] = round(time.perf_counter() - t0, 2)
-        t0 = time.perf_counter()
-        w = Window.partitionBy("lang").orderBy("score", "id")
-        df.withColumn("bucket", F.ntile(3).over(w)).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        out[f"ntile_window_cd{label}"] = round(time.perf_counter() - t0, 2)
-        df.unpersist()
-        spark.catalog.clearCache()
-    return out
+            window_s, _ = _timed(
+                spark, "ntile_window_cd",
+                lambda: df.withColumn("bucket", F.ntile(3).over(w)),
+            )
+        return {"ntile_grouped_cd": grouped_s, "ntile_window_cd": window_s}
+
+    return _ladder(factor, rung)
 
 
 def shorts_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -1331,10 +1187,8 @@ def shorts_cd_probe(spark, factor: int) -> dict[str, float]:
     """
     from burst_db_spark.operators.multipattern import contained_short_pairs
 
-    out: dict[str, float] = {}
-
-    def snippets(corpus, every: int, keep_first: bool):
-        base = corpus.where(F.col("doc_id") % every == 0)
+    def snippets(corpus, keep_first: bool):
+        base = corpus.where(F.col("doc_id") % 7 == 0)
         if keep_first:
             base = base.where(F.col("doc_id") < SHIFT)
         return base.select(
@@ -1342,72 +1196,68 @@ def shorts_cd_probe(spark, factor: int) -> dict[str, float]:
             F.substring("text", 5, 8).alias("a_text"),
         )
 
-    for label, f in (("", 1), ("_big", factor)):
+    def rung(f):
         corpus = _cd_corpus(spark, f)
-        pats_fixed = snippets(corpus, 7, keep_first=True)
-        t0 = time.perf_counter()
-        contained_short_pairs(
-            corpus, pats_fixed, id_col="doc_id", text_col="text"
-        ).write.format("noop").mode("overwrite").save()
-        out[f"t_shorts_fixed_cd{label}"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
+        out = {}
+        for key, keep_first in (
+            ("t_shorts_fixed_cd", True), ("t_shorts_grow_cd", False)
+        ):
+            pats = snippets(corpus, keep_first)
+            out[key], _ = _timed(spark, key, lambda: contained_short_pairs(
+                corpus, pats, id_col="doc_id", text_col="text"
+            ))
+        return out
 
-        pats_grow = snippets(corpus, 7, keep_first=False)
-        t0 = time.perf_counter()
-        contained_short_pairs(
-            corpus, pats_grow, id_col="doc_id", text_col="text"
-        ).write.format("noop").mode("overwrite").save()
-        out[f"t_shorts_grow_cd{label}"] = round(time.perf_counter() - t0, 2)
-        spark.catalog.clearCache()
-    return out
+    return _ladder(factor, rung)
 
+
+def _hash_edges(spark, n: int):
+    """Directed edges of a deterministic hash graph on ``n`` nodes:
+    out-degree 2..4 per node from 3 multiplier/offset families, self
+    loops dropped. Its degree DISTRIBUTION is scale-invariant."""
+    ids = spark.range(n).select(F.col("id").alias("v"))
+    outd = ids.select(
+        "v", F.explode(F.sequence(F.lit(0), (F.col("v") % 3) + 1)).alias("i")
+    )
+    nbr = (
+        (F.col("v") * (F.col("i") * 2 + 3) + F.col("i") * 17 + 1) % F.lit(n)
+    ).alias("n")
+    return (
+        outd.select("v", nbr)
+        .where(F.col("v") != F.col("n"))
+        .select(F.col("v").alias("src"), F.col("n").alias("dst"))
+    )
 
 
 def kcore_cd_probe(spark, factor: int) -> dict[str, float]:
-    """Constant-structure scaling for the k-core peel: a deterministic
-    hash graph (out-degree 2..4 per node, 3 multiplier/offset families)
-    whose degree DISTRIBUTION is scale-invariant, so the peel runs the
-    same number of rounds at every N and each round is one degree
-    groupBy + two semi-joins on a strictly shrinking edge set — wall
-    should scale with edge volume, not rounds. Prices the registered
-    g6_kcore_peel machinery minus its audit-scale quadratic edge build
-    (which is sf-pinned for exactly this reason)."""
-    import time as _t
-
+    """Constant-structure scaling for the k-core peel on the undirected
+    hash graph of :func:`_hash_edges`: the peel runs the same number of
+    rounds at every N and each round is one degree groupBy + two
+    semi-joins on a strictly shrinking edge set — wall should scale
+    with edge volume, not rounds. Prices the registered g6_kcore_peel
+    machinery minus its audit-scale quadratic edge build (which is
+    sf-pinned for exactly this reason)."""
     from burst_db_spark.operators.graph import kcore_peel
 
-    out: dict[str, float] = {}
-    n_small = 20_000
-    for label, n in (("kcore", n_small), ("kcore_big", n_small * factor)):
-        ids = spark.range(n).select(F.col("id").alias("v"))
-        outd = ids.select(
-            "v",
-            F.explode(
-                F.sequence(F.lit(0), (F.col("v") % 3) + 1)
-            ).alias("i"),
-        )
-        nbr = (
-            (F.col("v") * (F.col("i") * 2 + 3) + F.col("i") * 17 + 1)
-            % F.lit(n)
-        ).alias("n")
-        e = (
-            outd.select("v", nbr)
-            .where(F.col("v") != F.col("n"))
-            .select(F.col("v").alias("src"), F.col("n").alias("dst"))
-        )
+    def rung(f):
+        n = 20_000 * f
+        e = _hash_edges(spark, n)
         edges = e.union(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).distinct()
-        t0 = _t.perf_counter()
-        prof = kcore_peel(edges, k=5, max_rounds=24).collect()
-        out[label] = round(_t.perf_counter() - t0, 2)
+        secs, prof = _timed(
+            spark, "kcore", lambda: kcore_peel(edges, k=5, max_rounds=24),
+            DataFrame.collect,
+        )
         rounds = max(r["round"] for r in prof)
         final = min(r["n_edges"] for r in prof)
         print(
-            f"  {label}: n={n} rounds={rounds} final_edges={final}",
+            f"  kcore x{f}: n={n} rounds={rounds} final_edges={final}",
             file=sys.stderr,
         )
-    return out
+        return {"kcore": secs}
+
+    return _ladder(factor, rung)
 
 
 def nnd_cd_probe(spark, factor: int) -> dict[str, float]:
@@ -1418,30 +1268,23 @@ def nnd_cd_probe(spark, factor: int) -> dict[str, float]:
     the init the N² term — priced at small factors only (it is the
     mistake the operator docstring warns against; at 100x it would be
     the whole wall)."""
-    import time as _t
-
     from burst_db_spark.operators.similarity import nn_descent
 
-    out: dict[str, float] = {}
     base_blocks = 16
-    for label, f in (("nnd", 1), ("nnd_big", factor)):
+
+    def rung(key: str, f: int, n_blocks: int):
         emb = _emb_replicated(spark, f)
-        t0 = _t.perf_counter()
-        nn_descent(
-            emb, k=5, n_blocks=base_blocks * f, rounds=2
-        ).count()
-        out[label] = round(_t.perf_counter() - t0, 2)
+        secs, _ = _timed(
+            spark, key, lambda: nn_descent(emb, k=5, n_blocks=n_blocks, rounds=2),
+            DataFrame.count,
+        )
+        return {key: secs}
+
+    out = _ladder(factor, lambda f: rung("nnd", f, base_blocks * f))
     if factor <= 10:
-        for label, f in (
-            ("nnd_fixed_blocks", 1),
-            ("nnd_fixed_blocks_big", factor),
-        ):
-            emb = _emb_replicated(spark, f)
-            t0 = _t.perf_counter()
-            nn_descent(
-                emb, k=5, n_blocks=base_blocks, rounds=2
-            ).count()
-            out[label] = round(_t.perf_counter() - t0, 2)
+        out.update(
+            _ladder(factor, lambda f: rung("nnd_fixed_blocks", f, base_blocks))
+        )
     else:
         print(
             "  nnd_fixed_blocks skipped at factor > 10 (the quadratic "
@@ -1451,78 +1294,54 @@ def nnd_cd_probe(spark, factor: int) -> dict[str, float]:
     return out
 
 
-
 def pca_cd_probe(spark, factor: int) -> dict[str, float]:
     """Scaling for the distributed gram aggregation behind
     knn_pca_power: per-partition numpy int64 partials (Q_p^T Q_p via
     mapInPandas) -> 4096 partial rows -> one groupBy sum. The
     eigensolve itself is 64x64 model state (driver, constant), so the
     whole operator should scale with the SCAN, not with rounds or k."""
-    import time as _t
 
     import numpy as np
     import pandas as pd
 
-    out: dict[str, float] = {}
-    for label, f in (("pca_gram", 1), ("pca_gram_big", factor)):
+    def partials(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+            Q = np.floor(X * 256.0).astype(np.int64)
+            G = Q.T @ Q
+            ii, jj = np.indices(G.shape)
+            yield pd.DataFrame(
+                {"i": (ii + 1).ravel(), "j": (jj + 1).ravel(), "s": G.ravel()}
+            )
+
+    def rung(f):
         emb = _emb_replicated(spark, f)
-        t0 = _t.perf_counter()
-
-        def _partials(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-                Q = np.floor(X * 256.0).astype(np.int64)
-                G = Q.T @ Q
-                ii, jj = np.indices(G.shape)
-                yield pd.DataFrame(
-                    {"i": (ii + 1).ravel(), "j": (jj + 1).ravel(),
-                     "s": G.ravel()}
-                )
-
-        (
-            emb.select("embedding")
-            .mapInPandas(_partials, "i int, j int, s long")
+        secs, _ = _timed(
+            spark, "pca_gram",
+            lambda: emb.select("embedding")
+            .mapInPandas(partials, "i int, j int, s long")
             .groupBy("i", "j")
-            .agg(F.sum("s").alias("s"))
-            .count()
+            .agg(F.sum("s").alias("s")),
+            DataFrame.count,
         )
-        out[label] = round(_t.perf_counter() - t0, 2)
-    return out
+        return {"pca_gram": secs}
 
+    return _ladder(factor, rung)
 
 
 def pagerank_cd_probe(spark, factor: int) -> dict[str, float]:
     """Prices the g1 rework: integer-mass PageRank (plain groupBy SUM —
     map-side combine works) vs the bit-exact double formulation (whose
     two-level src-ordered fold must disable partial aggregation). Same
-    deterministic hash graph as the kcore probe; 3 iterations each. The
-    double-fold variant runs at min(factor, 10) — its constant is the
-    point, not its asymptote."""
-    import time as _t
-
+    deterministic hash graph as the kcore probe, directed; 3 iterations
+    each. The double-fold variant runs at min(factor, 10) — its
+    constant is the point, not its asymptote."""
     from burst_db_spark.operators.graph import pagerank, pagerank_int
 
-    out: dict[str, float] = {}
-    n_small = 20_000
-
     def graph(n: int):
-        ids = spark.range(n).select(F.col("id").alias("v"))
-        outd = ids.select(
-            "v",
-            F.explode(F.sequence(F.lit(0), (F.col("v") % 3) + 1)).alias("i"),
-        )
-        nbr = (
-            (F.col("v") * (F.col("i") * 2 + 3) + F.col("i") * 17 + 1)
-            % F.lit(n)
-        ).alias("n")
-        e = (
-            outd.select("v", nbr)
-            .where(F.col("v") != F.col("n"))
-            .select(F.col("v").alias("src"), F.col("n").alias("dst"))
-            .distinct()
-        )
+        e = _hash_edges(spark, n).distinct()
         nodes = (
             e.select(F.col("src").alias("id"))
             .union(e.select(F.col("dst").alias("id")))
@@ -1531,20 +1350,22 @@ def pagerank_cd_probe(spark, factor: int) -> dict[str, float]:
         return e, nodes
 
     # warm both code paths once (codegen/JIT) so 1x timings compare
-    we, wn = graph(2_000)
-    pagerank_int(we, wn, iterations=1).count()
-    pagerank(we, wn, iterations=1).count()
-    for label, f in (("pagerank_int", 1), ("pagerank_int_big", factor)):
-        e, nodes = graph(n_small * f)
-        t0 = _t.perf_counter()
-        pagerank_int(e, nodes, iterations=3).count()
-        out[label] = round(_t.perf_counter() - t0, 2)
-    f2 = min(factor, 10)
-    for label, f in (("pagerank_fold", 1), ("pagerank_fold_big", f2)):
-        e, nodes = graph(n_small * f)
-        t0 = _t.perf_counter()
-        pagerank(e, nodes, iterations=3).count()
-        out[label] = round(_t.perf_counter() - t0, 2)
+    with scope():
+        we, wn = graph(2_000)
+        pagerank_int(we, wn, iterations=1).count()
+        pagerank(we, wn, iterations=1).count()
+
+    def rung(key: str, op, f: int):
+        e, nodes = graph(20_000 * f)
+        secs, _ = _timed(
+            spark, key, lambda: op(e, nodes, iterations=3), DataFrame.count
+        )
+        return {key: secs}
+
+    out = _ladder(factor, lambda f: rung("pagerank_int", pagerank_int, f))
+    out.update(
+        _ladder(min(factor, 10), lambda f: rung("pagerank_fold", pagerank, f))
+    )
     return out
 
 
@@ -1578,6 +1399,16 @@ _CD_PROBES = {
     "pagerank": pagerank_cd_probe,
 }
 
+
+# Single-JVM heap floors for the memory-bound top rungs (measured,
+# SCALING.md): below these the run GC-thrashes or OOMs rather than
+# finishing slow, so the probe refuses with the working command line
+# instead of wasting the wall-clock. The constants are the SINGLE-JVM
+# artifact — on a cluster the same state spreads across executors.
+_HEAP_FLOORS_GB = {
+    ("graph", 100): 32,        # BFS cached frontier + label frame
+    ("containment", 100): 32,  # full probe-side inverted index
+}
 
 _HEAP_UNITS_GB = {"k": 1.0 / (1024 * 1024), "m": 1.0 / 1024, "g": 1.0, "t": 1024.0}
 
@@ -1644,62 +1475,32 @@ def main() -> None:
         #   SPARK_DRIVER_MEMORY=32g python scale_probe.py 100 --probe containment
         _require_heap(probe, factor)
         spark = get_spark(app_name=f"scale_probe_{probe}")
+        head = {
+            "probe": probe,
+            "factor": factor,
+            "driver_memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        }
         cd = _CD_PROBES[probe](spark, factor)
-        small = {k: v for k, v in cd.items() if not k.endswith("_big")}
-        large = {k: cd[f"{k}_big"] for k in small if f"{k}_big" in cd}
-        ratio = {
-            k: round(large[k] / small[k], 1) if small.get(k) else None
-            for k in large
-        }
-        print(
-            json.dumps(
-                {
-                    "probe": probe,
-                    "factor": factor,
-                    "driver_memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
-                    "sf0.1_sec": small,
-                    f"sf{factor / 10:g}_sec": large,
-                    "ratio": ratio,
-                }
+    else:
+        spark = get_spark(app_name="scale_probe")
+        specs = all_queries()
+        head = {"factor": factor}
+        with scope():
+            big = tmpdir("bds_sf1_")
+            replicate(spark, SF_BASE, big, factor)
+            cd = time_queries(spark, specs, SF_BASE)
+            cd.update(
+                {f"{k}_big": v for k, v in time_queries(spark, specs, big).items()}
             )
-        )
-        return
-
-    spark = get_spark(app_name="scale_probe")
-    specs = all_queries()
-    base = "/root/testdata/sf0.1"
-    big = tempfile.mkdtemp(prefix="bds_sf1_")
-    try:
-        replicate(spark, base, big, factor)
-        small = time_queries(spark, specs, base)
-        large = time_queries(spark, specs, big)
-        cd = spatial_cd_probe(spark, n_small=100_000, factor=factor)
-        cd.update(jaccard_cd_probe(spark, factor))
-        cd.update(containment_cd_probe(spark, factor))
-        cd.update(int8_cd_probe(spark, factor))
-        cd.update(minhash_cd_probe(spark, factor))
-        cd.update(embedding_cd_probe(spark, factor))
-        cd.update(fuzzy_cd_probe(spark, factor))
-        cd.update(graph_cd_probe(spark, factor))
-        for k in [k for k in cd if not k.endswith("_big")]:
-            small[k] = cd[k]
-            large[k] = cd[f"{k}_big"]
-        ratio = {
-            k: round(large[k] / small[k], 1) if small[k] > 0 else None
-            for k in small
-        }
-        print(
-            json.dumps(
-                {
-                    "factor": factor,
-                    "sf0.1_sec": small,
-                    f"sf{factor / 10:g}_sec": large,
-                    "ratio": ratio,
-                }
-            )
-        )
-    finally:
-        shutil.rmtree(big, ignore_errors=True)
+        for family in (
+            "spatial", "jaccard", "containment", "int8", "minhash", "embedding",
+            "fuzzy", "graph",
+        ):
+            cd.update(_CD_PROBES[family](spark, factor))
+    small, large, ratio = split_ladder(cd)
+    print(json.dumps(
+        {**head, "sf0.1_sec": small, f"sf{factor / 10:g}_sec": large, "ratio": ratio}
+    ))
 
 
 if __name__ == "__main__":

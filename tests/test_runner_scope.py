@@ -164,10 +164,12 @@ def _py_files(*roots: str):
 
 
 def test_persists_and_staging_go_through_runner():
-    """Every persist and staging dir in the library is made through the
-    runner, and the per-frame release handles the scope replaced do not
-    come back."""
+    """Every persist and staging dir in the library and the harnesses is
+    made through the runner, the harnesses time only through ``run()``
+    (no timer or cache clearing of their own), and the per-frame release
+    handles the scope replaced do not come back."""
     direct = re.compile(r"\.persist\(|\.cache\(\)|mkdtemp")
+    harness = re.compile(direct.pattern + "|clearCache|perf_counter")
     handle = re.compile(r"_(dedup|grid_nn)_cached|release_")
     bad = [
         f"{p.relative_to(ROOT)}:{i}"
@@ -175,6 +177,12 @@ def test_persists_and_staging_go_through_runner():
         if p.name != "runner.py"
         for i, line in enumerate(p.read_text().splitlines(), 1)
         if direct.search(line)
+    ]
+    bad += [
+        f"{p.relative_to(ROOT)}:{i}"
+        for p in _py_files("scale_probe.py", "bench.py", "scripts")
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if harness.search(line)
     ]
     bad += [
         f"{p.relative_to(ROOT)}:{i}"
