@@ -267,7 +267,6 @@ HEADLINE = [
     # round-14 additions (build round 14)
     "knn_hier2_assign",
     "t_gopher_repetition",
-    "t_bpe_fertility_by_lang",
     "g6_kcore_peel",
     "t_domain_jsd",
     "t_rake_keywords",

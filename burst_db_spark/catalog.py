@@ -104,9 +104,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         return _normalize_ntz(df)
     return _normalize_ntz(spark.read.parquet(path))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` works on them."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

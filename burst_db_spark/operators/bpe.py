@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from burst_db_spark.operators.text import tokens
-from burst_db_spark.runner import persist
+from burst_db_spark.runner import checkpoint, persist, release
 
 
 def word_types(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -174,17 +174,15 @@ def train_bpe(
         sym = F.col("sym")
         for _, left, right, _ in batch:
             sym = _merge_pair(sym, left, right)
-        # localCheckpoint (eager), not persist: persist keeps the full
-        # lineage, and the fold expressions nest one level per merge —
-        # by ~30 sequential merges the logical plan string alone OOMs
-        # the driver. Checkpointing truncates the plan to an RDD scan,
-        # so plan size stays O(batch) regardless of total merges.
-        new_state = state.select(sym.alias("sym"), F.col("n")).localCheckpoint(
-            eager=True
-        )
-        state.unpersist()
+        # checkpoint, not persist: persist keeps the full lineage, and
+        # the fold expressions nest one level per merge — by ~30
+        # sequential merges the logical plan string alone OOMs the
+        # driver. Checkpointing truncates the plan to an RDD scan, so
+        # plan size stays O(batch) regardless of total merges.
+        new_state = checkpoint(state.select(sym.alias("sym"), F.col("n")))
+        release(state)
         state = new_state
-    state.unpersist()
+    release(state)
     return merges
 
 

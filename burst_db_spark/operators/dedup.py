@@ -18,8 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from burst_db_spark.operators.text import shingles, tokens
-from burst_db_spark.runner import persist
-from burst_db_spark.session import fan_out
+from burst_db_spark.runner import checkpoint, persist, release
+from burst_db_spark.session import broadcastable, fan_out
 
 NUM_HASHES = 16
 BAND_ROWS = 4  # 16 hashes → 4 bands of 4
@@ -786,19 +786,13 @@ def connected_components(
     Both paths produce the identical (id, cluster_id) relation: the
     component-minimum label.
     """
-    p = pairs.select("id_a", "id_b")
-    # Optimization r14 (cache hygiene): when the caller already persisted
-    # the pair frame and it is exactly (id_a, id_b), this projection is a
-    # no-op whose analyzed plan ALIASES the caller's cache entry — a
-    # persist here is then "already cached" and the cleanup unpersist
-    # below would EVICT the caller's cache (measured: every downstream
-    # consumer of dd_cluster_modularity's persisted pair list silently
-    # re-ran the full shingle self-join, ~3.8 s of warm exec). Only
-    # create — and only release — a cache this function actually owns.
-    lvl = p.storageLevel
-    owns_cache = not (lvl.useMemory or lvl.useDisk)
-    if owns_cache:
-        p = persist(p)
+    # when the caller already persisted the pair frame and it is exactly
+    # (id_a, id_b), this projection's plan ALIASES the caller's cache
+    # entry; persist then caches nothing and release below frees nothing,
+    # so the caller's cache outlives this call (evicting it once made
+    # every downstream consumer of dd_cluster_modularity's pair list
+    # re-run the shingle self-join)
+    p = persist(pairs.select("id_a", "id_b"))
     n_pairs = p.count()
     if n_pairs <= local_edge_gate:
         # one parallel-fetch collect of the RAW pair list — union-find
@@ -806,8 +800,7 @@ def connected_components(
         # (duplicate/undirected edges are harmless), so the local path
         # skips both shuffles entirely
         rows = p.collect()
-        if owns_cache:
-            p.unpersist()
+        release(p)
         parent: dict = {}
 
         def find(x):
@@ -846,25 +839,24 @@ def connected_components(
     # HITS, k-core/k-truss peels) fixes both the re-execution AND the
     # plan growth: eager localCheckpoint per round truncates lineage,
     # and the convergence probe reads stored blocks, not a recompute.
-    edges = (
+    edges = checkpoint(
         p.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
             p.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    if owns_cache:
-        p.unpersist()  # edges materialized; the raw-pair cache can go
-    labels = vertices.select(
+    release(p)  # edges materialized; the raw-pair cache can go
+    labels = checkpoint(vertices.select(
         F.col(id_col).alias("src"), F.col(id_col).alias("cluster_id")
-    ).localCheckpoint(eager=True)
+    ))
     # join strategy by MEASURED size (the checkpoint makes the count a
     # stored-block count, and labels stays one row per vertex every
     # round, so the gate is loop-invariant): broadcast the node-sized
     # label frame while it fits, hash equi-join past the gate — the
     # 100 TB fallback (guide §3; the g3/g5 gate device).
-    bcast_labels = labels.count() <= 500_000
+    bcast_labels = broadcastable(labels.count())
+    held = labels
     for _ in range(max_iters):
         lbl = labels.withColumnRenamed("src", "dst")
         if bcast_labels:
@@ -878,7 +870,7 @@ def connected_components(
         # something" ⟺ some neighbor-min undercut the old label — carried
         # as a flag in the SAME pass (the old shape re-joined new vs old
         # labels purely for change detection: one extra shuffle per round)
-        new_labels = (
+        new_labels = checkpoint(
             labels.join(neighbor_min, "src", "left")
             .select(
                 "src",
@@ -887,8 +879,9 @@ def connected_components(
                 ).alias("cluster_id"),
                 (F.col("nmin") < F.col("cluster_id")).alias("__changed"),
             )
-            .localCheckpoint(eager=True)
         )
+        release(held)  # the round this one replaces
+        held = new_labels
         changed = new_labels.where("__changed").limit(1).count()
         labels = new_labels.drop("__changed")
         if changed == 0:

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from burst_db_spark.runner import persist
+from burst_db_spark.runner import checkpoint, persist, release
 from burst_db_spark.session import fan_out, parallelism
 
 
@@ -928,10 +928,10 @@ def kmeans_unrolled_stats(
             # round-over-round plan sends Catalyst analysis time
             # superlinear (measured: the d4 100x probe stalled >10 min
             # of pure driver CPU before any stage launched). The
-            # centroid frame is k rows — an eager localCheckpoint
+            # centroid frame is k rows — an eager checkpoint
             # materializes the model, not data, and the exact flat path
             # (every oracle-checked k=16 row) keeps its pure plan.
-            cur = cur.localCheckpoint(eager=True)
+            cur = checkpoint(cur)
     if funnel:
         # downstream consumers (stats here; pair join / flags / prune in
         # the SemDeDup pipeline) reference the final assignment several
@@ -2001,13 +2001,13 @@ def nn_descent(
     out-neighbors ∪ their out-neighbors ∪ in-neighbors: O(N·k²)
     candidates, shuffle-joined back to the code table — never an
     all-pairs sweep. Returns (v, n, dp) — the directed k-NN graph."""
-    q = emb.select(
+    q = checkpoint(emb.select(
         F.col(id_col).alias("vec_id"),
         F.expr(
             f"transform(cast({vec_col} as array<double>),"
             " x -> cast(floor(x * 127) as bigint))"
         ).alias("qv"),
-    ).localCheckpoint(eager=True)
+    ))
 
     import numpy as np
 
@@ -2092,7 +2092,7 @@ def nn_descent(
         .groupBy("v", "n")
         .agg(F.max("dp").alias("dp"))
     )
-    knn = _topk(scored0).localCheckpoint(eager=True)
+    knn = checkpoint(_topk(scored0))
     for _ in range(rounds):
         nbr2 = (
             knn.alias("x")
@@ -2105,7 +2105,9 @@ def nn_descent(
         )
         rev = knn.select(F.col("n").alias("v"), F.col("v").alias("n"))
         cands = knn.select("v", "n").union(nbr2).union(rev).distinct()
-        knn = _topk(_score(cands)).localCheckpoint(eager=True)
+        nxt = checkpoint(_topk(_score(cands)))
+        release(knn)
+        knn = nxt
     return knn
 
 

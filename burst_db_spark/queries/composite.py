@@ -134,13 +134,13 @@ def a2_dissolve_multiagg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL (example-queries.sql:76-79) via Spark SQL (3.4+)."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_gba")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
                count(*) AS n
-        FROM lineitem_gba GROUP BY ALL
-        """
+        FROM {lineitem} GROUP BY ALL
+        """,
+        lineitem=load(spark, sf_dir, "lineitem"),
     )
 
 

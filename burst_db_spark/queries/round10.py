@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from burst_db_spark.catalog import load
 from burst_db_spark.operators.packing import epoch_shuffle
 from burst_db_spark.registry import register
-from burst_db_spark.runner import persist, tmpdir
+from burst_db_spark.runner import checkpoint, persist, tmpdir
 from burst_db_spark.streaming import drain
 
 # ---------------------------------------------------------------------------
@@ -872,14 +872,14 @@ def dd_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference re-inlines the whole LSH candidate pipeline into the
     # final plan (measured 109–193 Exchange nodes vs 16 checkpointed,
     # with the spine re-executing the candidate joins at final exec)
-    mapped = (
+    mapped = checkpoint(
         new_pairs.join(lbl_a, "id_a", "left")
         .join(lbl_b, "id_b", "left")
         .select(
             F.coalesce("ca", F.col("id_a")).alias("id_a"),
             F.coalesce("cb", F.col("id_b")).alias("id_b"),
         )
-    ).localCheckpoint()
+    )
     nodes = (
         docs.where(is_new)
         .select("doc_id")

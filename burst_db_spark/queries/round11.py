@@ -810,10 +810,8 @@ def f_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate), so this row pins that the new surface is plan-neutral,
     not just syntax sugar. Decimal-accumulated revenue keeps the double
     bit-identical across engines (the q5 idiom)."""
-    li = load(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("pipe_lineitem")
     return spark.sql("""
-        FROM pipe_lineitem
+        FROM {lineitem}
         |> WHERE l_shipdate >= TIMESTAMP '1997-01-01'
         |> EXTEND CAST(l_extendedprice * (1 - l_discount)
                        AS DECIMAL(18, 6)) AS rev
@@ -822,7 +820,7 @@ def f_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
                      CAST(COUNT(*) AS BIGINT) AS n_lines
            GROUP BY l_returnflag
         |> SELECT l_returnflag, revenue, n_lines
-    """)
+    """, lineitem=load(spark, sf_dir, "lineitem"))
 
 # ---------------------------------------------------------------------------
 # DD: winnow overlap pairs -> duplicate clusters (the MOSS pipeline

@@ -49,7 +49,7 @@ from burst_db_spark.operators import text as tx
 from burst_db_spark.queries.similarity import _cos_sql
 from burst_db_spark.queries.textops import _TOKS
 from burst_db_spark.registry import register
-from burst_db_spark.runner import persist, scope, tmpdir
+from burst_db_spark.runner import persist, tmpdir
 from burst_db_spark.session import fan_out
 from burst_db_spark.streaming import drain
 
@@ -846,31 +846,29 @@ def dd_cluster_bcubed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = persist(dd.doc_shingles(docs, "doc_id"))
     sh.count()
 
-    # connected_components is eager and its labels depend on no persist,
-    # so each pipeline's pair caches are released as soon as it returns
+    # the pool threads register in this query's scope: on CC's iterative
+    # path the returned labels ARE checkpoints, which an inner scope
+    # would release before the contingency join reads them
     def _pred() -> DataFrame:
-        with scope():
-            lsh_pairs = dd.minhash_lsh_dedup(
-                docs, "doc_id", threshold=_B3_TAU, shingles=sh
-            )
-            return dd.connected_components(
-                lsh_pairs.select("id_a", "id_b"), docs, "doc_id"
-            )
+        lsh_pairs = dd.minhash_lsh_dedup(
+            docs, "doc_id", threshold=_B3_TAU, shingles=sh
+        )
+        return dd.connected_components(
+            lsh_pairs.select("id_a", "id_b"), docs, "doc_id"
+        )
 
     def _gold() -> DataFrame:
-        with scope():
-            gold_pairs = dd.ngram_jaccard_pairs(
-                docs, "doc_id", threshold=_B3_TAU, max_df=_B3_MAX_DF, shingles=sh
-            )
-            return dd.connected_components(
-                gold_pairs.select("id_a", "id_b"), docs, "doc_id"
-            )
+        gold_pairs = dd.ngram_jaccard_pairs(
+            docs, "doc_id", threshold=_B3_TAU, max_df=_B3_MAX_DF, shingles=sh
+        )
+        return dd.connected_components(
+            gold_pairs.select("id_a", "id_b"), docs, "doc_id"
+        )
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         fp = pool.submit(copy_context().run, _pred)
         fg = pool.submit(copy_context().run, _gold)
         pred_cc, gold_cc = fp.result(), fg.result()
-    sh.unpersist()
     pred = pred_cc.select("doc_id", F.col("cluster_id").alias("pred_id"))
     gold = gold_cc.select("doc_id", F.col("cluster_id").alias("gold_id"))
     cells = pred.join(gold, "doc_id").groupBy("pred_id", "gold_id").agg(

@@ -42,8 +42,8 @@ from pyspark.sql import functions as F
 from burst_db_spark.catalog import load
 from burst_db_spark.operators import similarity as sim
 from burst_db_spark.registry import register
-from burst_db_spark.runner import persist, tmpdir
-from burst_db_spark.session import fan_out
+from burst_db_spark.runner import checkpoint, persist, tmpdir
+from burst_db_spark.session import broadcastable, fan_out
 from burst_db_spark.streaming import drain
 
 # -- Hierarchical (funnel) codebook assignment, oracle-checked -----------------
@@ -1288,9 +1288,7 @@ def g5_hits_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the EXACT integer (mass·2^20) div max_mass (round-14 midpoint
     audit: the old round(h/mx, 6) had a pre-image within 1e-9 of a 6dp
     midpoint at sf0.01 — tests/test_midpoint_property.py now forbids
-    that class). Contrast
-    pagerank's double-valued rounds, which need the two-level
-    source-ordered fold for bit parity.
+    that class). Same integer device as g1's pagerank_int.
 
     Scale shape: each half-round is one edges⋈scores hash join + one
     groupBy — the same bounded shuffle pair as a PageRank step; scores
@@ -1315,31 +1313,28 @@ def g5_hits_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 86 exchanges). A lazy persist does not help: the consumers run as
     # parallel stages of one job and race to materialize the same cache.
     # Eagerly materialize each half-round's node-sized score frame
-    # (localCheckpoint — the repo's standard iterative device; integer
+    # (checkpoint — the repo's standard iterative device; integer
     # sums are shuffle-order-free, so values are identical), and pick
     # the score-side join strategy by MEASURED size: broadcast while it
     # fits (the checkpoint makes the count a stored-block count), else
     # the hash equi-join — the 100 TB fallback (the n_sig gate device).
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True)
-
     def _fit(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if df.count() <= 500_000 else df
+        return F.broadcast(df) if broadcastable(df.count()) else df
 
-    h1 = _ckpt(
+    h1 = checkpoint(
         edges.groupBy("src").agg(F.count("*").cast("bigint").alias("h"))
     )
-    a1 = _ckpt(
+    a1 = checkpoint(
         edges.join(_fit(h1), "src")
         .groupBy("dst")
         .agg(F.sum("h").cast("bigint").alias("a"))
     )
-    h2 = _ckpt(
+    h2 = checkpoint(
         edges.join(_fit(a1), "dst")
         .groupBy("src")
         .agg(F.sum("a").cast("bigint").alias("h"))
     )
-    a2 = _ckpt(
+    a2 = checkpoint(
         edges.join(_fit(h2), "src")
         .groupBy("dst")
         .agg(F.sum("h").cast("bigint").alias("a"))

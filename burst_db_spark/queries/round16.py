@@ -23,7 +23,8 @@ from burst_db_spark.catalog import load
 from burst_db_spark.operators import text as tx
 from burst_db_spark.plans.bpe_oracle import bpe_fertility_oracle_sql
 from burst_db_spark.registry import register
-from burst_db_spark.runner import persist, tmpdir
+from burst_db_spark.runner import checkpoint, persist, tmpdir
+from burst_db_spark.session import broadcastable
 
 _TOKS = r"string_split_regex(lower(trim(text)), '\s+')"
 
@@ -1463,22 +1464,21 @@ def g8_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     pairs = int_cos_edges(emb, num=3, den=10)
-    edges = pairs.select(
+    edges = checkpoint(pairs.select(
         F.col("ia").alias("src"), F.col("ib").alias("dst")
     ).unionAll(
         pairs.select(F.col("ib").alias("src"), F.col("ia").alias("dst"))
-    ).localCheckpoint(eager=True)
+    ))
     truth = emb.select(
         "vec_id", F.col("label").cast("bigint").alias("true_label")
     )
-    seed = (
+    seed = checkpoint(
         emb.where(F.col("vec_id") % _LP_SEED_MOD == 0)
         .select(
             F.col("vec_id").alias("v"),
             F.col("label").cast("bigint").alias("lab"),
             F.lit(0).cast("bigint").alias("assigned_round"),
         )
-        .localCheckpoint(eager=True)
     )
     # r15 (guide §2.3/§5; VERDICT r14 item 3 — frontier-proportional
     # rounds): the r14 loop checkpointed the WHOLE labeled set each
@@ -1487,11 +1487,12 @@ def g8_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round now eagerly checkpoints only the NEW layer — the frontier,
     # exactly the work the round computes — and `labeled` is the lazy
     # union of the per-layer checkpoint leaves (plan grows one leaf per
-    # round; no compounding subtree, the g4 lesson). The gate becomes
+    # round; no compounding subtree, the g4 lesson), so no layer is
+    # released before the query's scope exits. The gate becomes
     # loop-invariant: labeled ⊆ nodes always, so one node count decides
     # broadcast for every round (same relation either way; strategy
     # does not change the votes).
-    small = emb.count() <= 500_000
+    small = broadcastable(emb.count())
     labeled = seed
     for r in range(1, _LP_ROUNDS + 1):
         lab_dst = labeled.select(F.col("v").alias("dst"), "lab")
@@ -1505,13 +1506,12 @@ def g8_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("cnt"))
         )
         wv = Window.partitionBy("v").orderBy(F.col("cnt").desc(), "lab")
-        new = (
+        new = checkpoint(
             votes.withColumn("rk", F.row_number().over(wv))
             .where(F.col("rk") == 1)
             .select(
                 "v", "lab", F.lit(r).cast("bigint").alias("assigned_round")
             )
-            .localCheckpoint(eager=True)
         )
         # monotone BFS-layer semantics (docstring): an empty frontier
         # stays empty, so later rounds add nothing — stop paying for

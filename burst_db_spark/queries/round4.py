@@ -436,12 +436,9 @@ def g1_pagerank3(spark: SparkSession, sf_dir: str) -> DataFrame:
     steps, d=0.85, ALL-INTEGER mass (2^40 units, trunc-div damping —
     operators/graph.pagerank_int). Integer sums are order-free, so each
     step is ONE plain join+groupBy-SUM shuffle with map-side combine —
-    the 100 TB formulation; the double-valued variant
-    (operators/graph.pagerank), whose bit-exactness needs the two-level
-    src-ordered fold that disables partial aggregation, stays as the
-    pytest-covered library path. Reworked build-round 14 (8.4 s → the
-    plain-sum plan; values changed from doubles to rank_fx bigints in
-    lockstep with the oracle)."""
+    the 100 TB formulation. Reworked build-round 14 from a double-valued
+    fold (8.4 s → the plain-sum plan; values changed from doubles to
+    rank_fx bigints in lockstep with the oracle)."""
     from burst_db_spark.operators.graph import pagerank_int
 
     li = load(spark, sf_dir, "lineitem")

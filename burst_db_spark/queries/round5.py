@@ -3,8 +3,9 @@ flavors — EXISTS, scalar subquery, EXISTS + NOT EXISTS), the derived
 BPE-reconstruction oracle, watermarked append-mode streaming, and the
 K6/K4 sink round-trips promoted to driver-checkable rows.
 
-The three TPC-H flavors run through ``spark.sql`` with the IDENTICAL
-correlated SQL the DuckDB oracle executes — the point is decorrelation
+The TPC-H flavors run through ``spark.sql`` with the IDENTICAL
+correlated SQL the DuckDB oracle executes (one ``{table}`` template,
+formatted with frames for Spark and with plain table names for DuckDB) — the point is decorrelation
 evidence: Catalyst must rewrite the correlated EXISTS / NOT EXISTS /
 scalar subquery into semi/anti/aggregate joins with no nested-loop or
 cartesian fallback (plan-shape-tested in tests/test_plan_shapes.py).
@@ -24,10 +25,24 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from burst_db_spark.catalog import load, register_views
+from burst_db_spark.catalog import TABLES, load
 from burst_db_spark.registry import register
 from burst_db_spark.runner import tmpdir
 from burst_db_spark.streaming import drain, run_drain
+
+
+def _sql(spark: SparkSession, sf_dir: str, template: str) -> DataFrame:
+    """``template`` over the ``{table}`` tables it names: ``spark.sql``
+    views each loaded frame under a unique name and drops the views
+    before it returns, so the query leaves no view behind."""
+    used = [t for t in TABLES if f"{{{t}}}" in template]
+    return spark.sql(template, **{t: load(spark, sf_dir, t) for t in used})
+
+
+def _oracle(template: str) -> str:
+    """``template`` over the plain table names, for DuckDB."""
+    return template.format(**{t: t for t in TABLES})
+
 
 # ---------------------------------------------------------------------------
 # TPC-H Q4 flavor: EXISTS → left-semi join
@@ -35,11 +50,11 @@ from burst_db_spark.streaming import drain, run_drain
 
 _Q4_SQL = """
     SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-    FROM orders
+    FROM {orders}
     WHERE o_orderdate >= TIMESTAMP '1996-01-01'
       AND o_orderdate < TIMESTAMP '1996-04-01'
       AND EXISTS (
-          SELECT 1 FROM lineitem
+          SELECT 1 FROM {lineitem}
           WHERE l_orderkey = o_orderkey
             AND l_shipdate > o_orderdate + INTERVAL 30 DAY
       )
@@ -49,7 +64,7 @@ _Q4_SQL = """
 
 @register(
     "q4_order_priority",
-    oracle=_Q4_SQL,
+    oracle=_oracle(_Q4_SQL),
     tags=("TPCH", "Q4", "exists", "subquery"),
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,8 +73,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     The correlated EXISTS (with a NON-equality correlated conjunct on
     o_orderdate) must decorrelate to a LeftSemi hash join — the filter
     on orders pushes to the scan, the semi join shuffles on orderkey."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q4_SQL)
+    return _sql(spark, sf_dir, _Q4_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -69,11 +83,11 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q17_SQL = """
     SELECT CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18, 6)))
                 AS DECIMAL(28, 6)) AS DOUBLE) / 7.0 AS avg_yearly
-    FROM lineitem, part
+    FROM {lineitem}, {part}
     WHERE p_partkey = l_partkey
       AND p_brand = 'Brand#23'
       AND l_quantity < (
-          SELECT 0.2 * avg(l_quantity) FROM lineitem l2
+          SELECT 0.2 * avg(l_quantity) FROM {lineitem} l2
           WHERE l2.l_partkey = p_partkey
       )
 """
@@ -81,7 +95,7 @@ _Q17_SQL = """
 
 @register(
     "q17_small_qty_revenue",
-    oracle=_Q17_SQL,
+    oracle=_oracle(_Q17_SQL),
     tags=("TPCH", "Q17", "scalar-subquery"),
 )
 def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,8 +104,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     must decorrelate into ONE aggregate over lineitem joined back on
     partkey — not a per-row re-scan. l_quantity is integer-valued so
     the avg is double-exact on both engines."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q17_SQL)
+    return _sql(spark, sf_dir, _Q17_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -100,18 +113,18 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q21_SQL = """
     SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-    FROM supplier, lineitem l1, orders, nation
+    FROM {supplier}, {lineitem} l1, {orders}, {nation}
     WHERE s_suppkey = l1.l_suppkey
       AND o_orderkey = l1.l_orderkey
       AND o_orderstatus = 'F'
       AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
       AND EXISTS (
-          SELECT 1 FROM lineitem l2
+          SELECT 1 FROM {lineitem} l2
           WHERE l2.l_orderkey = l1.l_orderkey
             AND l2.l_suppkey <> l1.l_suppkey
       )
       AND NOT EXISTS (
-          SELECT 1 FROM lineitem l3
+          SELECT 1 FROM {lineitem} l3
           WHERE l3.l_orderkey = l1.l_orderkey
             AND l3.l_suppkey <> l1.l_suppkey
             AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY
@@ -126,7 +139,7 @@ _Q21_SQL = """
 
 @register(
     "q21_suppliers_waiting",
-    oracle=_Q21_SQL,
+    oracle=_oracle(_Q21_SQL),
     tags=("TPCH", "Q21", "exists", "not-exists", "anti-join"),
 )
 def q21_suppliers_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -135,8 +148,7 @@ def q21_suppliers_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT EXISTS → left-anti, both on orderkey with non-equality residual
     conjuncts; the top-k carries s_name as the tie-break so LIMIT is
     deterministic across engines."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q21_SQL)
+    return _sql(spark, sf_dir, _Q21_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -425,11 +437,11 @@ def q12_late_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q16_SQL = """
     SELECT p_brand, p_type,
            CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-    FROM part JOIN lineitem ON p_partkey = l_partkey
+    FROM {part} JOIN {lineitem} ON p_partkey = l_partkey
     WHERE p_brand <> 'Brand#5'
       AND p_size IN (1, 4, 7)
       AND l_suppkey NOT IN (
-          SELECT s_suppkey FROM supplier WHERE s_acctbal < 0
+          SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0
       )
     GROUP BY p_brand, p_type
 """
@@ -437,7 +449,7 @@ _Q16_SQL = """
 
 @register(
     "q16_supplier_cnt",
-    oracle=_Q16_SQL,
+    oracle=_oracle(_Q16_SQL),
     tags=("TPCH", "Q16", "not-in", "null-aware-anti-join"),
 )
 def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -446,8 +458,7 @@ def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     the null-aware anti-join shape (NOT IN must treat a NULL in the
     subquery as 'exclude everything', which Spark plans as a null-aware
     BroadcastHashJoin LeftAnti, never a nested loop)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q16_SQL)
+    return _sql(spark, sf_dir, _Q16_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -458,11 +469,11 @@ _Q18_SQL = """
     SELECT c_name, CAST(o_orderkey AS BIGINT) AS o_orderkey,
            CAST(o_totalprice AS DOUBLE) AS o_totalprice,
            CAST(sum(l_quantity) AS BIGINT) AS total_qty
-    FROM customer
-    JOIN orders ON c_custkey = o_custkey
-    JOIN lineitem ON o_orderkey = l_orderkey
+    FROM {customer}
+    JOIN {orders} ON c_custkey = o_custkey
+    JOIN {lineitem} ON o_orderkey = l_orderkey
     WHERE o_orderkey IN (
-        SELECT l_orderkey FROM lineitem
+        SELECT l_orderkey FROM {lineitem}
         GROUP BY l_orderkey HAVING sum(l_quantity) > 250
     )
     GROUP BY c_name, o_orderkey, o_totalprice
@@ -473,7 +484,7 @@ _Q18_SQL = """
 
 @register(
     "q18_large_volume",
-    oracle=_Q18_SQL,
+    oracle=_oracle(_Q18_SQL),
     tags=("TPCH", "Q18", "in-subquery", "having"),
 )
 def q18_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -483,8 +494,7 @@ def q18_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same key the main join uses, so AQE can reuse the exchange).
     l_quantity is integer-valued, so the sums are double-exact; the
     top-k carries o_orderkey as the tie-break."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q18_SQL)
+    return _sql(spark, sf_dir, _Q18_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -493,11 +503,11 @@ def q18_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q20_SQL = """
     SELECT s_name, CAST(s_acctbal AS DOUBLE) AS s_acctbal
-    FROM supplier
+    FROM {supplier}
     WHERE s_suppkey IN (
-        SELECT l_suppkey FROM lineitem
+        SELECT l_suppkey FROM {lineitem}
         WHERE l_partkey IN (
-            SELECT p_partkey FROM part WHERE p_name LIKE 'blue%'
+            SELECT p_partkey FROM {part} WHERE p_name LIKE 'blue%'
         )
         GROUP BY l_suppkey
         HAVING sum(l_quantity) > 400
@@ -508,7 +518,7 @@ _Q20_SQL = """
 
 @register(
     "q20_part_shippers",
-    oracle=_Q20_SQL,
+    oracle=_oracle(_Q20_SQL),
     tags=("TPCH", "Q20", "nested-in"),
 )
 def q20_part_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -518,8 +528,7 @@ def q20_part_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate only sees matching rows; the outer semi join then prunes
     supplier). The LIKE prefix filter pushes to the part scan as a
     StartsWith."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q20_SQL)
+    return _sql(spark, sf_dir, _Q20_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -531,15 +540,15 @@ _Q22_SQL = """
            CAST(count(*) AS BIGINT) AS numcust,
            CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(18, 6)))
                 AS DECIMAL(28, 6)) AS DOUBLE) AS totacctbal
-    FROM customer
+    FROM {customer}
     WHERE c_acctbal * (
-            SELECT count(*) FROM customer WHERE c_acctbal > 0.0
+            SELECT count(*) FROM {customer} WHERE c_acctbal > 0.0
           ) > (
             SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18, 6))) AS DOUBLE)
-            FROM customer WHERE c_acctbal > 0.0
+            FROM {customer} WHERE c_acctbal > 0.0
           )
       AND NOT EXISTS (
-            SELECT 1 FROM orders
+            SELECT 1 FROM {orders}
             WHERE o_custkey = c_custkey
               AND o_orderdate >= TIMESTAMP '2001-01-01'
           )
@@ -549,7 +558,7 @@ _Q22_SQL = """
 
 @register(
     "q22_global_sales_opportunity",
-    oracle=_Q22_SQL,
+    oracle=_oracle(_Q22_SQL),
     tags=("TPCH", "Q22", "not-exists", "scalar-subquery"),
 )
 def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -560,8 +569,7 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     balance x count > decimal-exact sum — bit-identical on both
     engines. NOT EXISTS decorrelates to a left-anti join on custkey;
     the two uncorrelated scalars are one-row broadcasts."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q22_SQL)
+    return _sql(spark, sf_dir, _Q22_SQL)
 
 
 # ---------------------------------------------------------------------------

@@ -634,16 +634,15 @@ def f_udtf_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield doc_id, idx, piece
 
     spark.udtf.register("sentence_split", SentenceSplit)
-    docs = load(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("__docs_for_udtf")
     return spark.sql(
         """
         SELECT t.doc_id, t.sent_idx, t.sentence
-        FROM __docs_for_udtf d,
+        FROM {docs} d,
              LATERAL sentence_split(d.doc_id, d.text) t
         ORDER BY t.doc_id, t.sent_idx
         LIMIT 500
-        """
+        """,
+        docs=load(spark, sf_dir, "documents"),
     )
 
 

@@ -27,9 +27,10 @@ from pyspark.sql import functions as F
 
 from burst_db_spark.catalog import load
 from burst_db_spark.operators import dedup as dd
+from burst_db_spark.operators.graph import bfs_hops
 from burst_db_spark.queries.textops import _SHINGLES_CTE
 from burst_db_spark.registry import register
-from burst_db_spark.runner import tmpdir
+from burst_db_spark.runner import checkpoint, tmpdir
 
 # ---------------------------------------------------------------------------
 # DD: exact Jaccard join via prefix filtering (lossless — oracle is the
@@ -619,18 +620,17 @@ def g3_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replicated ~8x). A lazy persist does NOT fix this — the branches
     # run as parallel stages of ONE job and race to materialize the
     # same cache, so each still computes the subtree. Eagerly
-    # materialize the edge list and each round's node-sized dist via
-    # localCheckpoint (the repo's standard iterative device: CC, k-truss
+    # materialize the edge list here and each round's node-sized dist
+    # in bfs_hops (the repo's standard iterative device: CC, k-truss
     # peeling); the min-hop integer fold is deterministic, so values
     # are identical.
-    dir_edges = (
+    dir_edges = checkpoint(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
             F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
             F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     edges = dir_edges.unionByName(
         dir_edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -640,24 +640,7 @@ def g3_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.substring("v", 2, 100).cast("bigint") % 100 == 0)
         .distinct()
     )
-    dist = seeds.select(
-        "v", F.lit(0).cast("int").alias("hop")
-    ).localCheckpoint(eager=True)
-    for _ in range(3):
-        # frontier join strategy by MEASURED size (the checkpoint makes
-        # the count a stored-block count, not a recompute): broadcast
-        # the frontier while it fits, else the hash equi-join — the
-        # 100 TB fallback (guide §3; the n_sig gate device).
-        d = F.broadcast(dist) if dist.count() <= 500_000 else dist
-        nbr = edges.join(d, edges.src == d.v).select(
-            F.col("dst").alias("v"), (F.col("hop") + 1).alias("hop")
-        )
-        dist = (
-            dist.unionByName(nbr)
-            .groupBy("v")
-            .agg(F.min("hop").cast("int").alias("hop"))
-            .localCheckpoint(eager=True)
-        )
+    dist = bfs_hops(edges, seeds, rounds=3)
     return (
         dist.groupBy("hop")
         .agg(

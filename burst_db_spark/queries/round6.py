@@ -663,7 +663,7 @@ def f_recursive_cte_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     (w12_linear_interpolation) — one generate, no iterative plan; this
     row exists to pin the recursion feature itself, the SQL analog of
     the engine's iterative operators (connected components, PageRank)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("ev_r6_spine")
+    events = load(spark, sf_dir, "events")
     # r15 restructure (guide §2.3/§5; VERDICT r14 item 4). The original
     # one-day-per-step recursion (plans/r15/f_recursive_cte_gapfill_
     # before.txt) had TWO surplus costs the plan dump proves: (a) the
@@ -681,7 +681,8 @@ def f_recursive_cte_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     row = spark.sql(
         "SELECT CAST(min(ts) AS DATE) AS lo, CAST(max(ts) AS DATE) AS hi,"
         " datediff(CAST(max(ts) AS DATE), CAST(min(ts) AS DATE)) AS n"
-        " FROM ev_r6_spine"
+        " FROM {events}",
+        events=events,
     ).first()
     if row["lo"] is None:
         # empty input: the original anchor emits one NULL row and the
@@ -703,14 +704,14 @@ def f_recursive_cte_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH spine AS ({spine_sql}),
         daily AS (
             SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS n
-            FROM ev_r6_spine GROUP BY 1
+            FROM {{events}} GROUP BY 1
         )
         SELECT s.d AS day,
                CAST(coalesce(daily.n, 0) AS BIGINT) AS n_events,
                coalesce(daily.n, 0) > 0 AS has_events
         FROM spine s LEFT JOIN daily ON daily.d = s.d
         ORDER BY day
-    """)
+    """, events=events)
 
 
 # ---------------------------------------------------------------------------

@@ -9,14 +9,20 @@ Contract notes (from the driver):
   the row *set* must be deterministic — no LIMIT without a total order, no
   arbitrary-row dedup, no nondeterministic first()/collect order.
 
-Scope rule: a builder persists frames and stages files only through
-``burst_db_spark.runner.persist`` / ``runner.tmpdir``, which register
-them in the caller's ``runner.scope()``. The builder cannot release them
-itself (the caller's action has not run yet); the scope does, when it
-exits. ``runner.run`` opens one scope per query, so each run leaves the
-session's cache and the temp dir as it found them, even while other
-queries run in other driver threads. A builder that must free an
-intermediate before it returns opens an inner ``scope()``.
+Scope rule: a builder persists frames, takes local checkpoints and
+stages files only through ``burst_db_spark.runner.persist`` /
+``runner.checkpoint`` / ``runner.tmpdir``, which register them in the
+caller's ``runner.scope()``. The builder cannot release what its
+returned frame reads (the caller's action has not run yet); the scope
+does, when it exits. ``runner.run`` opens one scope per query, so each
+run leaves the session's cache and the temp dir as it found them, even
+while other queries run in other driver threads. A builder frees an
+intermediate before it returns with ``runner.release`` (a loop's
+replaced round) or an inner ``scope()``; it never returns a frame that
+reads a checkpoint an inner scope owns, since a released checkpoint
+fails where a released cache recomputes. SQL text runs over loaded
+frames through ``spark.sql(text, **frames)``, which drops its views
+before it returns; a builder registers no view of its own.
 """
 
 from __future__ import annotations

@@ -1,15 +1,23 @@
 """One query scope and one query runner.
 
 A query's temporary state belongs to the query, as it belongs to the
-connection in an embedded engine. Builders persist frames and stage
-files through :func:`persist` and :func:`tmpdir`; both register what
-they make in the innermost open :func:`scope`, which unpersists every
-registered frame and removes every registered dir when it exits, on
-success or failure. The registry is a context variable, so two queries
+connection in an embedded engine. Builders persist frames, checkpoint
+them and stage files through :func:`persist`, :func:`checkpoint` and
+:func:`tmpdir`; each registers what it makes in the innermost open
+:func:`scope`, which frees every registered frame and removes every
+registered dir when it exits, on success or failure. A loop that
+replaces its state each round frees the old round at once through
+:func:`release`. The registry is a context variable, so two queries
 running in different driver threads each release only their own state,
 and a builder's pool threads join their caller's scope when submitted
-through ``contextvars.copy_context().run``. With no scope open, both
-calls only do their own work and release nothing.
+through ``contextvars.copy_context().run``. With no scope open, the
+calls only do their own work and release nothing, except
+:func:`release`, which always frees what it is given.
+
+A released checkpoint is gone for good: a frame that still reads it
+fails, where one that reads a released cache only recomputes. A builder
+therefore releases no checkpoint its returned frame reads, and returns
+no frame out of an inner scope that owns a checkpoint the frame reads.
 
 :func:`run` is the one way to time or verify a registered query.
 """
@@ -30,7 +38,8 @@ _OWNED: ContextVar[list | None] = ContextVar("burst_db_spark_scope", default=Non
 
 @contextmanager
 def scope() -> Iterator[None]:
-    """Own every frame persisted and dir staged until the block exits."""
+    """Own every frame persisted or checkpointed and every dir staged
+    until the block exits."""
     owned: list = []
     token = _OWNED.set(owned)
     try:
@@ -38,10 +47,7 @@ def scope() -> Iterator[None]:
     finally:
         _OWNED.reset(token)
         for item in reversed(owned):
-            if isinstance(item, str):
-                shutil.rmtree(item, ignore_errors=True)
-            else:
-                item.unpersist()
+            _free(item)
 
 
 def _own(item):
@@ -51,9 +57,47 @@ def _own(item):
     return item
 
 
+def _free(item) -> None:
+    if isinstance(item, str):
+        shutil.rmtree(item, ignore_errors=True)
+    elif item.is_cached:
+        item.unpersist()
+    else:
+        # a local checkpoint: DataFrame.unpersist() frees none of its
+        # blocks, so free the checkpointed RDD itself
+        plan = item._jdf.queryExecution().analyzed()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
 def persist(df: DataFrame) -> DataFrame:
-    """``df.persist()``, released when the current scope exits."""
+    """``df.persist()``, released when the current scope exits. A frame
+    whose plan is already cached is returned as is and registers
+    nothing: the cache's owner releases it."""
+    lvl = df.storageLevel
+    if lvl.useMemory or lvl.useDisk:
+        return df
     return _own(df.persist())
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``, released when the current
+    scope exits."""
+    return _own(df.localCheckpoint(eager=True))
+
+
+def release(*dfs: DataFrame) -> None:
+    """Free, now, the cache or checkpoint each of these frame objects
+    made, and drop them from the current scope. A frame whose plan only
+    reads a cache another frame made is left alone."""
+    owned = _OWNED.get()
+    for df in dfs:
+        if owned is not None:
+            try:
+                owned.remove(df)  # by identity: frames define no __eq__
+            except ValueError:
+                pass
+        _free(df)
 
 
 def tmpdir(prefix: str) -> str:

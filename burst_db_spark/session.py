@@ -64,6 +64,12 @@ def parallelism(spark: SparkSession) -> int:
     return spark.sparkContext.defaultParallelism
 
 
+def broadcastable(n_rows: int) -> bool:
+    """Whether a join side measured at ``n_rows`` rows is broadcast; past
+    the gate it takes the hash equi-join, the 100 TB fallback."""
+    return n_rows <= 500_000
+
+
 def fan_out(df: DataFrame, *cols) -> DataFrame:
     """``df`` hash- (or round-robin-, with no ``cols``) repartitioned
     into :func:`parallelism` partitions.

@@ -197,7 +197,10 @@ def _timed(spark, key: str, build, act=noop_write):
 
 def _ladder(factor: int, rung) -> dict:
     """``rung(1)`` and ``rung(factor)``, each a ``{key: value}`` dict, in
-    one dict: the big rung's keys get the suffix ``_big``."""
+    one dict: the big rung's keys get the suffix ``_big``. A discarded
+    ``rung(1)`` runs first, so the timed 1x rung carries no JVM or
+    codegen warm-up."""
+    rung(1)
     return {
         f"{k}{label}": v
         for label, f in (("", 1), ("_big", factor))
@@ -836,39 +839,10 @@ def graph_cd_probe(spark, factor: int) -> dict[str, float]:
     components (per-replica id suffix). Vertices and edges grow
     ~factor, per-vertex degree — and so per-reducer fold width — stays
     constant; the clone-style table probe instead multiplies parallel
-    edges into the SAME keys. PageRank: 3 power steps on the replicated
-    graph. BFS: 3 relaxation rounds from per-replica seed sets."""
-    from burst_db_spark.operators.graph import pagerank
-
-    def bfs(und, nodes):
-        # bounded BFS: undirected, 3 relaxation rounds, sparse seeds
-        dist = nodes.select(
-            F.col("id").alias("v"),
-            F.when(
-                (F.substring("v", 1, 1) == "c") & (F.xxhash64("v") % 100 == 0),
-                F.lit(0),
-            ).alias("hop"),
-        )
-        prev = None
-        for _ in range(3):
-            relaxed = und.join(
-                dist.where(F.col("hop").isNotNull()).withColumnRenamed("v", "src"),
-                "src",
-            ).select(F.col("dst").alias("v"), (F.col("hop") + 1).alias("hop"))
-            # persist each round: without this the lineage recomputes all
-            # prior rounds inside every later round — measured as a stall
-            # at the 100x rung (the same per-round persist discipline as
-            # operators/dedup.connected_components). The previous round is
-            # unpersisted as soon as this one is counted: the 100x rung is
-            # heap-bound, so rounds are not held until the scope exits.
-            dist = persist(
-                dist.unionByName(relaxed).groupBy("v").agg(F.min("hop").alias("hop"))
-            )
-            dist.count()
-            if prev is not None:
-                prev.unpersist()
-            prev = dist
-        return dist.where(F.col("hop").isNotNull()).groupBy("hop").count()
+    edges into the SAME keys. PageRank: g1's integer-mass operator, 3
+    power steps on the replicated graph. BFS: g3's operator, 3
+    relaxation rounds on the undirected graph from sparse seeds."""
+    from burst_db_spark.operators.graph import bfs_hops, pagerank_int
 
     li = load(spark, SF_BASE, "lineitem")
     orders = load(spark, SF_BASE, "orders")
@@ -890,15 +864,22 @@ def graph_cd_probe(spark, factor: int) -> dict[str, float]:
                 .unionByName(e.select(F.col("dst").alias("id")))
                 .distinct()
             )
+            seeds = nodes.select(F.col("id").alias("v")).where(
+                (F.substring("v", 1, 1) == "c") & (F.xxhash64("v") % 100 == 0)
+            )
             with scope():
                 e = persist(e)
                 pagerank_s, _ = _timed(
-                    spark, "g1_pagerank3_cd", lambda: pagerank(e, nodes, iterations=3)
+                    spark, "g1_pagerank3_cd",
+                    lambda: pagerank_int(e, nodes, iterations=3),
                 )
                 und = e.unionByName(
                     e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
                 )
-                bfs_s, _ = _timed(spark, "g3_bfs_cd", lambda: bfs(und, nodes))
+                bfs_s, _ = _timed(
+                    spark, "g3_bfs_cd",
+                    lambda: bfs_hops(und, seeds, rounds=3).groupBy("hop").count(),
+                )
             return {"g1_pagerank3_cd": pagerank_s, "g3_bfs_cd": bfs_s}
 
         return _ladder(factor, rung)
@@ -1332,41 +1313,25 @@ def pca_cd_probe(spark, factor: int) -> dict[str, float]:
 
 
 def pagerank_cd_probe(spark, factor: int) -> dict[str, float]:
-    """Prices the g1 rework: integer-mass PageRank (plain groupBy SUM —
-    map-side combine works) vs the bit-exact double formulation (whose
-    two-level src-ordered fold must disable partial aggregation). Same
-    deterministic hash graph as the kcore probe, directed; 3 iterations
-    each. The double-fold variant runs at min(factor, 10) — its
-    constant is the point, not its asymptote."""
-    from burst_db_spark.operators.graph import pagerank, pagerank_int
+    """Integer-mass PageRank (g1's operator: plain groupBy SUM, so
+    map-side combine works) on the kcore probe's deterministic hash
+    graph, directed; 3 iterations."""
+    from burst_db_spark.operators.graph import pagerank_int
 
-    def graph(n: int):
-        e = _hash_edges(spark, n).distinct()
+    def rung(f: int):
+        e = _hash_edges(spark, 20_000 * f).distinct()
         nodes = (
             e.select(F.col("src").alias("id"))
             .union(e.select(F.col("dst").alias("id")))
             .distinct()
         )
-        return e, nodes
-
-    # warm both code paths once (codegen/JIT) so 1x timings compare
-    with scope():
-        we, wn = graph(2_000)
-        pagerank_int(we, wn, iterations=1).count()
-        pagerank(we, wn, iterations=1).count()
-
-    def rung(key: str, op, f: int):
-        e, nodes = graph(20_000 * f)
         secs, _ = _timed(
-            spark, key, lambda: op(e, nodes, iterations=3), DataFrame.count
+            spark, "pagerank_int",
+            lambda: pagerank_int(e, nodes, iterations=3), DataFrame.count,
         )
-        return {key: secs}
+        return {"pagerank_int": secs}
 
-    out = _ladder(factor, lambda f: rung("pagerank_int", pagerank_int, f))
-    out.update(
-        _ladder(min(factor, 10), lambda f: rung("pagerank_fold", pagerank, f))
-    )
-    return out
+    return _ladder(factor, rung)
 
 
 _CD_PROBES = {

@@ -1,15 +1,15 @@
-"""Query scopes (burst_db_spark.runner): what a build persists or stages
-belongs to the scope it runs in, and the scope releases it on exit, on
-success or failure, without touching state that other scopes or other
-driver threads own.
+"""Query scopes (burst_db_spark.runner): what a build persists,
+checkpoints or stages belongs to the scope it runs in, and the scope
+releases it on exit, on success or failure, without touching state that
+other scopes or other driver threads own.
 
-Cached state is tracked by RDD-id SET, not count: earlier tests in the
-same session can leave localCheckpoint RDDs that no scope owns, and the
-ContextCleaner may free those asynchronously mid-test; neither event
-touches the ids a run creates, which is what is under test."""
+Cached state is tracked by RDD-id SET, not count: the ContextCleaner may
+free what earlier unscoped builds in the same session left, mid-test,
+which touches none of the ids a run creates."""
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import tempfile
@@ -26,7 +26,7 @@ from burst_db_spark.operators.dedup import (
     ngram_jaccard_pairs,
 )
 from burst_db_spark.registry import QuerySpec, all_queries
-from burst_db_spark.runner import persist, run, scope, tmpdir
+from burst_db_spark.runner import checkpoint, persist, release, run, scope, tmpdir
 from tests.conftest import SF_DIR
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -42,6 +42,37 @@ PERSISTING_ROWS = (
     "dd_docs_cascade_pipeline",
 )
 STAGING_ROWS = ("k6_metadata_roundtrip", "s15_schema_evolution")
+# rows whose builds take local checkpoints (iterative operators)
+CHECKPOINTING_ROWS = (
+    "g1_pagerank3",
+    "g2_triangle_stats",
+    "g3_bfs_hops",
+    "g4_cc_iterative",
+    "g5_hits_unrolled",
+    "g6_kcore_peel",
+    "g7_ktruss_peel",
+    "g8_label_propagation",
+    "dd_nn_descent",
+    "dd_cluster_incremental",
+    "t_bpe_merges",
+    "t_bpe_encode",
+    "t_bpe_reconstruction",
+    "t_bpe_fertility_by_lang",
+)
+# rows whose builds run SQL text over loaded tables
+VIEW_ROWS = (
+    "q4_order_priority",
+    "q16_supplier_cnt",
+    "q17_small_qty_revenue",
+    "q18_large_volume",
+    "q20_part_shippers",
+    "q21_suppliers_waiting",
+    "q22_global_sales_opportunity",
+    "group_by_all",
+    "f_udtf_sentences",
+    "f_recursive_cte_gapfill",
+    "f_pipe_syntax",
+)
 
 
 def _cached_ids(spark) -> set[int]:
@@ -81,19 +112,31 @@ def test_run_leaves_session_as_found(spark):
     # the JVM unpacks its native codecs and the session's artifact dir
     # into the temp dir on first use and keeps them for its lifetime
     run(specs[STREAM_ROWS[0]], spark, SF_DIR, lambda df: df.collect())
-    for name in (*STREAM_ROWS, *PERSISTING_ROWS, *STAGING_ROWS):
-        before = _state(spark)
-        (rows, held), build_s, total_s = run(
-            specs[name], spark, SF_DIR, lambda df: (df.collect(), _cached_ids(spark))
-        )
-        assert 0.0 <= build_s <= total_s, name
-        assert rows is not None, name
-        if name in PERSISTING_ROWS:
-            # the scope released a cache the action ran with (an earlier
-            # unscoped build of the same plan may own the cache entry, so
-            # its RDD id can predate ``before``)
-            assert held - _cached_ids(spark), name
-        _assert_left_as_found(spark, before, name)
+    # earlier unscoped builds in this session can leave cache entries of
+    # the persisting rows' plans, which ``persist`` leaves to their owner;
+    # start from an empty cache so each of those rows caches its own
+    spark.catalog.clearCache()
+    # the view rows run in a session of their own, which starts with no
+    # temp views: a view an earlier test left under the same name would
+    # otherwise hide one the row leaves
+    fresh = spark.newSession()
+    rows_by_session = [
+        (spark, (*STREAM_ROWS, *PERSISTING_ROWS, *STAGING_ROWS, *CHECKPOINTING_ROWS)),
+        (fresh, VIEW_ROWS),
+    ]
+    for session, names in rows_by_session:
+        for name in names:
+            before = _state(session)
+            (rows, held), build_s, total_s = run(
+                specs[name], session, SF_DIR,
+                lambda df: (df.collect(), _cached_ids(session)),
+            )
+            assert 0.0 <= build_s <= total_s, name
+            assert rows is not None, name
+            if name in PERSISTING_ROWS:
+                # the scope released a cache the action ran with
+                assert held - _cached_ids(session), name
+            _assert_left_as_found(session, before, name)
 
     before = _state(spark)
     with pytest.raises(RuntimeError, match="build failed"):
@@ -131,6 +174,56 @@ def test_scope_releases_only_its_own_frames(spark):
         assert outside.storageLevel.useMemory
     finally:
         outside.unpersist()
+
+
+def test_checkpoint_and_release(spark):
+    """A checkpoint is freed when its scope exits, ``release`` frees a
+    checkpoint or a cache at once, and a frame whose plan is already
+    cached is left to the cache's owner, by the scope and by
+    ``release``."""
+    outside = spark.range(20).selectExpr("id * 13 AS w").persist()
+    outside.count()
+    try:
+        base = _cached_ids(spark)
+        with scope():
+            a = checkpoint(spark.range(40).selectExpr("id * 2 AS x"))
+            b = checkpoint(a.selectExpr("x + 1 AS x"))
+            c = persist(spark.range(40).selectExpr("id * 3 AS x"))
+            c.count()
+            assert len(_cached_ids(spark) - base) == 3
+            release(a, c)
+            assert len(_cached_ids(spark) - base) == 1
+            assert b.count() == 40  # b reads its own blocks, not a's
+            again = persist(outside.select("w"))
+            assert again.count() == 20
+            release(again)
+        assert not _cached_ids(spark) - base
+        assert outside.storageLevel.useMemory
+    finally:
+        outside.unpersist()
+
+
+def test_bcubed_audit_on_iterative_cc_path(spark, ddb, monkeypatch):
+    """dd_cluster_bcubed_audit takes its two CC label frames from pool
+    threads. On CC's iterative path (past ``CC_LOCAL_EDGE_GATE``, which no
+    test size reaches, so forced here) those labels are checkpoints; they
+    must live until the query's scope exits."""
+    from burst_db_spark.operators import dedup
+
+    iterative = functools.partial(dedup.connected_components, local_edge_gate=0)
+    calls: list[int] = []
+
+    def cc(*args, **kwargs):
+        calls.append(1)
+        return iterative(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "connected_components", cc)
+    spec = all_queries()["dd_cluster_bcubed_audit"]
+    before = _state(spark)
+    rows, _, _ = run(spec, spark, SF_DIR, lambda df: [tuple(r) for r in df.collect()])
+    assert len(calls) == 2
+    assert rows == ddb.execute(spec.oracle).fetchall()
+    _assert_left_as_found(spark, before, spec.name)
 
 
 def test_overlapping_run_keeps_other_scope(spark):
@@ -193,6 +286,22 @@ def test_persists_and_staging_go_through_runner():
     assert not bad, bad
 
 
+def test_checkpoints_and_releases_go_through_runner():
+    """Every local checkpoint and every release in the library and the
+    harnesses goes through the runner (``checkpoint`` / ``release``): a
+    bare ``unpersist()`` frees none of a checkpoint's blocks, and a bare
+    checkpoint is owned by no scope."""
+    bare = re.compile(r"\.localCheckpoint\(|\.unpersist\(")
+    bad = [
+        f"{p.relative_to(ROOT)}:{i}"
+        for p in _py_files("burst_db_spark", "scale_probe.py", "bench.py", "scripts")
+        if p.relative_to(ROOT).as_posix() != "burst_db_spark/runner.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if bare.search(line)
+    ]
+    assert not bad, bad
+
+
 def test_partition_counts_go_through_session():
     """The fan-out partition count is read in one place
     (``session.parallelism``), and no operator takes a per-call opt-in
@@ -211,5 +320,18 @@ def test_partition_counts_go_through_session():
         if ".git" not in p.parts
         for i, line in enumerate(p.read_text().splitlines(), 1)
         if opt_in in line
+    ]
+    assert not bad, bad
+
+
+def test_broadcast_gate_goes_through_session():
+    """The broadcast row gate is written once (``session.broadcastable``)."""
+    gate = re.compile(r"(?<![\w.])500_?000(?![\w.])")
+    bad = [
+        f"{p.relative_to(ROOT)}:{i}"
+        for p in _py_files("burst_db_spark", "scale_probe.py", "bench.py", "scripts")
+        if p.relative_to(ROOT).as_posix() != "burst_db_spark/session.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if gate.search(line)
     ]
     assert not bad, bad

@@ -17,11 +17,23 @@ def test_split_pairs_each_key_with_its_big_rung():
     assert ratio == {"a": 2.5, "b": None}
 
 
+def test_ladder_discards_a_warm_up_rung():
+    calls: list[int] = []
+
+    def rung(f):
+        calls.append(f)
+        return {"k": float(len(calls))}
+
+    assert scale_probe._ladder(3, rung) == {"k": 2.0, "k_big": 3.0}
+    assert calls == [1, 1, 3]
+
+
 def test_winnow_clusters_counters_pair_with_their_big_rung(monkeypatch):
     """The probe's edge count and CC-path bit pair up across rungs as its
     seconds do. The real probe runs with its corpus and timer faked: the
-    two ``_timed`` calls return (seconds, edge count) per rung."""
-    rungs = iter([(0.5, 481), (1.25, 962)])
+    three ``_timed`` calls (the discarded warm-up rung, then the two
+    timed rungs) return (seconds, edge count) per rung."""
+    rungs = iter([(9.0, 1), (0.5, 481), (1.25, 962)])
     monkeypatch.setattr(scale_probe, "_cd_corpus", lambda spark, f: None)
     monkeypatch.setattr(scale_probe, "_timed", lambda *a, **k: next(rungs))
     small, large, ratio = scale_probe.split_ladder(
@@ -33,6 +45,7 @@ def test_winnow_clusters_counters_pair_with_their_big_rung(monkeypatch):
         "dd_winnow_clusters_cd_gate",
     }
     assert set(small) == set(large) == set(ratio) == keys
+    assert small["dd_winnow_clusters_cd"] == 0.5  # the warm-up rung is dropped
     assert large["dd_winnow_clusters_cd_edges"] == 962
     assert ratio["dd_winnow_clusters_cd_edges"] == 2.0
     assert ratio["dd_winnow_clusters_cd_gate"] == 1.0
