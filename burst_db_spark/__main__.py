@@ -17,6 +17,25 @@ follow the reference's `{metadata, data}` shapes
 (create_cslc_burst_catalog.py:319-334, reference_dates.py:222-234,
 create_blackout_dates_s1.py:109-147). Set ``BDS_GENERATION_TIME`` to pin
 the metadata timestamp for byte-stable output.
+
+Reads run only the Spark jobs that compute the answer
+(``tests/test_cli.py`` pins these budgets):
+
+- ``lookup``: 2 jobs, one filtered scan of ``frames`` and one of
+  ``frames_bursts``, combined on the driver;
+- ``intersect``: 1 job, the bbox prefilter and exact refine over
+  ``frames``;
+- ``historical fetch-bursts`` / ``fetch-granules``: 2 jobs, the schema
+  inference of ``--db-path`` and one filtered scan. The wanted burst
+  numbers come from the envelope parsed on the driver, and the printed
+  rows are sorted (and, for granules, de-duplicated) there, in Spark's
+  ascending NULLS FIRST order.
+
+``frames`` and ``frames_bursts`` are ``create``'s own tables and are read
+with their declared schemas (``create_pipeline.read_table``).
+``burst_id_map``, ``--seasons`` and the historical ``--db-path`` keep
+schema inference: their schemas follow the caller's input. In ``local``
+mode nothing is listed by a Spark job (``session.get_spark``).
 """
 
 from __future__ import annotations
@@ -138,31 +157,32 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "lookup":
+        from burst_db_spark.plans.create_pipeline import read_table
         from burst_db_spark.plans.query_frame import lookup
 
-        frames = spark.read.parquet(f"{args.db}/frames")
-        bridge = spark.read.parquet(f"{args.db}/frames_bursts")
-        rows = [r.asDict() for r in lookup(frames, bridge, args.frame_id).collect()]
+        rows = lookup(
+            read_table(spark, args.db, "frames"),
+            read_table(spark, args.db, "frames_bursts"),
+            args.frame_id,
+        )
         print(json.dumps(rows, default=str))
         return 0
 
     if args.cmd == "intersect":
         from burst_db_spark.geo.wkt import rect_wkt
+        from burst_db_spark.plans.create_pipeline import read_table
         from burst_db_spark.plans.query_frame import intersect
 
         xmin, ymin, xmax, ymax = (float(v) for v in args.bbox.split(","))
-        frames = spark.read.parquet(f"{args.db}/frames")
+        frames = read_table(spark, args.db, "frames")
         hits = intersect(
             frames.withColumnRenamed("sxmin", "xmin")
             .withColumnRenamed("symin", "ymin")
             .withColumnRenamed("sxmax", "xmax")
             .withColumnRenamed("symax", "ymax"),
             rect_wkt(xmin, ymin, xmax, ymax),
-        )
-        rows = [
-            {"frame_fid": r.frame_fid, "epsg": r.epsg, "is_land": r.is_land}
-            for r in hits.collect()
-        ]
+        ).select("frame_fid", "epsg", "is_land")
+        rows = [r.asDict() for r in hits.collect()]
         print(json.dumps(rows))
         return 0
 
@@ -174,10 +194,11 @@ def main(argv: list[str] | None = None) -> int:
             catalog_document,
             consistent_burst_catalog,
         )
+        from burst_db_spark.plans.create_pipeline import read_table
         from burst_db_spark.sources.json_docs import write_envelope
 
-        frames = spark.read.parquet(f"{args.db}/frames")
-        bridge = spark.read.parquet(f"{args.db}/frames_bursts")
+        frames = read_table(spark, args.db, "frames")
+        bridge = read_table(spark, args.db, "frames_bursts")
         bursts = spark.read.parquet(f"{args.db}/burst_id_map")
         acq = fixtures.acquisitions(spark, frames, n_dates=args.n_dates)
         blackouts = None
@@ -246,8 +267,9 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
 
         from burst_db_spark.plans.blackout import yearly_windows
+        from burst_db_spark.plans.create_pipeline import read_table
 
-        frames = spark.read.parquet(f"{args.db}/frames")
+        frames = read_table(spark, args.db, "frames")
         if args.seasons:
             seasons = spark.read.parquet(args.seasons)
         else:
@@ -344,12 +366,17 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "historical":
         from pyspark.sql import functions as F
 
-        from burst_db_spark.sources.json_docs import read_envelope
+        from burst_db_spark.sources.json_docs import load_envelope
 
-        _, f2b = read_envelope(spark, args.frame_to_burst_json, key="frame_fid")
-        wanted = f2b.where(
-            F.col("frame_fid").cast("int").isin(args.frame_ids)
-        ).select(F.explode("burst_id").alias("burst_num"))
+        # the wanted burst numbers, from the envelope parsed on the driver
+        # (a set: neighbouring frames share bursts, and a shared burst's
+        # rows must come out once, not once per requested frame)
+        f2b = load_envelope(args.frame_to_burst_json).get("data", {})
+        wanted = sorted({
+            int(b)
+            for fid in args.frame_ids
+            for b in f2b.get(str(fid), {}).get("burst_id", [])
+        })
         if args.db_path.endswith(".sqlite"):
             from burst_db_spark.sinks import read_sqlite
 
@@ -362,36 +389,42 @@ def main(argv: list[str] | None = None) -> int:
         else:
             bursts = spark.read.parquet(args.db_path)
         # burst_id_map JPL ids are t{track}_{burstnum}_iw{n}; the bridge
-        # carries the triplet number -> match on the middle field. A semi
-        # join: neighbouring frames share bursts, and a shared burst's
-        # rows must come out once, not once per requested frame.
+        # carries the triplet number -> match on the middle field
         bnum = F.split(F.col("burst_id_jpl"), "_")[1].cast("int")
-        hits = bursts.withColumn("__bnum", bnum).join(
-            F.broadcast(wanted),
-            F.col("__bnum") == F.col("burst_num").cast("int"),
-            "left_semi",
-        )
+        hits = bursts.where(bnum.isin(wanted))
         if args.min_datetime:
             hits = hits.where(F.col("sensing_time") >= args.min_datetime)
         if args.max_datetime:
             hits = hits.where(F.col("sensing_time") <= args.max_datetime)
         if args.hcmd == "fetch-granules":
-            out = hits.select(
-                F.regexp_replace("granule", r"\.SAFE$", "").alias("granule")
-            ).distinct().orderBy("granule")
             cols = ["granule"]
+            hits = hits.select(
+                F.regexp_replace("granule", r"\.SAFE$", "").alias("granule")
+            )
         else:
             cols = ["burst_id_jpl", "sensing_time"]
             if getattr(args, "with_granule", False):
                 cols.append("granule")
-            out = hits.select(*cols).orderBy(*cols)
+            hits = hits.select(*cols)
+        # the answer is printed from the driver anyway, so it is sorted
+        # (and, for granules, de-duplicated) there: a global orderBy
+        # would cost a sample job and a range exchange
+        rows = [tuple(r) for r in hits.collect()]
+        if args.hcmd == "fetch-granules":
+            rows = list(set(rows))
+        rows.sort(key=_nulls_first)
         if args.headers:
             print(",".join(cols))
-        for r in out.collect():
-            print(",".join(str(r[c]) for c in cols))
+        for r in rows:
+            print(",".join(str(v) for v in r))
         return 0
 
     return 1
+
+
+def _nulls_first(row: tuple) -> tuple:
+    """Sort key for Spark's ascending NULLS FIRST order on every column."""
+    return tuple((v is not None, v) for v in row)
 
 
 def _blackout_windows_df(spark, path: str):

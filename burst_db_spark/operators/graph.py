@@ -234,7 +234,7 @@ def pagerank_int(
     ranks = nodes.select(
         F.col(id_col).alias("__v"), F.lit(p0).cast("bigint").alias("__p")
     )
-    for _ in range(iterations):
+    for i in range(iterations):
         r = ranks.withColumnRenamed("__v", src)
         d = deg
         if bcast:
@@ -251,7 +251,7 @@ def pagerank_int(
         )
         if bcast:
             inflow = F.broadcast(inflow)
-        ranks = checkpoint(
+        nxt = checkpoint(
             ranks.join(inflow, "__v", "left")
             .select(
                 "__v",
@@ -263,6 +263,9 @@ def pagerank_int(
                 ).cast("bigint").alias("__p"),
             )
         )
+        if i:  # round 0 replaces the node spine, not a checkpoint
+            release(ranks)
+        ranks = nxt
     return ranks.select(F.col("__v").alias(id_col), F.col("__p").alias("rank_fx"))
 
 

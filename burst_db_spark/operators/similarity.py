@@ -911,6 +911,7 @@ def kmeans_unrolled_stats(
     emb = fan_out(emb)
     cur = cents
     assigned = None
+    held: list[DataFrame] = []  # the funnel's centroid checkpoints
     funnel = hier_threshold is not None and k >= hier_threshold
     if funnel:
         # Lloyd re-scans the SAME input every round (2 assigns + the
@@ -932,6 +933,11 @@ def kmeans_unrolled_stats(
             # materializes the model, not data, and the exact flat path
             # (every oracle-checked k=16 row) keeps its pure plan.
             cur = checkpoint(cur)
+            held.append(cur)
+            if len(held) > 2:
+                # the final assignment reads the round before the last;
+                # older rounds nothing reads any more
+                release(held.pop(0))
     if funnel:
         # downstream consumers (stats here; pair join / flags / prune in
         # the SemDeDup pipeline) reference the final assignment several

@@ -33,6 +33,11 @@ back for EPSG classification:
 ``frames/`` keeps its own plan rather than being derived from the
 written bridge: its ``geom_wkt`` text depends on the member order the
 union sees, which follows the plan shape (ROADMAP open items).
+
+``frames/`` and ``frames_bursts/`` have fixed schemas (``TABLE_SCHEMAS``),
+and every read of them, here and in the CLI, goes through
+:func:`read_table`, which declares the schema: a parquet read without
+one runs a Spark job to infer it from a footer.
 """
 
 from __future__ import annotations
@@ -46,6 +51,24 @@ from burst_db_spark.sinks import write_metadata_table, write_parquet, write_sqli
 from burst_db_spark.sources.geojson import write_geojson
 from burst_db_spark.sources.gpkg import write_gpkg
 from burst_db_spark.sources.json_docs import write_envelope
+
+#: the schemas ``create`` writes its two own tables with
+#: (``tests/test_cli.py`` pins them to what a read of its output infers)
+TABLE_SCHEMAS = {
+    "frames": (
+        "frame_fid bigint, relative_orbit_number int, orbit_pass string, "
+        "is_land int, n_triplets bigint, geom_wkt string, "
+        "geom_dissolved_wkt string, epsg int, sxmin int, symin int, "
+        "sxmax int, symax int, uxmin int, uymin int, uxmax int, uymax int"
+    ),
+    "frames_bursts": "frame_fid bigint, burst_id bigint",
+}
+
+
+def read_table(spark: SparkSession, db: str, name: str) -> DataFrame:
+    """``create``'s table ``name`` (``frames`` or ``frames_bursts``)
+    under ``db``, read with its declared schema."""
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(f"{db}/{name}")
 
 
 def create(
@@ -66,8 +89,8 @@ def create(
     )
     write_parquet(bridge, f"{out_dir}/frames_bursts")
     # every later sink reads the two tables just written (module docstring)
-    frames_full = spark.read.parquet(f"{out_dir}/frames")
-    bridge = spark.read.parquet(f"{out_dir}/frames_bursts")
+    frames_full = read_table(spark, out_dir, "frames")
+    bridge = read_table(spark, out_dir, "frames_bursts")
 
     # J9 update-join: propagate frame epsg onto member bursts
     # (build_frame_db.py:321-335)

@@ -60,14 +60,17 @@ def _own(item):
 def _free(item) -> None:
     if isinstance(item, str):
         shutil.rmtree(item, ignore_errors=True)
-    elif item.is_cached:
+        return
+    if item.is_cached:
         item.unpersist()
-    else:
-        # a local checkpoint: DataFrame.unpersist() frees none of its
-        # blocks, so free the checkpointed RDD itself
-        plan = item._jdf.queryExecution().analyzed()
-        if plan.nodeName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
+    # a local checkpoint (which may also have been persisted):
+    # DataFrame.unpersist() frees none of its blocks, so free the
+    # checkpointed RDD's blocks by id (RDD.unpersist would log that a
+    # locally checkpointed RDD cannot be recomputed, once per release)
+    plan = item._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD" and plan.rdd().isLocallyCheckpointed():
+        sc = item.sparkSession.sparkContext._jsc.sc()
+        sc.unpersistRDD(plan.rdd().id(), False)
 
 
 def persist(df: DataFrame) -> DataFrame:
@@ -87,7 +90,7 @@ def checkpoint(df: DataFrame) -> DataFrame:
 
 
 def release(*dfs: DataFrame) -> None:
-    """Free, now, the cache or checkpoint each of these frame objects
+    """Free, now, the cache and checkpoint each of these frame objects
     made, and drop them from the current scope. A frame whose plan only
     reads a cache another frame made is left alone."""
     owned = _OWNED.get()

@@ -51,6 +51,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
+    if master.startswith("local"):
+        # list every path on the driver: past this many paths Spark lists
+        # through a job, one task per path, which in one JVM only adds
+        # the job's fixed cost (a 60-date partitioned table, a 60-file glob)
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -94,21 +94,25 @@ def write_envelope(
     return len(doc["data"])
 
 
+def load_envelope(path: str) -> dict:
+    """A (possibly zipped) envelope document, parsed on the driver."""
+    if path.endswith(".gz"):
+        with gzip.open(path, "rt") as f:
+            return json.load(f)
+    if path.endswith(".zip"):
+        with zipfile.ZipFile(path) as z:
+            return json.loads(z.read(z.namelist()[0]))
+    with open(path) as f:
+        return json.load(f)
+
+
 def read_envelope(
     spark: SparkSession, path: str, key: str = "key"
 ) -> tuple[dict, DataFrame]:
     """S7: read a (possibly zipped) envelope → (metadata, long-form df).
 
     Each data field becomes an array column; explode as needed."""
-    if path.endswith(".gz"):
-        with gzip.open(path, "rt") as f:
-            doc = json.load(f)
-    elif path.endswith(".zip"):
-        with zipfile.ZipFile(path) as z:
-            doc = json.loads(z.read(z.namelist()[0]))
-    else:
-        with open(path) as f:
-            doc = json.load(f)
+    doc = load_envelope(path)
     data = doc.get("data", {})
     rows = [{key: k, **v} for k, v in data.items()]
     return doc.get("metadata", {}), spark.createDataFrame(rows)

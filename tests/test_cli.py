@@ -1,10 +1,23 @@
-"""CLI parity test: create → lookup → intersect through __main__.main."""
+"""CLI tests through __main__.main: create → lookup → intersect, the artifact
+workflow, historical fetches, and the reads' job budgets, declared table
+schemas and DuckDB parity."""
 
 from __future__ import annotations
 
+import datetime as dt
+import gzip
 import json
+import re
+from pathlib import Path
+
+import duckdb
+import pytest
+from pyspark.sql.types import StructType
 
 from burst_db_spark.__main__ import main
+from burst_db_spark.plans.create_pipeline import TABLE_SCHEMAS
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_cli_create_lookup_intersect(spark, tmp_path, capsys):
@@ -163,3 +176,178 @@ def test_cli_historical_fetch_shared_burst(spark, tmp_path, capsys):
     out = capsys.readouterr().out.strip().splitlines()
     assert f"t001_{shared:06d}_iw1,2021-01-01 06:00:00" in out
     assert len(out) == len(set(out)) == len(bids)
+
+
+# -- catalog reads: job budget, declared schemas, DuckDB parity -------------
+
+N_DATES = 40  # past Spark's default 32-path parallel-listing threshold
+
+
+@pytest.fixture(scope="module")
+def catalog(spark, tmp_path_factory):
+    """A 120x2 ``create`` output and a historical bursts table over its
+    first frame, partitioned by ``sensing_date`` into ``N_DATES`` dirs.
+
+    Each date's bursts share one granule, written with ``.SAFE`` on odd
+    bursts and without it on even ones; one row has a null granule and
+    one a null sensing time, both on a burst that also has regular rows."""
+    root = tmp_path_factory.mktemp("catalog")
+    db = str(root / "db")
+    assert main(["create", "--out", db, "--n-triplets", "120", "--n-tracks", "2"]) == 0
+    fid = int(spark.read.parquet(f"{db}/frames").agg({"frame_fid": "min"}).first()[0])
+    bids = sorted(r.burst_id for r in
+                  spark.read.parquet(f"{db}/frames_bursts").where(f"frame_fid = {fid}").collect())
+    day0 = dt.datetime(2021, 1, 1, 6)
+    rows = []
+    for k in range(N_DATES):
+        t = day0 + dt.timedelta(days=12 * k)
+        for b in bids:
+            granule = f"S1A_IW_SLC__{t:%Y%m%d}" + ".SAFE" * (b % 2)
+            rows.append((f"t001_{b:06d}_iw1", t, granule, t.date()))
+    rows += [
+        ("t001_999999_iw1", day0, "S1A_OTHER.SAFE", day0.date()),
+        (f"t001_{bids[0]:06d}_iw1", day0, None, day0.date()),
+        (f"t001_{bids[0]:06d}_iw1", None, "S1A_IW_SLC__UNDATED.SAFE", day0.date()),
+    ]
+    hist = str(root / "historical")
+    spark.createDataFrame(
+        rows, "burst_id_jpl string, sensing_time timestamp, granule string, sensing_date date"
+    ).write.partitionBy("sensing_date").parquet(hist)
+    return db, hist, fid
+
+
+def _jobs(spark, argv) -> list[int]:
+    """Run one CLI command under a job group of its own; returns the
+    task count of each job it ran."""
+    sc = spark.sparkContext
+    group = f"test_cli_{argv[0]}_{id(argv)}"
+    sc.setJobGroup(group, group)
+    try:
+        assert main(argv) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return [
+        sum(s.numTasks for s in map(tracker.getStageInfo, tracker.getJobInfo(j).stageIds) if s)
+        for j in tracker.getJobIdsForGroup(group)
+    ]
+
+
+def test_cli_reads_run_only_the_answering_jobs(spark, catalog, capsys):
+    """lookup is two filtered scans, intersect one, and a fetch one
+    schema-inference job plus its scan: no schema inference on
+    ``create``'s tables, no listing job (it would have one task per
+    ``sensing_date`` dir), no join, group-by or global sort."""
+    db, hist, fid = catalog
+    f2b = f"{db}/frame_to_burst.json.gz"
+    budget = [
+        (["lookup", "--db", db, "--frame-id", str(fid)], 2),
+        (["intersect", "--db", db, "--bbox=-180,-90,180,90"], 1),
+        (["historical", "fetch-bursts", str(fid), "--db-path", hist,
+          "--frame-to-burst-json", f2b, "--with-granule"], 2),
+        (["historical", "fetch-granules", str(fid), "--db-path", hist,
+          "--frame-to-burst-json", f2b], 2),
+    ]
+    for argv, most in budget:
+        tasks = _jobs(spark, argv)
+        assert capsys.readouterr().out.strip()
+        assert 1 <= len(tasks) <= most, (argv[:2], tasks)
+        assert max(tasks) < N_DATES, (argv[:2], tasks)
+
+
+def test_cli_table_schemas_are_what_create_writes(spark, catalog):
+    db, _, _ = catalog
+    for name, ddl in TABLE_SCHEMAS.items():
+        assert StructType.fromDDL(ddl) == spark.read.parquet(f"{db}/{name}").schema, name
+
+
+def test_create_tables_are_read_with_declared_schemas():
+    """``frames`` and ``frames_bursts`` are read only through
+    ``create_pipeline.read_table``, with their declared schemas: a
+    parquet read without a schema runs a job to infer one."""
+    inferred = re.compile(r"read\.parquet\(.*/frames(_bursts)?(?![\w.])")
+    bad = [
+        f"{p.relative_to(ROOT)}:{i}"
+        for root in ("burst_db_spark", "scale_probe.py", "bench.py", "scripts")
+        for p in ([ROOT / root] if root.endswith(".py") else sorted((ROOT / root).rglob("*.py")))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if inferred.search(line)
+    ]
+    assert not bad, bad
+
+
+def _duck_fetch(con, hist, f2b, argv) -> list[str]:
+    """What ``historical fetch-*`` should print, recomputed in DuckDB in
+    Spark's ascending NULLS FIRST order."""
+    opt = {argv[i]: argv[i + 1] for i in range(len(argv) - 1) if argv[i].startswith("--")}
+    with gzip.open(f2b, "rt") as f:
+        data = json.load(f)["data"]
+    fids = [a for a in argv[1:] if a.isdigit()]
+    wanted = sorted({int(b) for fid in fids for b in data.get(fid, {}).get("burst_id", [])})
+    where = (f"CAST(split_part(burst_id_jpl, '_', 2) AS INT) "
+             f"IN ({','.join(map(str, wanted)) or 'NULL'})")
+    if "--min-datetime" in opt:
+        where += f" AND sensing_time >= TIMESTAMP '{opt['--min-datetime']}'"
+    if "--max-datetime" in opt:
+        where += f" AND sensing_time <= TIMESTAMP '{opt['--max-datetime']}'"
+    src = f"read_parquet('{hist}/*/*.parquet', hive_partitioning = true)"
+    if argv[0] == "fetch-granules":
+        cols = ["granule"]
+        sql = (f"SELECT DISTINCT regexp_replace(granule, '\\.SAFE$', '') FROM {src} "
+               f"WHERE {where} ORDER BY 1 NULLS FIRST")
+    else:
+        cols = ["burst_id_jpl", "sensing_time"] + ["granule"] * ("--with-granule" in argv)
+        order = ", ".join(f"{c} NULLS FIRST" for c in cols)
+        sql = f"SELECT {', '.join(cols)} FROM {src} WHERE {where} ORDER BY {order}"
+    lines = [",".join(str(v) for v in r) for r in con.execute(sql).fetchall()]
+    return [",".join(cols)] * ("--headers" in argv) + lines
+
+
+def test_cli_reads_match_duckdb(spark, catalog, capsys):
+    """Request shapes the benchmark never sends: a ``--max-datetime``
+    window, an unknown frame id, granules with and without ``.SAFE``
+    that collapse to one, and null granules and sensing times (Spark
+    orders them first)."""
+    db, hist, fid = catalog
+    f2b = f"{db}/frame_to_burst.json.gz"
+    unknown = 987654321
+    con = duckdb.connect()
+    shapes = [
+        ["fetch-bursts", str(fid), "--headers", "--with-granule"],
+        ["fetch-bursts", str(fid), "--max-datetime", "2021-03-01"],
+        ["fetch-bursts", str(fid), "--min-datetime", "2021-02-01",
+         "--max-datetime", "2021-06-01 06:00:00", "--with-granule"],
+        ["fetch-bursts", str(unknown), "--headers"],
+        ["fetch-bursts", str(fid), str(unknown)],
+        ["fetch-granules", str(fid)],
+        ["fetch-granules", str(fid), "--max-datetime", "2021-02-01"],
+    ]
+    for shape in shapes:
+        argv = ["historical", *shape, "--db-path", hist, "--frame-to-burst-json", f2b]
+        assert main(argv) == 0
+        got = capsys.readouterr().out.strip("\n").splitlines()
+        assert got == _duck_fetch(con, hist, f2b, shape), shape
+    granules = _duck_fetch(con, hist, f2b, ["fetch-granules", str(fid)])
+    assert granules[0] == "None" and len(granules) == len(set(granules)) == N_DATES + 2
+    bursts = _duck_fetch(con, hist, f2b, ["fetch-bursts", str(fid), "--with-granule"])
+    assert bursts[0].endswith(",None,S1A_IW_SLC__UNDATED.SAFE")
+    assert bursts[1].endswith(",2021-01-01 06:00:00,None")
+
+    for frame in (fid, unknown):
+        assert main(["lookup", "--db", db, "--frame-id", str(frame)]) == 0
+        got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        cur = con.execute(
+            f"""SELECT f.*, b.burst_ids, b.n_bursts
+                FROM read_parquet('{db}/frames/*.parquet') f
+                JOIN (SELECT frame_fid, count(*) AS n_bursts,
+                             string_agg(CAST(burst_id AS VARCHAR), ',' ORDER BY burst_id)
+                                 AS burst_ids
+                      FROM read_parquet('{db}/frames_bursts/*.parquet')
+                      WHERE frame_fid = {frame} GROUP BY frame_fid) b
+                USING (frame_fid)""")
+        want = [dict(zip([d[0] for d in cur.description], r)) for r in cur.fetchall()]
+        assert got == json.loads(json.dumps(want, default=str)), frame
+        assert len(got) == (frame == fid)
+    con.close()

@@ -203,6 +203,34 @@ def test_checkpoint_and_release(spark):
         outside.unpersist()
 
 
+def test_iterative_operators_release_replaced_rounds(spark):
+    """``pagerank_int`` and the funnel path of ``kmeans_unrolled_stats``
+    free each round's checkpoint once nothing reads it: what a build
+    holds inside its scope does not grow with the round count, and the
+    scope frees all of it."""
+    from burst_db_spark.operators.graph import pagerank_int
+    from burst_db_spark.operators.similarity import kmeans_unrolled_stats
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)], "src bigint, dst bigint")
+    nodes = spark.createDataFrame([(n,) for n in range(1, 6)], "id bigint")
+    emb = load(spark, SF_DIR, "embeddings")
+    builds = {
+        "pagerank_int": lambda n: pagerank_int(edges, nodes, iterations=n),
+        "kmeans_funnel": lambda n: kmeans_unrolled_stats(
+            emb, k=64, rounds=n, hier_threshold=64),
+    }
+    for name, build in builds.items():
+        held = []
+        for rounds in (3, 6):
+            base = _cached_ids(spark)
+            with scope():
+                build(rounds).collect()
+                held.append(len(_cached_ids(spark) - base))
+            assert not _cached_ids(spark) - base, name
+        assert held[0] == held[1], (name, held)
+
+
 def test_bcubed_audit_on_iterative_cc_path(spark, ddb, monkeypatch):
     """dd_cluster_bcubed_audit takes its two CC label frames from pool
     threads. On CC's iterative path (past ``CC_LOCAL_EDGE_GATE``, which no
