@@ -16,20 +16,26 @@ printing JSON/CSV to stdout like the reference. The artifact envelopes
 follow the reference's `{metadata, data}` shapes
 (create_cslc_burst_catalog.py:319-334, reference_dates.py:222-234,
 create_blackout_dates_s1.py:109-147). Set ``BDS_GENERATION_TIME`` to pin
-the metadata timestamp for byte-stable output.
+the metadata timestamp (``sources.json_docs.generation_time``) for
+byte-stable output; the ``.gz``/``.zip`` envelopes carry fixed header
+times.
 
 Reads run only the Spark jobs that compute the answer
 (``tests/test_cli.py`` pins these budgets):
 
 - ``lookup``: 2 jobs, one filtered scan of ``frames`` and one of
   ``frames_bursts``, combined on the driver;
-- ``intersect``: 1 job, the bbox prefilter and exact refine over
-  ``frames``;
+- ``intersect``: 1 job, one scan of ``frames`` with the bbox
+  prefilter; the candidates are refined on the driver with the geo
+  kernel (``geo.predicates.intersects_rect``), so no Python worker
+  starts;
 - ``historical fetch-bursts`` / ``fetch-granules``: 2 jobs, the schema
   inference of ``--db-path`` and one filtered scan. The wanted burst
   numbers come from the envelope parsed on the driver, and the printed
   rows are sorted (and, for granules, de-duplicated) there, in Spark's
-  ascending NULLS FIRST order.
+  ascending NULLS FIRST order. The ingest
+  (``plans.historical.ingest_daily_csvs``) writes one file per
+  ``sensing_date``, so the scan opens one file per date.
 
 ``frames`` and ``frames_bursts`` are ``create``'s own tables and are read
 with their declared schemas (``create_pipeline.read_table``).
@@ -42,15 +48,7 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
-
-
-def _generation_time() -> str:
-    from datetime import datetime
-
-    pinned = os.environ.get("BDS_GENERATION_TIME")
-    return pinned or datetime.now().isoformat()
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -169,20 +167,11 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "intersect":
-        from burst_db_spark.geo.wkt import rect_wkt
         from burst_db_spark.plans.create_pipeline import read_table
         from burst_db_spark.plans.query_frame import intersect
 
         xmin, ymin, xmax, ymax = (float(v) for v in args.bbox.split(","))
-        frames = read_table(spark, args.db, "frames")
-        hits = intersect(
-            frames.withColumnRenamed("sxmin", "xmin")
-            .withColumnRenamed("symin", "ymin")
-            .withColumnRenamed("sxmax", "xmax")
-            .withColumnRenamed("symax", "ymax"),
-            rect_wkt(xmin, ymin, xmax, ymax),
-        ).select("frame_fid", "epsg", "is_land")
-        rows = [r.asDict() for r in hits.collect()]
+        rows = intersect(read_table(spark, args.db, "frames"), xmin, ymin, xmax, ymax)
         print(json.dumps(rows))
         return 0
 
@@ -216,11 +205,7 @@ def main(argv: list[str] | None = None) -> int:
             args.out,
             "frame_fid",
             ["burst_id_list", "sensing_time_list"],
-            metadata={
-                "generation_time": _generation_time(),
-                "blackout_file": args.blackout,
-                "db_path": args.db,
-            },
+            metadata={"blackout_file": args.blackout, "db_path": args.db},
         )
         print(json.dumps({"out": args.out, "n_frames": n_frames}))
         return 0
@@ -229,7 +214,7 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
 
         from burst_db_spark.plans.reference_dates import reference_dates
-        from burst_db_spark.sources.json_docs import read_envelope
+        from burst_db_spark.sources.json_docs import generation_time, read_envelope
 
         _, doc = read_envelope(spark, args.consistent_json, key="frame_fid")
         acq = doc.select(
@@ -250,7 +235,7 @@ def main(argv: list[str] | None = None) -> int:
             )
         out_doc = {
             "metadata": {
-                "generation_time": _generation_time(),
+                "generation_time": generation_time(),
                 "consistent_json_file": args.consistent_json,
                 "blackout_file": None,
                 "interval": args.interval_days,
@@ -268,6 +253,7 @@ def main(argv: list[str] | None = None) -> int:
 
         from burst_db_spark.plans.blackout import yearly_windows
         from burst_db_spark.plans.create_pipeline import read_table
+        from burst_db_spark.sources.json_docs import generation_time
 
         frames = read_table(spark, args.db, "frames")
         if args.seasons:
@@ -302,7 +288,7 @@ def main(argv: list[str] | None = None) -> int:
             )
         out_doc = {
             "metadata": {
-                "generation_time": _generation_time(),
+                "generation_time": generation_time(),
                 "max_default_duration": None,
                 "input_file": args.seasons or "<deterministic stand-in>",
                 "output_file": args.out,

@@ -8,6 +8,7 @@ Douglas-Peucker ``simplify`` (parse_bursts.py:737 uses tolerance 1/3600°),
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from burst_db_spark.geo.wkt import MultiPolygonCoords, Ring, parse_wkt, to_wkt
@@ -96,6 +97,37 @@ def polygons_intersect(wkt_a: str, wkt_b: str) -> bool:
     pa = Polygon.from_wkt(wkt_a)
     pb = Polygon.from_wkt(wkt_b)
     return any(rings_intersect(a.exterior, b.exterior) for a in pa for b in pb)
+
+
+def intersects_rect(wkt: str, rect: Ring) -> bool:
+    """``polygons_intersect(wkt, <rect>)`` for an axis-aligned rectangle
+    ring (as ``wkt.rect_wkt`` writes it), with most member polygons
+    decided without the pairwise kernel. A polygon with a vertex in the
+    closed rectangle is a hit: that is the kernel's first test. One whose
+    envelope lies farther from the rectangle than ``margin`` is not: past
+    it neither the kernel's 1e-12 tolerances nor its rounding can make
+    the two meet (the rectangle's edges are axis-aligned, so the
+    orientation signs against them are exact). Only the rest go through
+    ``rings_intersect``."""
+    polys = Polygon.from_wkt(wkt)
+    xs, ys = zip(*rect)
+    xmin, ymin, xmax, ymax = min(xs), min(ys), max(xs), max(ys)
+    if not all(map(math.isfinite, (xmin, ymin, xmax, ymax))):
+        return any(rings_intersect(p.exterior, rect) for p in polys)
+    for p in polys:
+        ring = p.exterior
+        if any(xmin <= x <= xmax and ymin <= y <= ymax for x, y in ring):
+            return True
+        pxs, pys = zip(*ring)
+        lo_x, hi_x, lo_y, hi_y = min(pxs), max(pxs), min(pys), max(pys)
+        margin = 1e-9 * (1 + max(abs(xmin), abs(xmax), abs(ymin), abs(ymax),
+                                 abs(lo_x), abs(hi_x), abs(lo_y), abs(hi_y)))
+        if (lo_x > xmax + margin or hi_x < xmin - margin
+                or lo_y > ymax + margin or hi_y < ymin - margin):
+            continue
+        if rings_intersect(ring, rect):
+            return True
+    return False
 
 
 def envelope(wkt: str) -> tuple[float, float, float, float]:

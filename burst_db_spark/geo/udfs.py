@@ -3,7 +3,9 @@
 These are the refine step of the two-phase filter; the bbox prefilter
 (geo.bbox) runs first so only candidates reach Python. Wide frames never
 collect on the driver: the union-collect aggregation goes through
-applyInPandas per group key.
+applyInPandas per group key. The CLI's ``intersect`` does not use them:
+its answer is collected anyway, so ``plans.query_frame.intersect`` runs
+the same kernel on the driver and starts no Python worker.
 """
 
 from __future__ import annotations

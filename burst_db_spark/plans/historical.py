@@ -4,8 +4,10 @@ export_denormalized_db.py end-to-end; SURVEY.md §2.9 row 1).
 
 Batch shape (the streaming twin is streaming.incremental):
 1. glob-scan the semicolon CSVs (explicit schema — no inference pass)
-2. dedup re-delivered rows per (burst, sensing_time) keeping the last
-3. write parquet partitioned by sensing_date → per-date pruning
+2. dedup re-delivered rows per (burst, sensing_time) keeping the last,
+   over rows hash-partitioned by sensing_date: the one Exchange
+3. write parquet partitioned by sensing_date → per-date pruning; each
+   date is in one task, so it is one file
 4. denormalize against the frame dimension (broadcast) → the
    bursts_with_frame_ids shape (create_cslc_burst_catalog.py:90-103)
 """
@@ -16,25 +18,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from burst_db_spark.operators.aggregates import dedup_latest
+from burst_db_spark.session import fan_out
 from burst_db_spark.sources.csv import read_historical_bursts
 
 
 def ingest_daily_csvs(spark: SparkSession, glob: str, out_dir: str) -> None:
     """Steps 1-3: scan → dedup (keep max granule per key as the
-    revision-winner stand-in) → date-partitioned parquet."""
-    raw = read_historical_bursts(spark, glob)
+    revision-winner stand-in) → date-partitioned parquet, one file per
+    date. ``sensing_date`` is a function of ``sensing_time``, so adding
+    it to the key leaves the groups as they are, and the dedup needs no
+    exchange beyond the one by date."""
+    raw = read_historical_bursts(spark, glob).withColumn(
+        "sensing_date", F.to_date("sensing_time")
+    )
     deduped = dedup_latest(
-        raw,
-        ["burst_id_jpl", "sensing_time"],
+        fan_out(raw, "sensing_date"),
+        ["sensing_date", "burst_id_jpl", "sensing_time"],
         order_col="granule",
         payload=["geometry"],
     )
-    (
-        deduped.withColumn("sensing_date", F.to_date("sensing_time"))
-        .write.mode("overwrite")
-        .partitionBy("sensing_date")
-        .parquet(out_dir)
-    )
+    deduped.write.mode("overwrite").partitionBy("sensing_date").parquet(out_dir)
 
 
 def denormalize(

@@ -2,8 +2,8 @@
 
 ``lookup``: one frame's full record (member burst ids as a sorted list,
 bbox, flags) — two filtered scans, combined on the driver.
-``intersect``: frames whose footprint intersects a probe geometry — the
-two-phase bbox-then-exact filter (geo kernel).
+``intersect``: frames whose footprint intersects a probe box — one
+filtered scan, refined on the driver with the geo kernel.
 """
 
 from __future__ import annotations
@@ -11,7 +11,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from burst_db_spark.geo.udfs import two_phase_intersect_filter
+from burst_db_spark.geo import predicates as P
+from burst_db_spark.geo.wkt import rect_wkt
+
+#: the columns an ``intersect`` answer carries per frame
+INTERSECT_COLS = ("frame_fid", "epsg", "is_land")
 
 
 def lookup(frames: DataFrame, bridge: DataFrame, frame_fid: int) -> list[dict]:
@@ -37,8 +41,32 @@ def lookup(frames: DataFrame, bridge: DataFrame, frame_fid: int) -> list[dict]:
     ]
 
 
-def intersect(frames_with_geom: DataFrame, probe_wkt: str) -> DataFrame:
-    """Frames intersecting the probe geometry (query_frame_db.py:86-129):
-    bbox prefilter on the snapped bbox columns (parquet min/max pruning at
-    scale) then exact Intersects refine."""
-    return two_phase_intersect_filter(frames_with_geom, probe_wkt)
+def intersect(
+    frames: DataFrame, xmin: float, ymin: float, xmax: float, ymax: float
+) -> list[dict]:
+    """Frames whose footprint intersects the box (query_frame_db.py:86-129),
+    as dicts of ``INTERSECT_COLS``, in scan order.
+
+    One filtered scan: the snapped bbox columns prefilter (parquet min/max
+    pruning at scale) and the candidates come to the driver with their
+    WKT, where the geo kernel refines them (``predicates.intersects_rect``),
+    so no Python worker starts."""
+    # the parsed probe: the kernel sees the WKT's coordinates
+    probe = rect_wkt(xmin, ymin, xmax, ymax)
+    rect = P.Polygon.from_wkt(probe)[0].exterior
+    pxmin, pymin, pxmax, pymax = P.envelope(probe)
+    rows = (
+        frames.where(
+            (F.col("sxmin") <= F.lit(pxmax))
+            & (F.col("sxmax") >= F.lit(pxmin))
+            & (F.col("symin") <= F.lit(pymax))
+            & (F.col("symax") >= F.lit(pymin))
+        )
+        .select(*INTERSECT_COLS, "geom_wkt")
+        .collect()
+    )
+    return [
+        {c: r[c] for c in INTERSECT_COLS}
+        for r in rows
+        if r.geom_wkt is not None and P.intersects_rect(r.geom_wkt, rect)
+    ]

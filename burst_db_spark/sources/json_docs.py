@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import gzip
 import json
+import os
 import zipfile
 from collections.abc import Sequence
 from datetime import datetime, timezone
@@ -37,6 +38,13 @@ def nested_doc_df(df: DataFrame, key: str, list_cols: Sequence[str]) -> DataFram
     return df.groupBy(key).agg(*aggs)
 
 
+def generation_time() -> str:
+    """The ``generation_time`` an artifact's metadata carries: now, or
+    ``BDS_GENERATION_TIME`` when set, so that two runs over the same
+    inputs write the same bytes."""
+    return os.environ.get("BDS_GENERATION_TIME") or datetime.now(timezone.utc).isoformat()
+
+
 def _envelope(
     df: DataFrame,
     key: str,
@@ -49,7 +57,7 @@ def _envelope(
         for row in nested.toLocalIterator()
     }
     meta = {
-        "generation_time": datetime.now(timezone.utc).isoformat(),
+        "generation_time": generation_time(),
         **(metadata or {}),
     }
     return {"metadata": meta, "data": data}
@@ -77,17 +85,19 @@ def write_envelope(
     metadata: dict | None = None,
 ) -> int:
     """K3: write the envelope; ``.gz`` / ``.zip`` suffix → compressed
-    (utils.py:18-24 zips with level 6). Returns the number of keys
-    written, so a caller needs no second pass over ``df`` to count them."""
+    (utils.py:18-24 zips with level 6). The archive headers carry fixed
+    timestamps, so the bytes depend only on the document. Returns the
+    number of keys written, so a caller needs no second pass over ``df``
+    to count them."""
     doc = _envelope(df, key, list_cols, metadata)
     text = json.dumps(doc, sort_keys=True)
     if path.endswith(".gz"):
-        with gzip.open(path, "wt") as f:
-            f.write(text)
+        with gzip.GzipFile(path, "wb", mtime=0) as f:
+            f.write(text.encode())
     elif path.endswith(".zip"):
-        inner = path.rsplit("/", 1)[-1][:-4]
-        with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED, compresslevel=6) as z:
-            z.writestr(inner, text)
+        inner = zipfile.ZipInfo(path.rsplit("/", 1)[-1][:-4])
+        with zipfile.ZipFile(path, "w") as z:
+            z.writestr(inner, text, zipfile.ZIP_DEFLATED, compresslevel=6)
     else:
         with open(path, "w") as f:
             f.write(text)

@@ -1,6 +1,6 @@
 """CLI tests through __main__.main: create → lookup → intersect, the artifact
 workflow, historical fetches, and the reads' job budgets, declared table
-schemas and DuckDB parity."""
+schemas, byte-stable envelopes and parity with DuckDB and the geo kernel."""
 
 from __future__ import annotations
 
@@ -15,7 +15,11 @@ import pytest
 from pyspark.sql.types import StructType
 
 from burst_db_spark.__main__ import main
-from burst_db_spark.plans.create_pipeline import TABLE_SCHEMAS
+from burst_db_spark.geo import predicates as P
+from burst_db_spark.geo.udfs import two_phase_intersect_filter
+from burst_db_spark.geo.wkt import rect_wkt
+from burst_db_spark.plans.create_pipeline import TABLE_SCHEMAS, read_table
+from burst_db_spark.plans.query_frame import INTERSECT_COLS, intersect
 
 ROOT = Path(__file__).resolve().parents[1]
 
@@ -181,6 +185,7 @@ def test_cli_historical_fetch_shared_burst(spark, tmp_path, capsys):
 # -- catalog reads: job budget, declared schemas, DuckDB parity -------------
 
 N_DATES = 40  # past Spark's default 32-path parallel-listing threshold
+GENERATION_TIME = "2026-01-01T00:00:00"
 
 
 @pytest.fixture(scope="module")
@@ -190,10 +195,13 @@ def catalog(spark, tmp_path_factory):
 
     Each date's bursts share one granule, written with ``.SAFE`` on odd
     bursts and without it on even ones; one row has a null granule and
-    one a null sensing time, both on a burst that also has regular rows."""
+    one a null sensing time, both on a burst that also has regular rows.
+    ``create`` runs with ``BDS_GENERATION_TIME`` pinned."""
     root = tmp_path_factory.mktemp("catalog")
     db = str(root / "db")
-    assert main(["create", "--out", db, "--n-triplets", "120", "--n-tracks", "2"]) == 0
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("BDS_GENERATION_TIME", GENERATION_TIME)
+        assert main(["create", "--out", db, "--n-triplets", "120", "--n-tracks", "2"]) == 0
     fid = int(spark.read.parquet(f"{db}/frames").agg({"frame_fid": "min"}).first()[0])
     bids = sorted(r.burst_id for r in
                   spark.read.parquet(f"{db}/frames_bursts").where(f"frame_fid = {fid}").collect())
@@ -351,3 +359,66 @@ def test_cli_reads_match_duckdb(spark, catalog, capsys):
         assert got == json.loads(json.dumps(want, default=str)), frame
         assert len(got) == (frame == fid)
     con.close()
+
+
+def test_create_envelopes_are_byte_stable(catalog, tmp_path, monkeypatch, capsys):
+    """Two ``create`` runs with ``BDS_GENERATION_TIME`` pinned write the
+    same envelope bytes: the stamp and the gzip header time are fixed."""
+    db, _, _ = catalog
+    monkeypatch.setenv("BDS_GENERATION_TIME", GENERATION_TIME)
+    again = str(tmp_path / "db")
+    assert main(["create", "--out", again, "--n-triplets", "120", "--n-tracks", "2"]) == 0
+    capsys.readouterr()
+    for name in ("frame_to_burst.json.gz", "burst_to_frame.json.gz"):
+        first, second = (Path(d, name).read_bytes() for d in (db, again))
+        assert first == second, name
+        meta = json.loads(gzip.decompress(first))["metadata"]
+        assert meta["generation_time"] == GENERATION_TIME, name
+
+
+def test_intersect_matches_two_phase_filter(spark, catalog):
+    """``query_frame.intersect`` (one scan, refined on the driver) gives
+    the pandas-UDF filter's answer, order included: for the whole world,
+    a box in a frame's bbox that misses its footprint, a tiny box inside
+    a footprint with no frame vertex in it, and a box touching a frame's
+    easternmost vertex. A frame with a null footprint is never a hit."""
+    db, _, fid = catalog
+    frames = read_table(spark, db, "frames")
+    null_row = {c: None for c in frames.columns}
+    null_row.update(frame_fid=-1, sxmin=-180, symin=-90, sxmax=180, symax=90)
+    frames = frames.unionByName(spark.createDataFrame([null_row], frames.schema))
+    f = frames.where(f"frame_fid = {fid}").first()
+    polys = P.Polygon.from_wkt(f.geom_wkt)
+    vertices = [v for p in polys for v in p.exterior]
+
+    def hits(box):
+        return P.polygons_intersect(f.geom_wkt, rect_wkt(*box))
+
+    d = 0.05
+    miss = next(
+        box
+        for x, y in ((f.sxmin, f.symin), (f.sxmin, f.symax - d),
+                     (f.sxmax - d, f.symin), (f.sxmax - d, f.symax - d))
+        if not hits(box := (x, y, x + d, y + d))
+    )
+    ring = polys[0].exterior[:-1]
+    cx, cy = (sum(c) / len(ring) for c in zip(*ring))
+    inside = (cx - 1e-3, cy - 1e-3, cx + 1e-3, cy + 1e-3)
+    assert hits(inside)
+    assert not any(inside[0] <= x <= inside[2] and inside[1] <= y <= inside[3]
+                   for x, y in vertices)
+    ex, ey = max(vertices)
+    touch = (ex, ey - d, ex + d, ey + d)
+    assert hits(touch)
+
+    for box in ((-180, -90, 180, 90), miss, inside, touch):
+        got = intersect(frames, *box)
+        want = [
+            r.asDict()
+            for r in two_phase_intersect_filter(
+                frames, rect_wkt(*box), bbox_cols=("sxmin", "symin", "sxmax", "symax")
+            ).select(*INTERSECT_COLS).collect()
+        ]
+        assert json.dumps(got) == json.dumps(want), box
+        assert (fid in {r["frame_fid"] for r in got}) == (box != miss), box
+        assert -1 not in {r["frame_fid"] for r in got}, box

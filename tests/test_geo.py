@@ -366,3 +366,23 @@ def test_union_outline_hole_and_pinch():
     # non-rect member -> honest None
     tri = "POLYGON ((0 0, 2 0, 1 2, 0 0))"
     assert P.union_outline([tri]) is None
+
+
+def test_intersects_rect_matches_kernel_fuzz():
+    """``intersects_rect`` (vertex accept, envelope reject, kernel for the
+    rest) answers as ``polygons_intersect`` does, on a coarse grid where
+    touching, collinear and degenerate boxes are common."""
+    from hypothesis import given, settings, strategies as st
+
+    coord = st.integers(-6, 6).map(lambda v: v / 2)
+    ring = st.lists(st.tuples(coord, coord), min_size=3, max_size=5)
+
+    @settings(max_examples=1000, deadline=None)
+    @given(st.lists(ring, min_size=1, max_size=4), st.tuples(coord, coord, coord, coord))
+    def _check(rings, box):
+        wkt = to_wkt([[r + r[:1]] for r in rings], force_multi=True)
+        probe = rect_wkt(*box)
+        rect = P.Polygon.from_wkt(probe)[0].exterior
+        assert P.intersects_rect(wkt, rect) == P.polygons_intersect(wkt, probe)
+
+    _check()

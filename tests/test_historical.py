@@ -1,10 +1,12 @@
 """Historical ingest pipeline: per-date CSVs → dedup → partitioned
-parquet → denormalized view, with per-date pruning verified."""
+parquet (one file per date) → denormalized view, with per-date pruning
+verified."""
 
 from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import functions as F
 
@@ -63,3 +65,45 @@ def test_ingest_and_denormalize(spark, tmp_path):
     assert r["t001_000001_iw1"].min_frame_id == 10
     assert r["t001_000001_iw1"].max_frame_id == 11
     assert r["t001_000002_iw1"].num_frames == 1
+
+
+def _last_write_plan(spark, out) -> str:
+    """The executed (final adaptive) plan of the last write to ``out``."""
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        executions.apply(i).physicalPlanDescription()
+        for i in range(executions.size())
+    ]
+    plan = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p and out in p][-1]
+    return plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+
+
+def test_ingest_writes_one_file_per_date(spark, tmp_path):
+    """The dedup's one Exchange is by date, so each date lands in one
+    task and is written as one file. AQE would merge this small input's
+    shuffle partitions into one task anyway; with the merge off, an
+    exchange by burst key would spread each date over every task."""
+    csv_dir = str(tmp_path / "daily_csvs")
+    out = str(tmp_path / "bursts_parquet")
+    rows = [
+        (f"t001_{b:06d}_iw1", f"2024-01-0{d} 06:00:{b:02d}", "POLYGON ((0 0, 1 0, 1 1, 0 0))", g)
+        for d in (1, 2) for b in range(20) for g in ("S1A_G1", "S1A_G2")
+    ]
+    spark.createDataFrame(
+        rows, "burst_id_jpl string, sensing_time string, geometry string, granule string"
+    ).withColumn("sensing_time", F.to_timestamp("sensing_time")).write.option(
+        "sep", ";").mode("overwrite").csv(csv_dir)
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        ingest_daily_csvs(spark, csv_dir + "/*.csv", out)
+    finally:
+        spark.conf.set(key, old)
+    dates = sorted(tmp_path.glob("bursts_parquet/sensing_date=*"))
+    assert [d.name for d in dates] == ["sensing_date=2024-01-01", "sensing_date=2024-01-02"]
+    assert [len(list(d.glob("*.parquet"))) for d in dates] == [1, 1]
+    plan = _last_write_plan(spark, out)
+    assert len(re.findall(r"\bExchange \(\d+\)", plan)) == 1
+    assert spark.read.parquet(out).count() == 40

@@ -4,6 +4,8 @@ XML mapInPandas parse, partitioned writes, multimodal plumbing."""
 from __future__ import annotations
 
 import json
+import time
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,7 +39,10 @@ def test_csv_inferred(spark, tmp_path):
 
 
 @pytest.mark.parametrize("suffix", ["json", "json.gz", "zip"])
-def test_json_envelope_roundtrip(spark, tmp_path, suffix):
+def test_json_envelope_roundtrip(spark, tmp_path, monkeypatch, suffix):
+    """Round trip; with ``BDS_GENERATION_TIME`` pinned, a second write
+    seconds later gives the same bytes."""
+    monkeypatch.setenv("BDS_GENERATION_TIME", "2026-01-01T00:00:00")
     df = spark.createDataFrame(
         [(831, "t004_006645_iw1", "2016-07-02T23:05:35"),
          (831, "t004_006646_iw1", "2016-07-14T23:05:35"),
@@ -45,11 +50,18 @@ def test_json_envelope_roundtrip(spark, tmp_path, suffix):
         "frame_id int, burst_id string, sensing_time string",
     )
     path = str(tmp_path / f"doc.{suffix}")
-    json_docs.write_envelope(
-        df, path, "frame_id", ["burst_id", "sensing_time"], {"version": "test"}
-    )
+
+    def write() -> bytes:
+        json_docs.write_envelope(
+            df, path, "frame_id", ["burst_id", "sensing_time"], {"version": "test"}
+        )
+        return Path(path).read_bytes()
+
+    first = write()
+    time.sleep(2.1)  # past the 2 s resolution of a zip entry's time
+    assert write() == first
     meta, back = json_docs.read_envelope(spark, path, key="frame_id")
-    assert meta["version"] == "test"
+    assert meta == {"version": "test", "generation_time": "2026-01-01T00:00:00"}
     rows = {r["frame_id"]: r for r in back.collect()}
     assert rows["831"]["burst_id"] == ["t004_006645_iw1", "t004_006646_iw1"]
     assert rows["832"]["sensing_time"] == ["2016-07-02T23:05:40"]
