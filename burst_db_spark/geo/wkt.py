@@ -7,6 +7,8 @@ Not a general OGC parser — no Z/M, no EMPTY, no GEOMETRYCOLLECTION.
 
 from __future__ import annotations
 
+import re
+
 Ring = list[tuple[float, float]]
 PolygonCoords = list[Ring]  # ring 0 = exterior, rest = holes
 MultiPolygonCoords = list[PolygonCoords]
@@ -15,57 +17,46 @@ MultiPolygonCoords = list[PolygonCoords]
 def _parse_ring(text: str) -> Ring:
     pts = []
     for pair in text.split(","):
-        xs = pair.split()
-        pts.append((float(xs[0]), float(xs[1])))
+        x, y = pair.split()[:2]
+        pts.append((float(x), float(y)))
     return pts
 
 
-def _strip_one_paren(text: str) -> str:
-    """Remove exactly one enclosing balanced paren pair."""
-    t = text.strip()
-    if t.startswith("(") and t.endswith(")"):
-        return t[1:-1]
-    return t
+_RING = r"\([^()]*\)"
+_POLYGON = rf"\(\s*{_RING}(?:\s*,\s*{_RING})*\s*\)"
+_RING_RE = re.compile(r"\(([^()]*)\)")
+_POLYGON_RE = re.compile(_POLYGON)
+_MULTIPOLYGON_RE = re.compile(rf"\(\s*{_POLYGON}(?:\s*,\s*{_POLYGON})*\s*\)")
 
 
-def _split_level(text: str) -> list[str]:
-    """Split comma-separated groups at the current paren depth, removing
-    one paren level from each group."""
-    parts, depth, start = [], 0, 0
-    for i, ch in enumerate(text):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-    parts.append(text[start:])
-    return [_strip_one_paren(p) for p in parts]
+def _parse_polygon(text: str) -> PolygonCoords:
+    """Rings of one well-formed ``((x y, ...), ...)`` polygon text."""
+    return [_parse_ring(r) for r in _RING_RE.findall(text)]
 
 
 def parse_wkt(wkt: str) -> tuple[str, MultiPolygonCoords | tuple[float, float]]:
     """Return (kind, coords): kind ∈ {POINT, POLYGON, MULTIPOLYGON}.
 
     POLYGON and MULTIPOLYGON both return MultiPolygonCoords (a POLYGON is
-    a 1-element multi) so downstream code handles one shape.
+    a 1-element multi) so downstream code handles one shape. Raises
+    ``ValueError`` unless the parenthesised body is well formed as a
+    whole.
     """
     s = wkt.strip()
-    head, _, body = s.partition("(")
+    head, paren, rest = s.partition("(")
     kind = head.strip().upper()
-    body = body.rsplit(")", 1)[0]
+    body = paren + rest
     if kind == "POINT":
-        x, y = body.split()
+        x, y = rest.rsplit(")", 1)[0].split()
         return kind, (float(x), float(y))
     if kind == "POLYGON":
-        rings = [_parse_ring(r) for r in _split_level(body)]
-        return kind, [rings]
+        if not _POLYGON_RE.fullmatch(body):
+            raise ValueError(f"malformed POLYGON: {wkt!r}")
+        return kind, [_parse_polygon(body)]
     if kind == "MULTIPOLYGON":
-        polys = []
-        for poly_text in _split_level(body):
-            rings = [_parse_ring(r) for r in _split_level(poly_text)]
-            polys.append(rings)
-        return kind, polys
+        if not _MULTIPOLYGON_RE.fullmatch(body):
+            raise ValueError(f"malformed MULTIPOLYGON: {wkt!r}")
+        return kind, [_parse_polygon(p) for p in _POLYGON_RE.findall(body)]
     raise ValueError(f"unsupported WKT kind: {kind!r}")
 
 

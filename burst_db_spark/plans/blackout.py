@@ -1,5 +1,6 @@
-"""Yearly blackout-window generation + application
-(create_blackout_dates_s1.py:14-35,59-84; SURVEY.md §1.1 interval sets).
+"""Yearly blackout-window generation
+(create_blackout_dates_s1.py:14-35,59-84; SURVEY.md §1.1 interval sets);
+``operators.filters.anti_join_intervals`` applies the windows.
 
 Given per-frame season bounds (start month/day, end month/day), emit one
 [start_ts, end_ts] interval per year in the range — year-wrapping when the
@@ -45,15 +46,3 @@ def yearly_windows(
         key, start_ts.alias("start_ts"), end_ts.alias("end_ts")
     )
 
-
-def apply_blackouts(
-    acq: DataFrame,
-    windows: DataFrame,
-    key: str = "frame_fid",
-    ts_col: str = "sensing_time",
-) -> DataFrame:
-    """Drop acquisitions inside any blackout window of their frame —
-    broadcast anti range-join (P7/J10)."""
-    from burst_db_spark.operators.filters import anti_join_intervals
-
-    return anti_join_intervals(acq, windows, key, ts_col)

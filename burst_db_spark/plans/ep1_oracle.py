@@ -191,7 +191,7 @@ f2 AS (
     SELECT r.*, CASE WHEN r.land1 = 1 OR s.len < 5 THEN 1 ELSE 0 END AS land2
     FROM runs1 r JOIN spans1 s ON r.track = s.track AND r.rid = s.rid
 ),
--- final run grouping over the widened indicator (frame_db.land_runs)
+-- final run numbering over the widened indicator (frame_db.partition_frames)
 runs2 AS (
     SELECT *, SUM(chg) OVER (PARTITION BY track ORDER BY pos
                              ROWS UNBOUNDED PRECEDING) AS run_id

@@ -2,8 +2,8 @@
 
 Stages (reference build_frame_db.py:621-754):
 1. dissolve per-burst rows to triplets (A2)                 → groupBy agg
-2. run-length group land/water along each track (W8)        → windows
-3. DP frame partitioning per contiguous land run (F5)       → applyInPandas
+2. widen + run-length group land/water along each track (W8) → applyInPandas
+3. DP frame partitioning per contiguous land run (F5)       → (same pass)
 4. explode frame slices → (frame_fid, burst) bridge         → join
 5. frames table: track avg, first orbit_pass, union bbox    → groupBy agg
 
@@ -11,16 +11,16 @@ The DP solver is a fresh implementation of the text-justification-style
 optimization described at frames.py:124-211: choose consecutive slice
 sizes minimizing Σ floor(|size+1 − target|)³ with size+1 ∈ [min,max]
 (the +1 accounts for the one-burst overlap added to every emitted frame
-except the last). Each track's run is tiny (≤ a few hundred triplets), so
-applyInPandas keys on (track, run) — thousands of independent solver
-calls across executors, no driver loop, no memoization needed (the DP is
-O(n·max_frame) per run).
+except the last). Each track is tiny (≤ a few hundred triplets), so
+applyInPandas keys on track and solves every land run of the track in
+the same call — independent solver calls across executors, no driver
+loop, no memoization needed (the DP is O(n·max_frame) per run).
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TARGET_FRAME = 9
@@ -77,6 +77,19 @@ def solve_frame_sizes(
     return [(i, min(j + OVERLAP, n)) for i, j in cuts]
 
 
+def split_runs(flags: list) -> list[tuple[bool, int, int]]:
+    """Maximal runs of equal flags as ``(flag, start, end)`` half-open
+    index ranges, in order."""
+    out, i, n = [], 0, len(flags)
+    while i < n:
+        j = i
+        while j < n and flags[j] == flags[i]:
+            j += 1
+        out.append((flags[i], i, j))
+        i = j
+    return out
+
+
 def widen_land_runs(flags: list[bool], min_frame: int = MIN_FRAME) -> list[bool]:
     """W8 pre-pass (frames.py:214-236 semantics): every land run is
     grown to at least ``min_frame`` bursts, and water gaps shorter than
@@ -91,20 +104,10 @@ def widen_land_runs(flags: list[bool], min_frame: int = MIN_FRAME) -> list[bool]
     """
     out = list(flags)
     n = len(out)
-
-    def runs():
-        i = 0
-        while i < n:
-            j = i
-            while j < n and out[j] == out[i]:
-                j += 1
-            yield out[i], i, j
-            i = j
-
     # grow short land runs symmetrically; redistribute toward the other
     # side when a track edge clips the window
     target = min(min_frame, n)
-    for is_land, i, j in list(runs()):
+    for is_land, i, j in split_runs(out):
         if is_land and (j - i) < target:
             need = target - (j - i)
             lo = max(0, i - (need + 1) // 2)
@@ -117,7 +120,7 @@ def widen_land_runs(flags: list[bool], min_frame: int = MIN_FRAME) -> list[bool]
     changed = True
     while changed:
         changed = False
-        for is_land, i, j in list(runs()):
+        for is_land, i, j in split_runs(out):
             if not is_land and (j - i) < min_frame:
                 for k in range(i, j):
                     out[k] = True
@@ -125,33 +128,7 @@ def widen_land_runs(flags: list[bool], min_frame: int = MIN_FRAME) -> list[bool]
     return out
 
 
-def widen_tracks(triplets: DataFrame, min_frame: int = MIN_FRAME) -> DataFrame:
-    """Apply widen_land_runs per track via applyInPandas (each track's
-    indicator is a few hundred booleans — tiny per-group state)."""
-    schema = triplets.schema
-
-    def _widen(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos").reset_index(drop=True)
-        pdf["is_land"] = [
-            int(v) for v in widen_land_runs([bool(x) for x in pdf["is_land"]], min_frame)
-        ]
-        return pdf
-
-    return triplets.groupBy("track").applyInPandas(_widen, schema)
-
-
-def land_runs(triplets: DataFrame) -> DataFrame:
-    """W8: contiguous same-is_land runs along each track (run id per
-    track), the grouping the DP solves over (frames.py:214-260)."""
-    w = Window.partitionBy("track").orderBy("pos")
-    changed = F.when(
-        F.lag("is_land").over(w).isNull()
-        | (F.col("is_land") != F.lag("is_land").over(w)),
-        1,
-    ).otherwise(0)
-    return triplets.withColumn(
-        "run_id", F.sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
+_SLICE_COLS = ["track", "run_id", "slice_idx", "start_pos", "end_pos", "n_triplets"]
 
 
 def partition_frames(
@@ -160,36 +137,34 @@ def partition_frames(
     min_frame: int = MIN_FRAME,
     max_frame: int = MAX_FRAME,
 ) -> DataFrame:
-    """F5: widen → land runs → per-run DP → (track, run, slice_idx,
-    start_pos, end_pos) frame slices, via applyInPandas on (track, run_id)."""
-    runs = land_runs(widen_tracks(triplets, min_frame)).where(
-        F.col("is_land") == 1
-    )
+    """W8 + F5 in one pass per track: widen the land runs, number every
+    widened run along the track (land and water alike, from 1), and
+    solve the DP over each land run → (track, run_id, slice_idx,
+    start_pos, end_pos, n_triplets) frame slices, via one
+    applyInPandas on track."""
 
     def _solve(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("pos")
-        n = len(pdf)
-        slices = solve_frame_sizes(n, target, min_frame, max_frame)
-        rows = []
+        track = int(pdf["track"].iloc[0])
         positions = pdf["pos"].tolist()
-        for k, (s, e) in enumerate(slices):
-            rows.append(
-                {
-                    "track": int(pdf["track"].iloc[0]),
-                    "run_id": int(pdf["run_id"].iloc[0]),
-                    "slice_idx": k,
-                    "start_pos": int(positions[s]),
-                    "end_pos": int(positions[e - 1]),
-                    "n_triplets": e - s,
-                }
-            )
-        return pd.DataFrame(rows)
+        widened = widen_land_runs([bool(x) for x in pdf["is_land"]], min_frame)
+        rows = []
+        for run_id, (is_land, i, j) in enumerate(split_runs(widened), start=1):
+            if not is_land:
+                continue
+            slices = solve_frame_sizes(j - i, target, min_frame, max_frame)
+            for k, (s, e) in enumerate(slices):
+                rows.append(
+                    (track, run_id, k, positions[i + s], positions[i + e - 1], e - s)
+                )
+        return pd.DataFrame(rows, columns=_SLICE_COLS)
 
-    schema = (
-        "track int, run_id int, slice_idx int, "
-        "start_pos int, end_pos int, n_triplets int"
+    schema = ", ".join(f"{c} int" for c in _SLICE_COLS)
+    return (
+        triplets.select("track", "pos", "is_land")
+        .groupBy("track")
+        .applyInPandas(_solve, schema)
     )
-    return runs.groupBy("track", "run_id").applyInPandas(_solve, schema)
 
 
 def build_frames(

@@ -1,7 +1,7 @@
 """W5 — reference-date selection: a stateful per-key scan whose emission
 rule depends on how many references were already emitted
 (reference_dates.py:105-157) — NOT expressible as a fixed-frame window
-function, hence applyInPandas per frame (SURVEY.md §2.5 W5, §7.4.2).
+function, hence a pandas kernel per frame (SURVEY.md §2.5 W5, §7.4.2).
 
 Semantics (re-implemented from the reference's loop):
 - the first sensing time is always a reference;
@@ -22,6 +22,7 @@ from datetime import datetime
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from burst_db_spark.session import fan_out
 
@@ -100,29 +101,8 @@ def _select_reference_ns(
     return refs
 
 
-def _refs_frame(key: str, k, refs_ns: list[int]) -> pd.DataFrame:
-    import numpy as np
-
-    return pd.DataFrame(
-        {
-            key: [k] * len(refs_ns),
-            "ref_idx": range(1, len(refs_ns) + 1),
-            "ref_date": np.asarray(refs_ns, dtype="int64").view("M8[ns]"),
-        }
-    )
-
-
-def _ts_ns_sorted(series: pd.Series) -> list[int]:
-    import numpy as np
-
-    vals = series.to_numpy(dtype="datetime64[ns]").astype("int64")
-    return np.sort(vals).tolist()
-
-
 def _grouped_refs_frames(
     pdf: pd.DataFrame,
-    key: str,
-    ts_col: str,
     events_for_key,
     interval_days: int,
     min_acquisitions: int,
@@ -137,8 +117,8 @@ def _grouped_refs_frames(
     ``events_for_key``: key -> set of epoch-day ints (or None)."""
     import numpy as np
 
-    keys = pdf[key].to_numpy()
-    ts = pdf[ts_col].to_numpy(dtype="datetime64[ns]").astype("int64")
+    keys = pdf["frame_fid"].to_numpy()
+    ts = pdf["sensing_time"].to_numpy(dtype="datetime64[ns]").astype("int64")
     order = np.lexsort((ts, keys))
     keys_s, ts_s = keys[order], ts[order]
     bounds = np.nonzero(np.diff(keys_s))[0] + 1
@@ -160,29 +140,57 @@ def _grouped_refs_frames(
         out_r.extend(refs)
     return pd.DataFrame(
         {
-            key: np.asarray(out_k, dtype="int64"),
+            "frame_fid": np.asarray(out_k, dtype="int64"),
             "ref_idx": np.asarray(out_i, dtype="int64"),
             "ref_date": np.asarray(out_r, dtype="int64").view("M8[ns]"),
         }
     )
 
 
+def _event_days_by_key(pdf: pd.DataFrame) -> dict:
+    """frame_fid -> set of epoch-day ints, from the ``__event_dates``
+    array column the events join carries (empty without events)."""
+    if "__event_dates" not in pdf.columns:
+        return {}
+    out: dict = {}
+    for k, dates in zip(pdf["frame_fid"].to_numpy(), pdf["__event_dates"].to_numpy()):
+        k = int(k)
+        if k not in out:
+            out[k] = (
+                {d.toordinal() - _EPOCH_ORD for d in dates}
+                if dates is not None and len(dates)
+                else None
+            )
+    return out
+
+
 def reference_dates(
     acq: DataFrame,
-    key: str = "frame_fid",
-    ts_col: str = "sensing_time",
-    event_dates_by_key: dict[int, list[str]] | None = None,
+    events: DataFrame | None = None,
     interval_days: int = INTERVAL_DAYS,
     min_acquisitions: int = MIN_ACQS,
 ) -> DataFrame:
-    """(key, ref_idx, ref_date) — one row per emitted reference."""
-    events_map = {
-        int(k): {
-            datetime.strptime(d, "%Y-%m-%d").date().toordinal() - _EPOCH_ORD
-            for d in v
-        }
-        for k, v in (event_dates_by_key or {}).items()
-    }
+    """(frame_fid, ref_idx, ref_date) — one row per emitted reference of
+    the (frame_fid, sensing_time) acquisitions ``acq``.
+
+    ``events``: optional (frame_fid, event_date) frame of per-frame event
+    dates. They are collected into one date set per frame and
+    broadcast-left-joined onto the acquisitions, so the dates ride along
+    as a column into the same single shuffle — never a driver-collected
+    dict pickled into every task. The broadcast is sized by the per-frame
+    aggregate (bounded by the frame count × a few dates)."""
+    rows = acq.select("frame_fid", "sensing_time")
+    if events is not None:
+        ev_arr = (
+            events.select("frame_fid", "event_date")
+            .groupBy("frame_fid")
+            .agg(
+                F.collect_set(F.col("event_date").cast("date")).alias(
+                    "__event_dates"
+                )
+            )
+        )
+        rows = rows.join(F.broadcast(ev_arr), "frame_fid", "left")
 
     def _per_partition(batches):
         pdfs = [p for p in batches if len(p)]
@@ -190,128 +198,11 @@ def reference_dates(
             return
         pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
         yield _grouped_refs_frames(
-            pdf, key, ts_col, lambda k: events_map.get(k),
-            interval_days, min_acquisitions,
+            pdf, _event_days_by_key(pdf).get, interval_days, min_acquisitions
         )
 
-    schema = f"{key} int, ref_idx int, ref_date timestamp"
+    schema = "frame_fid int, ref_idx int, ref_date timestamp"
     # hash-repartition by key (every key complete within one task), then
     # run the kernel once per PARTITION — same per-key state machine,
     # same rows, ~no per-group Arrow overhead (see _grouped_refs_frames)
-    return fan_out(acq.select(key, ts_col), key).mapInPandas(
-        _per_partition, schema
-    )
-
-
-def reference_dates_cogrouped(
-    acq: DataFrame,
-    events: DataFrame,
-    key: str = "frame_fid",
-    ts_col: str = "sensing_time",
-    event_date_col: str = "event_date",
-    interval_days: int = INTERVAL_DAYS,
-    min_acquisitions: int = MIN_ACQS,
-    broadcast_events: bool = False,
-) -> DataFrame:
-    """(key, ref_idx, ref_date) with per-key event dates as JOINABLE
-    STATE: ``events`` is a (key, event_date) DataFrame cogrouped with
-    the acquisitions, so event dates shuffle to the task that owns the
-    key. The dict-parameter path in :func:`reference_dates` mirrors the
-    reference's small hand-curated ``EVENT_DATES_BY_FRAME`` constant
-    (reference_dates.py:110-112) and stays for parity; the cogroup is
-    the generic 100 TB shape — a driver-collected dict is pickled into
-    every task and grows with the key count, a cogrouped DataFrame
-    does not.
-
-    ``broadcast_events=True`` (VERDICT r11 #3): when the caller KNOWS
-    the events side is broadcast-sized (e.g. a per-key aggregate of a
-    dimension, bounded by key count × a small constant), skip the second
-    groupBy + cogroup machinery entirely — collect the per-key event
-    dates into one array row per key, broadcast-left-join that onto the
-    acquisitions, and run a single ``groupBy(key).applyInPandas`` with
-    the dates carried as a column. Same oracle hash, one shuffle instead
-    of two grouped exchanges. The events frame is still never collected
-    to the driver — the broadcast is Spark's, sized by the JOIN side,
-    not a dict pickled into every task closure."""
-    if broadcast_events:
-        import pyspark.sql.functions as F
-
-        ev_arr = (
-            events.select(key, event_date_col)
-            .groupBy(key)
-            .agg(
-                F.collect_set(
-                    F.col(event_date_col).cast("date")
-                ).alias("__event_dates")
-            )
-        )
-        joined = acq.select(key, ts_col).join(F.broadcast(ev_arr), key, "left")
-
-        def _per_partition_bcast(batches):
-            pdfs = [p for p in batches if len(p)]
-            if not pdfs:
-                return
-            pdf = (
-                pd.concat(pdfs, ignore_index=True)
-                if len(pdfs) > 1
-                else pdfs[0]
-            )
-            ev_map: dict = {}
-            kk = pdf[key].to_numpy()
-            dates_col = pdf["__event_dates"].to_numpy()
-            for i in range(len(kk)):
-                k = int(kk[i])
-                if k not in ev_map:
-                    dates = dates_col[i]
-                    ev_map[k] = (
-                        {d.toordinal() - _EPOCH_ORD for d in dates}
-                        if dates is not None and len(dates)
-                        else None
-                    )
-            yield _grouped_refs_frames(
-                pdf, key, ts_col, ev_map.get,
-                interval_days, min_acquisitions,
-            )
-
-        schema = f"{key} int, ref_idx int, ref_date timestamp"
-        # whole-partition kernel, not per-group (guide §4.5; see
-        # _grouped_refs_frames — same rows, no per-group Arrow cost)
-        return fan_out(joined, key).mapInPandas(_per_partition_bcast, schema)
-
-    def _per_key(acq_pdf: pd.DataFrame, ev_pdf: pd.DataFrame) -> pd.DataFrame:
-        if acq_pdf.empty:
-            # key present only in events: no acquisitions, no references
-            # (typed empty Series — a bare [] is float64 and Arrow can't
-            # cast double → timestamp)
-            return pd.DataFrame(
-                {
-                    key: pd.Series([], dtype="int64"),
-                    "ref_idx": pd.Series([], dtype="int64"),
-                    "ref_date": pd.Series([], dtype="datetime64[ns]"),
-                }
-            )
-        k = acq_pdf[key].iloc[0]
-        ev = (
-            set(
-                (
-                    pd.to_datetime(ev_pdf[event_date_col])
-                    .to_numpy(dtype="datetime64[ns]")
-                    .astype("int64")
-                    // _DAY_NS
-                ).tolist()
-            )
-            if len(ev_pdf)
-            else None
-        )
-        refs = _select_reference_ns(
-            _ts_ns_sorted(acq_pdf[ts_col]), ev, interval_days, min_acquisitions
-        )
-        return _refs_frame(key, k, refs)
-
-    schema = f"{key} int, ref_idx int, ref_date timestamp"
-    return (
-        acq.select(key, ts_col)
-        .groupBy(key)
-        .cogroup(events.select(key, event_date_col).groupBy(key))
-        .applyInPandas(_per_key, schema)
-    )
+    return fan_out(rows, "frame_fid").mapInPandas(_per_partition, schema)

@@ -425,11 +425,9 @@ def w5b_reference_dates_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shifting the interval anchor when it is the first) — against a
     recursive-CTE replay that reduces the overwrite to last-change-wins
     per (frame, ref_idx). Event dates arrive as a DataFrame — never a
-    driver-collected dict pickled into every task: broadcast-joined as a
-    per-key array here (the events side is a bounded per-key aggregate),
-    with the cogroup path of reference_dates_cogrouped retained for
-    unbounded event sets."""
-    from burst_db_spark.plans.reference_dates import reference_dates_cogrouped
+    driver-collected dict pickled into every task — and ride into the
+    kernel's single shuffle as a broadcast per-frame array."""
+    from burst_db_spark.plans.reference_dates import reference_dates
 
     ev = load(spark, sf_dir, "events").select(
         F.col("user_id").cast("int").alias("frame_fid"),
@@ -445,15 +443,10 @@ def w5b_reference_dates_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("event_date"),
         )
     )
-    # evd is a per-key aggregate (2 dates/frame) — broadcast-sized by
-    # construction, so take the single-shuffle fast path (VERDICT r11 #3);
-    # the cogroup path remains the default for unbounded event sets
-    return reference_dates_cogrouped(
-        ev,
-        evd,
-        interval_days=_W5B_INTERVAL,
-        min_acquisitions=_W5B_MIN_ACQ,
-        broadcast_events=True,
+    # evd is a per-key aggregate (2 dates/frame), so its per-frame date
+    # sets are broadcast-sized by construction
+    return reference_dates(
+        ev, evd, interval_days=_W5B_INTERVAL, min_acquisitions=_W5B_MIN_ACQ
     )
 
 # ---------------------------------------------------------------------------

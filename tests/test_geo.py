@@ -18,6 +18,10 @@ def test_wkt_roundtrip():
     kind, coords = parse_wkt(TRI)
     assert kind == "POLYGON"
     assert to_wkt(coords) == "POLYGON ((0 0, 10 0, 5 8, 0 0))"
+    holed = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 4 2, 4 4, 2 2))"
+    kind, coords = parse_wkt(holed)
+    assert kind == "POLYGON" and len(coords) == 1 and len(coords[0]) == 2
+    assert to_wkt(coords) == holed
 
 
 def test_wkt_multipolygon():
@@ -25,6 +29,36 @@ def test_wkt_multipolygon():
     kind, coords = parse_wkt(m)
     assert kind == "MULTIPOLYGON" and len(coords) == 2
     assert to_wkt(coords, force_multi=True) == m
+    # no spaces between tokens parses to the same coordinates
+    assert parse_wkt(
+        "MULTIPOLYGON(((0 0,1 0,1 1,0 0)),((5 5,6 5,6 6,5 5)))"
+    ) == (kind, coords)
+    # the second polygon has a hole
+    holed = (
+        "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)), "
+        "((5 5, 9 5, 9 9, 5 9, 5 5), (6 6, 7 6, 7 7, 6 6)))"
+    )
+    kind, coords = parse_wkt(holed)
+    assert [len(rings) for rings in coords] == [1, 2]
+    assert to_wkt(coords, force_multi=True) == holed
+
+
+@pytest.mark.parametrize(
+    "wkt",
+    [
+        "POLYGON ((0 0, 1 0",
+        "POLYGON ()",
+        "POLYGON ((0 0, 1 0, 1 1, 0 0)",
+        "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0))",
+        "POLYGON (0 0, 1 0, 1 1, 0 0)",
+        "MULTIPOLYGON ((0 0, 1 0, 1 1, 0 0))",
+        "POLYGON (())",
+        "POLYGON ((0 0, 1))",
+    ],
+)
+def test_wkt_malformed_rejected(wkt):
+    with pytest.raises(ValueError):
+        parse_wkt(wkt)
 
 
 def test_point_in_polygon():

@@ -844,3 +844,33 @@ def test_nn_descent_candidate_joins_are_equi(spark):
     # equi key (x.n = y.v AND y.n <> x.v) — it must still plan as a
     # hash/sort-merge join, never a nested loop
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_frame_partitioner_is_one_python_pass(spark):
+    """Widening, run numbering and the DP are one applyInPandas per
+    track: no Window, no second Python crossing. ``create``'s frames
+    plan reads the partitioner twice (frames and the member-geometry
+    bridge) plus the geometry union, so it has exactly three."""
+    from burst_db_spark.plans import fixtures
+    from burst_db_spark.plans.frame_db import (
+        build_frames,
+        enrich_frames,
+        partition_frames,
+    )
+
+    def plan(df) -> str:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        return buf.getvalue()
+
+    trip = fixtures.burst_triplets(spark, n_triplets=120, n_tracks=2)
+    bursts = fixtures.burst_id_map(spark, n_triplets=120, n_tracks=2)
+    p = plan(partition_frames(trip))
+    assert _count_nodes(p, "FlatMapGroupsInPandas") == 1, p
+    assert _count_nodes(p, "Window") == 0, p
+    frames, bridge = build_frames(trip)
+    member_geoms = bridge.join(bursts, "burst_id").select("frame_fid", "geom_wkt")
+    p = plan(enrich_frames(frames, member_geoms=member_geoms))
+    assert _count_nodes(p, "FlatMapGroupsInPandas") == 3, p
+    assert _count_nodes(p, "Window") == 0, p

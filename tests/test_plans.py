@@ -10,7 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from burst_db_spark.plans import fixtures
-from burst_db_spark.plans.blackout import apply_blackouts, yearly_windows
+from burst_db_spark.operators.filters import anti_join_intervals
+from burst_db_spark.plans.blackout import yearly_windows
 from burst_db_spark.plans.frame_db import (
     MAX_FRAME,
     MIN_FRAME,
@@ -150,34 +151,6 @@ def test_refdates_spark_matches_python(spark):
         assert got_by_key[key] == select_reference_dates(times), f"key {key}"
 
 
-def test_refdates_cogrouped_matches_dict_path(spark):
-    """The cogrouped (joinable-state) variant must agree row-for-row
-    with the dict-parameter path on the same per-key event dates —
-    including a key that has events but no acquisitions (must emit
-    nothing) and a key with acquisitions but no events."""
-    from burst_db_spark.plans.reference_dates import reference_dates_cogrouped
-
-    acq = spark.createDataFrame(
-        [(k, t) for k in (1, 2) for t in _times("2016-07-01", 40, 12)],
-        "frame_fid int, sensing_time timestamp",
-    )
-    ev_map = {1: ["2016-08-18", "2016-10-05"]}  # key 2: no events
-    ev_df = spark.createDataFrame(
-        [(1, "2016-08-18"), (1, "2016-10-05"), (9, "2016-01-01")],
-        "frame_fid int, event_date string",
-    ).withColumn("event_date", F.to_date("event_date"))
-    want = sorted(
-        (r["frame_fid"], r["ref_idx"], r["ref_date"])
-        for r in reference_dates(acq, event_dates_by_key=ev_map).collect()
-    )
-    got = sorted(
-        (r["frame_fid"], r["ref_idx"], r["ref_date"])
-        for r in reference_dates_cogrouped(acq, ev_df).collect()
-    )
-    assert got == want
-    assert not any(k == 9 for k, _, _ in got)  # events-only key emits nothing
-
-
 def test_refdates_ns_kernel_equals_datetime_reference():
     """The integer-ns hot kernel must be step-for-step identical to the
     pure-datetime reference implementation on randomized fixtures with
@@ -227,63 +200,62 @@ def test_refdates_ns_kernel_equals_datetime_reference():
         assert all(x % _DAY_NS >= 0 for x in got_ns)
 
 
-def test_refdates_three_paths_agree_randomized(spark):
-    """Property test (VERDICT r11 #8): the dict path, the cogroup path,
-    and the broadcast fast path must be byte-identical on a randomized
-    fixture that forces the edge cases — an event before any reference
-    interval elapses (MOVE rule at the start), an event ON the exact
-    interval boundary, an event after the final acquisition (never
-    seen), keys with empty event sets, and an events-only key."""
+def test_refdates_events_match_python_randomized(spark):
+    """``reference_dates(acq, events)`` equals the pure-python core per
+    frame on a randomized fixture that forces the edge cases: an event
+    before any interval elapses (MOVE rule at the start), an event ON an
+    interval boundary, an event after the last acquisition (never seen),
+    two events in one stretch, a frame with no events, and an events-only
+    frame (emits nothing)."""
     import random
-    from datetime import timedelta
 
-    from burst_db_spark.plans.reference_dates import reference_dates_cogrouped
-
+    interval, min_acq = 120, 5
     rng = random.Random(0xEF12)
     base = datetime(2016, 7, 1)
-    acq_rows, ev_rows, ev_map = [], [], {}
-    for k in range(1, 9):
-        n = rng.randint(16, 60)
-        gaps = [rng.choice([6, 12, 12, 12, 24, 48]) for _ in range(n - 1)]
-        times, t = [base], base
-        for g in gaps:
-            t = t + timedelta(days=g)
+    acq_rows, ev_rows, times_by_key, events_by_key = [], [], {}, {}
+    for k in range(1, 11):
+        t, times = base, [base]
+        for _ in range(rng.randint(16, 60) - 1):
+            t = t + timedelta(
+                days=rng.choice([6, 12, 12, 12, 24, 48]), hours=rng.randint(0, 23)
+            )
             times.append(t)
-        acq_rows += [(k, t) for t in times]
-        dates = []
-        if k % 4 == 1:  # early event: MOVE rule with the first group
-            dates.append(times[min(3, n - 1)].date())
-        if k % 4 == 2:  # event exactly on an interval-boundary sample
-            dates.append(times[n // 2].date())
-            dates.append((times[-1] + timedelta(days=30)).date())  # unseen
-        if k % 4 == 3:  # two events in one stretch
-            dates += [times[5].date(), times[7].date()]
-        # k % 4 == 0: no events at all
-        if dates:
-            ev_map[k] = [d.isoformat() for d in dates]
-            ev_rows += [(k, d.isoformat()) for d in dates]
-    ev_rows.append((99, "2016-01-01"))  # events-only key: emits nothing
+        dates = set()
+        if k % 5 == 1:  # early event: MOVE rule with the first group
+            dates.add(times[3].date())
+        if k % 5 == 2:  # an acquisition and an event on the interval boundary
+            boundary = base + timedelta(days=interval)
+            times = sorted(set(times) | {boundary})
+            dates.add(boundary.date())
+            dates.add((times[-1] + timedelta(days=30)).date())  # unseen
+        if k % 5 == 3:  # two events in one stretch
+            dates |= {times[5].date(), times[7].date()}
+        if k % 5 == 4:
+            dates |= {rng.choice(times).date() for _ in range(rng.randint(1, 3))}
+        # k % 5 == 0: no events at all
+        times_by_key[k], events_by_key[k] = times, dates
+        acq_rows += [(k, x) for x in times]
+        ev_rows += [(k, d) for d in sorted(dates)]
+    ev_rows.append((99, datetime(2016, 1, 1).date()))  # events-only frame
 
     acq = spark.createDataFrame(acq_rows, "frame_fid int, sensing_time timestamp")
-    ev_df = spark.createDataFrame(
-        ev_rows, "frame_fid int, event_date string"
-    ).withColumn("event_date", F.to_date("event_date"))
-
-    want = sorted(
-        (r["frame_fid"], r["ref_idx"], r["ref_date"])
-        for r in reference_dates(
-            acq, event_dates_by_key=ev_map, min_acquisitions=5
-        ).collect()
-    )
-    for bcast in (False, True):
-        got = sorted(
-            (r["frame_fid"], r["ref_idx"], r["ref_date"])
-            for r in reference_dates_cogrouped(
-                acq, ev_df, min_acquisitions=5, broadcast_events=bcast
-            ).collect()
+    events = spark.createDataFrame(ev_rows, "frame_fid int, event_date date")
+    got: dict[int, list] = {}
+    for r in sorted(
+        reference_dates(
+            acq, events, interval_days=interval, min_acquisitions=min_acq
+        ).collect(),
+        key=lambda r: (r["frame_fid"], r["ref_idx"]),
+    ):
+        got.setdefault(r["frame_fid"], []).append(r["ref_date"])
+    assert set(got) == set(times_by_key)  # frame 99 emits nothing
+    for k, times in times_by_key.items():
+        want = select_reference_dates(
+            times, events_by_key[k] or None, interval, min_acq
         )
-        assert got == want, f"broadcast_events={bcast}"
-        assert not any(k == 99 for k, _, _ in got)
+        assert got[k] == want, f"frame {k}"
+    # the MOVE rule fired: frame 1's first reference sits on its event
+    assert got[1][0] == times_by_key[1][3]
 
 
 # ------------------------------------------------------------- blackout
@@ -304,7 +276,7 @@ def test_blackout_windows_and_apply(spark):
         [(1, "2020-12-15 10:00:00"), (1, "2020-07-04 10:00:00")],
         "frame_fid int, sensing_time string",
     ).withColumn("sensing_time", F.to_timestamp("sensing_time"))
-    kept = apply_blackouts(acq, win)
+    kept = anti_join_intervals(acq, win, "frame_fid", "sensing_time")
     assert [str(r.sensing_time) for r in kept.collect()] == ["2020-07-04 10:00:00"]
 
 
